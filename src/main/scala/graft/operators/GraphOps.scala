@@ -302,21 +302,6 @@ object GraphOps {
       .orderBy("u", "v")
   }
 
-  /** The FULL standing sym relation in the bucketed maintenance layout —
-    * what a deployment that refreshes the adjacency incrementally keeps as
-    * THE standing MV (the plain [[symAdjMV]] remains the iterative-gate
-    * feed; both derive from the same fingerprinted source). `nBuckets`
-    * scales with the cluster (32 matches local[32]; a 1000-executor
-    * deployment buckets wider). */
-  def symAdjBucketedMV(spark: SparkSession, dir: String,
-                       nBuckets: Int = 32,
-                       refresh: Boolean = false): DataFrame =
-    graft.sources.Tables.bucketedMv(spark,
-      java.nio.file.Paths.get(dir, "lineitem.parquet"),
-      "copurchase_sym_bkt", nBuckets, Seq("u", "v"), Seq("u", "v"), refresh) {
-      symAdjMV(spark, dir)
-    }
-
   /** PageRank over an undirected edge list (columns src/dst), in the scaled
     * formulation (sum of ranks = N): r⁰ = 1, rᵗ⁺¹ = (1−d) + d·Σ rᵗ(u)/deg(u)
     * over neighbors u. Nodes are every endpoint of the edge relation, so
@@ -859,10 +844,6 @@ object GraphOps {
         .groupBy("pk").agg(count(lit(1)).as("n"))
     }
 
-  def partOrderCountMV(spark: SparkSession, dir: String,
-                       refresh: Boolean = false): DataFrame =
-    spark.read.parquet(partOrderCountMVPath(spark, dir, refresh).toString)
-
   def itemNeighbors(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     // r20: i reads the pin's v column (the sym relation is symmetric, so
     // (v, u, w) is the same row set as (u, v, w)) — the per-item k-heap
@@ -1037,118 +1018,14 @@ FROM ranked WHERE rk <= $k ORDER BY p_partkey, rk"""
     labels
   }
 
-  /** EXPERIMENTAL bucketed-frontier LPA — q206's recorded lever (round-14,
-    * VERDICT r13 item 3). [[labelPropagationOn]]'s delta rounds re-scan the
-    * FULL sym relation twice (affected derivation + recompute) even when
-    * the frontier is tiny, so to-fixpoint runs are MV-scan-floored at 100×
-    * (SCALING.md r12: −12% was all the delta machinery could buy). Here the
-    * sym relation is persisted u-BUCKETED ([[Tables.bucketedMv]]) and a
-    * delta round reads ONLY the bucket FILES the frontier's (resp. affected
-    * set's) u-hashes select — partition pruning done by hand on the bucket
-    * layout, because Spark's bucket pruning takes literal predicates, not a
-    * runtime node set. By symmetry ONE u-bucketed layout serves both
-    * semi-joins: edges INTO the affected set are the column swap of edges
-    * OUT of it (the sym relation contains both directions).
-    *
-    * The r12 cardinality caveat is exactly what this measures: pruning
-    * engages only when the frontier OCCUPIES fewer than all buckets, and a
-    * few thousand random nodes already hit every bucket of any practical
-    * bucketing — the lever can only pay in the extreme convergence tail
-    * (`verbose` prints the per-round occupancy so sweeps can record the
-    * curve). Row-identical to [[labelPropagationOn]] by the same
-    * synchronous-recursion invariance (spec-pinned); gate opt-in via conf
-    * `graft.lpa.bucketedFrontier`.
-    */
-  def labelPropagationBucketed(spark: SparkSession, dir: String, rounds: Int,
-                               nBuckets: Int = 32,
-                               verbose: Boolean = false): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val path = graft.sources.Tables.bucketedMvPath(spark,
-      java.nio.file.Paths.get(dir, "lineitem.parquet"),
-      s"copurchase_sym_ubkt$nBuckets", nBuckets, Seq("u"), Seq("u", "v")) {
-      symAdjMV(spark, dir)
-    }
-    val schema = spark.read.parquet(path.toString).schema
-    // bucket id rides the file NAME (part-…_BBBBB.c000…); a bucket with no
-    // rows has no file and prunes to empty. Single parsing implementation
-    // (ADVICE r15): Tables.bucketFiles is the one place the name format
-    // lives — the r14 name-vs-path fix must not be re-fixable here
-    val byBucket: Map[Int, Seq[String]] =
-      graft.sources.Tables.bucketFiles(path)
-    def symFor(bIds: Set[Int]): DataFrame =
-      if (bIds.size >= byBucket.size)
-        spark.read.schema(schema).parquet(path.toString).select(col("u"), col("v"))
-      else {
-        val files = bIds.toSeq.sorted.flatMap(byBucket.getOrElse(_, Nil))
-        if (files.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-            .select(col("u"), col("v"))
-        else spark.read.schema(schema).parquet(files: _*).select(col("u"), col("v"))
-      }
-    // the SAME murmur3+pmod the bucket writer assigned by
-    def bucketsOf(nodes: DataFrame, c: String): Set[Int] =
-      nodes.select(pmod(hash(col(c)), lit(nBuckets)).cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet
-    var labels = nodeDegMV(spark, dir).select(col("node"))
-      .withColumn("label", col("node"))
-      .localCheckpoint(true)
-    val nNodes = labels.count()
-    val bcast = nNodes <= BroadcastNodeLimit
-    var changed = labels.select(col("node"))
-    var changedCount = nNodes
-    var converged = false
-    var r = 1
-    while (r <= rounds && !converged) {
-      val full = r == 1 || changedCount * 4L > nNodes
-      val symScan: DataFrame =
-        if (full) symFor(byBucket.keySet)
-        else {
-          val chB = bucketsOf(changed, "node")
-          val affected = symFor(chB)
-            .join(maybeBroadcast(changed.withColumnRenamed("node", "u"), bcast), "u")
-            .select(col("v")).distinct().localCheckpoint(true)
-          val affB = bucketsOf(affected, "v")
-          if (verbose)
-            println(s"[lpa-bkt] round=$r frontier=$changedCount " +
-              s"chBuckets=${chB.size}/$nBuckets affBuckets=${affB.size}/$nBuckets")
-          symFor(affB)
-            .join(maybeBroadcast(affected.withColumnRenamed("v", "u"), bcast), "u")
-            .select(col("v").as("u"), col("u").as("v"))
-        }
-      val newLabs = symScan
-        .join(maybeBroadcast(labels, bcast), col("u") === col("node"))
-        .groupBy(col("v"), col("label")).agg(count(lit(1)).as("cnt"))
-        .groupBy(col("v").as("node"))
-        .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
-        .select(col("node"), (-col("m.nl")).as("nl"))
-      val merged = labels.join(newLabs, Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("nl"), col("label")).as("label"),
-          (col("nl").isNotNull && col("nl") =!= col("label")).as("ch"))
-        .localCheckpoint(true)
-      labels = merged.select(col("node"), col("label"))
-      changed = merged.filter(col("ch")).select(col("node"))
-      changedCount = changed.count()
-      if (r < rounds && changedCount == 0L) converged = true
-      r += 1
-    }
-    labels
-  }
-
   /** Registered q206: 3 LPA rounds over the symmetrized-adjacency MV;
     * community census (size, representative = min node, membership
     * checksum). Delta-frontier rounds — identical labels to the full
-    * recomputation by labelPropagationOn's invariance argument. Conf
-    * `graft.lpa.bucketedFrontier=true` routes through the experimental
-    * [[labelPropagationBucketed]] path (row-identical, spec-pinned).
+    * recomputation by labelPropagationOn's invariance argument.
     */
   def communityGate(spark: SparkSession, dir: String, rounds: Int = 3): DataFrame =
-    (if (spark.conf.getOption("graft.lpa.bucketedFrontier").exists(_.toBoolean))
-      labelPropagationBucketed(spark, dir, rounds)
-    else
-      labelPropagationOn(gateSym(spark, dir, "u", "v"),
-        gateDeg(spark, dir)._1.select(col("node")), rounds))
+    labelPropagationOn(gateSym(spark, dir, "u", "v"),
+      gateDeg(spark, dir)._1.select(col("node")), rounds)
       .groupBy("label")
       .agg(count(lit(1)).as("size"), min(col("node")).as("min_node"),
         sum(col("node")).as("node_checksum"))

@@ -626,12 +626,12 @@ object Similarity {
     *
     * The probe exploits the bucketed layout the way IVF means it: the
     * probed cell set (nQueries × nProbe, driver-bounded) selects bucket
-    * FILES by name ([[graft.sources.Tables.bucketFiles]] — the
-    * labelPropagationBucketed pattern), so the standing scan reads ONLY
-    * the probed buckets regardless of session conf (Spark's own
-    * bucket-filter pruning needs autoBucketedScan off for filter-only
-    * plans). At 100 TB that is the difference between scanning the corpus
-    * per query batch and scanning |probed cells| / |cells| of it.
+    * FILES by name ([[graft.sources.Tables.bucketFiles]]), so the
+    * standing scan reads ONLY the probed buckets regardless of session
+    * conf (Spark's own bucket-filter pruning needs autoBucketedScan off
+    * for filter-only plans). At 100 TB that is the difference between
+    * scanning the corpus per query batch and scanning |probed cells| /
+    * |cells| of it.
     *
     * Oracle: train on the base split, assign EVERYTHING, probe — the q73
     * unrolled-Lloyd replay with training restricted to the standing split;

@@ -497,108 +497,46 @@ object TextOps {
     * the smallest doc_id reachable through the pair graph.
     *
     * Scale design: components are computed on the COLLAPSED rep graph
-    * (exact-dup clusters enter as one node) by min-label propagation —
-    * each round is one equi-join + one hash aggregation, and the loop ends
-    * when a round changes nothing (≤ graph-diameter rounds; near-dup
-    * components are shallow in practice, and the same fixpoint can be
-    * reached in O(log n) rounds with the large-star/small-star variant if a
-    * corpus ever produces deep chains). Member expansion afterwards is one
-    * join: a member's component is its rep's; the component minimum over
-    * members equals the minimum over reps because each rep IS its cluster's
-    * minimum. The driver-side loop holds only the change COUNT per round,
-    * never data. Equivalent to CC over the raw per-doc pair graph — the
-    * DuckDB oracle computes exactly that via a recursive-CTE closure.
+    * (exact-dup clusters enter as one node) by [[ccMinLabel]] — min-label
+    * propagation with path compression, each round a few equi-joins + one
+    * hash aggregation, O(log n) rounds even on deep chains. Member
+    * expansion afterwards is one join: a member's component is its rep's;
+    * the component minimum over members equals the minimum over reps
+    * because each rep IS its cluster's minimum. The driver-side loop holds
+    * only the change COUNT per round, never data. Equivalent to CC over the
+    * raw per-doc pair graph — the DuckDB oracle computes exactly that via a
+    * recursive-CTE closure.
     */
   private def md5Bucket: Seq[Column] => Column =
     cols => md5(concat_ws("|", cols.map(_.cast("string")): _*))
 
-  def nearDupClusters(spark: SparkSession, dir: String, threshold: Double,
-                      algorithm: String = "minlabel"): DataFrame =
+  def nearDupClusters(spark: SparkSession, dir: String, threshold: Double): DataFrame =
     clustersFromBase(dedupBase(spark, dir),
       verifiedRepPairs(spark, dir, "md5", md5AB, md5Bucket, threshold)
-        .select("doc_a", "doc_b"), algorithm)
+        .select("doc_a", "doc_b"))
 
   /** DataFrame-level twin of `nearDupClusters` for pipeline stages operating
     * on an already-transformed document relation (no per-dir memo).
-    * `algorithm`: "minlabel" (label propagation with path compression — the
-    * oracled default) or "largestar" (large-star/small-star edge contraction
-    * — fewer rounds on high-diameter graphs; same component-minimum
-    * fixpoint, property-pinned equivalent in CollapsePropertySpec).
     */
-  def nearDupClustersFrom(docs: DataFrame, threshold: Double,
-                          algorithm: String = "minlabel"): DataFrame = {
+  def nearDupClustersFrom(docs: DataFrame, threshold: Double): DataFrame = {
     val base = dedupBaseFrom(docs, bucketed = false)
     clustersFromBase(base,
       verifyCandidatePairs(base.repSh,
         bandCandidates(bandsFromWide(minHashWide(md5AB(base.repSh)), md5Bucket)),
-        threshold).select("doc_a", "doc_b"), algorithm)
+        threshold).select("doc_a", "doc_b"))
   }
 
-  /** Connected components via alternating LARGE-STAR / SMALL-STAR rounds
-    * (the MapReduce CC algorithm of Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC'14 — public algorithm): each round is two
-    * groupBy+join passes that rewire every node's strictly-greater neighbors
-    * to its minimum neighbor (large-star), then contract the ≤-side the same
-    * way (small-star). The edge list itself CONTRACTS toward one star per
-    * component, converging in O(log n) rounds on high-diameter graphs —
-    * the alternative trade-off to `minlabel`'s per-node label relation (which
-    * keeps |V| label rows but needs the path-compression join to match the
-    * round count). Both reach the identical fixpoint: every node labeled with
-    * its component minimum.
-    *
-    * Input: (u, v) pair rows (any orientation, self-loops ignored).
-    * Output: (id, label) for every node present in the input.
+  /** Connected components by min-label propagation with path compression.
+    * Input: (u, v) pair rows, either orientation. Output: (id, label) for
+    * every node present in the input, label = the smallest id reachable
+    * through the pairs.
     */
-  private[graft] def ccLargeSmallStar(pairs: DataFrame): DataFrame = {
-    def undirected(e: DataFrame): DataFrame =
-      e.union(e.select(col("v"), col("u"))).toDF("u", "v")
-    var edges = pairs.toDF("u", "v").filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .distinct().localCheckpoint(true)
-    var prevSig: (Long, BigDecimal) = (-1L, BigDecimal(-1))
-    var sig: (Long, BigDecimal) = (0L, BigDecimal(0))
-    while (sig != prevSig) {
-      // large-star: every neighbor v > u links to m = min(N(u) ∪ {u});
-      // output edges (m, v) keep the min on the left by construction
-      val nb = undirected(edges)
-      val ls = nb.join(
-          nb.groupBy("u").agg(min("v").as("mn"))
-            .select(col("u"), least(col("mn"), col("u")).as("m")), "u")
-        .filter(col("v") > col("u"))
-        .select(col("m").as("u"), col("v")).distinct()
-      // small-star: every node with smaller neighbors N⁻(u) rewires
-      // N⁻(u) ∪ {u} onto m = min(N⁻(u))
-      val sm = undirected(ls).filter(col("v") < col("u"))
-      val smin = sm.groupBy("u").agg(min("v").as("m"))
-      val ss = sm.join(smin, "u")
-        .filter(col("v") =!= col("m"))
-        .select(col("m").as("u"), col("v"))
-        .union(smin.select(col("m").as("u"), col("u").as("v")))
-        .distinct().localCheckpoint(true)
-      edges = ss
-      prevSig = sig
-      // decimal sum: ANSI mode throws on bigint overflow, decimal(38) cannot
-      val row = edges.agg(count(lit(1)),
-        coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)"))).head()
-      sig = (row.getLong(0), BigDecimal(row.getDecimal(1)))
-    }
-    // converged: disjoint stars rooted at component minima
-    edges.select(col("v").as("id"), col("u").as("label"))
-      .union(edges.select(col("u").as("id"), col("u").as("label")))
-      .distinct()
-  }
-
-  private def clustersFromBase(base: DedupBase, repPairs: DataFrame,
-                               algorithm: String = "minlabel"): DataFrame = {
-    val edges = repPairs.union(repPairs.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst").cache()
-    var labels =
-      if (algorithm == "largestar") ccLargeSmallStar(repPairs)
-        .select(col("id"), col("label")).localCheckpoint()
-      else edges.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")).localCheckpoint()
-    var changed = if (algorithm == "largestar") 0L else 1L
+  private[graft] def ccMinLabel(pairs: DataFrame): DataFrame = {
+    val p = pairs.toDF("src", "dst")
+    val edges = p.union(p.select(col("dst"), col("src"))).cache()
+    var labels = edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")).localCheckpoint()
+    var changed = 1L
     while (changed > 0) {
       val nbMin = edges.join(labels.select(col("id").as("dst"), col("label")), "dst")
         .groupBy("src").agg(min("label").as("nl"))
@@ -609,9 +547,8 @@ object TextOps {
       // Same fixpoint: the component-minimum labeling.
       val parent = labels.select(col("id").as("label"), col("label").as("pl"))
       // the new label rides with a shrank? flag so the convergence count is
-      // a filter over the round's own checkpoint — the old form re-joined
-      // next against labels, a second node-sized exchange per round (r20,
-      // guide §2.4; identical predicate: new < old)
+      // a filter over the round's own checkpoint, not a second node-sized
+      // join of next against labels (same predicate: new < old)
       val nl2 = least(col("label"),
         coalesce(col("nl"), col("label")),
         coalesce(col("pl"), col("label")))
@@ -624,6 +561,11 @@ object TextOps {
       labels = next.select(col("id"), col("label"))
     }
     edges.unpersist()
+    labels
+  }
+
+  private def clustersFromBase(base: DedupBase, repPairs: DataFrame): DataFrame = {
+    val labels = ccMinLabel(repPairs)
     // expansion: members inherit their rep's component; exact-dup clusters
     // with >= 2 shingled members form an (intra) component even without any
     // verified cross pair — mirroring the raw graph, where identical docs
@@ -2152,18 +2094,6 @@ ORDER BY c.shard"""
       .select(col("sg"), col("df").cast("long").as("df"))
       .orderBy("sg")
   }
-
-  /** The FULL standing shingle-df index in the bucketed maintenance layout
-    * — the crawl pipeline's persisted state when the index refreshes
-    * incrementally (q221) instead of rebuilding per corpus fingerprint. */
-  def shingleDfBucketedMV(spark: SparkSession, dir: String,
-                          nBuckets: Int = 32,
-                          refresh: Boolean = false): DataFrame =
-    Tables.bucketedMv(spark,
-      java.nio.file.Paths.get(dir, "documents.parquet"),
-      "shingle_df_bkt", nBuckets, Seq("sg"), Seq("sg"), refresh) {
-      shingleDfFrom(Tables.documents(spark, dir))
-    }
 
   /** The q221 oracle: the full rebuild of the shingle-df relation. */
   def shingleDfIncrementalOracleSql: String = """

@@ -45,7 +45,7 @@ object Formats {
     if (Files.exists(p)) {
       val walk = Files.walk(p)
       try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(q => Files.delete(q))
+        .forEach(q => Files.deleteIfExists(q))
       finally walk.close()
     }
 

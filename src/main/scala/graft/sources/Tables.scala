@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sources.Formats.deleteRecursively
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -247,16 +248,6 @@ object Tables {
   def mvRoot(env: String => Option[String] = sys.env.get): java.nio.file.Path =
     java.nio.file.Paths.get(env("SPARK_GRAFT_MV_DIR").getOrElse(
       java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), "graft_mv").toString))
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    }
-  }
 
   /** Fingerprint of a source file set: SHA-256 over the absolute srcPath
     * plus every file's (srcPath-RELATIVE path, size, mtime) — relative, not
@@ -657,8 +648,8 @@ object Tables {
     * conf-independent probe-pruning surface: Spark's own bucket-filter
     * pruning only engages when the planner keeps the bucketed scan
     * (autoBucketedScan disables it for filter-only queries), whereas
-    * reading the listed files by path prunes unconditionally — the
-    * labelPropagationBucketed / q237 probe pattern. */
+    * reading the listed files by path prunes unconditionally — the q237
+    * probe pattern. */
   def bucketFiles(path: java.nio.file.Path): Map[Int, Seq[String]] = {
     import scala.jdk.CollectionConverters._
     val re = "_(\\d{5})\\.".r

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import graft.sources.Formats.deleteRecursively
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,12 +38,6 @@ object Versioned {
     */
   private def withStream[S <: java.util.stream.BaseStream[_, _], A](s: S)(f: S => A): A =
     try f(s) finally s.close()
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) withStream(Files.walk(p)) { st =>
-      st.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(q => Files.delete(q))
-    }
 
   private def versionDir(table: String, v: Long): Path =
     Paths.get(table, f"v$v%05d")

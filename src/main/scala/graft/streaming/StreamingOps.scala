@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Formats.deleteRecursively
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -73,14 +74,6 @@ object StreamingOps {
       }
     }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
-
   /** Run one batch-parity gate to completion against a memory sink and tear
     * down EVERYTHING the run allocated (r8 watch item: repeated same-JVM
     * gate runs were run-order-sensitive at 100× because each run left
@@ -121,24 +114,6 @@ object StreamingOps {
     } finally {
       deleteRecursively(ckpt)
       org.apache.spark.sql.graft.SqlShim.unloadAllStateStores()
-      // The outer-join gates' drained result is the FULL emitted set (3.99M
-      // rows at 100×), locally checkpointed into block-manager storage; a
-      // PREVIOUS run's copy is freed by ContextCleaner only after a GC
-      // notices it is unreachable. Forcing the collection here makes that
-      // reclamation deterministic instead of leaving multi-GB residue to
-      // whenever the JVM next feels pressure — measured round 9 as the
-      // 20–38 s q119 run-order variance at 100×.
-      // ENV-GATED (r20, VERDICT r19 item 6): the forced collection is
-      // measurement hygiene for the 100× replay harness, not engine
-      // semantics — a deployment must not pay a stop-the-world pause (or
-      // depend on an ExplicitGCInvokesConcurrent JVM flag) inside every
-      // gate teardown. Set SPARK_GRAFT_GATE_GC=1 for the 100× replay legs
-      // (tools/replay_legs_*); at bench SF the drained results are small
-      // enough that ContextCleaner keeps up without it (A/B legs at sf0.1
-      // unchanged with the call skipped and the JVM flag removed).
-      if (sys.env.get("SPARK_GRAFT_GATE_GC")
-            .exists(v => v == "1" || v.equalsIgnoreCase("true")))
-        System.gc()
     }
   }
 

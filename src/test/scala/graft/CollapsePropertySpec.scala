@@ -175,32 +175,22 @@ class CollapsePropertySpec extends SparkSpecBase {
         s"components diverge: exp=$expComponents got=$gotComponents")
     }
 
-    test(s"seed $seed: large-star/small-star CC ≡ pure-Scala union-find on random edge graphs") {
+    test(s"seed $seed: min-label CC ≡ pure-Scala union-find on random edge graphs") {
       val rng = new scala.util.Random(seed * 7 + 1)
       // mixed topology: random sparse edges + a long chain (high diameter)
-      // + self-loops and duplicate/reversed edges (must be ignored/normalized)
+      // + duplicate/reversed edges (must be normalized); self-loops are
+      // dropped, as the near-dup caller's pairs satisfy doc_a < doc_b
       val n = 60
       val chain = (0 until 15).map(i => (i.toLong, (i + 1).toLong))
       val random = Seq.fill(50)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
-      val edges = (chain ++ random ++ Seq((5L, 5L)) ++ chain.map(_.swap)).toDF("u", "v")
+        .filter(e => e._1 != e._2)
+      val edges = (chain ++ random ++ chain.map(_.swap)).toDF("u", "v")
       val exp = refComponents(
-        (chain ++ random).filter(e => e._1 != e._2)
-          .map(e => (math.min(e._1, e._2), math.max(e._1, e._2), 1.0)).toSet)
+        (chain ++ random).map(e => (math.min(e._1, e._2), math.max(e._1, e._2), 1.0)).toSet)
         .toSeq.sortBy(_._1)
-      val got = TextOps.ccLargeSmallStar(edges)
+      val got = TextOps.ccMinLabel(edges)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
       assert(got == exp, s"CC diverges: exp=$exp got=$got")
-    }
-
-    test(s"seed $seed: nearDupClustersFrom largestar ≡ minlabel on a random corpus") {
-      val rows = mkCorpus(seed)
-      val docs = rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-      val minlabel = TextOps.nearDupClustersFrom(docs, 0.3)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      val largestar = TextOps.nearDupClustersFrom(docs, 0.3, algorithm = "largestar")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      assert(largestar == minlabel,
-        s"largestar clusters diverge from minlabel: exp=$minlabel got=$largestar")
     }
 
     test(s"seed $seed: collapsed novelty/boilerplate/incremental ≡ pure-Scala references") {

@@ -147,28 +147,6 @@ class GraphOpsSpec extends SparkSpecBase {
     assert(key(forced) == full, "forced broadcast-form must equal the full rebuild")
   }
 
-  test("labelPropagationBucketed: row-identical to labelPropagationOn through delta rounds and fixpoint; gate conf routes it") {
-    import spark.implicits._
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("node"), col("label")).as[(Long, Long)].collect().toSet
-    // enough rounds to reach the collapsed-frontier regime (delta rounds +
-    // the empty-frontier short-circuit) on the sf graph
-    val sym = GraphOps.symAdjMV(spark, sf)
-    val plain = key(GraphOps.labelPropagationOn(
-      sym.select(col("u"), col("v")),
-      GraphOps.nodeDegMV(spark, sf).select(col("node")), 12))
-    val bucketed = key(GraphOps.labelPropagationBucketed(spark, sf, 12, nBuckets = 8))
-    assert(bucketed == plain && plain.nonEmpty)
-    // the gate flag routes through the experimental path and produces the
-    // identical census
-    val base = GraphOps.communityGate(spark, sf, 4).collect().map(_.toSeq).toSeq
-    spark.conf.set("graft.lpa.bucketedFrontier", "true")
-    try {
-      val viaBkt = GraphOps.communityGate(spark, sf, 4).collect().map(_.toSeq).toSeq
-      assert(viaBkt == base)
-    } finally spark.conf.unset("graft.lpa.bucketedFrontier")
-  }
-
   test("copurchaseEdgesMV: materialization equals the direct build; reuse, REFRESH, and staleness are pinned") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     // run against a COPY of the source so the staleness leg can touch mtimes
