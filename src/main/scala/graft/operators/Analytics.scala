@@ -29,7 +29,14 @@ object Analytics {
     * Two-level aggregation: partial/final weekly stddev, then re-agg per ticker.
     */
   def avgVolatilityPerTicker(fact: DataFrame): DataFrame =
-    weeklyVolatility(fact)
+    avgVolatilityFromWeekly(weeklyVolatility(fact))
+
+  /** A4 read from the materialized weekly view, as the reference's report
+    * does (`AVG(vol) FROM volatility_weekly`): `weekly` has the columns of
+    * `weeklyVolatility`.
+    */
+  def avgVolatilityFromWeekly(weekly: DataFrame): DataFrame =
+    weekly
       .groupBy("symbol")
       .agg(rd(avg(col("vol")), 4).as("avg_volatility"))
       .orderBy(col("avg_volatility").desc, col("symbol").asc)
@@ -89,15 +96,23 @@ object Analytics {
   /** P4/P5/O3: the data-quality gate (reference `dags/financial_pipeline.py:126-136`)
     * — row count, critical-null count, and key uniqueness in one pass.
     */
-  def qualityGate(bars: DataFrame): DataFrame =
-    bars.agg(
+  def qualityGate(bars: DataFrame): DataFrame = qualityGate(bars, Nil)
+
+  /** The gate with row-level `checks` evaluated in the same pass: after
+    * (total_rows, null_criticals, passed) comes one violation count per
+    * check, named after it.
+    */
+  def qualityGate(bars: DataFrame, checks: Seq[(String, Column)]): DataFrame = {
+    val gate = Seq(
       count(lit(1)).as("total_rows"),
-      sum(when(col("close").isNull || col("date").isNull, 1).otherwise(0))
-        .cast("long").as("null_criticals"),
+      Quality.violations(Quality.criticalNotNull).as("null_criticals"),
       countDistinct(concat_ws("|", col("symbol"), dateStr(col("date")))).as("n_keys"))
-      .select(col("total_rows"), col("null_criticals"),
+    val violations = checks.map { case (name, pred) => Quality.violations(pred).as(name) }
+    bars.agg(gate.head, gate.tail ++ violations: _*)
+      .select(Seq(col("total_rows"), col("null_criticals"),
         when(col("null_criticals") === 0 && col("n_keys") === col("total_rows"), 1L)
-          .otherwise(0L).as("passed"))
+          .otherwise(0L).as("passed")) ++ checks.map { case (name, _) => col(name) }: _*)
+  }
 
   /** A5/F5/F7: README's rounded weekly volatility variant (`README.md:64-71`). */
   def weeklyVolatilityRounded(fact: DataFrame): DataFrame =

@@ -17,18 +17,32 @@ object Quality {
 
   final case class CheckResult(check: String, passed: Boolean, observed: Long)
 
+  /** Staging expectation: the fields every downstream task keys or averages
+    * on are present. The quality gate's `null_criticals` counts its violations.
+    */
+  val criticalNotNull: Column = col("close").isNotNull && col("date").isNotNull
+
+  /** Staging expectation: the close lies inside the day's low–high range. */
+  val ohlcBounds: Column =
+    col("low") <= col("high") && col("close") >= col("low") && col("close") <= col("high")
+
+  /** Aggregate counting the rows where `pred` does not hold; a NULL
+    * predicate counts as a violation.
+    */
+  def violations(pred: Column): Column =
+    sum(when(!coalesce(pred, lit(false)), 1L).otherwise(0L))
+
+  /** The result of a check that `violations` rows failed. */
+  def result(check: String, violations: Long): CheckResult =
+    CheckResult(check, violations == 0L, violations)
+
   /** Row-level predicate checks evaluated in ONE scan: each entry is
     * (name, predicate that must hold for every row).
     */
   def checkAll(df: DataFrame, checks: Seq[(String, Column)]): Seq[CheckResult] = {
-    val aggs = checks.map { case (name, pred) =>
-      sum(when(!coalesce(pred, lit(false)), 1L).otherwise(0L)).as(name)
-    }
+    val aggs = checks.map { case (name, pred) => violations(pred).as(name) }
     val row = df.agg(aggs.head, aggs.tail: _*).head()
-    checks.zipWithIndex.map { case ((name, _), i) =>
-      val violations = row.getLong(i)
-      CheckResult(name, violations == 0L, violations)
-    }
+    checks.zipWithIndex.map { case ((name, _), i) => result(name, row.getLong(i)) }
   }
 
   /** Exact row count (reference's COUNT(*) = 750000 gate). */

@@ -82,9 +82,13 @@ object Stars {
     * distributed, no driver loop.
     */
   def upsertIfAbsent(existing: DataFrame, incoming: DataFrame, key: String): DataFrame =
-    existing.unionByName(
-      incoming.join(existing.select(key), Seq(key), "left_anti")
-        .dropDuplicates(key))
+    existing.unionByName(absentRows(existing, incoming, key))
+
+  /** A14's insert half: the incoming rows whose key `existing` lacks, one
+    * row per key — what an append must add for `upsertIfAbsent` semantics.
+    */
+  def absentRows(existing: DataFrame, incoming: DataFrame, key: String): DataFrame =
+    incoming.join(existing.select(key), Seq(key), "left_anti").dropDuplicates(key)
 
   /** TPC-H Q1-shaped pricing summary — the scan-heavy flagship aggregate.
     * The shipdate predicate pushes to the parquet scan (PushedFilters).

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Paths}
+
 import graft.operators.{Analytics, MarketView, Quality, Stars}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,9 +16,17 @@ import org.apache.spark.sql.functions._
   * values, PostgresOperator stages become DataFrame writes, TRUNCATE-reload
   * becomes SaveMode.Overwrite, the materialized view becomes a parquet-backed
   * derived table whose "REFRESH" is recomputation, and SQLCheckOperator is a
-  * fail-fast `require` on a one-row boolean frame. The fact table is written
+  * fail-fast `require` on a one-row aggregate. The fact table is written
   * `partitionBy(ano)` so time-ranged reads prune partitions — the 100 TB
   * layout lever the reference's Postgres heap tables don't have.
+  *
+  * Each task reads its input once: one aggregation over staging serves the
+  * quality gate and the expectation suite; the dimensions are insert-only
+  * (`INSERT … ON CONFLICT DO NOTHING`): a run appends the rows whose key is
+  * absent and writes nothing when none is; and the report reads the
+  * `volatility_weekly` view the run has just refreshed, as the reference's
+  * `AVG(vol) FROM volatility_weekly` does. Every table the run writes and
+  * reads again is read with the schema it was written with.
   */
 final case class PipelineResult(
     stagingRows: Long, factRows: Long, weeklyRows: Long, report: String)
@@ -31,41 +41,37 @@ object Pipeline {
     Tables.requireExists(csvPath)
 
     // 3. load_staging: declared schema, truncate-and-reload
-    val staging = Tables.readStagingCsv(spark, csvPath)
-    Tables.overwrite(staging, s"$warehouse/staging")
-    val stagingDf = spark.read.parquet(s"$warehouse/staging")
-    val stagingRows = stagingDf.count()
+    val stagingDf = Tables.overwriteAndRead(
+      Tables.readStagingCsv(spark, csvPath), s"$warehouse/staging")
 
-    // 4. run_data_quality_checks: SQLCheckOperator twin — one row, fail-fast
-    val gate = Analytics.qualityGate(stagingDf).head()
+    // 4. run_data_quality_checks: SQLCheckOperator twin and the expectation
+    // suite in one aggregation — fail-fast on its one row
+    val gate = Analytics.qualityGate(stagingDf, Seq("ohlc_bounds" -> Quality.ohlcBounds)).head()
+    val stagingRows = gate.getLong(0)
     require(gate.getLong(2) == 1L,
-      s"quality gate failed: rows=${gate.getLong(0)} null_criticals=${gate.getLong(1)}")
+      s"quality gate failed: rows=$stagingRows null_criticals=${gate.get(1)}")
     expectedRows.foreach(n => require(stagingRows == n,
       s"row-count gate failed: expected $n, got $stagingRows"))
-    // expectation suite: one extra scan covering the row-level invariants
-    Quality.enforce(Quality.checkAll(stagingDf, Seq(
-      "critical_not_null" -> (col("close").isNotNull && col("date").isNotNull),
-      "ohlc_bounds" -> (col("low") <= col("high") &&
-        col("close") >= col("low") && col("close") <= col("high")))))
+    // null_criticals counts the violations of critical_not_null
+    Quality.enforce(Seq(
+      Quality.result("critical_not_null", gate.getLong(1)),
+      Quality.result("ohlc_bounds", gate.getLong(3))))
 
-    // 5. create_dim_tables: distinct projections + insert-if-absent upsert
-    val dimInstrument = upsertDim(spark, s"$warehouse/dim_instrumento",
-      Analytics.dimInstrument(stagingDf), "ticker")
-    val dimTempo = upsertDim(spark, s"$warehouse/dim_tempo",
-      Analytics.dimTempo(stagingDf), "data_id")
+    // 5. create_dim_tables: distinct projections, insert-if-absent
+    upsertDim(spark, s"$warehouse/dim_instrumento", Analytics.dimInstrument(stagingDf), "ticker")
+    upsertDim(spark, s"$warehouse/dim_tempo", Analytics.dimTempo(stagingDf), "data_id")
 
     // 6. load_fact_table: LAG pct-change fact, partitioned by year
-    val fact = MarketView.withPctChange(stagingDf)
-      .withColumn("ano", year(col("date")))
-    Tables.overwrite(fact, s"$warehouse/fact_movimentacao_diaria", Seq("ano"))
-    val factDf = spark.read.parquet(s"$warehouse/fact_movimentacao_diaria")
+    val factDf = Tables.overwriteAndRead(
+      MarketView.withPctChange(stagingDf).withColumn("ano", year(col("date"))),
+      s"$warehouse/fact_movimentacao_diaria", Seq("ano"))
 
     // 7. calculate_volatility_view: materialized view = recompute + overwrite
-    Tables.overwrite(Analytics.weeklyVolatility(factDf), s"$warehouse/volatility_weekly")
-    val weekly = spark.read.parquet(s"$warehouse/volatility_weekly")
+    val weekly = Tables.overwriteAndRead(
+      Analytics.weeklyVolatility(factDf), s"$warehouse/volatility_weekly")
 
-    // 8. report_top_volatility: top-1 result collected (XCom analog)
-    val top = Analytics.avgVolatilityPerTicker(factDf).head()
+    // 8. report_top_volatility: top-1 over the view (XCom analog)
+    val top = Analytics.avgVolatilityFromWeekly(weekly).head()
     val report =
       f"Ticker mais volátil: ${top.getString(0)} (volatilidade média semanal ${top.getDouble(1)}%.4f%%)"
 
@@ -75,19 +81,16 @@ object Pipeline {
     PipelineResult(stagingRows, factRows = factDf.count(), weeklyRows = weekly.count(), report)
   }
 
-  /** A14 upsert against the persisted dimension: first run creates, later
-    * runs add only absent keys (ON CONFLICT DO NOTHING semantics).
+  /** A14 upsert against the persisted dimension: the first run writes
+    * `incoming`; later runs append only the rows whose key is absent
+    * (ON CONFLICT DO NOTHING semantics) and write nothing when none is.
     */
   private def upsertDim(spark: SparkSession, path: String, incoming: DataFrame,
-                        key: String): DataFrame = {
-    val merged =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
-        Stars.upsertIfAbsent(spark.read.parquet(path), incoming, key)
-      else incoming
-    // localCheckpoint cuts the lineage back to the file we are about to
-    // overwrite — otherwise the write would read from the path it truncates
-    val materialized = merged.localCheckpoint(true)
-    Tables.overwrite(materialized, path)
-    spark.read.parquet(path)
-  }
+                        key: String): Unit =
+    if (!Files.exists(Paths.get(path))) Tables.overwrite(incoming, path)
+    else {
+      val existing = spark.read.schema(incoming.schema).parquet(path)
+      val absent = Stars.absentRows(existing, incoming, key)
+      if (!absent.isEmpty) absent.write.mode("append").parquet(path)
+    }
 }

@@ -226,6 +226,19 @@ object Tables {
     (if (partitionByCols.nonEmpty) w.partitionBy(partitionByCols: _*) else w).parquet(path)
   }
 
+  /** `overwrite`, then the table read back with `df`'s own schema, so the
+    * reader runs no job to infer it from the parquet footers. A partitioned
+    * table reads back with its partition columns last; `df` must have them
+    * there already for the two schemas to agree.
+    */
+  def overwriteAndRead(df: DataFrame, path: String,
+                       partitionByCols: Seq[String] = Nil): DataFrame = {
+    require(df.columns.takeRight(partitionByCols.size).toSeq == partitionByCols,
+      s"partition columns ${partitionByCols.mkString(",")} must come last in ${df.columns.mkString(",")}")
+    overwrite(df, path, partitionByCols)
+    df.sparkSession.read.schema(df.schema).parquet(path)
+  }
+
   /** Incremental materialized-view refresh: dynamic partition overwrite
     * replaces ONLY the partitions present in `df`, leaving every other
     * partition's files untouched. The 100 TB refresh lever the reference's

@@ -26,6 +26,16 @@ class StarsSpec extends SparkSpecBase {
     assert(out.size == 3)
   }
 
+  test("absentRows: only incoming rows with an absent key, one per key") {
+    val existing = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    val incoming = Seq((2L, "B-NEW"), (3L, "c"), (3L, "c2"), (4L, "d")).toDF("k", "v")
+    val out = Stars.absentRows(existing, incoming, "k")
+      .collect().map(r => r.getLong(0) -> r.getString(1))
+    assert(out.map(_._1).sorted.toSeq == Seq(3L, 4L)) // existing key 2 wins, 3 kept once
+    assert(Set("c", "c2").contains(out.toMap.apply(3L)))
+    assert(out.toMap.apply(4L) == "d")
+  }
+
   test("star revenue equals the unjoined lineitem revenue total") {
     // region/nation/customer cover all custkeys, so the star join must not
     // drop or duplicate lineitem rows: total revenue is invariant.
