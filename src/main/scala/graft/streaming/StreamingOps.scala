@@ -730,7 +730,7 @@ object StreamingOps {
       .filter(size(col("c_sgs")) > 0)
       .select(col("corpus_doc"), col("c_sgs"),
         posexplode(TextOps.lshBandBuckets(
-          TextOps.minHashSignatureFromShingles(col("c_sgs")))).as(Seq("band", "bucket")))
+          TextOps.minHashSignatureFromShingles(col("c_sgs"), TextOps.xxhashFamily))).as(Seq("band", "bucket")))
   }
 
   /** Streaming NEAR-dup detection against a static corpus — the fuzzy twin
@@ -749,7 +749,7 @@ object StreamingOps {
       .filter(size(col("sgs")) > 0)
       .select(col("doc_id"), col("sgs"),
         posexplode(TextOps.lshBandBuckets(
-          TextOps.minHashSignatureFromShingles(col("sgs")))).as(Seq("band", "bucket")))
+          TextOps.minHashSignatureFromShingles(col("sgs"), TextOps.xxhashFamily))).as(Seq("band", "bucket")))
     s.join(bandIndex, Seq("band", "bucket"))
       .withColumn("inter", size(array_intersect(col("sgs"), col("c_sgs"))).cast("long"))
       .withColumn("jaccard", col("inter").cast("double") /

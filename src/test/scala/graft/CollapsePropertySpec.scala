@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.TextOps
+import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
 /** Randomized cross-IMPLEMENTATION equivalence for the collapse machinery:
@@ -133,6 +134,53 @@ class CollapsePropertySpec extends SparkSpecBase {
     (cross ++ intra).filter(_._3 >= threshold).map(p => (p._1, p._2, p._3))
   }
 
+  /** Near and exact copies next to shingle-less texts: under 3 tokens,
+    * empty, and two exact copies of one short text. */
+  private lazy val shortTextCorpus: (String, Seq[(Long, String)]) = {
+    val a = "the river runs past the old mill and under the stone bridge before the town"
+    val b = "markets opened higher on monday as traders weighed the latest inflation figures"
+    val texts = Seq(
+      1L -> a,
+      2L -> "hi there",                  // 2 tokens: no shingle
+      3L -> (a + " today"),             // near copy of 1
+      4L -> "",                          // empty text
+      5L -> "ok go",                     // two exact copies of a short text
+      6L -> b,
+      7L -> "OK, go!",                   // normalizes to doc 5's text
+      8L -> a.toUpperCase,               // exact copy of 1 after normalization
+      9L -> b.replace("monday", "friday").replace("latest", "newest"),
+      10L -> "yes",
+      11L -> (b + " again and again"))
+    val d = java.nio.file.Files.createTempDirectory("graft_prop_short").toString
+    texts.map { case (id, t) => (id, t, "en", "web", 0L) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(d + "/documents.parquet")
+    (d, texts)
+  }
+
+  test("shingle-less texts get no cluster and never share a band bucket") {
+    val (d, texts) = shortTextCorpus
+    val shingleLess = Set(2L, 4L, 5L, 7L, 10L)
+    for (tau <- Seq(0.5, 0.9)) {
+      // the output order is part of the contract: (cluster_rep, doc_id)
+      val expected = refComponents(refPairs(texts, tau)).toSeq.sortBy(r => (r._2, r._1))
+      val got = TextOps.nearDupClustersFrom(Tables.documents(spark, d), tau)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(got == expected, s"tau $tau: exp=$expected got=$got")
+      assert(got.nonEmpty, s"tau $tau: the planted copies must cluster")
+      assert(got.forall(r => !shingleLess(r._1)), s"tau $tau: a shingle-less doc clustered: $got")
+    }
+  }
+
+  test("nearDupClustersFrom ≡ nearDupClusters row for row, order included") {
+    val (d, _) = shortTextCorpus
+    for (tau <- Seq(0.5, 0.9)) {
+      val byDir = TextOps.nearDupClusters(spark, d, tau).collect().toSeq
+      val from = TextOps.nearDupClustersFrom(Tables.documents(spark, d), tau).collect().toSeq
+      assert(from == byDir, s"tau $tau: dir=$byDir from=$from")
+    }
+  }
+
   for (seed <- Seq(11, 23, 47)) {
     test(s"seed $seed: collapsed embedding near-dup ≡ pure-Scala raw algorithm") {
       val rng = new scala.util.Random(seed)
@@ -173,6 +221,10 @@ class CollapsePropertySpec extends SparkSpecBase {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
       assert(gotComponents == expComponents,
         s"components diverge: exp=$expComponents got=$gotComponents")
+      val fromComponents = TextOps.nearDupClustersFrom(Tables.documents(spark, d), 0.3)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
+      assert(fromComponents == expComponents,
+        s"nearDupClustersFrom components diverge: exp=$expComponents got=$fromComponents")
     }
 
     test(s"seed $seed: min-label CC ≡ pure-Scala union-find on random edge graphs") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.CorpusPipeline
+import org.apache.spark.sql.TestCacheManager
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus preparation: planted PII is scrubbed, the low-quality
@@ -64,5 +65,61 @@ class CorpusPipelineSpec extends SparkSpecBase {
     val p1 = r1.profile.collect().map(_.toSeq)
     val p2 = r2.profile.collect().map(_.toSeq)
     assert(p1.toSeq == p2.toSeq, "profile must be bit-identical across runs")
+  }
+
+  /** A generated corpus with planted exact and near copies (appending one
+    * word to a text of 20+ words keeps Jaccard ≥ 0.9), large enough that the
+    * survivors spread over every shuffle partition before the write. */
+  private def writeGenerated(): String = {
+    val vocab = Vector("the", "a", "and", "of", "to", "in", "is", "data", "river",
+      "stone", "market", "green", "table", "window", "quiet", "signal", "north",
+      "paper", "engine", "garden", "winter", "copper", "letter", "harbor")
+    val rng = new scala.util.Random(7)
+    val base = (1L to 240L).map { id =>
+      id -> Seq.fill(20 + rng.nextInt(30))(vocab(rng.nextInt(vocab.size))).mkString(" ")
+    }
+    val exactCopies = base.take(24).zipWithIndex.map { case ((_, t), k) => (1000L + k) -> t }
+    val nearCopies = base.slice(24, 36).zipWithIndex.map { case ((_, t), k) =>
+      (2000L + k) -> s"$t ${vocab(rng.nextInt(vocab.size))}"
+    }
+    val d = java.nio.file.Files.createTempDirectory("graft_corpus_gen").toString
+    (base ++ exactCopies ++ nearCopies).map { case (id, t) => (id, t, "en", "web", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(d + "/documents.parquet")
+    d
+  }
+  private lazy val generated: String = writeGenerated()
+
+  test("job count: a run plus its profile collect takes at most 56 Spark jobs") {
+    val out = java.nio.file.Files.createTempDirectory("graft_corpus_jobs").toString + "/corpus"
+    var nFinal = 0L
+    val jobs = jobsOf {
+      val r = CorpusPipeline.run(spark, generated, Some(out))
+      r.profile.collect()
+      nFinal = r.nFinal
+    }
+    info(s"$jobs jobs, $nFinal survivors")
+    assert(nFinal > 200L)
+    // 98 jobs before the near-dup pass moved to per-rep shingle arrays and
+    // the split was pinned once
+    assert(jobs <= 56)
+  }
+
+  test("a run leaves no relation cached behind") {
+    // a corpus of its own: a relation an earlier run left cached would make
+    // this run's cache() calls no-ops and hide the leak
+    val before = TestCacheManager.entries(spark)
+    CorpusPipeline.run(spark, writeGenerated(), None).profile.collect()
+    assert(TestCacheManager.entries(spark) == before)
+  }
+
+  test("the write keeps one data file per split directory") {
+    // the layout of writing the survivors unpinned; a cache()d split would
+    // write one file per shuffle partition into each directory
+    val out = java.nio.file.Files.createTempDirectory("graft_corpus_files").toString + "/corpus"
+    CorpusPipeline.run(spark, generated, Some(out))
+    val files = new java.io.File(out).listFiles().filter(_.getName.startsWith("split="))
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    assert(files == Map("split=train" -> 1, "split=val" -> 1, "split=test" -> 1))
   }
 }

@@ -3,12 +3,9 @@ package graft
 import graft.operators.{Analytics, MarketView}
 import graft.pipeline.Pipeline
 import graft.sources.Tables
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 class PipelineSpec extends SparkSpecBase {
@@ -36,26 +33,6 @@ class PipelineSpec extends SparkSpecBase {
     try s.iterator().asScala.map(_.getFileName.toString)
       .filterNot(n => n.startsWith(".") || n.startsWith("_")).toSet
     finally s.close()
-  }
-
-  /** Jobs the calling thread submits while `f` runs. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val (key, tag) = ("graft.spec.jobCount", s"run-${System.nanoTime()}")
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == tag)) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, tag)
-    try f
-    finally {
-      sc.setLocalProperty(key, null)
-      TestListenerBus.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
   }
 
   test("end-to-end: CSV -> staging -> dims -> fact -> weekly view -> report") {

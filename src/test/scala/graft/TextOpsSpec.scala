@@ -124,15 +124,33 @@ class TextOpsSpec extends SparkSpecBase {
   }
 
   test("per-row array MinHash signature ≡ the exploded-aggregation signature") {
-    val sig1 = TextOps.minHashSignatures(TextOps.shingleSet(docs))
+    // plus a shingle-less doc: it has no exploded rows, so no signature,
+    // and its per-row signature is null
+    val withShort = docs.union(Seq((6L, "en", "web", "too short")).toDF(docs.columns: _*))
+    val sh = TextOps.shingleSet(withShort)
+    def perRow(family: TextOps.HashFamily): Map[Long, Vector[Long]] = withShort
+      .select(col("doc_id"), TextOps.shingleArray(col("text")).as("sgs"))
+      .filter(size(col("sgs")) > 0)
+      .select(col("doc_id"), TextOps.minHashSignatureFromShingles(col("sgs"), family))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).toMap
-    val sig2 = docs
-      .select(col("doc_id"),
-        TextOps.minHashSignatureFromShingles(TextOps.shingleArray(col("text"))).as("mh"))
-      .filter(size(col("mh")) > 0)
+    val xxh = TextOps.minHashSignatures(sh)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).toMap
-    assert(sig1.keySet.nonEmpty && sig1.keySet == sig2.keySet.intersect(sig1.keySet))
-    for ((id, v) <- sig1) assert(sig2(id) == v, s"signature mismatch for doc $id")
+    val md5 = TextOps.minHashWide(TextOps.md5AB(sh))
+      .collect().map(r => (r.getLong(0), (1 to TextOps.NumPerms).map(r.getLong).toVector)).toMap
+    for ((name, exploded, family) <- Seq(
+        ("xxhash64", xxh, TextOps.xxhashFamily), ("md5", md5, TextOps.md5Family))) {
+      val rows = perRow(family)
+      assert(exploded.keySet == (1L to 5L).toSet, s"$name: exploded signature docs")
+      assert(rows.keySet == exploded.keySet, s"$name: per-row signature docs")
+      for ((id, v) <- exploded) assert(rows(id) == v, s"$name signature mismatch for doc $id")
+      // unfiltered, the shingle-less doc's empty array has a null signature:
+      // folding it would give 32 × Long.MaxValue, one band bucket for all
+      val empty = withShort.filter(col("doc_id") === 6L)
+        .select(TextOps.shingleArray(col("text")).as("sgs"))
+        .select(size(col("sgs")), TextOps.minHashSignatureFromShingles(col("sgs"), family))
+        .head()
+      assert(empty.getInt(0) == 0 && empty.isNullAt(1), s"$name: empty-array signature $empty")
+    }
   }
 
   test("perDistinctText: collapsed transform ≡ direct per-doc computation") {
