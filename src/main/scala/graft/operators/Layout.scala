@@ -131,29 +131,20 @@ object Layout {
   }
 
   /** Registered query (q136): fragment the events relation into 48 tiny
-    * files (the streaming-ingest pathology, materialized once per source
-    * fingerprint), compact it, and aggregate the COMPACTED copy; the
-    * oracle aggregates the original — hash equality proves the rewrite
+    * files (the streaming-ingest pathology), compact it, and aggregate the
+    * COMPACTED copy (both stored once per source fingerprint); the oracle
+    * aggregates the original — hash equality proves the rewrite
     * preserved every row and value. File-count mechanics are pinned in
     * LayoutSpec (they are filesystem facts, not SQL).
     */
   def compactionGate(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val fp = graft.sources.Formats.fingerprintOf(dir, "events")
-    val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft_compact", fp)
-    val frag = base.resolve("fragmented").toString
-    val compacted = base.resolve("compacted").toString
-    synchronized {
-      // materializeAtomic: per-process tmp + atomic rename, so a second JVM
-      // racing the same fingerprinted path never reads a half-written copy.
-      graft.sources.Formats.materializeAtomic(frag)(tmp =>
-        Tables.events(spark, dir).repartition(48)
-          .write.mode("overwrite").parquet(tmp))
-      graft.sources.Formats.materializeAtomic(compacted)(tmp =>
-        compactSmallFiles(spark, frag, tmp, 32L * 1024 * 1024))
-    }
+    val src = java.nio.file.Paths.get(dir, "events.parquet")
+    val frag = Tables.materializedPath(src, "compact_events_fragmented")(tmp =>
+      Tables.events(spark, dir).repartition(48).write.parquet(tmp.toString))
+    val compacted = Tables.materializedPath(src, "compact_events_compacted")(tmp =>
+      compactSmallFiles(spark, frag.toString, tmp.toString, 32L * 1024 * 1024))
     import graft.functions.Fx._
-    spark.read.parquet(compacted)
+    spark.read.parquet(compacted.toString)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),

@@ -252,11 +252,12 @@ object Tables {
       .partitionBy(partitionByCols: _*)
       .parquet(path)
 
-  /** Root directory the fingerprinted MVs land under: the `SPARK_GRAFT_MV_DIR`
-    * environment variable when set (the cluster deployment points this at the
-    * shared object-storage prefix the derived relations live in, next to the
-    * tables), falling back to tmpdir/graft_mv for the single-host case. The
-    * env accessor is injectable so the resolution rule itself is unit-pinned.
+  /** Root directory of the [[materializedPath]] store (MVs, bucketed MVs,
+    * gate splits): the `SPARK_GRAFT_MV_DIR` environment variable when set
+    * (the cluster deployment points this at the shared object-storage
+    * prefix the derived relations live in, next to the tables), falling
+    * back to tmpdir/graft_mv for the single-host case. The env accessor is
+    * injectable so the resolution rule itself is unit-pinned.
     */
   def mvRoot(env: String => Option[String] = sys.env.get): java.nio.file.Path =
     java.nio.file.Paths.get(env("SPARK_GRAFT_MV_DIR").getOrElse(
@@ -285,40 +286,32 @@ object Tables {
     md.digest().map("%02x".format(_)).mkString.take(16)
   }
 
-  /** Per-(name, fingerprint) build monitors: two DIFFERENT MVs may build
-    * concurrently in one JVM (sym + codebooks + part-order-counts all
-    * first-touch on the same gate call tree), while two threads racing to
-    * the SAME MV still serialize to one build (round-13; previously a
-    * single object-level lock serialized unrelated builds too). */
+  /** Per-(name, fingerprint) build monitors: two DIFFERENT entries may
+    * build concurrently in one JVM, while two threads racing to the SAME
+    * entry serialize to one build. */
   private val mvLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Grace period a superseded MV fingerprint survives after being MARKED
-    * superseded, covering readers that resolved the old path just before a
-    * source regeneration (see [[vacuumMvs]]). */
+  /** Grace period of the store's sweep (see [[vacuumMvs]]): how long a
+    * superseded entry survives its `_SUPERSEDED` stamp, and how long a
+    * build temp may go without a new file before it counts as crashed. */
   val MvVacuumGraceMs: Long = 3600000L
 
-  /** Vacuum superseded fingerprints of MV `name` under [[mvRoot]] — the
-    * [[Versioned]] `vacuum` discipline applied to the fingerprinted-MV
-    * layer, invoked automatically on every successful publish (round-13;
-    * previously a regenerated source stranded the old `${name}_${fp}` dir
-    * forever — a dead 239M-row sym MV per corpus rebuild).
+  /** Sweep the superseded fingerprints and crashed build temps of store
+    * entry `name` under [[mvRoot]]; [[materializedPath]] runs it after each
+    * publish. Returns the deleted directory names. `graceMs` and `nowMs`
+    * are injectable so the rules are unit-pinned.
     *
-    * Two-phase, reader-safe sweep:
-    *   1. every published sibling `${name}_<fp>` with fp != `keepFp` is
-    *      MARKED by writing a `_SUPERSEDED` stamp file (once); a dir with
-    *      no `_SUCCESS` marker (pre-atomic-era partial) is deleted
-    *      immediately — no reader can hold it, because paths are only ever
-    *      handed out after the `_SUCCESS` check;
-    *   2. a marked dir is DELETED only once its stamp is older than
-    *      `graceMs`. A reader that resolved the old path while it was
-    *      current has the grace window to finish; any later resolution
-    *      re-fingerprints the live source and lands on `keepFp`.
-    * Stale build temps (`.{name}_*.tmp-*` left by a crashed builder) are
-    * swept on dir mtime older than the grace period — a LIVE concurrent
-    * builder's temp is necessarily younger.
-    *
-    * Returns the deleted directory names. `nowMs` is injectable so the
-    * grace rule itself is unit-pinned.
+    *   - A published sibling `<name>_<fp>` with fp != `keepFp` is STAMPED
+    *     `_SUPERSEDED` on first sighting and deleted on a later sweep once
+    *     the stamp is older than `graceMs`, so a reader that resolved the
+    *     old path keeps it for the grace period. A resolve of that entry
+    *     deletes the stamp ([[materializedPath]]), which restarts the count.
+    *   - A sibling without `_SUCCESS` is deleted at once: paths are handed
+    *     out only after the `_SUCCESS` check, so no reader holds it.
+    *   - A build temp `.<name>_<fp>.tmp-*` is live while its NEWEST file is
+    *     younger than `graceMs`, and deleted after that. A slow build keeps
+    *     writing part files long after its directory's own mtime stops
+    *     moving, so the directory mtime alone is not a liveness signal.
     */
   def vacuumMvs(name: String, keepFp: String,
                 graceMs: Long = MvVacuumGraceMs,
@@ -327,46 +320,41 @@ object Tables {
     val root = mvRoot()
     if (!Files.isDirectory(root)) return Nil
     val published = ("^" + java.util.regex.Pattern.quote(name + "_") + "[0-9a-f]{16}$").r
-    val tmpPrefix = s".${name}_"
+    val buildTemp = ("^" + java.util.regex.Pattern.quote(s".${name}_") +
+      "[0-9a-f]{16}\\.tmp-").r
     val deleted = scala.collection.mutable.ArrayBuffer.empty[String]
     val listing = Files.list(root)
     try listing.forEach { p =>
       val fn = p.getFileName.toString
-      if (published.findFirstIn(fn).isDefined && fn != s"${name}_$keepFp") {
-        if (!Files.exists(p.resolve("_SUCCESS"))) {
-          deleteRecursively(p); deleted += fn
-        } else if (supersededPastGrace(p, graceMs, nowMs)) {
-          deleteRecursively(p); deleted += fn
-        }
-      } else if (fn.startsWith(tmpPrefix) && fn.contains(".tmp-") &&
-                 nowMs - Files.getLastModifiedTime(p).toMillis >= graceMs) {
-        deleteRecursively(p); deleted += fn
-      }
+      val dead =
+        if (published.findFirstIn(fn).isDefined && fn != s"${name}_$keepFp") {
+          val stamp = p.resolve("_SUPERSEDED")
+          if (!Files.exists(p.resolve("_SUCCESS"))) true
+          else if (!Files.exists(stamp)) {
+            Files.write(stamp, nowMs.toString.getBytes("UTF-8")); false
+          } else nowMs - scala.util.Try(new String(Files.readAllBytes(stamp),
+            "UTF-8").trim.toLong).getOrElse(0L) >= graceMs
+        } else buildTemp.findFirstIn(fn).isDefined &&
+          nowMs - newestMtimeMs(p, nowMs) >= graceMs
+      if (dead) { deleteRecursively(p); deleted += fn }
     } finally listing.close()
     deleted.toSeq
   }
 
-  /** The two-phase supersession primitive shared by [[vacuumMvs]] and the
-    * gate-split sweep ([[graft.streaming.StreamingOps]]): first sighting of
-    * a superseded dir STAMPS it with `_SUPERSEDED` (returns false — a
-    * reader that resolved the path while it was current gets the grace
-    * window); a later sighting returns true once the stamp has outlived
-    * `graceMs`. One copy so the reader-safety protocol (stamp format,
-    * grace comparison) cannot diverge between its users (round-17 review).
-    */
-  private[graft] def supersededPastGrace(p: java.nio.file.Path,
-                                         graceMs: Long,
-                                         nowMs: Long): Boolean = {
+  /** Newest mtime in a directory tree. A file or directory that cannot be
+    * read (a concurrent sweep may be deleting the tree) counts as
+    * `fallbackMs`, i.e. young: the sweep skips it and a later one collects
+    * it once the other sweep is gone. */
+  private def newestMtimeMs(p: java.nio.file.Path, fallbackMs: Long): Long = {
     import java.nio.file.Files
-    val stamp = p.resolve("_SUPERSEDED")
-    if (!Files.exists(stamp)) {
-      Files.write(stamp, nowMs.toString.getBytes("UTF-8"))
-      false
-    } else {
-      val markedAt = scala.util.Try(
-        new String(Files.readAllBytes(stamp), "UTF-8").trim.toLong).getOrElse(0L)
-      nowMs - markedAt >= graceMs
-    }
+    scala.util.Try {
+      val walk = Files.walk(p)
+      try walk.mapToLong(q =>
+          scala.util.Try(Files.getLastModifiedTime(q).toMillis)
+            .getOrElse(fallbackMs))
+        .max.orElse(Files.getLastModifiedTime(p).toMillis)
+      finally walk.close()
+    }.getOrElse(fallbackMs)
   }
 
   /** Publish a built MV temp directory to its final path. ATOMIC_MOVE is the
@@ -489,9 +477,10 @@ object Tables {
   /** Depth-first tree copy for [[publishMv]]'s cross-file-store fallback —
     * the only publish path that cannot rename; the destination is a private
     * staging sibling, renamed into place once the copy (marker LAST) is
-    * complete. */
-  private def copyRecursively(from: java.nio.file.Path,
-                              to: java.nio.file.Path): Unit = {
+    * complete. File mtimes are copied too: the gate splits stamp them to
+    * fix the file-source ingest order. */
+  private[graft] def copyRecursively(from: java.nio.file.Path,
+                                     to: java.nio.file.Path): Unit = {
     import java.nio.file.{Files, StandardCopyOption}
     import scala.jdk.CollectionConverters._
     Files.createDirectories(to)
@@ -502,62 +491,85 @@ object Tables {
     (rest ++ markers).foreach { p =>
       val t = to.resolve(p.getFileName.toString)
       if (Files.isDirectory(p)) copyRecursively(p, t)
-      else Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING)
+      else Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.COPY_ATTRIBUTES)
     }
   }
 
-  /** Source-fingerprinted materialized view: `build` runs once per distinct
-    * (source file set, name) and lands under [[mvRoot]]; later calls —
-    * including across JVMs — read the parquet back. A regenerated dataset
-    * invalidates the MV automatically (see [[mvFingerprint]]). This is the
-    * train-once / probe-many lever for any expensive derived relation (edge
-    * lists, k-means codebooks): the cost disappears from every query after
-    * the first, and the derived relation itself is what a cluster deployment
-    * would keep in object storage next to the table.
+  /** The store of source-fingerprinted scratch relations: every derived
+    * relation that is a pure function of a source file set (the MVs, the
+    * bucketed MVs, the streaming gates' file splits, the format and
+    * compaction gates' copies) is built here once per (source fingerprint,
+    * `name`) and found again by any later call, in this JVM or another.
     *
-    * Cross-JVM safety: the build lands in a private temp directory and is
-    * PUBLISHED by a single atomic rename, so a concurrent reader never sees
-    * a half-written MV and two concurrent builders race to one winner (the
-    * loser discards its copy and reads the published one — both built the
-    * same deterministic relation from the same fingerprinted source). The
-    * `_SUCCESS` marker is re-checked after publish; a pre-atomic-era partial
-    * directory (no marker) is swept before publishing. Each successful
-    * publish then [[vacuumMvs]] the name's superseded fingerprints.
-    *
-    * This variant returns the published PATH — the stable cache key the
-    * JVM-shared gate-pin layer needs (see `GraphOps`); [[fingerprintedMv]]
-    * is the read-back convenience.
+    *   - Layout: `mvRoot()/<name>_<fp>`, fp = [[mvFingerprint]] of
+    *     `srcPath`. `SPARK_GRAFT_MV_DIR` (see [[mvRoot]]) moves all of them,
+    *     the gate splits included.
+    *   - Lock: one monitor per (name, fp); racing threads build once,
+    *     different entries build in parallel.
+    *   - Publish: `write` fills a private temp `.<name>_<fp>.tmp-<uuid>`
+    *     (it may stamp mtimes or add files before the rename; it must leave
+    *     a `_SUCCESS` marker, as Spark's writers do), which
+    *     [[publishMv]] renames into place. Two JVMs racing to publish the
+    *     same entry keep one copy; both built the same deterministic
+    *     relation. The marker is checked after publish, a markerless
+    *     directory at the path is rebuilt, and `refresh` rebuilds anyway.
+    *     After a publish, `published` runs under the lock (catalog and
+    *     listing-cache invalidation), then [[vacuumMvs]] sweeps `name`.
+    *   - Liveness: a build temp is live while its newest file is younger
+    *     than [[MvVacuumGraceMs]] (see [[vacuumMvs]]).
+    *   - Two sources under one name: the fingerprint covers the absolute
+    *     source path, so two corpora get two entries. A publish for one
+    *     stamps the other `_SUPERSEDED`, and every resolve of an entry
+    *     deletes its stamp. An entry is deleted only after going a full
+    *     grace period unresolved while another fingerprint of its name
+    *     publishes.
     */
-  def fingerprintedMvPath(spark: SparkSession, srcPath: java.nio.file.Path,
-                          name: String, refresh: Boolean = false)
-                         (build: => DataFrame): java.nio.file.Path = {
-    import java.nio.file.{Files, StandardCopyOption}
+  private[graft] def materializedPath(srcPath: java.nio.file.Path, name: String,
+                                      refresh: Boolean = false,
+                                      published: java.nio.file.Path => Unit = _ => ())
+                                     (write: java.nio.file.Path => Unit)
+      : java.nio.file.Path = {
+    import java.nio.file.Files
     val fp = mvFingerprint(srcPath)
     val root = mvRoot()
     val mv = root.resolve(s"${name}_$fp")
-    val lock = mvLocks.computeIfAbsent(s"${name}_$fp", _ => new Object)
-    lock.synchronized {
+    mvLocks.computeIfAbsent(s"${name}_$fp", _ => new Object).synchronized {
       if (refresh || !Files.exists(mv.resolve("_SUCCESS"))) {
         val tmp = root.resolve(s".${name}_$fp.tmp-${java.util.UUID.randomUUID()}")
-        build.write.mode("overwrite").parquet(tmp.toString)
-        // refresh replaces the published MV; a markerless partial (pre-atomic
-        // era or crashed cleanup) is swept rather than blocking the publish
+        write(tmp)
+        // re-checked: another JVM may have published since the check above
         if (Files.exists(mv) && (refresh || !Files.exists(mv.resolve("_SUCCESS"))))
           deleteRecursively(mv)
         publishMv(tmp, mv)
         require(Files.exists(mv.resolve("_SUCCESS")), s"MV publish failed: $mv")
-        // same JVM-shared listing-cache hazard as the bucketed refresh: a
-        // republish under the SAME path must invalidate the FileStatusCache
-        // or later scans serve the stale file list
-        spark.catalog.refreshByPath(mv.toString)
+        published(mv)
         vacuumMvs(name, fp)
       }
     }
-    // a source that flip-flops back to a prior state makes an old fp CURRENT
-    // again — un-stamp it so a later sibling vacuum can't reap a live MV
     Files.deleteIfExists(mv.resolve("_SUPERSEDED"))
     mv
   }
+
+  /** Source-fingerprinted materialized view: `build` runs once per distinct
+    * (source file set, name) and is written as parquet to the
+    * [[materializedPath]] store; a regenerated source invalidates it. The
+    * train-once / probe-many lever for any expensive derived relation (edge
+    * lists, k-means codebooks), and the derived relation a cluster
+    * deployment would keep in object storage next to the table.
+    *
+    * Returns the published PATH — the stable cache key the JVM-shared
+    * gate-pin layer needs (see `GraphOps`); [[fingerprintedMv]] is the
+    * read-back convenience.
+    */
+  def fingerprintedMvPath(spark: SparkSession, srcPath: java.nio.file.Path,
+                          name: String, refresh: Boolean = false)
+                         (build: => DataFrame): java.nio.file.Path =
+    // a republish under the SAME path must invalidate the JVM-shared
+    // FileStatusCache, or later scans serve the stale file list
+    materializedPath(srcPath, name, refresh,
+      published = mv => spark.catalog.refreshByPath(mv.toString))(
+      tmp => build.write.mode("overwrite").parquet(tmp.toString))
 
   /** [[fingerprintedMvPath]] + parquet read-back — the common-case API. */
   def fingerprintedMv(spark: SparkSession, srcPath: java.nio.file.Path,
@@ -570,23 +582,21 @@ object Tables {
     s"graft_mv_${name}_$fp"
 
   /** BUCKETED variant of [[fingerprintedMvPath]] — the standing-index
-    * layout for INCREMENTAL maintenance (round-14, VERDICT r13 item 2):
-    * the relation is written as a bucketed parquet table (`bucketBy` on
-    * `bucketCols`, `sortBy` on `sortCols`, ONE file per bucket via an
-    * explicit pre-shuffle on the bucket columns) so that a later merge
-    * keyed on the bucket columns joins the base side with ZERO exchange
-    * and zero sort — only the delta shuffles. q217's measured economics
-    * motivated this: merge (57 s) lost to rebuild (47.8 s) at 100× because
-    * BOTH paid the standing relation's (u,v) shuffle; bucketed, the base
-    * pays scan-only cost every refresh.
+    * layout for INCREMENTAL maintenance: the relation is written as a
+    * bucketed parquet table (`bucketBy` on `bucketCols`, `sortBy` on
+    * `sortCols`, ONE file per bucket via an explicit pre-shuffle on the
+    * bucket columns) so that a later merge keyed on the bucket columns
+    * joins the base side with ZERO exchange and zero sort — only the delta
+    * shuffles. q217's measured economics motivated this: merge (57 s) lost
+    * to rebuild (47.8 s) at 100× because BOTH paid the standing relation's
+    * (u,v) shuffle; bucketed, the base pays scan-only cost every refresh.
     *
-    * The publish discipline is [[fingerprintedMvPath]]'s: private temp,
-    * atomic rename, `_SUCCESS` check, sibling vacuum. Spark's bucketed
-    * writer is catalog-coupled, so the build lands via a TEMPORARY catalog
-    * table over the temp path (user-located tables are external — dropping
-    * the entry keeps the files). Bucket ids ride the file NAMES, so the
-    * atomic rename preserves the layout and [[bucketedMv]] re-creates a
-    * catalog entry over the published location in any later session.
+    * Stored through [[materializedPath]]. Spark's bucketed writer is
+    * catalog-coupled, so the build lands via a TEMPORARY catalog table over
+    * the temp path (user-located tables are external — dropping the entry
+    * keeps the files). Bucket ids ride the file NAMES, so the rename
+    * preserves the layout and [[bucketedMv]] re-creates a catalog entry
+    * over the published location in any later session.
     */
   def bucketedMvPath(spark: SparkSession, srcPath: java.nio.file.Path,
                      name: String, nBuckets: Int,
@@ -594,64 +604,51 @@ object Tables {
                      refresh: Boolean = false,
                      oneFilePerBucket: Boolean = true)
                     (build: => DataFrame): java.nio.file.Path = {
-    import java.nio.file.{Files, StandardCopyOption}
     import org.apache.spark.sql.functions.col
-    val fp = mvFingerprint(srcPath)
-    val root = mvRoot()
-    val mv = root.resolve(s"${name}_$fp")
-    val lock = mvLocks.computeIfAbsent(s"${name}_$fp", _ => new Object)
-    lock.synchronized {
-      if (refresh || !Files.exists(mv.resolve("_SUCCESS"))) {
-        val tmp = root.resolve(s".${name}_$fp.tmp-${java.util.UUID.randomUUID()}")
-        val tmpTable =
-          s"graft_tmp_${name}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        // pre-shuffle on the bucket columns with numPartitions = nBuckets:
-        // repartition's HashPartitioning is the same murmur3+pmod the
-        // bucket writer assigns by, so each task holds exactly one bucket
-        // and each bucket lands in ONE file — the single-file property is
-        // what lets a later scan report the per-bucket sort order
-        // (multi-file buckets forfeit it and every merge re-sorts).
-        // oneFilePerBucket=false skips the explicit pre-shuffle. MEASURED
-        // at 100× (r15a2, isolated writes from identical block-manager
-        // input): for merge-shaped inputs — already partitioned compatibly
-        // with the bucket spec — Spark 4's planned write enforces the
-        // bucket distribution itself, so the explicit repartition DOUBLE-
-        // pays the 239M-row exchange (2–3× slower write-back) and both
-        // paths land the identical one-file-per-bucket layout; merge
-        // write-backs (q236's republish) therefore pass false. For inputs
-        // NOT already bucket-partitioned, false can yield k files per
-        // bucket (spec-pinned), forfeiting the scan-reported sort that the
-        // zero-sort merge plan needs — standing-MV builds keep true until
-        // the planned-write distribution interaction is fully pinned down
-        // (the r15 SCALING.md residual); readers keep bucket pruning and
-        // co-partitioning either way, and a merge over multi-file buckets
-        // pays one partition-local sort, never an exchange
-        (if (oneFilePerBucket) build.repartition(nBuckets, bucketCols.map(col): _*)
-         else build)
-          .write.format("parquet")
-          .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-          .sortBy(sortCols.head, sortCols.tail: _*)
-          .option("path", tmp.toString)
-          .saveAsTable(tmpTable)
-        spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
-        if (Files.exists(mv) && (refresh || !Files.exists(mv.resolve("_SUCCESS"))))
-          deleteRecursively(mv)
-        publishMv(tmp, mv)
-        require(Files.exists(mv.resolve("_SUCCESS")), s"bucketed MV publish failed: $mv")
-        // a refresh re-publishes under the SAME fingerprint — drop the
-        // session catalog entry so the next read re-lists the fresh files,
-        // AND invalidate the JVM-shared FileStatusCache for the path: the
-        // listing cache is keyed by path with no TTL, so without this a
-        // later scan (even through a freshly created catalog entry) serves
-        // the pre-refresh file list and dies FILE_NOT_EXIST — the q236
-        // per-batch republish loop hit exactly this
-        spark.sql(s"DROP TABLE IF EXISTS `${bucketedTableName(name, fp)}`")
-        spark.catalog.refreshByPath(mv.toString)
-        vacuumMvs(name, fp)
-      }
+    // a refresh re-publishes under the SAME fingerprint — drop the session
+    // catalog entry so the next read re-lists the fresh files, AND
+    // invalidate the JVM-shared FileStatusCache for the path: the listing
+    // cache is keyed by path with no TTL, so without this a later scan
+    // (even through a freshly created catalog entry) serves the
+    // pre-refresh file list and dies FILE_NOT_EXIST — the q236 per-batch
+    // republish loop hit exactly this
+    def invalidate(mv: java.nio.file.Path): Unit = {
+      val fp = mv.getFileName.toString.takeRight(16)
+      spark.sql(s"DROP TABLE IF EXISTS `${bucketedTableName(name, fp)}`")
+      spark.catalog.refreshByPath(mv.toString)
     }
-    Files.deleteIfExists(mv.resolve("_SUPERSEDED"))
-    mv
+    materializedPath(srcPath, name, refresh, published = invalidate) { tmp =>
+      val tmpTable =
+        s"graft_tmp_${name}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+      // pre-shuffle on the bucket columns with numPartitions = nBuckets:
+      // repartition's HashPartitioning is the same murmur3+pmod the
+      // bucket writer assigns by, so each task holds exactly one bucket
+      // and each bucket lands in ONE file — the single-file property is
+      // what lets a later scan report the per-bucket sort order
+      // (multi-file buckets forfeit it and every merge re-sorts).
+      // oneFilePerBucket=false skips the explicit pre-shuffle. MEASURED
+      // at 100× (isolated writes from identical block-manager input): for
+      // merge-shaped inputs — already partitioned compatibly with the
+      // bucket spec — Spark 4's planned write enforces the bucket
+      // distribution itself, so the explicit repartition DOUBLE-pays the
+      // 239M-row exchange (2–3× slower write-back) and both paths land the
+      // identical one-file-per-bucket layout; merge write-backs (q236's
+      // republish) therefore pass false. For inputs NOT already
+      // bucket-partitioned, false can yield k files per bucket
+      // (spec-pinned), forfeiting the scan-reported sort that the
+      // zero-sort merge plan needs — standing-MV builds keep true. Readers
+      // keep bucket pruning and co-partitioning either way, and a merge
+      // over multi-file buckets pays one partition-local sort, never an
+      // exchange
+      (if (oneFilePerBucket) build.repartition(nBuckets, bucketCols.map(col): _*)
+       else build)
+        .write.format("parquet")
+        .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
+        .sortBy(sortCols.head, sortCols.tail: _*)
+        .option("path", tmp.toString)
+        .saveAsTable(tmpTable)
+      spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
+    }
   }
 
   /** Per-bucket data files of a bucketed-MV publish, keyed by bucket id

@@ -34,7 +34,7 @@ object Versioned {
   private def latestFile(table: String): Path = Paths.get(table, "_latest")
 
   /** java.util.stream.Stream holds a directory fd until closed — the same
-    * try/finally discipline as Formats.fingerprintOf.
+    * try/finally discipline as Tables.mvFingerprint.
     */
   private def withStream[S <: java.util.stream.BaseStream[_, _], A](s: S)(f: S => A): A =
     try f(s) finally s.close()
@@ -274,7 +274,7 @@ object Versioned {
     * adjustment and error-tombstoned users filtered unless adjusted.
     */
   def bucketedMergeGate(spark: SparkSession, dir: String): DataFrame = {
-    val fp = Formats.fingerprintOf(dir, "events")
+    val fp = Tables.mvFingerprint(Paths.get(dir, "events.parquet"))
     val table = Paths.get(System.getProperty("java.io.tmpdir"),
       "graft_versioned", fp, "events_cow").toString
     val ev = Tables.events(spark, dir)
@@ -308,7 +308,7 @@ object Versioned {
     */
   private[graft] def mergedOrdersTable(spark: SparkSession, dir: String): String =
     synchronized {
-      val fp = Formats.fingerprintOf(dir, "orders")
+      val fp = Tables.mvFingerprint(Paths.get(dir, "orders.parquet"))
       val table = Paths.get(System.getProperty("java.io.tmpdir"),
         "graft_versioned", fp, "orders_merge").toString
       val orders = Tables.orders(spark, dir)
@@ -351,7 +351,7 @@ object Versioned {
     */
   private[graft] def ordersTable(spark: SparkSession, dir: String): String =
     synchronized {
-      val fp = Formats.fingerprintOf(dir, "orders")
+      val fp = Tables.mvFingerprint(Paths.get(dir, "orders.parquet"))
       val table = Paths.get(System.getProperty("java.io.tmpdir"),
         "graft_versioned", fp, "orders").toString
       if (latestVersion(table) != 2L) {
@@ -409,7 +409,7 @@ object Versioned {
     */
   def wapGate(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Fx._
-    val fp = Formats.fingerprintOf(dir, "orders")
+    val fp = Tables.mvFingerprint(Paths.get(dir, "orders.parquet"))
     val table = Paths.get(System.getProperty("java.io.tmpdir"),
       "graft_versioned", fp, "orders_wap").toString
     synchronized {

@@ -718,6 +718,17 @@ object StreamingOps {
       .drop("__h", "__corpus_h")
   }
 
+  /** `(id, <as>)`: each text's distinct-trigram shingle array, for texts
+    * with at least one shingle. The tokens are bound to a column and the
+    * filter reads them: a filter on the shingle array itself is pushed
+    * below the projection and re-runs the tokenizer regexp per shingle. */
+  private def shingleSets(docs: DataFrame, id: String, as: String): DataFrame = {
+    import graft.operators.TextOps
+    docs.select(col(id), TextOps.tokens(col("text")).as("toks"))
+      .filter(size(col("toks")) >= 3)
+      .select(col(id), array_distinct(TextOps.shingles(col("toks"))).as(as))
+  }
+
   /** Static corpus-side LSH band index for streaming near-dup detection:
     * (band, bucket, corpus_doc, c_sgs). Built once in batch, re-read per
     * micro-batch; at scale this is the persisted index a crawl pipeline
@@ -725,9 +736,8 @@ object StreamingOps {
     */
   def nearDupBandIndex(docs: DataFrame): DataFrame = {
     import graft.operators.TextOps
-    docs.select(col("doc_id").as("corpus_doc"),
-        TextOps.shingleArray(col("text")).as("c_sgs"))
-      .filter(size(col("c_sgs")) > 0)
+    shingleSets(docs.select(col("doc_id").as("corpus_doc"), col("text")),
+        "corpus_doc", "c_sgs")
       .select(col("corpus_doc"), col("c_sgs"),
         posexplode(TextOps.lshBandBuckets(
           TextOps.minHashSignatureFromShingles(col("c_sgs"), TextOps.xxhashFamily))).as(Seq("band", "bucket")))
@@ -745,8 +755,7 @@ object StreamingOps {
     */
   def nearDupStream(docs: DataFrame, bandIndex: DataFrame, threshold: Double): DataFrame = {
     import graft.operators.TextOps
-    val s = docs.withColumn("sgs", TextOps.shingleArray(col("text")))
-      .filter(size(col("sgs")) > 0)
+    val s = shingleSets(docs, "doc_id", "sgs")
       .select(col("doc_id"), col("sgs"),
         posexplode(TextOps.lshBandBuckets(
           TextOps.minHashSignatureFromShingles(col("sgs"), TextOps.xxhashFamily))).as(Seq("band", "bucket")))
@@ -889,132 +898,18 @@ object StreamingOps {
       .partitionBy("_batch_id")
       .parquet(outPath)
 
-  /** Fingerprinted gate stream-source split (round-17 — the one helper
-    * behind every `*_split` gate, VERDICT r16 item 2 + ADVICE r16): the
-    * deterministic file split a parity gate streams with
-    * `maxFilesPerTrigger=1` is corpus-level scratch, materialized ONCE per
-    * source fingerprint under `java.io.tmpdir/<tag>/<corpus-key>/<fp>` and
-    * republished only when the corpus regenerates. The corpus key (a hash
-    * of the source dir's absolute path) namespaces the sweep: two LIVE
-    * corpora sharing one JVM tmpdir (the test suite's sf0.001 next to the
-    * bench's sf0.1) can never mark each other superseded — only a
-    * regeneration of the SAME corpus path supersedes its old fingerprints
-    * (round-17 review). Publication is [[graft.sources.Formats
-    * .materializeAtomic]]'s single atomic rename; `write` receives the
-    * private tmp dir (so callers can stamp mtimes or add markers before
-    * the rename). Superseded sibling fingerprints are SWEPT on each call
-    * with [[graft.sources.Tables.supersededPastGrace]] — the same
-    * two-phase stamp/grace protocol as `vacuumMvs`, one copy.
+  /** The deterministic file split a parity gate streams with
+    * `maxFilesPerTrigger=1`: corpus-level scratch, built once per
+    * fingerprint of `dir/<table>.parquet` as store entry `name` (see
+    * [[graft.sources.Tables.materializedPath]]) and rebuilt only when the
+    * corpus changes. `write` receives the private temp dir, so callers can
+    * stamp mtimes or add markers before the publishing rename.
     */
-  private[graft] def materializeSplit(dir: String, table: String, tag: String)
-                                     (write: String => Unit): String = {
-    import java.nio.file.Paths
-    import graft.sources.Formats
-    val fp = Formats.fingerprintOf(dir, table)
-    val corpusKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(Paths.get(dir).toAbsolutePath.toString.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val root = Paths.get(System.getProperty("java.io.tmpdir"), tag, corpusKey)
-    val split = root.resolve(fp)
-    synchronized {
-      Formats.materializeAtomic(split.toString)(write)
-      sweepSupersededSplits(root, fp)
-      sweepLegacySplitDirs(root.getParent, tag)
-    }
-    split.toString
-  }
-
-  /** One-time per (tag, JVM) sweep of PRE-corpusKey split dirs (ADVICE
-    * r17): builds older than round 17 materialized at `<tmpdir>/<tag>/<fp>`
-    * — one path level above today's `<tmpdir>/<tag>/<corpusKey>/<fp>` — so
-    * the corpus-keyed sweep never visits them and they'd be stranded
-    * scratch forever. Any child of the tag root whose name is not a
-    * 12-hex corpus key is legacy (fingerprints are 16 hex; builder tmps
-    * carry a `.tmp.` suffix) and gets the same two-phase stamp/grace rule
-    * as a superseded sibling. Live corpus-key dirs are never touched. */
-  private val legacySweptTags =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[graft] def sweepLegacySplitDirs(tagRoot: java.nio.file.Path,
-                                          tag: String,
-                                          graceMs: Long =
-                                            graft.sources.Tables.MvVacuumGraceMs,
-                                          nowMs: Long =
-                                            System.currentTimeMillis()): Unit = {
-    import java.nio.file.Files
-    if (!legacySweptTags.add(tag) || !Files.isDirectory(tagRoot)) return
-    val corpusKeyRe = "^[0-9a-f]{12}$".r
-    val l = Files.list(tagRoot)
-    try l.forEach { p =>
-      val fn = p.getFileName.toString
-      if (Files.isDirectory(p) && corpusKeyRe.findFirstIn(fn).isEmpty) {
-        if (Files.exists(p.resolve("_SUCCESS"))) {
-          if (graft.sources.Tables.supersededPastGrace(p, graceMs, nowMs))
-            deleteRecursively(p)
-        } else if (nowMs - newestMtimeMs(p, nowMs) >= graceMs)
-          deleteRecursively(p)
-      }
-    } finally l.close()
-  }
-
-  /** Newest mtime across a directory tree (ADVICE r17): the markerless
-    * sweep keys liveness on the youngest CONTENT, not the top-level dir
-    * mtime — a build whose part files were all created early but is still
-    * writing new ones past the grace window keeps refreshing its newest
-    * file, where the dir's own mtime only moves on direct child creation.
-    *
-    * ADVICE r18: a concurrent JVM's sweep may be deleting the tree
-    * mid-walk, making Files.walk/getLastModifiedTime throw
-    * (UncheckedIOException / NoSuchFileException) out of a best-effort
-    * scratch sweep and failing the CALLING gate query. Any unreadable
-    * file or dir is treated as YOUNG (`fallbackMs`, the caller's nowMs) —
-    * the sweep skips it this pass; a genuinely dead dir is re-visited and
-    * collected on the next call once the racer is gone. */
-  private def newestMtimeMs(p: java.nio.file.Path, fallbackMs: Long): Long = {
-    import java.nio.file.Files
-    scala.util.Try {
-      val walk = Files.walk(p)
-      try walk.mapToLong(q =>
-          scala.util.Try(Files.getLastModifiedTime(q).toMillis)
-            .getOrElse(fallbackMs))
-        .max.orElse(Files.getLastModifiedTime(p).toMillis)
-      finally walk.close()
-    }.getOrElse(fallbackMs)
-  }
-
-  /** Two-phase sweep of one corpus's split root: a complete
-    * (`_SUCCESS`-marked) sibling of a DEAD fingerprint is stamped
-    * `_SUPERSEDED` now and deleted once the stamp outlives the MV vacuum
-    * grace window (a gate mid-run against the old corpus gets the window
-    * to finish; any new run re-fingerprints and lands on the live dir); a
-    * markerless sibling — a crashed materialization or a dead build's
-    * `.tmp.<pid>` dir, the CURRENT fingerprint's included (round-17
-    * review: a crashed live-fp build is the exact leak class this sweep
-    * exists for) — is deleted once its mtime outlives the same window: a
-    * LIVE in-flight build is necessarily younger. */
-  private[graft] def sweepSupersededSplits(root: java.nio.file.Path,
-                                           keepFp: String,
-                                           graceMs: Long =
-                                             graft.sources.Tables.MvVacuumGraceMs,
-                                           nowMs: Long =
-                                             System.currentTimeMillis()): Unit = {
-    import java.nio.file.Files
-    if (!Files.isDirectory(root)) return
-    val l = Files.list(root)
-    try l.forEach { p =>
-      val fn = p.getFileName.toString
-      if (fn != keepFp) {
-        if (Files.exists(p.resolve("_SUCCESS"))) {
-          if (graft.sources.Tables.supersededPastGrace(p, graceMs, nowMs))
-            deleteRecursively(p)
-        } else if (nowMs - newestMtimeMs(p, nowMs) >= graceMs)
-          // ADVICE r17: max mtime over the dir's CONTENTS, not the dir
-          // itself — a live build writing part files past the grace window
-          // keeps its newest file young even when the top-level dir mtime
-          // has gone stale
-          deleteRecursively(p)
-      }
-    } finally l.close()
-  }
+  private[graft] def materializeSplit(dir: String, table: String, name: String)
+                                     (write: String => Unit): String =
+    graft.sources.Tables.materializedPath(
+      java.nio.file.Paths.get(dir, s"$table.parquet"), name)(
+      tmp => write(tmp.toString)).toString
 
   /** CLASS GUARD for the single-partition micro-batch hazard (round-19 —
     * VERDICT r18 item 5, generalizing the round-18 q247 point fix): a
@@ -1123,7 +1018,7 @@ object StreamingOps {
   def cdcApplyParity(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     import graft.sources.{Tables, Versioned}
-    val split = materializeSplit(dir, "events", "graft_cdc_split") { tmp =>
+    val split = materializeSplit(dir, "events", "cdc_split") { tmp =>
       Tables.events(spark, dir)
         .select("user_id", "ts_ns", "event_id", "event_type", "value")
         .repartitionByRange(4, col("ts_ns"))
@@ -1181,7 +1076,7 @@ object StreamingOps {
     * bounded by the rate-limited batch size, not the stream.
     */
   def streamEmaParity(spark: SparkSession, dir: String): DataFrame = {
-    val split = materializeSplit(dir, "events", "graft_ema_split") { tmp =>
+    val split = materializeSplit(dir, "events", "ema_split") { tmp =>
       graft.operators.MarketView.dailyBars(spark, dir)
         .select(col("symbol"), col("date"), col("close"))
         .repartitionByRange(4, col("date"))
@@ -1261,7 +1156,7 @@ object StreamingOps {
     */
   private[graft] def lateSplitDir(spark: SparkSession, dir: String): String = {
     import java.nio.file.{Files, Paths}
-    materializeSplit(dir, "events", "graft_late_split_v2") { tmp =>
+    materializeSplit(dir, "events", "late_split") { tmp =>
         val ev = graft.sources.Tables.events(spark, dir)
           .select(col("event_id"), col("ts"), col("event_type"), col("value"),
             col("date"))
@@ -1288,8 +1183,8 @@ object StreamingOps {
         writeOne(ev.filter(!late && !mid), "00_bulk", 1000000000000L)
         writeOne(ev.filter(mid), "01_mid", 1000000060000L)
         writeOne(ev.filter(late), "02_late", 1000000120000L)
-        // materializeAtomic keys completion on this marker (underscore
-        // prefix: invisible to the file stream source)
+        // the store keys completion on this marker (underscore prefix:
+        // invisible to the file stream source)
         Files.createFile(Paths.get(tmp, "_SUCCESS"))
     }
   }
@@ -1539,7 +1434,7 @@ object StreamingOps {
     import java.nio.file.Paths
     import graft.operators.GraphOps
     import graft.sources.Tables
-    val split = materializeSplit(dir, "lineitem", "graft_symdelta_split") { tmp =>
+    val split = materializeSplit(dir, "lineitem", "symdelta_split") { tmp =>
       Tables.lineitem(spark, dir)
         .filter(col("l_orderkey") % 10 === 0)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
@@ -1639,7 +1534,7 @@ object StreamingOps {
     import java.nio.file.Paths
     import graft.operators.Similarity
     import graft.sources.Tables
-    val split = materializeSplit(dir, "embeddings", "graft_int8ivf_split") { tmp =>
+    val split = materializeSplit(dir, "embeddings", "int8ivf_split") { tmp =>
       Tables.embeddings(spark, dir)
         .filter(col("vec_id") % 10 === 0)
         .repartitionByRange(2, col("vec_id"))
@@ -1691,7 +1586,7 @@ object StreamingOps {
     import java.nio.file.Paths
     import graft.operators.Similarity
     import graft.sources.Tables
-    val split = materializeSplit(dir, "embeddings", "graft_semdedup_split") { tmp =>
+    val split = materializeSplit(dir, "embeddings", "semdedup_split") { tmp =>
       Tables.embeddings(spark, dir)
         .filter(col("vec_id") % 10 === 0)
         .repartitionByRange(2, col("vec_id"))
@@ -1756,7 +1651,7 @@ object StreamingOps {
     import java.nio.file.Paths
     import graft.operators.Similarity
     import graft.sources.Tables
-    val split = materializeSplit(dir, "embeddings", "graft_pqchain_split") { tmp =>
+    val split = materializeSplit(dir, "embeddings", "pqchain_split") { tmp =>
       Tables.embeddings(spark, dir)
         .filter(col("vec_id") % 10 === 0)
         .repartitionByRange(2, col("vec_id"))
@@ -1813,7 +1708,7 @@ object StreamingOps {
                                    benchSource: String = "src0"): DataFrame = {
     import graft.operators.Similarity
     import graft.sources.Tables
-    val split = materializeSplit(dir, "embeddings", "graft_semdecontam_split") { tmp =>
+    val split = materializeSplit(dir, "embeddings", "semdecontam_split") { tmp =>
       Tables.embeddings(spark, dir)
         .repartitionByRange(2, col("vec_id"))
         .write.mode("overwrite").parquet(tmp)

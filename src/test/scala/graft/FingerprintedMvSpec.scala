@@ -181,4 +181,98 @@ class FingerprintedMvSpec extends SparkSpecBase {
     threads.foreach(_.start()); threads.foreach(_.join(60000))
     assert(builds.get() == 1, s"same (name, fp) must build exactly once, got ${builds.get()}")
   }
+
+  test("vacuum: a build temp is live while its newest file is young; a crashed one is swept") {
+    import java.nio.file.Files
+    import java.nio.file.attribute.FileTime
+    val name = "fpmv_spec_temps"
+    val root = Tables.mvRoot()
+    Files.createDirectories(root)
+    val t0 = System.currentTimeMillis()
+    val grace = Tables.MvVacuumGraceMs
+    def temp(tag: String, dirMs: Long, partMs: Long) = {
+      val d = root.resolve(s".${name}_0123456789abcdef.tmp-$tag")
+      Files.createDirectories(d)
+      Files.setLastModifiedTime(Files.write(d.resolve("part-0"), Array[Byte](1)),
+        FileTime.fromMillis(partMs))
+      Files.setLastModifiedTime(d, FileTime.fromMillis(dirMs))
+      d
+    }
+    val crashed = temp("crashed", t0 - grace - 1, t0 - grace - 1)
+    val young = temp("young", t0, t0)
+    // the directory's own mtime stops moving once its children exist; a
+    // slow build still writing part files is alive by its newest file
+    val slow = temp("slow", t0 - grace - 1, t0)
+    val swept = Tables.vacuumMvs(name, keepFp = "none", nowMs = t0)
+    assert(swept == Seq(crashed.getFileName.toString), s"swept $swept")
+    assert(Files.exists(young), "a young build temp must survive")
+    assert(Files.exists(slow),
+      "a build temp with a stale directory mtime but a young part file must survive")
+    Tables.vacuumMvs(name, keepFp = "none", nowMs = t0 + grace)
+    assert(!Files.exists(young) && !Files.exists(slow),
+      "both temps are swept once their newest file is past the grace period")
+  }
+
+  test("two sources under one name: the one still resolved survives; the other's superseded fingerprint is swept") {
+    import java.nio.file.{Files, Path}
+    val name = "fpmv_spec_two_src"
+    purgeMvName(name)
+    val a = Files.createTempDirectory("graft_fpmv_src_a").resolve("src.txt")
+    val b = Files.createTempDirectory("graft_fpmv_src_b").resolve("src.txt")
+    Files.write(a, "a".getBytes("UTF-8"))
+    var buildsA = 0
+    def resolveA(): Path = Tables.fingerprintedMvPath(spark, a, name) {
+      buildsA += 1; Seq((1L, "a")).toDF("id", "v")
+    }
+    var version = 0
+    def publishB(): Path = {
+      version += 1
+      Files.write(b, ("b" * version).getBytes("UTF-8")) // new fingerprint
+      Tables.fingerprintedMvPath(spark, b, name)(Seq((2L, "b")).toDF("id", "v"))
+    }
+    // stand-in for a grace period passing: back-date every stamp of `name`
+    def passGrace(): Unit = {
+      val l = Files.list(Tables.mvRoot())
+      try l.filter(_.getFileName.toString.startsWith(name + "_")).forEach { d =>
+        val stamp = d.resolve("_SUPERSEDED")
+        if (Files.exists(stamp)) Files.write(stamp, (System.currentTimeMillis() -
+          Tables.MvVacuumGraceMs - 1).toString.getBytes("UTF-8"))
+      } finally l.close()
+    }
+    val dirA = resolveA()
+    val b1 = publishB()
+    assert(Files.exists(dirA.resolve("_SUPERSEDED")), "a publish for B stamps A")
+    passGrace(); resolveA()
+    val b2 = publishB() // stamps A afresh and B's first fingerprint
+    passGrace(); resolveA()
+    val b3 = publishB()
+    assert(!Files.exists(b1), "B's superseded fingerprint must be swept past grace")
+    assert(Files.exists(b2.resolve("_SUPERSEDED")) && Files.exists(b3.resolve("_SUCCESS")))
+    assert(Files.exists(dirA.resolve("_SUCCESS")),
+      "A, resolved within every grace period, must survive B's publishes")
+    assert(resolveA() == dirA && !Files.exists(dirA.resolve("_SUPERSEDED")) && buildsA == 1,
+      "A resolves to its original entry, un-stamped, without a rebuild")
+    // the converse: unresolved for a full grace period, A goes
+    publishB(); passGrace(); publishB()
+    assert(!Files.exists(dirA), "an entry unresolved past grace is swept")
+  }
+
+  test("copyRecursively keeps file mtimes and copies the marker") {
+    import java.nio.file.Files
+    import java.nio.file.attribute.FileTime
+    val from = Files.createTempDirectory("graft_copy_from")
+    val to = Files.createTempDirectory("graft_copy_to").resolve("dst")
+    val stamped = (0 until 3).map { i =>
+      val f = Files.write(from.resolve(s"part-$i.parquet"), Array[Byte](i.toByte))
+      Files.setLastModifiedTime(f, FileTime.fromMillis(1000000000000L + i * 60000L))
+      f.getFileName.toString -> (1000000000000L + i * 60000L)
+    }
+    Files.write(from.resolve("_SUCCESS"), Array.empty[Byte])
+    Tables.copyRecursively(from, to)
+    stamped.foreach { case (fn, ms) =>
+      assert(Files.getLastModifiedTime(to.resolve(fn)).toMillis == ms,
+        s"$fn lost its stamped mtime")
+    }
+    assert(Files.exists(to.resolve("_SUCCESS")))
+  }
 }

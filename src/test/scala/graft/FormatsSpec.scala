@@ -54,17 +54,13 @@ class FormatsSpec extends SparkSpecBase {
   test("roundtrip gate materializes once per fingerprint and is reused") {
     val first = Formats.ordersViaOrcAndJsonl(spark, sf)
     val n1 = first.count()
-    // Second call must read the already-materialized chain (same _SUCCESS),
-    // not rewrite: capture the marker mtimes across calls.
-    val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), "graft_fmt")
-    val markers = Files.walk(base).filter(_.getFileName.toString == "_SUCCESS")
-      .sorted(java.util.Comparator.comparing[java.nio.file.Path, String](_.toString))
-      .toArray.map(_.asInstanceOf[java.nio.file.Path])
-    val before = markers.map(p => Files.getLastModifiedTime(p).toMillis).toSeq
+    // the second call must read the stored entries, not rebuild them
+    def entries() = storedEntries(java.nio.file.Paths.get(sf, "orders.parquet"),
+      "fmt_orders_orc", "fmt_orders_jsonl")
+    val before = entries()
     val second = Formats.ordersViaOrcAndJsonl(spark, sf)
     assert(second.count() == n1)
-    val after = markers.map(p => Files.getLastModifiedTime(p).toMillis).toSeq
-    assert(before == after)
+    assert(entries() == before)
   }
 
   test("schema evolution: merged read = union schema, old rows NULL, no row lost") {

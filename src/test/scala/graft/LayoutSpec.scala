@@ -102,7 +102,11 @@ class LayoutSpec extends SparkSpecBase {
 
   test("compaction gate reuses the fingerprinted materialization") {
     val out1 = Layout.compactionGate(spark, sf).collect()
+    def entries() = storedEntries(java.nio.file.Paths.get(sf, "events.parquet"),
+      "compact_events_fragmented", "compact_events_compacted")
+    val before = entries()
     val out2 = Layout.compactionGate(spark, sf).collect()
+    assert(entries() == before, "the second call must build nothing")
     assert(out1.toSeq == out2.toSeq)
     val n = graft.sources.Tables.events(spark, sf).count()
     assert(out1.map(_.getLong(1)).sum == n)

@@ -34,6 +34,20 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     }
     jobs.get
   }
+
+  /** Directory, file names and marker mtime of each published store entry
+    * `names` of `src` — a rebuild lands new part files (new write-job ids)
+    * and a new marker, so two equal snapshots mean nothing was rebuilt. */
+  protected def storedEntries(src: java.nio.file.Path, names: String*) =
+    names.map { n =>
+      import java.nio.file.Files
+      val dir = graft.sources.Tables.publishedMvPath(src, n)
+        .getOrElse(fail(s"$n is not stored"))
+      val l = Files.list(dir)
+      val files = try l.toArray.map(_.toString).filterNot(_.endsWith("_SUPERSEDED")).toSet
+        finally l.close()
+      (dir, files, Files.getLastModifiedTime(dir.resolve("_SUCCESS")).toMillis)
+    }
 }
 
 object SparkSpecBase {

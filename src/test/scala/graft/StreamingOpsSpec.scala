@@ -564,81 +564,6 @@ class StreamingOpsSpec extends SparkSpecBase {
     assert(after == before, s"replay changed the landed relation: $after vs $before")
   }
 
-  test("sweepSupersededSplits: dead fp stamped then grace-deleted; live fp kept; old crashed tmp swept, young build kept") {
-    import java.nio.file.Files
-    val root = Files.createTempDirectory("graft_sweep_test")
-    def mk(name: String, success: Boolean, mtimeMs: Long,
-           contentMtimeMs: Option[Long] = None): java.nio.file.Path = {
-      val d = root.resolve(name); Files.createDirectories(d)
-      val part = Files.write(d.resolve("part-0"), "x".getBytes("UTF-8"))
-      if (success) Files.write(d.resolve("_SUCCESS"), Array.empty[Byte])
-      // stamp CONTENTS first (the sweep keys markerless liveness on the
-      // newest content mtime — ADVICE r17), then the dir itself
-      val ft = java.nio.file.attribute.FileTime.fromMillis _
-      Files.setLastModifiedTime(part, ft(contentMtimeMs.getOrElse(mtimeMs)))
-      if (success) Files.setLastModifiedTime(d.resolve("_SUCCESS"), ft(mtimeMs))
-      Files.setLastModifiedTime(d, ft(mtimeMs))
-      d
-    }
-    val t0 = 1000000000000L
-    val grace = graft.sources.Tables.MvVacuumGraceMs
-    val live = mk("fp_live", success = true, t0)
-    val dead = mk("fp_dead", success = true, t0)
-    val oldTmp = mk("fp_live.tmp.123", success = false, t0 - grace - 1)
-    val youngTmp = mk("fp_live.tmp.456", success = false, t0)
-    // ADVICE r17: dir mtime stale but a part file still being written past
-    // the grace window — the content mtime is the liveness signal
-    val slowBuild = mk("fp_live.tmp.789", success = false,
-      t0 - grace - 1, contentMtimeMs = Some(t0))
-    StreamingOps.sweepSupersededSplits(root, "fp_live", grace, t0)
-    assert(Files.exists(slowBuild),
-      "a slow in-flight build with stale dir mtime but young contents must survive")
-    assert(Files.exists(live) && !Files.exists(live.resolve("_SUPERSEDED")),
-      "the live fingerprint must never be marked")
-    assert(Files.exists(dead) && Files.exists(dead.resolve("_SUPERSEDED")),
-      "a dead fp is STAMPED on first sighting — a reader gets the grace window")
-    assert(!Files.exists(oldTmp),
-      "a crashed build's old tmp (current fp included) must be swept")
-    assert(Files.exists(youngTmp), "a live in-flight build's tmp must survive")
-    StreamingOps.sweepSupersededSplits(root, "fp_live", grace, t0 + grace)
-    assert(!Files.exists(dead), "a stamped dead fp is deleted once past grace")
-    assert(Files.exists(live))
-  }
-
-  test("sweepLegacySplitDirs: pre-corpusKey fp dirs reaped, corpus-key dirs untouched") {
-    import java.nio.file.Files
-    val tagRoot = Files.createTempDirectory("graft_legacy_sweep")
-    val tag = s"graft_legacy_${System.nanoTime()}" // once-per-tag guard: unique
-    def mk(name: String, success: Boolean, mtimeMs: Long): java.nio.file.Path = {
-      val d = tagRoot.resolve(name); Files.createDirectories(d)
-      val part = Files.write(d.resolve("part-0"), "x".getBytes("UTF-8"))
-      if (success) Files.write(d.resolve("_SUCCESS"), Array.empty[Byte])
-      val ft = java.nio.file.attribute.FileTime.fromMillis _
-      Files.setLastModifiedTime(part, ft(mtimeMs))
-      if (success) Files.setLastModifiedTime(d.resolve("_SUCCESS"), ft(mtimeMs))
-      Files.setLastModifiedTime(d, ft(mtimeMs))
-      d
-    }
-    val t0 = 1000000000000L
-    val grace = graft.sources.Tables.MvVacuumGraceMs
-    // legacy layout: a 16-hex fingerprint dir directly under the tag root
-    val legacyDone = mk("0123456789abcdef", success = true, t0)
-    val legacyCrash = mk("fedcba9876543210.tmp.42", success = false, t0 - grace - 1)
-    // current layout: a 12-hex corpus-key dir — NEVER touched by this sweep
-    val corpusDir = mk("aaaabbbbcccc", success = true, t0 - 10 * grace)
-    StreamingOps.sweepLegacySplitDirs(tagRoot, tag, grace, t0)
-    assert(Files.exists(legacyDone) && Files.exists(legacyDone.resolve("_SUPERSEDED")),
-      "a complete legacy publish is stamped first — readers get the grace window")
-    assert(!Files.exists(legacyCrash), "an old crashed legacy tmp is swept")
-    assert(Files.exists(corpusDir) && !Files.exists(corpusDir.resolve("_SUPERSEDED")),
-      "corpus-key dirs belong to the corpus-keyed sweep, not this one")
-    // second call with the same tag is a no-op by the once-per-JVM guard;
-    // a fresh tag past grace reaps the stamped legacy publish
-    StreamingOps.sweepLegacySplitDirs(tagRoot, tag + "_2", grace, t0 + grace)
-    assert(!Files.exists(legacyDone), "a stamped legacy publish dies past grace")
-    assert(Files.exists(corpusDir))
-  }
-
   test("cleaner-gate body replayed at the same batchId: emitted span-cut relation unchanged") {
     import graft.operators.TextOps
     val docs = Seq(
