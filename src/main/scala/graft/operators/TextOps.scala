@@ -302,22 +302,24 @@ object TextOps {
     * collapse into one cluster.
     */
   private def dedupBaseFrom(docs: DataFrame, bucketed: Boolean): DedupBase = {
-    val (withRep, repDocs) = repsOf(docs, bucketed)
-    DedupBase(withRep.cache(), shingleSet(repDocs).cache())
+    val withRep = repsOf(docs, bucketed).cache()
+    DedupBase(withRep, shingleSet(repRows(docs, withRep)).cache())
   }
 
   /** The exact-dup collapse itself, uncached: (doc_id, ck, rep) for every
-    * doc — rep is the smallest doc_id sharing its key `ck` — and the rep
-    * docs' own rows of `docs`. */
-  private def repsOf(docs: DataFrame, bucketed: Boolean): (DataFrame, DataFrame) = {
+    * doc — rep is the smallest doc_id sharing its key `ck`. */
+  private def repsOf(docs: DataFrame, bucketed: Boolean): DataFrame = {
     val key = if (bucketed)
       concat_ws("|", md5(normText(col("text"))), col("lang"), col("source"))
     else md5(normText(col("text")))
     val mem = docs.select(col("doc_id"), key.as("ck"))
-    val reps = mem.groupBy("ck").agg(min("doc_id").as("rep"))
-    (mem.join(reps, "ck"),
-      docs.join(reps.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi"))
+    mem.join(mem.groupBy("ck").agg(min("doc_id").as("rep")), "ck")
   }
+
+  /** The rep docs' own rows of `docs`, selected from `repsOf(docs)`. */
+  private def repRows(docs: DataFrame, withRep: DataFrame): DataFrame =
+    docs.join(withRep.filter(col("doc_id") === col("rep")).select("doc_id"),
+      Seq("doc_id"), "left_semi")
 
   private def dedupBase(spark: SparkSession, dir: String,
                         bucketed: Boolean = false): DedupBase =
@@ -546,36 +548,38 @@ object TextOps {
     * pipeline stages that build the clusters once: same rows, same order,
     * no per-dir memo.
     *
-    * It works on ONE pinned relation: a row per shingled exact-dup rep
-    * holding its distinct shingle set as an array. Signatures are per-row
-    * array expressions (the md5 family of `md5AB`), banding is the shared
-    * `bandsFromWide` + `bandCandidates`, and verification reads |A ∩ B| as
-    * `size(array_intersect)` of the two arrays — no exploded (doc, shingle)
-    * relation, no aggregation over it, no (doc, shingle) joins. Shingle-less
-    * reps are filtered out before banding: an empty array has a null
-    * signature, and null band keys would put every such rep in one bucket.
-    * The dir-level `nearDupClusters` stays on the memoized exploded pairs,
-    * which a session's repeated calls reuse (measured there).
+    * It pins two relations. One is the exact-dup membership (doc_id, ck,
+    * rep): the rep selection and the member expansion in [[clustersOf]] both
+    * read it. The other holds a row per shingled exact-dup rep with its
+    * distinct shingle set as an array and its MinHash signature (the md5
+    * family of `md5AB`, as per-row array expressions). The signature is
+    * hashed once there: the band self-join reads it on both sides. Banding is
+    * the shared `bandsFromWide` + `bandCandidates`, and verification reads
+    * |A ∩ B| as `size(array_intersect)` of the two arrays — no exploded (doc,
+    * shingle) relation, no aggregation over it, no (doc, shingle) joins.
+    * Shingle-less reps are filtered out before banding: an empty array has a
+    * null signature, and null band keys would put every such rep in one
+    * bucket. The dir-level `nearDupClusters` stays on the memoized exploded
+    * pairs, which a session's repeated calls reuse (measured there).
     */
   def nearDupClustersFrom(docs: DataFrame, threshold: Double): DataFrame = {
     require(threshold > 0,
       "threshold must be positive: a pair sharing no shingle must never verify")
-    val (withRep, repDocs) = repsOf(docs, bucketed = false)
+    val withRep = repsOf(docs, bucketed = false).localCheckpoint()
     // tokens are bound to an attribute first, as in `shingleSet`, and the
     // filter reads them, not the shingles: a filter on the shingle array is
     // pushed below both projections and re-runs the regexp per shingle. The
     // signatures are interpreted lambdas, so the rows are spread over every
     // core first (a one-file corpus would otherwise hash in a single task).
-    val sets = repDocs.select(col("doc_id"), tokens(col("text")).as("toks"))
+    val sets = repRows(docs, withRep).select(col("doc_id"), tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .select(col("doc_id"), array_distinct(shingles(col("toks"))).as("sgs"))
-      .localCheckpoint()
-    // the signature array is projected once; the 32 columns read it
-    val sig = sets.select(col("doc_id"),
+      .select(col("doc_id"), col("sgs"),
         minHashSignatureFromShingles(col("sgs"), md5Family).as("sig"))
-      .select(col("doc_id") +: (0 until NumPerms).map(i =>
-        element_at(col("sig"), i + 1).as(s"mh_$i")): _*)
+      .localCheckpoint()
+    val sig = sets.select(col("doc_id") +: (0 until NumPerms).map(i =>
+      element_at(col("sig"), i + 1).as(s"mh_$i")): _*)
     val inter = size(array_intersect(col("sa"), col("sb")))
     val pairs = bandCandidates(bandsFromWide(sig, md5Bucket))
       .join(sets.select(col("doc_id").as("doc_a"), col("sgs").as("sa")), "doc_a")
@@ -589,12 +593,19 @@ object TextOps {
     * Input: (u, v) pair rows, either orientation. Output: (id, label) for
     * every node present in the input, label = the smallest id reachable
     * through the pairs.
+    *
+    * The labels start at least(id, smallest neighbour id), one aggregation
+    * over the edges: that is what a first round from identity labels
+    * computes, since path compression through identity labels changes
+    * nothing. Each round then runs one checkpoint, which also observes how
+    * many labels shrank; the loop ends after a round in which none did.
     */
   private[graft] def ccMinLabel(pairs: DataFrame): DataFrame = {
     val p = pairs.toDF("src", "dst")
     val edges = p.union(p.select(col("dst"), col("src"))).cache()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
+    var labels = edges.groupBy("src").agg(min("dst").as("nb"))
+      .select(col("src").as("id"), least(col("src"), col("nb")).as("label"))
+      .localCheckpoint()
     var changed = 1L
     while (changed > 0) {
       val nbMin = edges.join(labels.select(col("id").as("dst"), col("label")), "dst")
@@ -605,27 +616,28 @@ object TextOps {
       // round and convergence is O(log n) rounds instead of O(diameter).
       // Same fixpoint: the component-minimum labeling.
       val parent = labels.select(col("id").as("label"), col("label").as("pl"))
-      // the new label rides with a shrank? flag so the convergence count is
-      // a filter over the round's own checkpoint, not a second node-sized
-      // join of next against labels (same predicate: new < old)
       val nl2 = least(col("label"),
         coalesce(col("nl"), col("label")),
         coalesce(col("pl"), col("label")))
-      val next = labels
-        .join(nbMin.select(col("src").as("id"), col("nl")), Seq("id"), "left")
-        .join(parent, Seq("label"), "left")
-        .select(col("id"), nl2.as("label"), (nl2 < col("label")).as("ch"))
-        .localCheckpoint() // cut lineage: each round re-reads the previous round, not the chain
-      changed = next.filter(col("ch")).count()
-      labels = next.select(col("id"), col("label"))
+      val (next, shrank) = Tables.observedCount(
+        labels
+          .join(nbMin.select(col("src").as("id"), col("nl")), Seq("id"), "left")
+          .join(parent, Seq("label"), "left")
+          .select(col("id"), nl2.as("label"), (nl2 < col("label")).as("ch")),
+        count(when(col("ch"), 1)))
+      // cut lineage: each round re-reads the previous round, not the chain
+      labels = next.localCheckpoint().select(col("id"), col("label"))
+      changed = shrank()
     }
     edges.unpersist()
     labels
   }
 
   /** Components of the verified rep pairs, expanded to members: `withRep`
-    * maps every doc_id to its exact-dup rep, `shingled` lists the reps
-    * whose text has at least one shingle. */
+    * maps every doc_id to its exact-dup rep (`nearDupClustersFrom` passes
+    * it pinned, as both the multi-member clusters and the final expansion
+    * read it), `shingled` lists the reps whose text has at least one
+    * shingle. The components come from [[ccMinLabel]] over the rep pairs. */
   private def clustersOf(withRep: DataFrame, shingled: DataFrame,
                          repPairs: DataFrame): DataFrame = {
     val labels = ccMinLabel(repPairs)

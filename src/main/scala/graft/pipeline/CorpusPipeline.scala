@@ -37,12 +37,17 @@ object CorpusPipeline {
 
   /** Same pipeline over ANY document relation — e.g. the clean side of
     * `Tables.readDocumentsJsonl`, or a pre-filtered corpus.
+    *
+    * One count is an action of its own: the gated count, which materializes
+    * the gated cache. The other three are observed while a materialization
+    * runs that the pipeline needs anyway: the raw count rides on the gated
+    * count, the exact-dedup count on the near-dup pass's first read of the
+    * exact cache, and the final count on the split checkpoint.
     */
   def runFrom(spark: SparkSession, docs: DataFrame, outDir: Option[String] = None,
               minQuality: Double = 0.5, nearThreshold: Double = 0.9): CorpusResult = {
     // 1. ingest
-    val raw = docs
-    val nRaw = raw.count()
+    val (raw, nRaw) = Tables.observedCount(docs)
 
     // 2. PII redaction, MATERIALIZED before scoring: the redacted corpus is
     // a persisted pipeline artifact (it is what ships), and without the
@@ -62,28 +67,29 @@ object CorpusPipeline {
     red.unpersist()
 
     // 4. exact dedup, keep-best-quality survivor; cached — consumed by the
-    // near-dup pass, the anti-join, and the count
-    val exact = TextOps.dedupKeepBest(gated, "quality_score").cache()
-    val nExact = exact.count()
-    gated.unpersist()
+    // near-dup pass and the anti-join
+    val (deduped, nExact) = Tables.observedCount(TextOps.dedupKeepBest(gated, "quality_score"))
+    val exact = deduped.cache()
 
     // 5. near-dup canonicalization: drop every non-canonical member of a
-    // near-dup component (cluster_rep keeps itself). The clusters work on
-    // per-rep shingle arrays, one pinned relation built for this one use.
+    // near-dup component (cluster_rep keeps itself). The pass checkpoints
+    // relations read from `exact`, so the exact cache is complete when it
+    // returns and `gated` is no longer needed.
     val clusters = TextOps.nearDupClustersFrom(exact, nearThreshold)
+    gated.unpersist()
     val survivors = exact.join(
       clusters.filter(col("doc_id") =!= col("cluster_rep")).select("doc_id"),
       Seq("doc_id"), "left_anti")
 
     // 6. deterministic split — pure function of doc_id, stable under growth.
-    // Pinned once, so the count, the write and the profile all read the
-    // survivors instead of each re-running the near-dup join. A
-    // localCheckpoint keeps the survivors' (coalesced) partitioning, so the
-    // write below emits as many files as without the pin. cache() does not:
-    // on a 575-document corpus with 4 shuffle partitions it wrote 12 files
-    // instead of 3, and 42% more bytes.
-    val split = TextOps.splitAssign(survivors, "doc_id").localCheckpoint()
-    val nFinal = split.count()
+    // Pinned once, with its row count observed by the pin, so the write and
+    // the profile read the survivors instead of each re-running the near-dup
+    // join. A localCheckpoint keeps the survivors' (coalesced) partitioning,
+    // so the write below emits as many files as without the pin. cache() does
+    // not: on a 575-document corpus with 4 shuffle partitions it wrote 12
+    // files instead of 3, and 42% more bytes.
+    val (assigned, nFinal) = Tables.observedCount(TextOps.splitAssign(survivors, "doc_id"))
+    val split = assigned.localCheckpoint()
     exact.unpersist()
 
     // 7. partitioned write: training jobs read split=train only (pruned scan)
@@ -97,6 +103,6 @@ object CorpusPipeline {
         graft.functions.Fx.rd(avg(col("quality_score")), 6).as("avg_quality"))
       .orderBy("split", "lang")
 
-    CorpusResult(nRaw, nQuality, nExact, nFinal, profile)
+    CorpusResult(nRaw(), nQuality, nExact(), nFinal(), profile)
   }
 }

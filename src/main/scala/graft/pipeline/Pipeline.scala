@@ -26,7 +26,8 @@ import org.apache.spark.sql.functions._
   * absent and writes nothing when none is; and the report reads the
   * `volatility_weekly` view the run has just refreshed, as the reference's
   * `AVG(vol) FROM volatility_weekly` does. Every table the run writes and
-  * reads again is read with the schema it was written with.
+  * reads again is read with the schema it was written with, and the fact and
+  * view row counts are observed by their writes, not counted again.
   */
 final case class PipelineResult(
     stagingRows: Long, factRows: Long, weeklyRows: Long, report: String)
@@ -61,14 +62,15 @@ object Pipeline {
     upsertDim(spark, s"$warehouse/dim_instrumento", Analytics.dimInstrument(stagingDf), "ticker")
     upsertDim(spark, s"$warehouse/dim_tempo", Analytics.dimTempo(stagingDf), "data_id")
 
-    // 6. load_fact_table: LAG pct-change fact, partitioned by year
-    val factDf = Tables.overwriteAndRead(
-      MarketView.withPctChange(stagingDf).withColumn("ano", year(col("date"))),
-      s"$warehouse/fact_movimentacao_diaria", Seq("ano"))
+    // 6. load_fact_table: LAG pct-change fact, partitioned by year; its row
+    // count is observed by the write
+    val (fact, factRows) = Tables.observedCount(
+      MarketView.withPctChange(stagingDf).withColumn("ano", year(col("date"))))
+    val factDf = Tables.overwriteAndRead(fact, s"$warehouse/fact_movimentacao_diaria", Seq("ano"))
 
     // 7. calculate_volatility_view: materialized view = recompute + overwrite
-    val weekly = Tables.overwriteAndRead(
-      Analytics.weeklyVolatility(factDf), s"$warehouse/volatility_weekly")
+    val (view, weeklyRows) = Tables.observedCount(Analytics.weeklyVolatility(factDf))
+    val weekly = Tables.overwriteAndRead(view, s"$warehouse/volatility_weekly")
 
     // 8. report_top_volatility: top-1 over the view (XCom analog)
     val top = Analytics.avgVolatilityFromWeekly(weekly).head()
@@ -78,7 +80,7 @@ object Pipeline {
     // 9. log_execution_summary
     org.apache.log4j.Logger.getLogger(getClass).info(report)
 
-    PipelineResult(stagingRows, factRows = factDf.count(), weeklyRows = weekly.count(), report)
+    PipelineResult(stagingRows, factRows(), weeklyRows(), report)
   }
 
   /** A14 upsert against the persisted dimension: the first run writes

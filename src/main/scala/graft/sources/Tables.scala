@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.sources.Formats.deleteRecursively
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -237,6 +237,33 @@ object Tables {
       s"partition columns ${partitionByCols.mkString(",")} must come last in ${df.columns.mkString(",")}")
     overwrite(df, path, partitionByCols)
     df.sparkSession.read.schema(df.schema).parquet(path)
+  }
+
+  /** `df` with a row count observed on it, and the reader of that count. The
+    * count is taken by the action that first runs `df` (a cache
+    * materialization, a checkpoint, a write), so it costs no job of its own;
+    * that action must run all of `df`. `agg` observes another non-null long
+    * aggregate of the rows instead. Spark hands observed metrics to the
+    * listener bus after the action returns, so the reader drains the bus when
+    * the count has not arrived yet, and then throws if no action has run `df`
+    * (where `Observation.get` would block for ever). When the action's plan
+    * had the observed node pruned away (adaptive execution drops the
+    * subtrees it finds empty at run time), the observation arrives without
+    * a value, and the reader computes `agg` over `df` itself.
+    */
+  private[graft] def observedCount(df: DataFrame, agg: Column = count(lit(1)))
+      : (DataFrame, () => Long) = {
+    val obs = Observation()
+    (df.observe(obs, agg.as("n")), () => {
+      if (!obs.future.isCompleted)
+        org.apache.spark.sql.graft.SqlShim.drainListenerBus(df.sparkSession)
+      obs.future.value.map(_.get) match {
+        case Some(row) if row.length > 0 => row.getLong(0)
+        case Some(_) => df.agg(agg).head().getLong(0)
+        case None => throw new IllegalStateException(
+          s"observed count ${obs.name} read before any action ran its relation")
+      }
+    })
   }
 
   /** Incremental materialized-view refresh: dynamic partition overwrite

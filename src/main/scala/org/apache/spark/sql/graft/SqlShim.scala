@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** Narrow bridge into Spark's `private[sql]` classic API: Column ⇄ Expression
   * conversion and the session FunctionRegistry. This is the supported way to
   * hand a custom Catalyst Expression to the DataFrame API in Spark 4 (the
-  * old `new Column(expr)` constructor is gone); only these three hooks are
+  * old `new Column(expr)` constructor is gone); only the hooks below are
   * exposed, nothing else from the internal surface.
   */
 object SqlShim {
@@ -30,4 +30,11 @@ object SqlShim {
     */
   def unloadAllStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
+
+  /** Blocks until the listener bus has delivered every event posted so far
+    * (Spark's own bound: 10 s). Observed metrics reach their `Observation`
+    * through it after the action that made them returns.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

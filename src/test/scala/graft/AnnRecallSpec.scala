@@ -170,7 +170,7 @@ class AnnRecallSpec extends SparkSpecBase {
     assert(vsFloat >= 0.9, f"int8 recall vs float LSH $vsFloat%.3f < 0.9 (measured 1.0)")
     assert(vsBrute >= floatVsBrute - 0.1,
       f"int8 end-to-end recall $vsBrute%.3f fell more than 0.1 below the float LSH envelope $floatVsBrute%.3f")
-    val path = java.nio.file.Files.createTempDirectory("graft_int8").toString + "/idx"
+    val path = tempDir("graft_int8").toString + "/idx"
     Similarity.writeInt8Index(emb, path)
     val idx = Similarity.readInt8Index(spark, path)
     val qField = idx.schema("q").dataType

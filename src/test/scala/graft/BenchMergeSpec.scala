@@ -47,7 +47,7 @@ class BenchMergeSpec extends AnyFunSuite {
   }
 
   test("dataSha flips when a file's size or mtime changes, and is stable otherwise") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_datasha")
+    val dir = SparkSpecBase.tempDir("graft_datasha")
     val f = dir.resolve("t.parquet")
     java.nio.file.Files.writeString(f, "aaaa")
     java.nio.file.Files.setLastModifiedTime(f,

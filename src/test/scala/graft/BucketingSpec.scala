@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class BucketingSpec extends SparkSpecBase {
 
   test("bucketed fact-fact join plans without a shuffle exchange") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_buckets").toString
+    val wh = tempDir("graft_buckets").toString
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_b LOCATION '$wh'")
     // disable broadcast so the join is sort-merge (the bucketed-layout case;
     // at real scale both sides are far beyond any broadcast threshold)

@@ -151,7 +151,7 @@ class CollapsePropertySpec extends SparkSpecBase {
       9L -> b.replace("monday", "friday").replace("latest", "newest"),
       10L -> "yes",
       11L -> (b + " again and again"))
-    val d = java.nio.file.Files.createTempDirectory("graft_prop_short").toString
+    val d = tempDir("graft_prop_short").toString
     texts.map { case (id, t) => (id, t, "en", "web", 0L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(d + "/documents.parquet")
@@ -203,9 +203,26 @@ class CollapsePropertySpec extends SparkSpecBase {
     }
   }
 
+  test("min-label CC ≡ pure-Scala union-find: no pairs, disjoint pairs, stars, the 15-chain") {
+    val graphs = Seq(
+      "no pairs" -> Seq.empty[(Long, Long)],
+      "disjoint pairs" -> Seq((1L, 2L), (5L, 3L), (20L, 10L)),
+      // the centre is not the component minimum, so leaves relabel twice
+      "star, centre 7" -> (1L to 12L).filter(_ != 7L).map(v => (7L, v)),
+      "star, centre 0" -> (1L to 12L).map(v => (v, 0L)),
+      "15-chain" -> (0 until 15).map(i => (i.toLong, (i + 1).toLong)))
+    for ((name, edges) <- graphs) {
+      val exp = refComponents(
+        edges.map(e => (math.min(e._1, e._2), math.max(e._1, e._2), 1.0)).toSet).toSeq.sorted
+      val got = TextOps.ccMinLabel(edges.toDF("u", "v"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      assert(got == exp, name)
+    }
+  }
+
   for (seed <- Seq(11, 23, 47)) {
     test(s"seed $seed: collapsed minhash pairs ≡ pure-Scala raw algorithm") {
-      val d = java.nio.file.Files.createTempDirectory(s"graft_prop$seed").toString
+      val d = tempDir(s"graft_prop$seed").toString
       val rows = mkCorpus(seed)
       rows.toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(d + "/documents.parquet")
@@ -246,7 +263,7 @@ class CollapsePropertySpec extends SparkSpecBase {
     }
 
     test(s"seed $seed: collapsed novelty/boilerplate/incremental ≡ pure-Scala references") {
-      val d = java.nio.file.Files.createTempDirectory(s"graft_propn$seed").toString
+      val d = tempDir(s"graft_propn$seed").toString
       val rows = mkCorpus(seed)
       rows.toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(d + "/documents.parquet")
@@ -279,7 +296,7 @@ class CollapsePropertySpec extends SparkSpecBase {
       val retag = rows.zipWithIndex.map { case (r, i) =>
         (r._1, r._2, r._3, if (i % 2 == 0) "src0" else "hist", r._5)
       }
-      val d2 = java.nio.file.Files.createTempDirectory(s"graft_propi$seed").toString
+      val d2 = tempDir(s"graft_propi$seed").toString
       retag.toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(d2 + "/documents.parquet")
       val newDocs = retag.filter(_._4 == "src0")
@@ -305,7 +322,7 @@ class CollapsePropertySpec extends SparkSpecBase {
     }
 
     test(s"seed $seed: collapsed fuzzy matches ≡ pure-Scala blocked Levenshtein") {
-      val d = java.nio.file.Files.createTempDirectory(s"graft_propf$seed").toString
+      val d = tempDir(s"graft_propf$seed").toString
       val rows = mkCorpus(seed)
       rows.toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(d + "/documents.parquet")

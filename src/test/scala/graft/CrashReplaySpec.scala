@@ -68,7 +68,7 @@ class CrashReplaySpec extends SparkSpecBase {
   /** Two parquet files so AvailableNow + maxFilesPerTrigger=1 yields two
     * real micro-batches with durable offsets. */
   private def stageSplit(df: DataFrame, rangeCol: String): String = {
-    val dir = Files.createTempDirectory("graft_crash_split").toString
+    val dir = tempDir("graft_crash_split").toString
     df.repartitionByRange(2, col(rangeCol)).write.mode("overwrite").parquet(dir)
     dir
   }
@@ -90,7 +90,7 @@ class CrashReplaySpec extends SparkSpecBase {
       spark.read.parquet(out).select("_batch_id").distinct()
         .as[Long].collect().toSet
 
-    val root = Files.createTempDirectory("graft_crash_cleaner")
+    val root = tempDir("graft_crash_cleaner")
     val (outC, ckptC) = (s"$root/out_c", s"$root/ckpt_c")
     val (outU, ckptU) = (s"$root/out_u", s"$root/ckpt_u")
 
@@ -143,7 +143,7 @@ class CrashReplaySpec extends SparkSpecBase {
     val chainU = "semdedup_crash_uninterrupted"
     Tables.resetChain(spark, src, chainC)
     Tables.resetChain(spark, src, chainU)
-    val root = Files.createTempDirectory("graft_crash_chain")
+    val root = tempDir("graft_crash_chain")
     try {
       // crashed lifecycle: batch 1's chain publish is durable, commit is not
       assert(!lifecycle(split, s"$root/ckpt_c", Some(1L))(body(chainC)),
@@ -194,7 +194,7 @@ class CrashReplaySpec extends SparkSpecBase {
     val chainU = "pq_crash_uninterrupted"
     Tables.resetChain(spark, src, chainC)
     Tables.resetChain(spark, src, chainU)
-    val root = Files.createTempDirectory("graft_crash_pq")
+    val root = tempDir("graft_crash_pq")
     try {
       // crashed lifecycle: batch 1's code-table publish is durable, the
       // micro-batch commit is not — the exact at-least-once window

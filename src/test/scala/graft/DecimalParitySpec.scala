@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
 class DecimalParitySpec extends SparkSpecBase {
 
   private lazy val csv = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_decimal")
+    val dir = tempDir("graft_decimal")
     // 0.1 and 0.3 are classic non-representable doubles; 10k of them exposes
     // FP accumulation drift immediately
     val rows = (1 to 10000).map(i => s"2024-01-01,AAA,0.1,0.3,0.1,0.1,$i")

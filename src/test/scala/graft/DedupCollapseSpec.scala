@@ -14,7 +14,7 @@ class DedupCollapseSpec extends SparkSpecBase {
   import spark.implicits._
 
   private lazy val dir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_collapse").toString
+    val d = tempDir("graft_collapse").toString
     val docs = Seq(
       // cluster A: three exact dups (same normalized text)
       (1L, "the quick brown fox jumps over the lazy dog", "en", "web", 0L),
@@ -78,7 +78,7 @@ class DedupCollapseSpec extends SparkSpecBase {
 
   test("fuzzy match collapse ≡ raw blocked Levenshtein on a dup-heavy fixture") {
     import graft.operators.TextOps.normText
-    val d = java.nio.file.Files.createTempDirectory("graft_fuzzy").toString
+    val d = tempDir("graft_fuzzy").toString
     // two 10-member exact-dup clusters sharing one (lang, prefix) block —
     // the CommonCrawl shape where the raw algorithm pays m² Levenshtein
     // calls inside the block — plus a different-lang twin, an unrelated

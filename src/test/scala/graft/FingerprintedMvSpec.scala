@@ -25,7 +25,7 @@ class FingerprintedMvSpec extends SparkSpecBase {
 
   test("fingerprintedMv: build runs once per fingerprint, again on source change, again on refresh") {
     import java.nio.file.{Files, Paths}
-    val work = Files.createTempDirectory("graft_fpmv_spec")
+    val work = tempDir("graft_fpmv_spec")
     val src = work.resolve("src.txt")
     Files.write(src, "v1".getBytes("UTF-8"))
     var builds = 0
@@ -67,7 +67,7 @@ class FingerprintedMvSpec extends SparkSpecBase {
 
   test("atomic publish: a markerless partial directory is swept and rebuilt; no temp dirs linger") {
     import java.nio.file.{Files, Paths}
-    val work = Files.createTempDirectory("graft_fpmv_atomic")
+    val work = tempDir("graft_fpmv_atomic")
     val src = work.resolve("src.txt")
     Files.write(src, "v1".getBytes("UTF-8"))
     var builds = 0
@@ -90,7 +90,7 @@ class FingerprintedMvSpec extends SparkSpecBase {
 
   test("vacuum: superseded fingerprint is marked on publish, swept only after the grace period; live MV kept") {
     import java.nio.file.{Files, Paths}
-    val work = Files.createTempDirectory("graft_fpmv_vac")
+    val work = tempDir("graft_fpmv_vac")
     val src = work.resolve("src.txt")
     Files.write(src, "v1".getBytes("UTF-8"))
     val name = "fpmv_spec_vacuum"
@@ -120,7 +120,7 @@ class FingerprintedMvSpec extends SparkSpecBase {
 
   test("vacuum: markerless sibling swept immediately; a source flip-flop un-stamps the again-current MV") {
     import java.nio.file.{Files, Paths}
-    val work = Files.createTempDirectory("graft_fpmv_vac2")
+    val work = tempDir("graft_fpmv_vac2")
     val src = work.resolve("src.txt")
     Files.write(src, "v1".getBytes("UTF-8"))
     val mt1 = Files.getLastModifiedTime(src)
@@ -152,7 +152,7 @@ class FingerprintedMvSpec extends SparkSpecBase {
   test("striped locks: two DIFFERENT MVs build concurrently; the SAME MV builds once under racing threads") {
     import java.nio.file.Files
     import java.util.concurrent.{CountDownLatch, TimeUnit}
-    val work = Files.createTempDirectory("graft_fpmv_lock")
+    val work = tempDir("graft_fpmv_lock")
     val src = work.resolve("src.txt")
     Files.write(src, "v1".getBytes("UTF-8"))
     // different-name overlap: builder A blocks until builder B has ENTERED
@@ -217,8 +217,8 @@ class FingerprintedMvSpec extends SparkSpecBase {
     import java.nio.file.{Files, Path}
     val name = "fpmv_spec_two_src"
     purgeMvName(name)
-    val a = Files.createTempDirectory("graft_fpmv_src_a").resolve("src.txt")
-    val b = Files.createTempDirectory("graft_fpmv_src_b").resolve("src.txt")
+    val a = tempDir("graft_fpmv_src_a").resolve("src.txt")
+    val b = tempDir("graft_fpmv_src_b").resolve("src.txt")
     Files.write(a, "a".getBytes("UTF-8"))
     var buildsA = 0
     def resolveA(): Path = Tables.fingerprintedMvPath(spark, a, name) {
@@ -260,8 +260,8 @@ class FingerprintedMvSpec extends SparkSpecBase {
   test("copyRecursively keeps file mtimes and copies the marker") {
     import java.nio.file.Files
     import java.nio.file.attribute.FileTime
-    val from = Files.createTempDirectory("graft_copy_from")
-    val to = Files.createTempDirectory("graft_copy_to").resolve("dst")
+    val from = tempDir("graft_copy_from")
+    val to = tempDir("graft_copy_to").resolve("dst")
     val stamped = (0 until 3).map { i =>
       val f = Files.write(from.resolve(s"part-$i.parquet"), Array[Byte](i.toByte))
       Files.setLastModifiedTime(f, FileTime.fromMillis(1000000000000L + i * 60000L))

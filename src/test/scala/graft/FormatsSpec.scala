@@ -12,7 +12,7 @@ class FormatsSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_fmt_spec").toString
+    tempDir("graft_fmt_spec").toString
 
   test("ORC round-trip is row-for-row lossless on orders") {
     val src = Tables.orders(spark, sf)

@@ -151,7 +151,7 @@ class GraphOpsSpec extends SparkSpecBase {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     // run against a COPY of the source so the staleness leg can touch mtimes
     // without writing to the shared testdata
-    val work = Files.createTempDirectory("graft_mv_spec")
+    val work = tempDir("graft_mv_spec")
     Files.copy(Paths.get(sf, "lineitem.parquet"), work.resolve("lineitem.parquet"),
       StandardCopyOption.COPY_ATTRIBUTES)
     val dir = work.toString

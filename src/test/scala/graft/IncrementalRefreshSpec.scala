@@ -24,7 +24,7 @@ class IncrementalRefreshSpec extends SparkSpecBase {
   }
 
   test("dynamic overwrite replaces only the partitions present in the write") {
-    val out = java.nio.file.Files.createTempDirectory("graft_incr").toString + "/t"
+    val out = tempDir("graft_incr").toString + "/t"
     val full = Seq((2023, "a", 1L), (2023, "b", 2L), (2024, "a", 3L))
       .toDF("ano", "k", "v")
     Tables.overwrite(full, out, Seq("ano"))
@@ -45,7 +45,7 @@ class IncrementalRefreshSpec extends SparkSpecBase {
   }
 
   test("static overwrite (the non-incremental path) truncates everything") {
-    val out = java.nio.file.Files.createTempDirectory("graft_incr2").toString + "/t"
+    val out = tempDir("graft_incr2").toString + "/t"
     Tables.overwrite(Seq((2023, 1L)).toDF("ano", "v"), out, Seq("ano"))
     Tables.overwrite(Seq((2024, 2L)).toDF("ano", "v"), out, Seq("ano"))
     assert(spark.read.parquet(out).select("ano").distinct().count() == 1)

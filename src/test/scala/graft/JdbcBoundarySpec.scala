@@ -15,7 +15,7 @@ class JdbcBoundarySpec extends SparkSpecBase {
   import spark.implicits._
 
   private lazy val url = {
-    val db = java.nio.file.Files.createTempDirectory("graft_derby").resolve("stagingdb")
+    val db = tempDir("graft_derby").resolve("stagingdb")
     s"jdbc:derby:$db;create=true"
   }
 

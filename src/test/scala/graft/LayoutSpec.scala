@@ -42,7 +42,7 @@ class LayoutSpec extends SparkSpecBase {
       .select(
         (col("id") * 2654435761L % 2048).as("x"),
         (col("id") * 40503L % 2048).as("y"))
-    val base = java.nio.file.Files.createTempDirectory("graft_layout").toString
+    val base = tempDir("graft_layout").toString
     val zPath = Layout.writeZOrdered(df, "x", "y", s"$base/z", bits = 11, partitions = 64)
     // the 1-D baseline: same file count, total order on x alone
     df.repartitionByRange(64, col("x")).sortWithinPartitions("x")
@@ -63,7 +63,7 @@ class LayoutSpec extends SparkSpecBase {
   test("writeZOrdered round-trips the data unchanged") {
     val df = spark.range(1000)
       .select((col("id") % 100).as("x"), (col("id") % 37).as("y"), col("id"))
-    val p = java.nio.file.Files.createTempDirectory("graft_zrt").toString + "/d"
+    val p = tempDir("graft_zrt").toString + "/d"
     Layout.writeZOrdered(df, "x", "y", p, bits = 7, partitions = 4)
     val back = spark.read.parquet(p)
     assert(back.count() == 1000)
@@ -75,7 +75,7 @@ class LayoutSpec extends SparkSpecBase {
     new java.io.File(p).listFiles().filter(_.getName.endsWith(".parquet"))
 
   test("compaction packs many small files into few, losslessly") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cpt").toString
+    val tmp = tempDir("graft_cpt").toString
     val src = spark.range(50000)
       .select(col("id"), (col("id") % 97).as("k"), rand(7).as("v"))
     src.repartition(40).write.parquet(s"$tmp/frag")
@@ -88,7 +88,7 @@ class LayoutSpec extends SparkSpecBase {
   }
 
   test("compaction respects the target size: big data stays multi-file") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cpt2").toString
+    val tmp = tempDir("graft_cpt2").toString
     // ~40 input files; a target well below the total must keep >1 output
     val src = spark.range(200000)
       .select(col("id"), concat(lit("payload-"), col("id")).as("s"), rand(11).as("v"))

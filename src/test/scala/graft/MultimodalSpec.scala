@@ -32,7 +32,7 @@ class MultimodalSpec extends SparkSpecBase {
   }
 
   test("decodeImage + imageFeatures: REAL PNG decode via javax.imageio — true dimensions and pixel mean") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_png").toFile
+    val dir = tempDir("graft_png").toFile
     def writePng(name: String, w: Int, h: Int, rgb: Int): Unit = {
       val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
       for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rgb)
@@ -55,7 +55,7 @@ class MultimodalSpec extends SparkSpecBase {
   }
 
   test("resizeImages: REAL bilinear resize — output decodes to the target geometry") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_resize").toFile
+    val dir = tempDir("graft_resize").toFile
     val img = new java.awt.image.BufferedImage(40, 20, java.awt.image.BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until 20; x <- 0 until 40) img.setRGB(x, y, (100 << 16) | (150 << 8) | 200)
     assert(javax.imageio.ImageIO.write(img, "png", new java.io.File(dir, "in.png")))
@@ -69,7 +69,7 @@ class MultimodalSpec extends SparkSpecBase {
   }
 
   test("decodeAudio + audioFeatures: REAL WAV decode via javax.sound — true rate, frames, RMS") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wav").toFile
+    val dir = tempDir("graft_wav").toFile
     // 16-bit PCM mono 8000 Hz, 0.5 s sine at amplitude 0.5 → RMS = 0.5/√2
     val rate = 8000f
     val nFrames = 4000
@@ -187,7 +187,7 @@ class MultimodalSpec extends SparkSpecBase {
   }
 
   test("videoQuarantine lists unparseable containers; videoFeatures drops them") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vidq")
+    val dir = tempDir("graft_vidq")
     java.nio.file.Files.write(dir.resolve("good.avi"),
       Multimodal.mkAviFixture(320, 240, 40000, 250))
     java.nio.file.Files.write(dir.resolve("corrupt.mp4"),

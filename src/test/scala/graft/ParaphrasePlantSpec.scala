@@ -41,7 +41,7 @@ class ParaphrasePlantSpec extends SparkSpecBase {
   /** sf0.001 + the 25 planted paraphrase twins, written as a standalone
     * table dir so the registered entry points run against it verbatim. */
   private lazy val fixture: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_plant").toString
+    val d = tempDir("graft_plant").toString
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val benchIds = docs.filter(col("source") === "src0")

@@ -11,8 +11,8 @@ import scala.jdk.CollectionConverters._
 class PipelineSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def tempDir(): String =
-    Files.createTempDirectory("graft_pipeline").toString
+  private def newDir(): String =
+    tempDir("graft_pipeline").toString
 
   // the sf0.001 bars in staging-schema columns
   private lazy val bars: DataFrame = MarketView.dailyBars(spark, sf)
@@ -20,7 +20,7 @@ class PipelineSpec extends SparkSpecBase {
       col("low"), col("close"), col("volume"))
 
   private def writeCsv(df: DataFrame): String = {
-    val dir = tempDir()
+    val dir = newDir()
     df.coalesce(1).write.option("header", "true").mode("overwrite").csv(s"$dir/quotes")
     s"$dir/quotes"
   }
@@ -36,7 +36,7 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("end-to-end: CSV -> staging -> dims -> fact -> weekly view -> report") {
-    val wh = tempDir()
+    val wh = newDir()
     val res = Pipeline.run(spark, csvPath, wh)
     assert(res.stagingRows == 150)
     assert(res.factRows == 150)
@@ -52,7 +52,7 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("re-run is idempotent (truncate-and-reload + upsert dims)") {
-    val wh = tempDir()
+    val wh = newDir()
     val first = Pipeline.run(spark, csvPath, wh)
     val second = Pipeline.run(spark, csvPath, wh)
     assert(first.stagingRows == second.stagingRows)
@@ -63,7 +63,7 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("missing CSV fails fast before any write") {
-    val wh = tempDir()
+    val wh = newDir()
     intercept[IllegalArgumentException] {
       Pipeline.run(spark, "/nonexistent/quotes.csv", wh)
     }
@@ -71,14 +71,14 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("row-count gate mismatch aborts the run") {
-    val wh = tempDir()
+    val wh = newDir()
     intercept[IllegalArgumentException] {
       Pipeline.run(spark, csvPath, wh, expectedRows = Some(999999L))
     }
   }
 
   test("a re-run with new keys appends exactly the absent dimension rows") {
-    val wh = tempDir()
+    val wh = newDir()
     Pipeline.run(spark, csvPath, wh)
     val dims = Seq("dim_instrumento" -> "ticker", "dim_tempo" -> "data_id")
     def read(d: String) = spark.read.parquet(s"$wh/$d")
@@ -113,7 +113,7 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("a duplicate (symbol, date) fails the quality gate before the fact is written") {
-    val wh = tempDir()
+    val wh = newDir()
     val e = intercept[IllegalArgumentException] {
       Pipeline.run(spark, writeCsv(bars.unionByName(bars.limit(1))), wh)
     }
@@ -122,7 +122,7 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("one low > high row fails the expectation suite before the fact is written") {
-    val wh = tempDir()
+    val wh = newDir()
     val first = bars.orderBy("symbol", "date").head()
     val isFirst = col("symbol") === first.getAs[String]("symbol") &&
       col("date") === first.getAs[java.sql.Date]("date")
@@ -134,7 +134,7 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("the report over the weekly view equals the report over the fact") {
-    val wh = tempDir()
+    val wh = newDir()
     Pipeline.run(spark, csvPath, wh)
     val fromView = Analytics.avgVolatilityFromWeekly(
       spark.read.parquet(s"$wh/volatility_weekly")).collect().toSeq
@@ -145,7 +145,7 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("overwriteAndRead reads back the schema a footer read infers, partition column last") {
-    val wh = tempDir()
+    val wh = newDir()
     val df = bars.withColumn("ano", year(col("date")))
     val back = Tables.overwriteAndRead(df, s"$wh/t", Seq("ano"))
     assert(back.schema == spark.read.parquet(s"$wh/t").schema)
@@ -154,12 +154,22 @@ class PipelineSpec extends SparkSpecBase {
     intercept[IllegalArgumentException](Tables.overwriteAndRead(df, s"$wh/u", Seq("symbol")))
   }
 
-  test("job count: a first load runs at most 22 Spark jobs, a re-run at most 18") {
-    val wh = tempDir()
+  test("the observed fact and view row counts equal the written tables, first load and re-run") {
+    val wh = newDir()
+    for (_ <- 1 to 2) {
+      val res = Pipeline.run(spark, csvPath, wh)
+      assert(res.factRows == spark.read.parquet(s"$wh/fact_movimentacao_diaria").count())
+      assert(res.weeklyRows == spark.read.parquet(s"$wh/volatility_weekly").count())
+    }
+  }
+
+  test("job count: a first load runs at most 18 Spark jobs, a re-run at most 14") {
+    val wh = newDir()
     val first = jobsOf(Pipeline.run(spark, csvPath, wh))
     val rerun = jobsOf(Pipeline.run(spark, csvPath, wh))
     info(s"first load $first jobs, re-run $rerun jobs")
-    assert(first <= 22)
-    assert(rerun <= 18)
+    // 22 and 18 while the fact and view rows were counted after their writes
+    assert(first <= 18)
+    assert(rerun <= 14)
   }
 }

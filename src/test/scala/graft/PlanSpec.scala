@@ -52,7 +52,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("partitioned layout prunes partitions at the scan") {
-    val out = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val out = tempDir("graft_part").toString
     val bars = MarketView.dailyBars(spark, sf)
       .withColumn("ano", org.apache.spark.sql.functions.year(col("date")))
     graft.sources.Tables.overwrite(bars, s"$out/bars", Seq("ano"))

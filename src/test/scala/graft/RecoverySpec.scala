@@ -24,7 +24,7 @@ class RecoverySpec extends SparkSpecBase {
     * file source lists plain files, not subdirectories).
     */
   private def stage(df: DataFrame, inDir: String, name: String): Unit = {
-    val staging = Files.createTempDirectory("graft_stage").toString
+    val staging = tempDir("graft_stage").toString
     df.coalesce(1).write.mode("overwrite").parquet(staging)
     val part = Files.list(java.nio.file.Paths.get(staging)).toArray
       .map(_.toString).filter(_.endsWith(".parquet")).head
@@ -50,7 +50,7 @@ class RecoverySpec extends SparkSpecBase {
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
 
   test("restart from checkpoint resumes offsets AND state") {
-    val root = Files.createTempDirectory("graft_recovery").toString
+    val root = tempDir("graft_recovery").toString
     val inDir = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     new java.io.File(inDir).mkdirs()
 
@@ -83,7 +83,7 @@ class RecoverySpec extends SparkSpecBase {
   }
 
   test("maxFilesPerTrigger bounds micro-batches without changing results") {
-    val root = Files.createTempDirectory("graft_rate").toString
+    val root = tempDir("graft_rate").toString
     val inDir = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     new java.io.File(inDir).mkdirs()
     (0 until 3).foreach(i =>
@@ -106,7 +106,7 @@ class RecoverySpec extends SparkSpecBase {
   }
 
   test("a replayed lifecycle with no new data changes nothing") {
-    val root = Files.createTempDirectory("graft_recovery2").toString
+    val root = tempDir("graft_recovery2").toString
     val inDir = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     new java.io.File(inDir).mkdirs()
     stage(events.limit(1000), inDir, "d.parquet")

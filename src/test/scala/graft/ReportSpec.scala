@@ -26,7 +26,7 @@ class ReportSpec extends SparkSpecBase {
   }
 
   test("writeTo persists the report file") {
-    val out = java.nio.file.Files.createTempDirectory("graft_report")
+    val out = tempDir("graft_report")
       .resolve("outputs/relatorio_completo.txt").toString
     val r = Report.writeTo(spark, sf, out)
     assert(java.nio.file.Files.readString(java.nio.file.Paths.get(out)) == r)

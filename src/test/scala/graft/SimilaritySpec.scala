@@ -146,7 +146,7 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("persisted LSH index: write -> read -> probe is row-identical to the in-session path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lshidx").toString
+    val dir = tempDir("graft_lshidx").toString
     val emb = graft.sources.Tables.embeddings(spark, sf)
     Similarity.writeLshIndex(emb, dir)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -159,7 +159,7 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("persisted IVF centroids: write -> read -> probe is row-identical to training in session") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfcents").toString
+    val dir = tempDir("graft_ivfcents").toString
     val emb = graft.sources.Tables.embeddings(spark, sf)
     Similarity.writeIvfCentroids(Similarity.kmeansCentroids(emb, 8, 3), dir)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -172,7 +172,7 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("persisted PQ codebooks: write -> read -> probe is row-identical to training in session") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqbooks").toString
+    val dir = tempDir("graft_pqbooks").toString
     val emb = graft.sources.Tables.embeddings(spark, sf)
     Similarity.writePqCodebooks(Similarity.pqTrainCodebooks(emb), dir)
     def rows(df: org.apache.spark.sql.DataFrame) =

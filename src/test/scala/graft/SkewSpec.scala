@@ -31,7 +31,7 @@ class SkewSpec extends SparkSpecBase {
   }
 
   test("binaryFile ingestion reads real files as binary payloads") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_media")
+    val dir = tempDir("graft_media")
     java.nio.file.Files.write(dir.resolve("a.bin"), Array[Byte](1, 2, 3))
     java.nio.file.Files.write(dir.resolve("b.bin"), Array[Byte](4, 5))
     java.nio.file.Files.write(dir.resolve("skip.txt"), Array[Byte](9))

@@ -15,6 +15,8 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   lazy val sf: String = "/root/testdata/sf0.001"
 
+  protected def tempDir(prefix: String): java.nio.file.Path = SparkSpecBase.tempDir(prefix)
+
   /** Jobs the calling thread submits while `f` runs. */
   protected def jobsOf(f: => Unit): Int = {
     val sc = spark.sparkContext
@@ -51,6 +53,19 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpecBase {
+  private val scratch = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+  private lazy val deleteScratchOnExit: Unit = sys.addShutdownHook(
+    scratch.forEach(d => scala.util.Try(graft.sources.Formats.deleteRecursively(d))))
+
+  /** A new directory under `java.io.tmpdir`, deleted with its contents when
+    * the JVM exits: every spec's scratch space comes from here. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    deleteScratchOnExit
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    scratch.add(d)
+    d
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

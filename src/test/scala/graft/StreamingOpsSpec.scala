@@ -189,7 +189,7 @@ class StreamingOpsSpec extends SparkSpecBase {
   }
 
   test("streamFullJoinParityToParquet: distributed-sink census equals the memory gate's emitted set") {
-    val outDir = java.nio.file.Files.createTempDirectory("graft_fulljoin_pq").toString + "/out"
+    val outDir = tempDir("graft_fulljoin_pq").toString + "/out"
     val census = StreamingOps.streamFullJoinParityToParquet(spark, sf, outDir)
       .as[(Long, Long, Long, Long)].head()
     val mem = StreamingOps.streamFullJoinParity(spark, sf).cache()
@@ -212,7 +212,7 @@ class StreamingOpsSpec extends SparkSpecBase {
     // (90min) must BOTH be withheld — state for a row whose bound equals
     // the watermark is retained; only strictly-passed rows null-emit.
     import java.nio.file.{Files, Paths}
-    val tmp = Files.createTempDirectory("evb").toString
+    val tmp = tempDir("evb").toString
     def mins(m: Long): Long = m * 60L * 1000000000L // ns, the events ts unit
     val rows = Seq(
       (990L, mins(100), 99L, "click", 1.0, "{}"),    // anchor pair: maxC
@@ -263,7 +263,7 @@ class StreamingOpsSpec extends SparkSpecBase {
     //         ⇒ cut 86 < 90 ⇒ emitted with n=2, exact decimal sum
     // user 5: last at 65min ⇒ cut 95 > 90 ⇒ withheld
     import java.nio.file.{Files, Paths}
-    val tmp = Files.createTempDirectory("tmb").toString
+    val tmp = tempDir("tmb").toString
     def mins(m: Long): Long = m * 60L * 1000000000L
     val rows = Seq(
       (99L, mins(120), 9L, "view", 1.0, "{}"),
@@ -504,7 +504,7 @@ class StreamingOpsSpec extends SparkSpecBase {
 
   test("nearDupStreamWithGrowingIndex: doc matches a document that arrived two batches earlier") {
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_growidx")
+    val tmp = tempDir("graft_growidx")
     val (idxPath, matchPath, ckpt) = (s"$tmp/index", s"$tmp/matches", s"$tmp/ckpt")
     val input = MemoryStream[(Long, String)]
     val docs = input.toDF().toDF("doc_id", "text")
@@ -549,7 +549,7 @@ class StreamingOpsSpec extends SparkSpecBase {
   // would corrupt with duplicate cleaned documents.
 
   test("idempotentBatchSink: replaying a batchId leaves the landed relation unchanged; other batches survive") {
-    val out = java.nio.file.Files.createTempDirectory("graft_idem_sink").toString + "/t"
+    val out = tempDir("graft_idem_sink").toString + "/t"
     val b0 = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "payload")
     val b1 = Seq((3L, "c")).toDF("doc_id", "payload")
     StreamingOps.idempotentBatchSink(b0, 0L, out)
@@ -571,7 +571,7 @@ class StreamingOpsSpec extends SparkSpecBase {
       (2L, "totally different text with shared run of tokens here"),
       (3L, "unique content nothing duplicated at all anywhere")).toDF("doc_id", "text")
     val dup = TextOps.dupShinglesFrom(docs).localCheckpoint(true)
-    val out = java.nio.file.Files.createTempDirectory("graft_idem_gate").toString + "/t"
+    val out = tempDir("graft_idem_gate").toString + "/t"
     def body(batch: org.apache.spark.sql.DataFrame, id: Long): Unit =
       StreamingOps.idempotentBatchSink(TextOps.spanCutCleanAgainst(batch, dup), id, out)
     def landed(): Seq[(Long, Long, Long, Long, String)] =
@@ -709,7 +709,7 @@ class StreamingOpsSpec extends SparkSpecBase {
 
   test("foreachBatch sink: latestSnapshot recovers exact current values per key") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_sink")
+    val dir = tempDir("graft_stream_sink")
     val input = MemoryStream[(Long, Double)]
     val events = input.toDF().toDF("user_id", "value")
     val agg = events.groupBy("user_id").count()
@@ -747,7 +747,7 @@ class StreamingOpsSpec extends SparkSpecBase {
   }
 
   test("lenient CSV ingest quarantines malformed rows instead of failing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv")
+    val dir = tempDir("graft_csv")
     java.nio.file.Files.writeString(dir.resolve("q.csv"),
       "date,symbol,open,high,low,close,volume\n" +
         "2024-01-01,AAA,1.0,2.0,0.5,1.5,100\n" +
@@ -762,7 +762,7 @@ class StreamingOpsSpec extends SparkSpecBase {
   }
 
   test("JSONL document ingest: declared schema, malformed lines quarantined") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl")
+    val dir = tempDir("graft_jsonl")
     java.nio.file.Files.writeString(dir.resolve("docs.jsonl"),
       """{"doc_id": 1, "text": "first document body", "lang": "en", "source": "web", "n_chars": 19}
         |{"doc_id": 2, "text": "second one", "lang": "de", "source": "book", "n_chars": 10}
@@ -780,7 +780,7 @@ class StreamingOpsSpec extends SparkSpecBase {
     val piped = graft.pipeline.CorpusPipeline.runFrom(spark, clean, None, minQuality = 0.0)
     assert(piped.nRaw == 2L && piped.nFinal == 2L)
     // write half of the interchange contract: JSONL out -> JSONL in, lossless
-    val out = java.nio.file.Files.createTempDirectory("graft_jsonl_out").toString + "/docs"
+    val out = tempDir("graft_jsonl_out").toString + "/docs"
     graft.sources.Tables.writeJsonl(clean, out)
     val (back, badBack) = graft.sources.Tables.readDocumentsJsonl(spark, out)
     assert(badBack.count() == 0)
@@ -829,7 +829,7 @@ class StreamingOpsSpec extends SparkSpecBase {
     val agg = src.withWatermark("ts", "48 hours")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_late_spec")
+    val ckpt = tempDir("graft_late_spec")
     val q = agg.writeStream.format("memory").queryName("late_spec")
       .option("checkpointLocation", ckpt.toString)
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())

@@ -86,7 +86,7 @@ class TextOpsSpec extends SparkSpecBase {
   }
 
   test("noveltyProfile: first-occurrence shingle fractions are exact") {
-    val d = java.nio.file.Files.createTempDirectory("graft_novelty").toString
+    val d = tempDir("graft_novelty").toString
     Seq(
       (1L, "a b c d", "en", "web", 0L),       // shingles: "a b c", "b c d" — both novel
       (2L, "a b c d", "en", "web", 0L),       // identical -> 0 novel of 2
@@ -103,7 +103,7 @@ class TextOpsSpec extends SparkSpecBase {
   }
 
   test("boilerplateProfile: planted template shingles flagged, unique content not") {
-    val d = java.nio.file.Files.createTempDirectory("graft_boiler").toString
+    val d = tempDir("graft_boiler").toString
     val footer = "all rights reserved contact the site administrator"
     Seq(
       (1L, s"unique article about mountain weather patterns $footer", "en", "web", 0L),
@@ -173,7 +173,7 @@ class TextOpsSpec extends SparkSpecBase {
   }
 
   test("incrementalDedup: new batch classified exact/near/novel against the corpus") {
-    val d = java.nio.file.Files.createTempDirectory("graft_incdedup").toString
+    val d = tempDir("graft_incdedup").toString
     Seq(
       // historical corpus (source != src0)
       (1L, "the quick brown fox jumps over the lazy dog", "en", "web", 0L),

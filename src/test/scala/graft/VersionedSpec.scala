@@ -12,7 +12,7 @@ class VersionedSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft_ver").toString + "/t"
+    tempDir("graft_ver").toString + "/t"
 
   private def df(ids: Range) = ids.map(i => (i.toLong, s"row-$i")).toDF("id", "s")
 
