@@ -212,8 +212,8 @@ object Bench {
     // spikes that inflate single runs up to 3×; the min over passes is a
     // far more stable steady-state signal than one sample.
     // (Round-11 drift experiment, recorded in SCALING.md: forcing
-    // System.gc() between timed queries — the runMemoryGate hygiene applied
-    // session-wide — was tried against the r9→r10 slice drift and made the
+    // System.gc() between timed queries — the gate-teardown hygiene of the
+    // time, applied session-wide — was tried against the r9→r10 slice drift and made the
     // numbers WORSE (44.1 s vs 40.9 s single-JVM on the q50–q99 slice), so
     // per-query collections stay out of the timed loop.)
     def timedPass(): Seq[(String, Double, Option[String])] =

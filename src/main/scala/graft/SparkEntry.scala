@@ -69,24 +69,17 @@ object SparkEntry {
   GROUP BY 1, 2
 )"""
 
-  /** One partitioned-bars layout per (session, dir): q58 exists to prove
-    * partition-pruned READS, so the dt-partitioned rewrite happens once and
-    * every later call (bench warmup + both timed passes) measures only the
-    * pruned scan. Keyed by the stable `sessionUUID` (not an identity hash that
-    * a later session could reuse) and the path carries both tokens, so
-    * concurrent sessions or different dirs never race on one directory.
+  /** The dt-partitioned bars layout of `dir`, built once per fingerprint of
+    * its events as store entry `bars_by_dt` (see [[Tables.materializedPath]]):
+    * q58 exists to prove partition-pruned READS, so every call after the
+    * first (bench warmup + both timed passes, later sessions and JVMs)
+    * measures only the pruned scan.
     */
-  private val partLayoutCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def partitionedBarsLayout(s: SparkSession, dir: String): String =
-    partLayoutCache.getOrElseUpdate((Tables.sessionUuid(s), dir), {
-      val out = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_part_${Tables.sessionUuid(s)}_${Integer.toHexString(dir.hashCode)}").getAbsolutePath
+    Tables.materializedPath(java.nio.file.Paths.get(dir, "events.parquet"), "bars_by_dt")(tmp =>
       Tables.overwrite(
         MarketView.dailyBars(s, dir).withColumn("dt", col("date")).drop("date"),
-        out, Seq("dt"))
-      out
-    })
+        tmp.toString, Seq("dt"))).toString
 
   /** Shared oracle CTE chain for the portable MinHash pair graph (q49, q74):
     * the raw per-doc algorithm — md5 double-hashing signatures over FOUR

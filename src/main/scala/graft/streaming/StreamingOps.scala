@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.sources.Formats.deleteRecursively
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Streaming flavors of the engine's event operators (SURVEY.md §2.9).
   *
@@ -40,33 +40,32 @@ object StreamingOps {
 
   private val gateRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Run one gate lifecycle with checkpoint-file CHECKSUMS off (optimization
-    * round r19). Spark 4.1 writes a checksum companion for every checkpoint
-    * file (`spark.sql.streaming.checkpoint.fileChecksum.enabled`, default
-    * true) — corruption detection for long-lived checkpoints on remote
-    * storage. A gate's checkpoint is EPHEMERAL scratch: created per run,
-    * read only by the run itself seconds later on a local fs, and deleted in
-    * the same `finally` — the checksum protects nothing and was measured as
-    * the dominant state-commit cost at sf0.1 (q87-shaped gate: state
-    * commitMs 15–25 s summed → 6.5–10 s; stream wall 3.4 → 2.2 s; the
-    * no-data finalization batch 1.3 → 0.7 s). Durable caller-owned
-    * checkpoints ([[parquetSink]], [[nearDupStreamWithGrowingIndex]]) keep
-    * the engine default. The previous session value is restored after the
-    * run, whatever it was.
+  /** Checkpoint-file CHECKSUMS off for one gate run (optimization round
+    * r19). Spark 4.1 writes a checksum companion for every checkpoint file
+    * (`spark.sql.streaming.checkpoint.fileChecksum.enabled`, default true) —
+    * corruption detection for long-lived checkpoints on remote storage. A
+    * gate's checkpoint is EPHEMERAL scratch: created per run, read only by
+    * the run itself seconds later on a local fs, and deleted when it ends —
+    * the checksum protects nothing and was measured as the dominant
+    * state-commit cost at sf0.1 (q87-shaped gate: state commitMs 15–25 s
+    * summed → 6.5–10 s; stream wall 3.4 → 2.2 s; the no-data finalization
+    * batch 1.3 → 0.7 s). Durable caller-owned checkpoints ([[parquetSink]],
+    * [[nearDupStreamWithGrowingIndex]]) keep the engine default. The
+    * session's previous setting is restored after the run: its value, or
+    * unset if it was unset.
     *
     * The flag is SESSION-global (Spark exposes no per-query form), so a
     * concurrent streaming query on the same session would silently inherit
-    * checksums-off and concurrent gates would race the save/restore. The
-    * lifecycles are serialized under a lock (r20, ADVICE r19): today's
-    * callers are serial anyway — the lock turns the latent footgun into a
-    * queue instead of a race if that ever changes. Durable queries started
-    * OUTSIDE a gate lifecycle are unaffected.
+    * checksums-off and concurrent gates would race the save/restore. Gate
+    * runs are therefore serialized under a lock: concurrent callers queue
+    * instead of racing. Durable queries started OUTSIDE a gate run are
+    * unaffected.
     */
   private val ephemeralCkptLock = new Object
   private def withEphemeralCkpt[A](spark: SparkSession)(f: => A): A =
     ephemeralCkptLock.synchronized {
       val k = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-      val prev = spark.conf.getOption(k)
+      val prev = spark.conf.getAll.get(k) // set explicitly, not the default
       spark.conf.set(k, "false")
       try f finally prev match {
         case Some(v) => spark.conf.set(k, v)
@@ -74,48 +73,77 @@ object StreamingOps {
       }
     }
 
-  /** Run one batch-parity gate to completion against a memory sink and tear
-    * down EVERYTHING the run allocated (r8 watch item: repeated same-JVM
-    * gate runs were run-order-sensitive at 100× because each run left
-    * residue behind). Per run:
-    *   - a UNIQUE checkpoint dir, created here and deleted after the drain —
-    *     never Spark's session-scoped temp location, whose cleanup timing is
-    *     the engine's business, not the gate's;
-    *   - the memory-sink table (which pins the full emitted row set — dedup
-    *     key sets, join pair sets, corpus-sized at 100× — in driver memory)
-    *     is dropped eagerly, right after `drain`'s tiny aggregate of it is
-    *     materialized by localCheckpoint;
-    *   - every state-store provider the run loaded is unloaded NOW. Spark
-    *     only unloads providers lazily from the maintenance thread, so a
-    *     rapid gate sequence otherwise stacks each run's full join/session
-    *     state maps on the heap until maintenance catches up — the measured
-    *     19–47 s q119 variance.
+  /** One gate run's handles: the unique query name (also the memory sink's
+    * table name) and the sink output dir `out/` in the run's scratch. */
+  private[graft] final case class Gate(name: String, out: String)
+
+  /** THE streaming gate lifecycle: every batch-parity gate runs through
+    * here. `source` starts under a unique query name with `sink` applied,
+    * is drained by an AvailableNow trigger and always stopped; `result`
+    * then materializes what the caller keeps (localCheckpoint — the sink's
+    * files and table are gone once this returns). Per run, and torn down
+    * whatever happens (r8 watch item: repeated same-JVM gate runs were
+    * run-order-sensitive at 100× because each run left residue behind):
+    *   - one private scratch dir, checkpoint at `ckpt/` and sink output at
+    *     `out/` — never Spark's session-scoped temp location, whose cleanup
+    *     timing is the engine's business, not the gate's — deleted;
+    *   - the memory-sink table, which pins the full emitted row set (dedup
+    *     key sets, join pair sets, corpus-sized at 100×) in driver memory,
+    *     dropped;
+    *   - every state-store provider the run loaded, unloaded NOW. Spark only
+    *     unloads providers lazily from the maintenance thread, so a rapid
+    *     gate sequence otherwise stacks each run's full join/session state
+    *     maps on the heap until maintenance catches up — the measured
+    *     19–47 s q119 variance. The unload is JVM-wide, so it runs inside
+    *     the [[withEphemeralCkpt]] lock, while no other gate is running.
     * The production path is untouched: live queries keep their durable
-    * checkpoint ([[parquetSink]], [[nearDupStreamWithGrowingIndex]]); this
-    * lifecycle is the gate harness', whose checkpoint is worthless once the
-    * result is materialized.
+    * checkpoint ([[parquetSink]], [[nearDupStreamWithGrowingIndex]]).
     */
-  private def runMemoryGate(spark: SparkSession, prefix: String,
-                            agg: DataFrame, mode: OutputMode)
-                           (drain: DataFrame => DataFrame): DataFrame = {
-    val name = s"${prefix}_${gateRuns.incrementAndGet()}"
-    val ckpt = java.nio.file.Files.createTempDirectory(s"graft_ckpt_$name")
-    try withEphemeralCkpt(spark) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      val out = drain(spark.table(name)).localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      out
-    } finally {
-      deleteRecursively(ckpt)
-      org.apache.spark.sql.graft.SqlShim.unloadAllStateStores()
+  private[graft] def runGate[A](spark: SparkSession, name: String, source: DataFrame)
+                               (sink: (DataStreamWriter[Row], Gate) => DataStreamWriter[Row])
+                               (result: Gate => A): A =
+    withEphemeralCkpt(spark) {
+      val run = s"${name}_${gateRuns.incrementAndGet()}"
+      val scratch = java.nio.file.Files.createTempDirectory(s"graft_gate_${run}_")
+      val g = Gate(run, scratch.resolve("out").toString)
+      try {
+        val q = sink(source.writeStream.queryName(run)
+            .option("checkpointLocation", scratch.resolve("ckpt").toString)
+            .trigger(Trigger.AvailableNow()), g)
+          .start()
+        try q.awaitTermination() finally q.stop()
+        result(g)
+      } finally {
+        spark.catalog.dropTempView(run)
+        deleteRecursively(scratch)
+        org.apache.spark.sql.graft.SqlShim.unloadAllStateStores()
+      }
     }
-  }
+
+  /** Memory-sink gate: the drained sink table, reduced by `drain`. */
+  private def memoryGate(spark: SparkSession, name: String, source: DataFrame,
+                         mode: OutputMode)(drain: DataFrame => DataFrame): DataFrame =
+    runGate(spark, name, source)((w, _) => w.format("memory").outputMode(mode))(g =>
+      drain(spark.table(g.name)).localCheckpoint(true))
+
+  /** foreachBatch gate: `body` on every non-empty micro-batch. `body` must
+    * be replay-idempotent — chain steps via
+    * [[graft.sources.Tables.chainStep]], emitted relations via
+    * [[idempotentBatchSink]]. */
+  private def batchGate(spark: SparkSession, name: String, source: DataFrame)
+                       (body: (DataFrame, Long) => Unit): Unit =
+    runGate(spark, name, source)((w, _) =>
+      w.foreachBatch { (b: DataFrame, id: Long) => if (!b.isEmpty) body(b, id) })(_ => ())
+
+  /** Emitting gate (the cleaner gates q220/q230/q239 and q247): each
+    * micro-batch's `emit` lands under `out/` through the replay-idempotent
+    * [[idempotentBatchSink]]; returns the emitted relation, batch stamps
+    * dropped, ordered by `key`. */
+  private def emitGate(spark: SparkSession, name: String, source: DataFrame,
+                       key: String)(emit: DataFrame => DataFrame): DataFrame =
+    runGate(spark, name, source)((w, g) =>
+      w.foreachBatch { (b: DataFrame, id: Long) => idempotentBatchSink(emit(b), id, g.out) })(g =>
+      spark.read.parquet(g.out).drop("_batch_id").orderBy(key).localCheckpoint(true))
 
   /** Batch-parity gate for the weekly tumbling aggregate (correctness-gate
     * entry `q85_stream_weekly`): runs a REAL Structured Streaming query —
@@ -145,7 +173,7 @@ object StreamingOps {
       .agg(
         count(lit(1)).as("n_events"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(30, 6))).as("sum_dec"))
-    runMemoryGate(spark, "stream_weekly_gate", agg, OutputMode.Complete())(_
+    memoryGate(spark, "stream_weekly_gate", agg, OutputMode.Complete())(_
       .select(col("event_type"),
         graft.functions.Fx.dateStr(col("window.start").cast("date")).as("semana"),
         col("n_events"),
@@ -168,7 +196,7 @@ object StreamingOps {
       .agg(
         count(lit(1)).as("n_events"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(30, 6))).as("sum_dec"))
-    runMemoryGate(spark, "stream_sliding_gate", agg, OutputMode.Complete())(_
+    memoryGate(spark, "stream_sliding_gate", agg, OutputMode.Complete())(_
       .select(col("event_type"),
         graft.functions.Fx.dateStr(col("window.start").cast("date")).as("win_start"),
         col("n_events"),
@@ -197,7 +225,7 @@ object StreamingOps {
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(30, 6)))
           .as("sum_dec"))
-    runMemoryGate(spark, "stream_enrich_gate", agg, OutputMode.Complete())(_
+    memoryGate(spark, "stream_enrich_gate", agg, OutputMode.Complete())(_
       .select(col("segment"), col("event_type"), col("n_events"),
         col("sum_dec").cast("double").as("sum_value"))
       .orderBy("segment", "event_type"))
@@ -234,7 +262,7 @@ object StreamingOps {
       .agg(
         count(lit(1)).as("n_events"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(30, 6))).as("sum_dec"))
-    runMemoryGate(spark, "stream_sessions_gate", agg, OutputMode.Append())(_
+    memoryGate(spark, "stream_sessions_gate", agg, OutputMode.Append())(_
       .select(col("user_id"),
         unix_micros(col("session_window.start")).as("session_start_us"),
         col("n_events"),
@@ -272,7 +300,7 @@ object StreamingOps {
           state.update((n, s))
           (uid, n, s)
       }
-    runMemoryGate(spark, "stream_running_gate",
+    memoryGate(spark, "stream_running_gate",
       out.toDF("user_id", "n_events", "sum_dec"), OutputMode.Update())(_
       .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("sum_dec"))).as("r"))
@@ -297,7 +325,7 @@ object StreamingOps {
     val dedup = eventStream(spark, dir)
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
-    runMemoryGate(spark, "stream_dedup_gate", dedup, OutputMode.Append())(_
+    memoryGate(spark, "stream_dedup_gate", dedup, OutputMode.Append())(_
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_users"))
       .orderBy("event_type"))
@@ -350,7 +378,7 @@ object StreamingOps {
         col("p_ts_ns") >= col("click_ts_ns") &&
         col("p_ts_ns") <= col("click_ts_ns") + expr(s"${windowMin}L * 60000000000L"))
       .select(clicks("user_id").as("user_id"), col("click_id"), col("p_id"))
-    runMemoryGate(spark, "stream_join_gate", joined, OutputMode.Append())(_
+    memoryGate(spark, "stream_join_gate", joined, OutputMode.Append())(_
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_pairs"), countDistinct(col("click_id")).as("n_clicks"))
       .orderBy("user_id"))
@@ -421,7 +449,7 @@ object StreamingOps {
     */
   def streamLeftJoinParityStandalone(spark: SparkSession, dir: String,
                                      windowMin: Int = 10): DataFrame =
-    runMemoryGate(spark, "stream_leftjoin_gate",
+    memoryGate(spark, "stream_leftjoin_gate",
       leftJoinStream(spark, dir, windowMin), OutputMode.Append())(_
       .orderBy(col("click_id"), col("p_id")))
 
@@ -483,7 +511,7 @@ object StreamingOps {
     graft.sources.Tables.fingerprintedMv(spark,
       java.nio.file.Paths.get(dir, "events.parquet"),
       s"stream_fulljoin_emit_w$windowMin")(
-      runMemoryGate(spark, "stream_fulljoin_shared",
+      memoryGate(spark, "stream_fulljoin_shared",
         fullJoinStream(spark, dir, windowMin), OutputMode.Append())(identity))
 
   def streamFullJoinParity(spark: SparkSession, dir: String,
@@ -498,7 +526,7 @@ object StreamingOps {
     */
   def streamFullJoinParityStandalone(spark: SparkSession, dir: String,
                                      windowMin: Int = 10): DataFrame =
-    runMemoryGate(spark, "stream_fulljoin_gate",
+    memoryGate(spark, "stream_fulljoin_gate",
       fullJoinStream(spark, dir, windowMin), OutputMode.Append())(_
       .select(col("user_id"), col("click_id"), col("click_us"),
         col("p_id"), col("p_us"))
@@ -506,40 +534,25 @@ object StreamingOps {
 
   /** The outer-join gate at CORPUS scale: identical streaming query, but the
     * emitted set (3.99M rows at 100×) lands in parquet via a distributed
-    * file sink instead of the driver-resident memory sink — the shape a
-    * production attribution pipeline actually runs, and the variant the 100×
-    * sweep times (the memory sink's driver transit was the dominant, noisy
-    * cost at 100×; SCALING.md round-9 row). Same per-run checkpoint +
-    * state-store teardown as the memory gates; returns the tiny emission
-    * census (matched / click-null / purchase-null counts) read back from the
-    * files, which the sweep asserts against the memory-gate totals at gate SF.
+    * file sink under the gate's `out/` instead of the driver-resident memory
+    * sink — the shape a production attribution pipeline actually runs, and
+    * the variant the 100× sweep times (the memory sink's driver transit was
+    * the dominant, noisy cost at 100×; SCALING.md round-9 row). Returns the
+    * tiny emission census (matched / click-null / purchase-null counts) read
+    * back from the files, which the sweep asserts against the memory-gate
+    * totals at gate SF.
     */
   def streamFullJoinParityToParquet(spark: SparkSession, dir: String,
-                                    outPath: String,
-                                    windowMin: Int = 10): DataFrame = {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_fulljoin_pq")
-    try withEphemeralCkpt(spark) {
-      val q = fullJoinStream(spark, dir, windowMin).writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .option("path", outPath)
-        .start()
-      q.awaitTermination()
-      q.stop()
-      spark.read.parquet(outPath)
+                                    windowMin: Int = 10): DataFrame =
+    runGate(spark, "stream_fulljoin_pq", fullJoinStream(spark, dir, windowMin))((w, g) =>
+      w.outputMode(OutputMode.Append()).format("parquet").option("path", g.out))(g =>
+      spark.read.parquet(g.out)
         .agg(
           count(lit(1)).as("n_rows"),
           count(when(col("click_id").isNotNull && col("p_id").isNotNull, 1)).as("n_matched"),
           count(when(col("p_id").isNull, 1)).as("n_click_dangling"),
           count(when(col("click_id").isNull, 1)).as("n_purchase_dangling"))
-        .localCheckpoint(true)
-    } finally {
-      deleteRecursively(ckpt)
-      org.apache.spark.sql.graft.SqlShim.unloadAllStateStores()
-    }
-  }
+        .localCheckpoint(true))
 
   /** Gap-based sessions: built-in session_window with a 30-min gap — the
     * streaming twin of EventOps.sessionize. Emits one row per closed session.
@@ -634,14 +647,14 @@ object StreamingOps {
   /** Batch-parity gate for the event-time-timer emitter (correctness-gate
     * entry `q126_stream_session_timeout`): AvailableNow run over the events
     * file; the oracle states the same µs gaps-and-islands with the strict
-    * ms-grained watermark cut. Same drained-memory-sink lifecycle as every
-    * other gate.
+    * ms-grained watermark cut. Same [[runGate]] lifecycle as every other
+    * gate.
     */
   def sessionTimeoutParity(spark: SparkSession, dir: String,
                            gapMin: Int = 30): DataFrame = {
     val out = sessionTimeoutEmitter(spark, eventStream(spark, dir), gapMin)
       .toDF("user_id", "session_start_us", "n_events", "sum_dec")
-    runMemoryGate(spark, "stream_timeout_gate", out, OutputMode.Append())(_
+    memoryGate(spark, "stream_timeout_gate", out, OutputMode.Append())(_
       .select(col("user_id"), col("session_start_us"), col("n_events"),
         col("sum_dec").cast("double").as("sum_value"))
       .orderBy("user_id", "session_start_us"))
@@ -931,81 +944,20 @@ object StreamingOps {
   private[graft] def spreadBatch(b: DataFrame): DataFrame =
     b.repartition(b.sparkSession.sessionState.conf.numShufflePartitions)
 
-  /** Shared AvailableNow maintenance-gate lifecycle (round-17 — VERDICT r16
-    * item 2: this exact sequence existed in five near-identical copies):
-    * stream the materialized split one file per trigger, apply `body` to
-    * each non-empty micro-batch, then tear down the run's checkpoint and
-    * unload every state-store provider it loaded (the runMemoryGate r8
-    * residue discipline). `body` must be replay-idempotent — chain steps
-    * via [[graft.sources.Tables.chainStep]], emitted relations via
-    * [[idempotentBatchSink]].
-    */
-  private[graft] def runSplitGate(spark: SparkSession, split: String,
-                                  ckptTag: String,
-                                  shape: DataFrame => DataFrame = identity)
-                                 (body: (DataFrame, Long) => Unit): Unit = {
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptTag)
-    try withEphemeralCkpt(spark) {
-      val schema = spark.read.parquet(split).schema
-      val src = shape(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(split))
-      val q = src.writeStream
-        .foreachBatch { (b: DataFrame, id: Long) => if (!b.isEmpty) body(b, id) }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(); q.stop()
-    } finally {
-      deleteRecursively(ckpt)
-      org.apache.spark.sql.graft.SqlShim.unloadAllStateStores()
-    }
-  }
+  /** A [[materializeSplit]] split as a stream, one file per trigger
+    * (`maxFilesPerTrigger=1`): each file is one micro-batch, oldest mtime
+    * first. */
+  private[graft] def splitStream(spark: SparkSession, split: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(split).schema)
+      .option("maxFilesPerTrigger", "1").parquet(split)
 
-  /** Shared streaming-CLEANER gate lifecycle (q220/q230/q239): stream the
-    * documents table, clean each micro-batch against its standing index
-    * via `clean`, land it through the replay-idempotent
-    * [[idempotentBatchSink]], and return the emitted relation (batch
-    * stamps dropped) in gate order. The per-batch payload is a
-    * deterministic per-document function of the batch's input given the
-    * standing MV, so the emitted relation is identical to the batch twin
-    * under any arrival order, micro-batch split, or at-least-once replay.
-    */
-  private[graft] def runCleanerGate(spark: SparkSession, dir: String,
-                                    tag: String)
-                                   (clean: DataFrame => DataFrame): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory(s"graft_${tag}_out")
-    val ckpt = java.nio.file.Files.createTempDirectory(s"graft_ckpt_$tag")
-    try withEphemeralCkpt(spark) {
-      val q = docStream(spark, dir).writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          idempotentBatchSink(clean(batch), id, out.toString)
-        }
-        .start()
-      q.awaitTermination(); q.stop()
-      spark.read.parquet(out.toString).drop("_batch_id")
-        .orderBy("doc_id").localCheckpoint(true)
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(out)
-      org.apache.spark.sql.graft.SqlShim.unloadAllStateStores()
-    }
-  }
-
-  /** One-shot backfill/catch-up run: Trigger.AvailableNow processes every
-    * record the source currently has — in rate-limited micro-batches, unlike
-    * the single giant batch of the legacy Trigger.Once — then terminates.
-    * The batch/stream unification lever: the SAME streaming query definition
-    * (and checkpoint) serves continuous and scheduled-backfill execution.
-    */
   /** Batch-parity gate for the STREAMING CDC APPLY (q155): a real
     * foreachBatch lifecycle that MERGEs each micro-batch into a versioned
     * MVCC table with last-writer-wins semantics
     * ([[graft.sources.Versioned.mergeLww]]) — the lakehouse "streaming
     * MERGE INTO" shape (one per-key argmax + one keyed full-outer join per
     * batch, all executor-parallel; the driver only orchestrates commits).
+    * The table lives in the gate's `out/`.
     *
     * The event stream is split into 4 time-ranged files and consumed with
     * maxFilesPerTrigger=1, so the lifecycle really exercises multiple
@@ -1016,7 +968,6 @@ object StreamingOps {
     * is exactly the window query the DuckDB oracle states.
     */
   def cdcApplyParity(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     import graft.sources.{Tables, Versioned}
     val split = materializeSplit(dir, "events", "cdc_split") { tmp =>
       Tables.events(spark, dir)
@@ -1024,19 +975,17 @@ object StreamingOps {
         .repartitionByRange(4, col("ts_ns"))
         .write.mode("overwrite").parquet(tmp)
     }
-    val table = Files.createTempDirectory("graft_cdc_tbl").toString + "/t"
-    try {
-      runSplitGate(spark, split, "graft_cdc_ckpt",
-        _.withColumn("tombstone", col("event_type") === "error")) { (b, _) =>
-        Versioned.mergeLww(b.sparkSession, table, b, "user_id",
-          Seq("ts_ns", "event_id")): Unit
-      }
-      Versioned.read(spark, table)
+    val src = splitStream(spark, split).withColumn("tombstone", col("event_type") === "error")
+    runGate(spark, "stream_cdc_gate", src)((w, g) =>
+      w.foreachBatch { (b: DataFrame, _: Long) =>
+        if (!b.isEmpty)
+          Versioned.mergeLww(b.sparkSession, g.out, b, "user_id", Seq("ts_ns", "event_id")): Unit
+      })(g =>
+      Versioned.read(spark, g.out)
         .filter(!col("tombstone"))
         .select(col("user_id"), col("ts_ns"), col("event_type"), col("value"))
         .orderBy("user_id")
-        .localCheckpoint(true)
-    } finally deleteRecursively(Paths.get(table).getParent)
+        .localCheckpoint(true))
   }
 
   case class BarRow(symbol: String, date: java.sql.Date, close: Double)
@@ -1098,10 +1047,7 @@ object StreamingOps {
       }
     }
     import spark.implicits._
-    val schema = spark.read.parquet(split).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(split).as[BarRow]
-    val out = src.groupByKey(_.symbol)
+    val out = splitStream(spark, split).as[BarRow].groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         (sym: String, rows: Iterator[BarRow], state: GroupState[EmaState]) =>
           var st = state.getOption.getOrElse(EmaState(Int.MinValue, 0.0))
@@ -1115,7 +1061,7 @@ object StreamingOps {
           state.update(st)
           outs.iterator
       }
-    runMemoryGate(spark, "stream_ema_gate", out.toDF(), OutputMode.Update())(_
+    memoryGate(spark, "stream_ema_gate", out.toDF(), OutputMode.Update())(_
       .select(col("symbol"), col("date"), col("ema"))
       .orderBy("symbol", "date"))
   }
@@ -1190,16 +1136,12 @@ object StreamingOps {
   }
 
   def lateDropParity(spark: SparkSession, dir: String): DataFrame = {
-    val split = lateSplitDir(spark, dir)
-    val schema = spark.read.parquet(split).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(split)
-    val agg = src.withWatermark("ts", "48 hours")
+    val agg = splitStream(spark, lateSplitDir(spark, dir)).withWatermark("ts", "48 hours")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(30, 6)))
           .as("sum_dec"))
-    runMemoryGate(spark, "stream_late_gate", agg, OutputMode.Append())(_
+    memoryGate(spark, "stream_late_gate", agg, OutputMode.Append())(_
       .select(col("event_type"),
         graft.functions.Fx.dateStr(col("window.start").cast("date")).as("day"),
         col("n_events"),
@@ -1207,46 +1149,35 @@ object StreamingOps {
       .orderBy("event_type", "day"))
   }
 
-  def runAvailableNow(agg: DataFrame, queryName: String,
-                      mode: OutputMode = OutputMode.Update()): StreamingQuery =
-    agg.writeStream.format("memory").queryName(queryName)
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
   /** File-source entry point over the same parquet schema as the batch path:
     * the engine's batch queries re-point to a stream by swapping `read` for
     * `readStream` — the transformations are shared.
-    *
-    * LAYOUT-ADAPTIVE source path (round 12's 100×-sweep finding): when
-    * `$dir/events.parquet` is a DIRECTORY (the Spark-written layout, e.g.
-    * the 100× replica corpus) it is streamed directly; when it is a single
-    * FILE (the driver-written testdata layout) the parent dir is streamed
-    * under `pathGlobFilter=events.parquet`. The old glob-only form silently
-    * matched NOTHING on directory layouts (the filter applies to leaf FILE
-    * names, and a directory's parts are `part-*`), turning every
-    * eventStream gate into an EMPTY stream instead of an error; the
-    * file-path-only form fails on single files (`basePath must be a
-    * directory`). Both layouts are real, so the entry point handles both.
     */
   def eventStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val p = s"$dir/events.parquet"
-    val reader = spark.readStream.schema(spark.read.parquet(p).schema)
-    graft.sources.Tables.shapeEvents(
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p)))
-        reader.parquet(p)
-      else reader.option("pathGlobFilter", "events.parquet").parquet(dir))
+    graft.sources.Tables.shapeEvents(tableStream(spark, dir, "events"))
   }
 
-  /** Documents-table stream source — [[eventStream]]'s layout-adaptive
-    * discipline over `documents.parquet` (no timestamp shaping needed). */
-  def docStream(spark: SparkSession, dir: String): DataFrame = {
-    val p = s"$dir/documents.parquet"
+  /** Documents-table stream source (no timestamp shaping needed). */
+  def docStream(spark: SparkSession, dir: String): DataFrame =
+    tableStream(spark, dir, "documents")
+
+  /** LAYOUT-ADAPTIVE stream of `dir/<table>.parquet` (round 12's
+    * 100×-sweep finding): when it is a DIRECTORY (the Spark-written layout,
+    * e.g. the 100× replica corpus) it is streamed directly; when it is a
+    * single FILE (the generated testdata layout) the parent dir is
+    * streamed under `pathGlobFilter=<table>.parquet`. The glob-only form
+    * silently matches NOTHING on directory layouts (the filter applies to
+    * leaf FILE names, and a directory's parts are `part-*`), turning every
+    * gate into an EMPTY stream instead of an error; the file-path-only form
+    * fails on single files (`basePath must be a directory`). Both layouts
+    * are real, so the source handles both.
+    */
+  private def tableStream(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val p = s"$dir/$table.parquet"
     val reader = spark.readStream.schema(spark.read.parquet(p).schema)
-    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p)))
-      reader.parquet(p)
-    else reader.option("pathGlobFilter", "documents.parquet").parquet(dir)
+    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p))) reader.parquet(p)
+    else reader.option("pathGlobFilter", s"$table.parquet").parquet(dir)
   }
 
   /** STREAMING per-domain quota (q219) — the incremental twin of the batch
@@ -1328,7 +1259,7 @@ object StreamingOps {
     // broadcast threshold the planner degrades to a shuffle join instead
     // of OOMing the executors.
     val dup = TextOps.dupShinglesMV(spark, dir)
-    runCleanerGate(spark, dir, "spancut_stream")(
+    emitGate(spark, "spancut_stream", docStream(spark, dir), "doc_id")(
       TextOps.spanCutCleanAgainst(_, dup))
   }
 
@@ -1355,7 +1286,7 @@ object StreamingOps {
                            benchSource: String = "src0"): DataFrame = {
     import graft.operators.TextOps
     val cut = TextOps.benchShinglesMV(spark, dir, benchSource)
-    runCleanerGate(spark, dir, "decontam_stream")(batch =>
+    emitGate(spark, "decontam_stream", docStream(spark, dir), "doc_id")(batch =>
       TextOps.spanCutCleanAgainst(
         batch.filter(col("source") =!= benchSource), cut))
   }
@@ -1386,7 +1317,7 @@ object StreamingOps {
       : DataFrame = {
     import graft.operators.TextOps
     val cut = TextOps.multiBenchShinglesMV(spark, dir, benchSources)
-    runCleanerGate(spark, dir, "mbdecontam_stream")(batch =>
+    emitGate(spark, "mbdecontam_stream", docStream(spark, dir), "doc_id")(batch =>
       TextOps.multiBenchDecontamAgainst(
         batch.filter(!col("source").isin(benchSources: _*)), cut))
   }
@@ -1460,7 +1391,7 @@ object StreamingOps {
     }
     // reset any prior run's refresh chain
     Tables.resetChain(spark, srcPath, outName)
-    runSplitGate(spark, split, "graft_symmerge_ckpt") { (b, batchId) =>
+    batchGate(spark, "symmerge_stream", splitStream(spark, split)) { (b, batchId) =>
       applySymMergeBatch(b.sparkSession, srcPath, baseName, outName,
         batchId, b)
     }
@@ -1550,7 +1481,7 @@ object StreamingOps {
     // state: resolve (and first-touch build) ONCE before the stream, not
     // per micro-batch
     val inputs = Similarity.int8ChainInputs(spark, dir)
-    runSplitGate(spark, split, "graft_int8ivf_ckpt") { (b, batchId) =>
+    batchGate(spark, "int8ivf_stream", splitStream(spark, split)) { (b, batchId) =>
       Similarity.applyInt8IvfBatch(b.sparkSession, dir, chain, batchId,
         b.select(col("vec_id"),
           col("embedding").cast("array<double>").as("e")), inputs)
@@ -1601,7 +1532,7 @@ object StreamingOps {
     // centroid MV + standing dedup state are corpus-level, batch-invariant
     // inputs: resolve (and first-touch build) ONCE before the stream
     val inputs = Similarity.semDedupChainInputs(spark, dir)
-    runSplitGate(spark, split, "graft_semdedup_ckpt") { (b, batchId) =>
+    batchGate(spark, "semdedup_stream", splitStream(spark, split)) { (b, batchId) =>
       Similarity.applySemDedupBatch(b.sparkSession, dir, chain, batchId,
         b.select(col("vec_id"),
           col("embedding").cast("array<double>").as("e")), inputs)
@@ -1666,7 +1597,7 @@ object StreamingOps {
     // books MV + standing code table are corpus-level, batch-invariant
     // inputs: resolve (and first-touch build) ONCE before the stream
     val inputs = Similarity.pqChainInputs(spark, dir)
-    runSplitGate(spark, split, "graft_pqchain_ckpt") { (b, batchId) =>
+    batchGate(spark, "pqchain_stream", splitStream(spark, split)) { (b, batchId) =>
       Similarity.applyPqBatch(b.sparkSession, dir, chain, batchId,
         b.select(col("vec_id"),
           col("embedding").cast("array<double>").as("e")), inputs)
@@ -1716,22 +1647,10 @@ object StreamingOps {
     // corpus-level inputs, resolved once: the benchmark probe relation and
     // the source tags (both broadcast-sized at any corpus scale)
     val inputs = Similarity.semDecontamInputs(spark, dir, benchSource)
-    val out = java.nio.file.Files.createTempDirectory("graft_semdecontam_out")
-    try {
-      runSplitGate(spark, split, "graft_semdecontam_ckpt") { (b, id) =>
-        idempotentBatchSink(
-          Similarity.semanticDecontamBatch(
-            spreadBatch(b.select(col("vec_id"),
-              col("embedding").cast("array<double>").as("e"))),
-            inputs),
-          id, out.toString)
-      }
-      spark.read.parquet(out.toString).drop("_batch_id")
-        .orderBy("vec_id").localCheckpoint(true)
-    } finally {
-      deleteRecursively(out)
-      org.apache.spark.sql.graft.SqlShim.unloadAllStateStores()
-    }
+    emitGate(spark, "semdecontam_stream", splitStream(spark, split), "vec_id")(b =>
+      Similarity.semanticDecontamBatch(
+        spreadBatch(b.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))),
+        inputs))
   }
 
   /** STREAMING MIXTURE-BUDGET ADMISSION (q227) — the batch q225 selection
@@ -1825,7 +1744,7 @@ object StreamingOps {
       .as[(String, Long, Long, Double)]
     val out = mixtureBudgetStream(ds, budgets)
     val budgetDf = budgets.toSeq.toDF("source", "source_budget")
-    runMemoryGate(spark, "stream_mixture_budget",
+    memoryGate(spark, "stream_mixture_budget",
       out.toDF("source", "n_seen", "kept"), OutputMode.Update())(_
       .groupBy("source").agg(max(struct(col("n_seen"), col("kept"))).as("r"))
       .select(col("source"), explode(col("r.kept")).as("k"))
@@ -1847,7 +1766,7 @@ object StreamingOps {
           .cast("long").as("hv"))
       .as[(String, Long, Long)]
     val out = domainQuotaStream(ds, cap)
-    runMemoryGate(spark, "stream_domain_quota",
+    memoryGate(spark, "stream_domain_quota",
       out.toDF("source", "n_seen", "kept"), OutputMode.Update())(_
       .groupBy("source").agg(max(struct(col("n_seen"), col("kept"))).as("r"))
       .select(col("source"), posexplode(col("r.kept")).as(Seq("pos", "doc_id")))

@@ -19,9 +19,8 @@ import org.apache.spark.sql.streaming.Trigger
   * batch with the SAME batchId and the SAME recorded file offsets, and the
   * guard absorbs the duplicate landing.
   *
-  * One spec per guard family, as the verdict asked: a [[StreamingOps
-  * .runCleanerGate]] user (q220's span-cut cleaner body via
-  * [[StreamingOps.idempotentBatchSink]]) and a chain gate (q244's
+  * One spec per guard family: a cleaner-gate body (q220's span-cut
+  * cleaner via [[StreamingOps.idempotentBatchSink]]) and a chain gate (q244's
   * [[graft.operators.Similarity.applySemDedupBatch]] via
   * [[graft.sources.Tables.chainStep]]).
   */
@@ -41,9 +40,7 @@ class CrashReplaySpec extends SparkSpecBase {
                         crashAfter: Option[Long])
                        (body: (DataFrame, Long) => Unit): Boolean = {
     var injected = false
-    val schema = spark.read.parquet(split).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(split)
+    val q = StreamingOps.splitStream(spark, split)
       .writeStream
       .foreachBatch { (b: DataFrame, id: Long) =>
         if (!b.isEmpty) {

@@ -257,6 +257,31 @@ class FingerprintedMvSpec extends SparkSpecBase {
     assert(!Files.exists(dirA), "an entry unresolved past grace is swept")
   }
 
+  test("q58: two sessions share one bars_by_dt store entry and leave no per-session tmpdir layout") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def entries(dir: Path, keep: String => Boolean): Set[String] =
+      if (!Files.isDirectory(dir)) Set.empty
+      else {
+        val l = Files.list(dir)
+        try l.iterator().asScala.map(_.getFileName.toString).filter(keep).toSet
+        finally l.close()
+      }
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def perSession() = entries(tmp, _.startsWith("graft_part_"))
+    // other corpora's entries may be stored too: count what the runs add
+    def stored() = entries(Tables.mvRoot(), _.contains("bars_by_dt_"))
+    val (partsBefore, storedBefore) = (perSession(), stored())
+    val rows = Seq(spark.newSession(), spark.newSession()).map(s =>
+      SparkEntry.queries("q58_partition_pruned_week")(s, sf).collect().toSeq)
+    assert(rows.head.nonEmpty && rows(0) == rows(1), "the two sessions disagree")
+    assert(perSession() == partsBefore, s"q58 left ${perSession() -- partsBefore} in $tmp")
+    val entry = s"bars_by_dt_${Tables.mvFingerprint(Paths.get(sf, "events.parquet"))}"
+    assert(stored().contains(entry), s"$entry is not stored")
+    assert((stored() -- storedBefore).subsetOf(Set(entry)),
+      s"q58 stored more than $entry: ${stored() -- storedBefore}")
+  }
+
   test("copyRecursively keeps file mtimes and copies the marker") {
     import java.nio.file.Files
     import java.nio.file.attribute.FileTime

@@ -82,6 +82,67 @@ class StreamingOpsSpec extends SparkSpecBase {
     assert(streamed == batch, s"stream dedup/batch distinct divergence:\n$streamed\nvs\n$batch")
   }
 
+  /** What a gate run named `name` left behind: memory-sink views and
+    * scratch dirs (`graft_gate_<name>_<n>_*` under java.io.tmpdir). */
+  private def gateLeftovers(name: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val views = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith(s"${name}_")).map(_.name).toSeq
+    val l = java.nio.file.Files.list(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+    val dirs = try l.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith(s"graft_gate_${name}_")).toList
+      finally l.close()
+    views ++ dirs
+  }
+
+  test("runGate: a failing query or a throwing result leaves no sink view and no scratch dir, and restores the checksum conf") {
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    val k = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    def setting = spark.conf.getAll.get(k) // explicit value, None when unset
+    val original = setting
+    val events = StreamingOps.eventStream(spark, sf)
+    def memoryGate(name: String, src: org.apache.spark.sql.DataFrame)
+                  (result: StreamingOps.Gate => Long): Long =
+      StreamingOps.runGate(spark, name, src)((w, _) => w.format("memory"))(result)
+    try for (prior <- Seq(Some("true"), None)) {
+      prior.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+      // the query itself dies in its first micro-batch
+      val failing = events.select(raise_error(lit("injected query failure")).as("x"))
+      val e = intercept[StreamingQueryException](
+        memoryGate("gate_failing_query", failing)(g => spark.table(g.name).count()))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("injected query failure")), e)
+      assert(gateLeftovers("gate_failing_query").isEmpty,
+        s"failed query left ${gateLeftovers("gate_failing_query")}")
+      assert(setting == prior)
+      // the query drains, then `result` throws while the sink is live
+      intercept[IllegalStateException](
+        memoryGate("gate_throwing_result", events.select("event_id")) { g =>
+          assert(spark.table(g.name).count() > 0, "the drained sink is readable in result")
+          assert(gateLeftovers("gate_throwing_result").size == 2, "view and scratch exist mid-run")
+          throw new IllegalStateException("injected result failure")
+        })
+      assert(gateLeftovers("gate_throwing_result").isEmpty,
+        s"throwing result left ${gateLeftovers("gate_throwing_result")}")
+      assert(setting == prior)
+    } finally original.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  test("two gates run at once on the shared session return their sequential rows and leave no scratch") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    def weekly() = StreamingOps.weeklyTumblingParity(spark, sf).collect().toSeq
+    def dedup() = StreamingOps.dedupParity(spark, sf).collect().toSeq
+    val (w0, d0) = (weekly(), dedup())
+    assert(w0.nonEmpty && d0.nonEmpty)
+    val (w1, d1) = Await.result(Future(weekly()).zip(Future(dedup())), 10.minutes)
+    assert(w1 == w0, s"concurrent weekly gate diverged:\n$w1\nvs\n$w0")
+    assert(d1 == d0, s"concurrent dedup gate diverged:\n$d1\nvs\n$d0")
+    val left = gateLeftovers("stream_weekly_gate") ++ gateLeftovers("stream_dedup_gate")
+    assert(left.isEmpty, s"concurrent gates left $left")
+  }
+
   test("streamJoinParity: AvailableNow stream-stream interval join emits exactly the batch pair set") {
     val streamed = StreamingOps.streamJoinParity(spark, sf)
       .as[(Long, Long, Long)].collect().toSeq
@@ -189,8 +250,7 @@ class StreamingOpsSpec extends SparkSpecBase {
   }
 
   test("streamFullJoinParityToParquet: distributed-sink census equals the memory gate's emitted set") {
-    val outDir = tempDir("graft_fulljoin_pq").toString + "/out"
-    val census = StreamingOps.streamFullJoinParityToParquet(spark, sf, outDir)
+    val census = StreamingOps.streamFullJoinParityToParquet(spark, sf)
       .as[(Long, Long, Long, Long)].head()
     val mem = StreamingOps.streamFullJoinParity(spark, sf).cache()
     val memCensus = (
@@ -729,23 +789,6 @@ class StreamingOpsSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  test("AvailableNow trigger drains the file source, then terminates itself") {
-    val stream = StreamingOps.eventStream(spark, sf)
-    val q = StreamingOps.runAvailableNow(
-      StreamingOps.weeklyTumbling(stream), "avnow_out")
-    try {
-      assert(q.awaitTermination(120000), "AvailableNow query did not self-terminate")
-      assert(!q.isActive)
-      // drained everything the source had: weekly totals match the batch twin
-      val streamed = spark.table("avnow_out")
-        .groupBy("semana", "event_type").agg(max("n_events").as("n_events"))
-        .agg(sum("n_events")).head().getLong(0)
-      val batch = graft.operators.EventOps.weeklyTumbling(spark, sf)
-        .agg(sum("n_events")).head().getLong(0)
-      assert(streamed == batch, s"drained $streamed events, batch says $batch")
-    } finally q.stop()
-  }
-
   test("lenient CSV ingest quarantines malformed rows instead of failing") {
     val dir = tempDir("graft_csv")
     java.nio.file.Files.writeString(dir.resolve("q.csv"),
@@ -823,10 +866,7 @@ class StreamingOpsSpec extends SparkSpecBase {
     val lateGroups = spark.read.parquet(s"$split/02_late.parquet")
       .select(col("ts").cast("date"), col("event_type")).distinct().count()
     assert(lateGroups > 0)
-    val schema = spark.read.parquet(split).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(split)
-    val agg = src.withWatermark("ts", "48 hours")
+    val agg = StreamingOps.splitStream(spark, split).withWatermark("ts", "48 hours")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
     val ckpt = tempDir("graft_late_spec")

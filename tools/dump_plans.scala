@@ -57,7 +57,7 @@ val picks = Seq(
   ("q218_psl_domain_quota", "full-PSL quota: staged url→labels projection, codegen'd when-chain matcher, NULL-drop FENCED above the aggregate (PushdownBarrier — see the 40s scan-inlining pathology), q213 k-heap"),
   ("q219_stream_domain_quota", "streaming domain quota: mapGroupsWithState bounded heap (cap ids + monotone counter per domain), latest-emission selection, replayed as a batch relation here"),
   ("q242_semantic_dedup_durable", "durable SemDeDup census: ONE exchange-free hash aggregate over the latest chain publish's bucketed scan - the pair work lives in the chain steps (standing x broadcast-batch cell joins, delta-sized)"),
-  ("q244_semantic_dedup_stream", "streaming SemDeDup census: q242's exchange-free aggregate over the publish the AvailableNow lifecycle grew (split -> runSplitGate -> chainLatest) - the pair work lives in the per-batch chain steps, the gate adds no plan of its own"),
+  ("q244_semantic_dedup_stream", "streaming SemDeDup census: q242's exchange-free aggregate over the publish the AvailableNow lifecycle grew (split -> batchGate -> chainLatest) - the pair work lives in the per-batch chain steps, the gate adds no plan of its own"),
   ("q245_pq_durable", "durable PQ probe: broadcast ADC lookup join over the LATEST chain publish's code table (m codes/vector - no re-encode, no delta leg), deterministic m-term fold, k-heap coarse cut, survivor-sized float rescore joins"),
   ("q248_pq_stream", "stream-maintained PQ chain probe: q245's broadcast ADC plan against the publish the AvailableNow lifecycle grew - per-batch work is m broadcast-books encodes (batch is the probe side, no single-partition hazard), the gate adds no plan of its own"),
   ("q246_semantic_decontam", "semantic decontam: benchmark-sized probe relation BROADCAST into the cell equi-join against the broadcast-assigned corpus - pair space |bench|*nProbe*|cell|, never |bench|*|corpus|; one hash aggregate to the flagged audit set"),
