@@ -94,24 +94,35 @@ object Analytics {
       .orderBy("data_id")
 
   /** P4/P5/O3: the data-quality gate (reference `dags/financial_pipeline.py:126-136`)
-    * — row count, critical-null count, and key uniqueness in one pass.
+    * — row count, critical-null count, and key uniqueness in one pass:
+    * (total_rows, null_criticals, passed).
     */
-  def qualityGate(bars: DataFrame): DataFrame = qualityGate(bars, Nil)
+  def qualityGate(bars: DataFrame): DataFrame = {
+    val gate = gateAggregates()
+    withDupKey(bars).agg(gate.head, gate.tail: _*)
+  }
 
-  /** The gate with row-level `checks` evaluated in the same pass: after
-    * (total_rows, null_criticals, passed) comes one violation count per
-    * check, named after it.
+  /** `bars` with the gate's key flag `dup_key`: the row repeats the
+    * (symbol, date) of the row before it in the fact's LAG order, so a key
+    * that appears k times flags k − 1 rows. Over the same window as
+    * `MarketView.withPctChange`, the two share one shuffle and one sort.
     */
-  def qualityGate(bars: DataFrame, checks: Seq[(String, Column)]): DataFrame = {
-    val gate = Seq(
+  private[graft] def withDupKey(bars: DataFrame): DataFrame =
+    bars.withColumn("dup_key", lag(col("date"), 1).over(MarketView.tickerOrder) === col("date"))
+
+  /** The gate's aggregates over rows that carry `dup_key`: total_rows,
+    * null_criticals (violations of `Quality.criticalNotNull`), passed (1
+    * when no critical is null and no key repeats), then one violation count
+    * per row-level check, named after it.
+    */
+  private[graft] def gateAggregates(checks: (String, Column)*): Seq[Column] = {
+    val nullCriticals = Quality.violations(Quality.criticalNotNull)
+    Seq(
       count(lit(1)).as("total_rows"),
-      Quality.violations(Quality.criticalNotNull).as("null_criticals"),
-      countDistinct(concat_ws("|", col("symbol"), dateStr(col("date")))).as("n_keys"))
-    val violations = checks.map { case (name, pred) => Quality.violations(pred).as(name) }
-    bars.agg(gate.head, gate.tail ++ violations: _*)
-      .select(Seq(col("total_rows"), col("null_criticals"),
-        when(col("null_criticals") === 0 && col("n_keys") === col("total_rows"), 1L)
-          .otherwise(0L).as("passed")) ++ checks.map { case (name, _) => col(name) }: _*)
+      nullCriticals.as("null_criticals"),
+      when(nullCriticals === 0 && count(when(col("dup_key"), 1)) === 0, 1L)
+        .otherwise(0L).as("passed")) ++
+      checks.map { case (name, pred) => Quality.violations(pred).as(name) }
   }
 
   /** A5/F5/F7: README's rounded weekly volatility variant (`README.md:64-71`). */

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
 
@@ -55,14 +55,16 @@ object MarketView {
       )
   }
 
+  /** The fact's LAG order: each ticker's bars by date. */
+  private[graft] def tickerOrder: WindowSpec = Window.partitionBy("symbol").orderBy("date")
+
   /** W1/W2: previous close + daily %-change per ticker
     * (reference `dags/financial_pipeline.py:192-193`):
     * `(close - LAG(close)) / NULLIF(LAG(close), 0) * 100`.
     * First row per ticker and prev-close = 0 both yield NULL.
     */
   def withPctChange(bars: DataFrame): DataFrame = {
-    val w = Window.partitionBy("symbol").orderBy("date")
-    val prev = lag(col("close"), 1).over(w)
+    val prev = lag(col("close"), 1).over(tickerOrder)
     bars
       .withColumn("prev_close", prev)
       .withColumn("variacao_diaria",

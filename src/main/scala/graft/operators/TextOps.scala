@@ -624,10 +624,10 @@ object TextOps {
           .join(nbMin.select(col("src").as("id"), col("nl")), Seq("id"), "left")
           .join(parent, Seq("label"), "left")
           .select(col("id"), nl2.as("label"), (nl2 < col("label")).as("ch")),
-        count(when(col("ch"), 1)))
+        count(when(col("ch"), 1)).as("shrank"))
       // cut lineage: each round re-reads the previous round, not the chain
       labels = next.localCheckpoint().select(col("id"), col("label"))
-      changed = shrank()
+      changed = shrank().getLong(0)
     }
     edges.unpersist()
     labels

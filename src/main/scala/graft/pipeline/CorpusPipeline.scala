@@ -103,6 +103,6 @@ object CorpusPipeline {
         graft.functions.Fx.rd(avg(col("quality_score")), 6).as("avg_quality"))
       .orderBy("split", "lang")
 
-    CorpusResult(nRaw(), nQuality, nExact(), nFinal(), profile)
+    CorpusResult(nRaw().getLong(0), nQuality, nExact().getLong(0), nFinal().getLong(0), profile)
   }
 }

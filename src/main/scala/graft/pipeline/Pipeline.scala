@@ -4,8 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import graft.operators.{Analytics, MarketView, Quality, Stars}
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlShim
 
 /** The reference's 9-task Airflow DAG as one driver-side runner
   * (reference `dags/financial_pipeline.py:227`, task chain
@@ -20,14 +21,17 @@ import org.apache.spark.sql.functions._
   * `partitionBy(ano)` so time-ranged reads prune partitions — the 100 TB
   * layout lever the reference's Postgres heap tables don't have.
   *
-  * Each task reads its input once: one aggregation over staging serves the
-  * quality gate and the expectation suite; the dimensions are insert-only
-  * (`INSERT … ON CONFLICT DO NOTHING`): a run appends the rows whose key is
-  * absent and writes nothing when none is; and the report reads the
-  * `volatility_weekly` view the run has just refreshed, as the reference's
-  * `AVG(vol) FROM volatility_weekly` does. Every table the run writes and
-  * reads again is read with the schema it was written with, and the fact and
-  * view row counts are observed by their writes, not counted again.
+  * Each task reads its input once. The fact's LAG window runs once, and its
+  * rows are pinned by a `localCheckpoint` before anything is written; the
+  * pin observes the quality gate and the expectation suite (row count, null
+  * criticals, repeated (symbol, date) keys as a LAG over the same window,
+  * OHLC bounds), and the fact write, the weekly view and the fact row count
+  * all read it. The dimensions are insert-only (`INSERT … ON CONFLICT DO
+  * NOTHING`): a run appends the rows whose key is absent and writes nothing
+  * when none is. The report reads the `volatility_weekly` view the run has
+  * just refreshed, as the reference's `AVG(vol) FROM volatility_weekly`
+  * does; the view's row count is observed by its write. The pin is
+  * released before `run` returns, whether the gate passed or not.
   */
 final case class PipelineResult(
     stagingRows: Long, factRows: Long, weeklyRows: Long, report: String)
@@ -45,42 +49,57 @@ object Pipeline {
     val stagingDf = Tables.overwriteAndRead(
       Tables.readStagingCsv(spark, csvPath), s"$warehouse/staging")
 
-    // 4. run_data_quality_checks: SQLCheckOperator twin and the expectation
-    // suite in one aggregation — fail-fast on its one row
-    val gate = Analytics.qualityGate(stagingDf, Seq("ohlc_bounds" -> Quality.ohlcBounds)).head()
-    val stagingRows = gate.getLong(0)
-    require(gate.getLong(2) == 1L,
-      s"quality gate failed: rows=$stagingRows null_criticals=${gate.get(1)}")
-    expectedRows.foreach(n => require(stagingRows == n,
-      s"row-count gate failed: expected $n, got $stagingRows"))
-    // null_criticals counts the violations of critical_not_null
-    Quality.enforce(Seq(
-      Quality.result("critical_not_null", gate.getLong(1)),
-      Quality.result("ohlc_bounds", gate.getLong(3))))
+    // 4. run_data_quality_checks, on the fact's LAG pass: the window runs
+    // once, pinned before anything is written, and the gate (row count,
+    // null criticals, repeated keys, OHLC bounds) is observed by the pin
+    val (fact, gateRow) = pinnedFact(stagingDf)
+    try {
+      val gate = gateRow()
+      val rows = gate.getLong(0)
+      require(gate.getLong(2) == 1L,
+        s"quality gate failed: rows=$rows null_criticals=${gate.get(1)}")
+      expectedRows.foreach(n => require(rows == n,
+        s"row-count gate failed: expected $n, got $rows"))
+      // null_criticals counts the violations of critical_not_null
+      Quality.enforce(Seq(
+        Quality.result("critical_not_null", gate.getLong(1)),
+        Quality.result("ohlc_bounds", gate.getLong(3))))
 
-    // 5. create_dim_tables: distinct projections, insert-if-absent
-    upsertDim(spark, s"$warehouse/dim_instrumento", Analytics.dimInstrument(stagingDf), "ticker")
-    upsertDim(spark, s"$warehouse/dim_tempo", Analytics.dimTempo(stagingDf), "data_id")
+      // 5. create_dim_tables: distinct projections, insert-if-absent
+      upsertDim(spark, s"$warehouse/dim_instrumento", Analytics.dimInstrument(stagingDf), "ticker")
+      upsertDim(spark, s"$warehouse/dim_tempo", Analytics.dimTempo(stagingDf), "data_id")
 
-    // 6. load_fact_table: LAG pct-change fact, partitioned by year; its row
-    // count is observed by the write
-    val (fact, factRows) = Tables.observedCount(
-      MarketView.withPctChange(stagingDf).withColumn("ano", year(col("date"))))
-    val factDf = Tables.overwriteAndRead(fact, s"$warehouse/fact_movimentacao_diaria", Seq("ano"))
+      // 6. load_fact_table: the pinned LAG pct-change fact, partitioned by year
+      Tables.overwrite(fact, s"$warehouse/fact_movimentacao_diaria", Seq("ano"))
 
-    // 7. calculate_volatility_view: materialized view = recompute + overwrite
-    val (view, weeklyRows) = Tables.observedCount(Analytics.weeklyVolatility(factDf))
-    val weekly = Tables.overwriteAndRead(view, s"$warehouse/volatility_weekly")
+      // 7. calculate_volatility_view: materialized view = recompute + overwrite
+      val (view, weeklyRows) = Tables.observedCount(Analytics.weeklyVolatility(fact))
+      val weekly = Tables.overwriteAndRead(view, s"$warehouse/volatility_weekly")
 
-    // 8. report_top_volatility: top-1 over the view (XCom analog)
-    val top = Analytics.avgVolatilityFromWeekly(weekly).head()
-    val report =
-      f"Ticker mais volátil: ${top.getString(0)} (volatilidade média semanal ${top.getDouble(1)}%.4f%%)"
+      // 8. report_top_volatility: top-1 over the view (XCom analog)
+      val top = Analytics.avgVolatilityFromWeekly(weekly).head()
+      val report =
+        f"Ticker mais volátil: ${top.getString(0)} (volatilidade média semanal ${top.getDouble(1)}%.4f%%)"
 
-    // 9. log_execution_summary
-    org.apache.log4j.Logger.getLogger(getClass).info(report)
+      // 9. log_execution_summary
+      org.apache.log4j.Logger.getLogger(getClass).info(report)
 
-    PipelineResult(stagingRows, factRows(), weeklyRows(), report)
+      PipelineResult(rows, rows, weeklyRows().getLong(0), report)
+    } finally SqlShim.releaseLocalCheckpoint(fact)
+  }
+
+  /** The fact rows of `staging` (its columns, `prev_close`,
+    * `variacao_diaria`, then `ano`), pinned by an eager `localCheckpoint`,
+    * and the reader of the quality gate that pin observed: (total_rows,
+    * null_criticals, passed, ohlc_bounds). The LAG window and the gate's key
+    * check share one shuffle on `symbol`. The caller frees the pin with
+    * `SqlShim.releaseLocalCheckpoint`.
+    */
+  private[graft] def pinnedFact(staging: DataFrame): (DataFrame, () => Row) = {
+    val (windowed, gate) = Tables.observedCount(
+      Analytics.withDupKey(MarketView.withPctChange(staging).withColumn("ano", year(col("date")))),
+      Analytics.gateAggregates("ohlc_bounds" -> Quality.ohlcBounds): _*)
+    (windowed.drop("dup_key").localCheckpoint(), gate)
   }
 
   /** A14 upsert against the persisted dimension: the first run writes

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.sources.Formats.deleteRecursively
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -239,29 +239,39 @@ object Tables {
     df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
-  /** `df` with a row count observed on it, and the reader of that count. The
-    * count is taken by the action that first runs `df` (a cache
-    * materialization, a checkpoint, a write), so it costs no job of its own;
-    * that action must run all of `df`. `agg` observes another non-null long
-    * aggregate of the rows instead. Spark hands observed metrics to the
-    * listener bus after the action returns, so the reader drains the bus when
-    * the count has not arrived yet, and then throws if no action has run `df`
-    * (where `Observation.get` would block for ever). When the action's plan
-    * had the observed node pruned away (adaptive execution drops the
-    * subtrees it finds empty at run time), the observation arrives without
-    * a value, and the reader computes `agg` over `df` itself.
+  /** `df` with `aggs` observed on it, and the reader of their one row (with
+    * no `aggs`, of the row count). The row is taken by the action that first
+    * runs `df` (a cache materialization, a checkpoint, a write), so it costs
+    * no job of its own; that action must run all of `df`. Spark hands
+    * observed metrics to the listener bus after the action returns, so the
+    * reader drains the bus when the row has not arrived yet, and then throws
+    * if no action has run `df` (where `Observation.get` would block for
+    * ever). When the action's plan had the observed node pruned away
+    * (adaptive execution drops the subtrees it finds empty at run time), the
+    * observation arrives without a value, and the reader computes `aggs`
+    * over `df` itself, an extra job that it logs as a WARN naming the
+    * observation and its aggregates. The drain is logged at INFO: Spark
+    * completes an observation only from a listener on that bus, so a reader
+    * that runs right after its action, as the pipeline's gate does after
+    * its checkpoint, drains on every healthy run.
     */
-  private[graft] def observedCount(df: DataFrame, agg: Column = count(lit(1)))
-      : (DataFrame, () => Long) = {
+  private[graft] def observedCount(df: DataFrame, aggs: Column*): (DataFrame, () => Row) = {
+    val observed = if (aggs.isEmpty) Seq(count(lit(1)).as("n")) else aggs
     val obs = Observation()
-    (df.observe(obs, agg.as("n")), () => {
-      if (!obs.future.isCompleted)
+    lazy val what = s"observedCount: observation ${obs.name} (${observed.mkString(", ")})"
+    val log = org.apache.log4j.Logger.getLogger(getClass)
+    (df.observe(obs, observed.head, observed.tail: _*), () => {
+      if (!obs.future.isCompleted) {
+        log.info(s"$what had not arrived when read; draining the listener bus")
         org.apache.spark.sql.graft.SqlShim.drainListenerBus(df.sparkSession)
+      }
       obs.future.value.map(_.get) match {
-        case Some(row) if row.length > 0 => row.getLong(0)
-        case Some(_) => df.agg(agg).head().getLong(0)
+        case Some(row) if row.length > 0 => row
+        case Some(_) =>
+          log.warn(s"$what arrived empty, its node pruned from the plan; recomputing it over the relation")
+          df.agg(observed.head, observed.tail: _*).head()
         case None => throw new IllegalStateException(
-          s"observed count ${obs.name} read before any action ran its relation")
+          s"$what read before any action ran its relation")
       }
     })
   }

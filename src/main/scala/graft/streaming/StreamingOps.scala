@@ -992,16 +992,21 @@ object StreamingOps {
   case class EmaState(last_epoch_day: Int, ema: Double)
   case class EmaOut(symbol: String, date: String, ema: Double)
 
-  /** Round half-away-from-zero at 6 decimals the way `round(x, 6)` does in
-    * BOTH engines: through `BigDecimal.valueOf` (the SHORTEST decimal
-    * representation of the double — Spark's Round expression does exactly
-    * this), NOT the exact binary expansion, which differs at the 6th digit
-    * for values like ...8005 whose binary form undershoots (measured: one
-    * final-digit ulp on ~3/150 rows with the exact-expansion variant).
+  /** Round at 6 decimals the way DuckDB's `round(x, 6)` does on a DOUBLE,
+    * which q165's recursive CTE runs: `std::round(x * 1e6) / 1e6` in double
+    * arithmetic, half away from zero on the product. The rule decides ties
+    * that the decimal forms hide: 0.125 * 23.73 + 0.875 * 33.931028 prints
+    * as 32.6558995, but its product is 32655899.499999996 and rounds down,
+    * while 2.0008005, whose binary value also lies below the tie, has the
+    * product 2000800.5 and rounds up. Rounding the shortest decimal form
+    * (`BigDecimal.valueOf`) misses the first; rounding the exact binary
+    * expansion misses the second.
     */
-  private def rd6(v: Double): Double =
-    java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue + 0.0
+  private[graft] def rd6(v: Double): Double = {
+    val y = v * 1e6
+    val t = if (y < 0) math.ceil(y) else math.floor(y)
+    (if (math.abs(y - t) >= 0.5) t + math.signum(y) else t) / 1e6 + 0.0
+  }
 
   /** Batch-parity gate for a STREAMING RECURSIVE INDICATOR (q165): the
     * classic recursive EMA (ema_t = α·x_t + (1−α)·ema_{t−1}, α = 0.125)

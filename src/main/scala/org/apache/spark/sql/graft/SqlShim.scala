@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Narrow bridge into Spark's `private[sql]` classic API: Column ⇄ Expression
   * conversion and the session FunctionRegistry. This is the supported way to
@@ -37,4 +38,16 @@ object SqlShim {
     */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Frees the blocks that `pinned`, a `localCheckpoint`, holds, once
+    * nothing will read it again: it cannot be recomputed afterwards.
+    * Without this they stay until the context cleaner collects the RDD,
+    * after a garbage collection on the driver. Unlike `RDD.unpersist`, this
+    * logs no warning for the deliberate release.
+    */
+  def releaseLocalCheckpoint(pinned: DataFrame): Unit =
+    pinned.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
+      case _ =>
+    }
 }

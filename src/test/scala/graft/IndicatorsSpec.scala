@@ -55,10 +55,34 @@ class IndicatorsSpec extends SparkSpecBase {
     }
   }
 
+  /** DuckDB's `round(x, 6)` on a DOUBLE, the q165 oracle's rounding: the
+    * double product x * 1e6 rounded half away from zero, as C's std::round
+    * does, then divided by 1e6. */
+  private def duckRound6(x: Double): Double =
+    new java.math.BigDecimal(x * 1e6).setScale(0, java.math.RoundingMode.HALF_UP)
+      .doubleValue / 1e6 + 0.0
+
+  test("q165's rounding matches DuckDB's round(x, 6) on ties the decimal forms hide") {
+    import graft.streaming.StreamingOps.rd6
+    // the sf0.1 tie: prints as 32.6558995, lies below it; DuckDB gives 32.655899
+    val tie = 0.125 * 23.73 + 0.875 * 33.931028
+    // DuckDB 1.0 `select round(x::DOUBLE, 6) + 0` for each input (the
+    // oracle's `+ 0` turns a -0.0 into 0.0)
+    val duck = Seq(tie -> 32.655899, 2.0008005 -> 2.000801, 33.0008005 -> 33.0008,
+      -2.0008005 -> -2.000801, 23.73 -> 23.73, -0.0000004 -> 0.0)
+    for ((x, want) <- duck) {
+      assert(rd6(x) == want, s"rd6($x)")
+      assert(duckRound6(x) == want, s"duckRound6($x)")
+    }
+    // the two rules it replaces each miss one of them
+    assert(java.math.BigDecimal.valueOf(tie).setScale(6, java.math.RoundingMode.HALF_UP)
+      .doubleValue == 32.6559)
+    assert(new java.math.BigDecimal(2.0008005).setScale(6, java.math.RoundingMode.HALF_UP)
+      .doubleValue == 2.0008)
+  }
+
   test("streaming recursive EMA (q165) equals the sequential quantized fold") {
     import graft.operators.MarketView
-    def rd6(v: Double) = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
     val bars = MarketView.dailyBars(spark, sf)
       .select("symbol", "date", "close").collect()
       .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2)))
@@ -66,7 +90,7 @@ class IndicatorsSpec extends SparkSpecBase {
     val expected = bars.toSeq.flatMap { case (sym, rows) =>
       var prev = Double.NaN
       rows.sortBy(_._2).map { case (_, d, x) =>
-        val e = if (prev.isNaN) rd6(x) else rd6(0.125 * x + 0.875 * prev)
+        val e = if (prev.isNaN) duckRound6(x) else duckRound6(0.125 * x + 0.875 * prev)
         prev = e
         (sym, d) -> e
       }
