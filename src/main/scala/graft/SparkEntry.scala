@@ -2353,9 +2353,9 @@ ORDER BY r.rank DESC, partkey"""
       TextOps.urlDomainQuotaPslFull(Tables.documents(s, dir))),
 
     // BUCKETED-BASE SYM MERGE: q217's contract with the standing relation
-    // persisted bucketed+sorted on (u, v) — the layout under which the
-    // join-form merge plans ZERO base-side exchanges (only the delta
-    // shuffles); proves write, catalog read-back, and merge end-to-end
+    // persisted bucketed+sorted on (u, v) — the layout under which either
+    // merge form plans ZERO base-side exchanges (only the delta shuffles);
+    // proves write, catalog read-back, and merge end-to-end
     "q232_sym_incremental_bucketed" -> ((s, dir) =>
       GraphOps.symIncrementalParityBucketed(s, dir)),
 

@@ -44,6 +44,21 @@ object GraphOps {
     */
   val BroadcastNodeLimit: Long = 2000000L
 
+  private val log = org.apache.log4j.Logger.getLogger(getClass)
+
+  /** The sizing rule of the graph operators: a relation of `rows` rows is
+    * broadcast into every round when `rows` is within [[BroadcastNodeLimit]],
+    * and shuffled against the pre-partitioned edge relation above it.
+    * Callers pass a count they already hold (a pin's or an MV's row count,
+    * or a count observed by a checkpoint's own job), so the rule runs no job.
+    * Each decision is logged at INFO with its site, row count and branch.
+    */
+  private[graft] def broadcastFits(site: String, rows: Long): Boolean = {
+    val fits = rows <= BroadcastNodeLimit
+    log.info(s"broadcastFits: $site rows=$rows -> ${if (fits) "broadcast" else "shuffle"}")
+    fits
+  }
+
   private def maybeBroadcast(nodes: DataFrame, bcast: Boolean): DataFrame =
     if (bcast) broadcast(nodes) else nodes
 
@@ -59,17 +74,16 @@ object GraphOps {
   /** Edge derivation over any (ok, pk) line relation — the unit the
     * incremental refresh path feeds with order-grained deltas.
     *
-    * Shape (optimization round r20, guide §2.4): one exchange keyed by the
-    * order id (groupBy + collect_set — the dedup the old `distinct` did
-    * rides the same aggregate), ordered pairs expanded IN-MEMORY from each
-    * order's sorted part array, then the (src, dst) aggregate. The previous
-    * distinct + self-join form paid a (ok, pk) distinct exchange PLUS both
-    * self-join sides (and at gate SF the planner broadcast the whole
-    * corpus-sized line relation for the self-join under the parquet size
-    * estimate — a latent scale hazard). Pair fan-out is bounded by
-    * per-order line count exactly as the self-join was; the per-order array
-    * is order-sized (TPC-H: ≤ 7). Values identical: sorted-set pairs with
-    * i < j ⇔ the a.pk < b.pk join over distinct (ok, pk).
+    * Shape: one exchange keyed by the order id (groupBy + collect_set, which
+    * also drops repeated (ok, pk) lines), ordered pairs expanded IN-MEMORY
+    * from each order's sorted part array, then the (src, dst) aggregate. A
+    * distinct + self-join form pays a (ok, pk) distinct exchange PLUS both
+    * self-join sides, and under the parquet size estimate the planner may
+    * broadcast the whole corpus-sized line relation for the self-join. Pair
+    * fan-out is bounded by per-order line count exactly as in the self-join;
+    * the per-order array is order-sized (TPC-H: ≤ 7). Values identical:
+    * sorted-set pairs with i < j ⇔ the a.pk < b.pk join over distinct
+    * (ok, pk).
     */
   def copurchaseEdgesOf(lines: DataFrame): DataFrame =
     lines.groupBy(col("ok")).agg(array_sort(collect_set(col("pk"))).as("pks"))
@@ -112,10 +126,9 @@ object GraphOps {
   }
 
   /** INCREMENTAL symmetrized-adjacency maintenance (q217) — q127's
-    * base ⊎ delta discipline lifted to the [[symAdjMV]] relation (round-13,
-    * VERDICT r12 item 3: the edge MV refreshed at delta cost, but the sym
-    * MV rebuilt from scratch — a 36.3 s source self-join at 100× — on ANY
-    * source change).
+    * base ⊎ delta discipline lifted to the [[symAdjMV]] relation, so a source
+    * change costs the delta, not a rebuild of the sym MV (a 36.3 s source
+    * self-join at 100×).
     *
     * Both components of the sym relation are ADDITIVE under the CDC grain
     * (whole orders per batch, so per-batch pair weights sum — the q127
@@ -135,106 +148,82 @@ object GraphOps {
     *
     * `baseSym` is the standing (u, v, w, deg_u) relation (the MV);
     * `deltaEdges` is the new batch's canonical (src, dst, w) edge relation.
+    * Every relation the broadcast form ships is bounded by the delta
+    * aggregate's row count, so [[broadcastFits]] picks the form from that
+    * count, observed by the aggregate's own checkpoint job.
     */
-  def mergeSymDelta(baseSym: DataFrame, deltaEdges: DataFrame,
-                    broadcastDegrees: Option[Boolean] = None,
-                    broadcastRowLimit: Long = BroadcastNodeLimit): DataFrame = {
+  def mergeSymDelta(baseSym: DataFrame, deltaEdges: DataFrame): DataFrame = {
     val symDelta = deltaEdges
       .select(col("src").as("u"), col("dst").as("v"), col("w"))
       .union(deltaEdges.select(col("dst").as("u"), col("src").as("v"), col("w")))
-    // MATERIALIZE the delta-sized aggregate ONLY (round-15, VERDICT r14
-    // item 1, then re-measured): it is referenced from the grown-join, the
-    // anti-join, and (via `fresh`) the degree census, and an unmaterialized
-    // subtree is re-derived per reference. The checkpointed job is strictly
-    // delta-shaped (the batch's union + one aggregation — no base scan).
-    // The round-15 100× A/B (SCALING.md) went further and checkpointed
-    // `fresh` and `newDeg` too — and RETIRED that: those relations are
-    // delta-/node-SIZED but their derivations are base-SHAPED (anti-join,
-    // degree distinct), so materializing them serializes full base passes
-    // into their own jobs that the single consuming job used to pipeline —
-    // measured 2–3× slower end-to-end (65.6/69.3 s vs 29.6/22.1 s,
-    // interleaved, healthy canaries). Lazy, they re-derive per branch
-    // INSIDE one job where exchange reuse and shared scans recover the
-    // overlap for free.
-    val deltaAgg = symDelta.groupBy("u", "v").agg(sum(col("w")).as("dw"))
+    // The delta aggregate is the one materialized relation: the grown join,
+    // the anti-join and the degree census all read it, and its checkpoint
+    // job is delta-shaped (no base scan). `fresh` and the degree censuses
+    // stay lazy: they are delta- or node-sized, but their derivations are
+    // base-shaped (anti-join, degree distinct), and pinning them split base
+    // passes into jobs of their own that one consuming job otherwise
+    // pipelines — 2–3× slower end to end at 100× (SCALING.md).
+    val (agg, aggRows) = Tables.observedCount(
+      symDelta.groupBy("u", "v").agg(sum(col("w")).as("dw")))
+    val deltaAgg = agg.localCheckpoint(true)
+    if (broadcastFits("mergeSymDelta", aggRows().getLong(0))) mergeSymBroadcast(baseSym, deltaAgg)
+    else mergeSymJoin(baseSym, deltaAgg)
+  }
+
+  /** BROADCAST-form merge of a checkpointed (u, v, dw) delta aggregate.
+    * Every decision in the merge depends only on delta-sized relations, so
+    * each is a delta-sized broadcast probed INTO an exchange-free base scan:
+    *   - `probe` = the base rows whose u appears in the delta at all: ONE
+    *     base scan semi-filtered by the broadcast delta node set,
+    *     checkpointed once (delta-neighborhood-sized). `hit` (delta pairs
+    *     already present) and `degFresh` (base degrees of delta-touched
+    *     nodes) are in-memory projections of it, so neither scans the base
+    *     and every broadcast build below reads a checkpoint;
+    *   - `fresh` = broadcast anti-join of two delta-sized relations;
+    *   - grown rows take deg' = their OWN deg_u + the broadcast fresh census
+    *     (deg_u is constant per u on the standing relation, so the row's
+    *     copy IS the base degree), so no full-base degree distinct or
+    *     full-outer join runs;
+    *   - fresh rows read deg_base for just their nodes from the same probe
+    *     (degFresh covers every delta-touched u ⊇ fresh u's; the left join
+    *     picks only matching u, so the superset is harmless).
+    * The base is scanned twice (probe, grown), scan-only under the bucketed
+    * layout, and is never shuffled, sorted or broadcast.
+    */
+  private[graft] def mergeSymBroadcast(baseSym: DataFrame, deltaAgg: DataFrame): DataFrame = {
+    val probe = baseSym
+      .join(broadcast(deltaAgg.select(col("u")).distinct()), Seq("u"), "left_semi")
+      .select(col("u"), col("v"), col("deg_u"))
       .localCheckpoint(true)
-    // r20 (VERDICT r19 item 9 / ADVICE medium): the broadcast-form merge's
-    // shipped relations (deltaAgg, hit ⊆ deltaAgg, fresh ⊆ deltaAgg, and
-    // the node-sized censuses) are all bounded by deltaAgg's row count, and
-    // deltaAgg is already eagerly checkpointed — so counting it is one
-    // cheap job and gates the form AUTOMATICALLY: an oversized delta takes
-    // the shuffled join-form below instead of driving a forced broadcast
-    // toward the 8 GB/512M-row hard cap. Callers can still force either
-    // form; the limit is parameterized for the spec's synthetic-delta
-    // fallback proof.
-    val bcast = broadcastDegrees.getOrElse(deltaAgg.count() <= broadcastRowLimit)
-    if (bcast) {
-      // BROADCAST-form merge (optimization round r19, guide §3.1/§2.4 —
-      // measured at sf0.1 against the r14 join-form below, which was still
-      // paying per merge: a 2.15M-row base.select(u,v) BROADCAST for the
-      // anti-join (the planner's pick under the 10 MB estimate — a latent
-      // scale hazard on top of the cost), a full-base two-exchange
-      // (u, deg_u) distinct, a full-outer SMJ for newDeg, and base-side
-      // sorts under the grown SMJ. Every decision in the merge depends only
-      // on DELTA-sized relations (the guide §8 rule: decide with small
-      // rows, move big rows once), so all of those collapse to delta-sized
-      // broadcasts probed INTO exchange-free base scans:
-      //   - `probe` (r20, second pass) = the base rows whose u appears in
-      //     the delta at all — ONE base scan semi-filtered by the broadcast
-      //     delta node set, checkpointed once (delta-NEIGHBORHOOD-sized).
-      //     `hit` (delta pairs already present) and `degFresh` (base
-      //     degrees of delta-touched nodes) are both in-memory projections
-      //     of it, so neither costs its own base scan and every broadcast
-      //     build below reads a checkpoint instead of re-scanning the base
-      //     inside its future (the r19 form paid a base scan in the `hit`
-      //     checkpoint AND another inside the degFresh broadcast build);
-      //   - `fresh` = broadcast anti of two delta-sized in-memory relations
-      //     (the old form shuffled-or-broadcast the BASE for this);
-      //   - grown rows take deg' = their OWN deg_u + the broadcast fresh
-      //     census — the full-base distinct + full-outer newDeg join is
-      //     gone entirely (deg_u is constant per u on the standing
-      //     relation, so the row's copy IS baseDeg's value);
-      //   - fresh rows read deg_base for JUST their nodes from the same
-      //     probe (degFresh covers every delta-touched u ⊇ fresh u's; the
-      //     left join picks only matching u, so the superset is harmless).
-      // The base is scanned 2× (probe, grown) — both scan-only under the
-      // bucketed layout — and is never shuffled, sorted, or broadcast
-      // at ANY scale; every broadcast is delta- or delta-neighborhood-
-      // sized. Callers whose delta exceeds broadcast capacity pass
-      // Some(false) for the shuffled join form below ([[pageRank]]'s
-      // `broadcastNodes` escape-hatch pattern).
-      val probe = baseSym
-        .join(broadcast(deltaAgg.select(col("u")).distinct()), Seq("u"), "left_semi")
-        .select(col("u"), col("v"), col("deg_u"))
-        .localCheckpoint(true)
-      val hit = probe.select(col("u"), col("v"))
-        .join(broadcast(deltaAgg.select(col("u"), col("v"))), Seq("u", "v"))
-      val fresh = deltaAgg.join(broadcast(hit), Seq("u", "v"), "left_anti")
-        .select(col("u"), col("v"), col("dw").as("w"))
-      val freshCnt = fresh.groupBy("u").agg(count(lit(1)).as("d"))
-      val grown = baseSym.join(broadcast(deltaAgg), Seq("u", "v"), "left")
-        .join(broadcast(freshCnt), Seq("u"), "left")
-        .select(col("u"), col("v"),
-          (col("w") + coalesce(col("dw"), lit(0L))).as("w"),
-          (col("deg_u") + coalesce(col("d"), lit(0L))).as("deg_u"))
-      val degFresh = probe.select(col("u"), col("deg_u")).distinct()
-      val freshOut = fresh
-        .join(broadcast(degFresh), Seq("u"), "left")
-        .join(broadcast(freshCnt), Seq("u"))
-        .select(col("u"), col("v"), col("w"),
-          (coalesce(col("deg_u"), lit(0L)) + col("d")).as("deg_u"))
-      grown.union(freshOut)
-    } else {
-    // JOIN-form merge (round-14, VERDICT r13 item 2): the standing relation
-    // is unique by (u, v), so the union-then-reaggregate form — which
-    // shuffled all 239M base rows at 100× and made the merge LOSE to the
-    // rebuild (57 vs 47.8 s) — is equivalent to one LEFT join against the
-    // delta-sized aggregate. With the base persisted in the (u, v)-bucketed
-    // standing layout ([[Tables.bucketedMv]], gate q232) the base side
-    // plans ZERO exchanges end-to-end: only the delta shuffles. An
-    // unbucketed base degrades to one base shuffle — the old cost, never
-    // worse. This is the no-broadcast escape path: nothing here ships more
-    // than the node-sized newDeg, and with Some(false) not even that.
+    val hit = probe.select(col("u"), col("v"))
+      .join(broadcast(deltaAgg.select(col("u"), col("v"))), Seq("u", "v"))
+    val fresh = deltaAgg.join(broadcast(hit), Seq("u", "v"), "left_anti")
+      .select(col("u"), col("v"), col("dw").as("w"))
+    val freshCnt = fresh.groupBy("u").agg(count(lit(1)).as("d"))
+    val grown = baseSym.join(broadcast(deltaAgg), Seq("u", "v"), "left")
+      .join(broadcast(freshCnt), Seq("u"), "left")
+      .select(col("u"), col("v"),
+        (col("w") + coalesce(col("dw"), lit(0L))).as("w"),
+        (col("deg_u") + coalesce(col("d"), lit(0L))).as("deg_u"))
+    val degFresh = probe.select(col("u"), col("deg_u")).distinct()
+    val freshOut = fresh
+      .join(broadcast(degFresh), Seq("u"), "left")
+      .join(broadcast(freshCnt), Seq("u"))
+      .select(col("u"), col("v"), col("w"),
+        (coalesce(col("deg_u"), lit(0L)) + col("d")).as("deg_u"))
+    grown.union(freshOut)
+  }
+
+  /** JOIN-form merge of a checkpointed (u, v, dw) delta aggregate, for a
+    * delta too large to broadcast. The standing relation is unique by
+    * (u, v), so base ∪ delta re-aggregated (which shuffles every base row:
+    * 57 s against a 47.8 s rebuild at 100×) equals one LEFT join against
+    * the delta aggregate. With the base in the (u, v)-bucketed standing
+    * layout ([[Tables.bucketedMv]]) the base side plans no exchange and only
+    * the delta shuffles; an unbucketed base pays one base shuffle. Nothing
+    * here is broadcast by hint.
+    */
+  private[graft] def mergeSymJoin(baseSym: DataFrame, deltaAgg: DataFrame): DataFrame = {
     val grown = baseSym.join(deltaAgg, Seq("u", "v"), "left")
       .select(col("u"), col("v"),
         (col("w") + coalesce(col("dw"), lit(0L))).as("w"))
@@ -252,7 +241,6 @@ object GraphOps {
         (coalesce(col("deg_u"), lit(0L)) + coalesce(col("d"), lit(0L))).as("deg_u"))
     grown.join(newDeg, "u").select("u", "v", "w", "deg_u")
       .union(fresh.join(newDeg, "u").select("u", "v", "w", "deg_u"))
-    }
   }
 
   /** Registered q217: q127's deterministic order split (delta = every 10th
@@ -281,11 +269,12 @@ object GraphOps {
   /** Registered q232: q217's incremental-maintenance contract with the base
     * sym relation PERSISTED in the bucketed standing layout
     * ([[Tables.bucketedMv]], bucketed + sorted on (u, v)) and the merge run
-    * against the catalog read-back — the layout that makes
-    * [[mergeSymDelta]]'s base side exchange-free (only the delta shuffles).
-    * Oracle: the same full rebuild as q217; hash equality proves the whole
-    * bucketed path end-to-end (bucketed write, atomic publish, catalog
-    * read-back, join-form merge).
+    * against the catalog read-back. Either form of [[mergeSymDelta]] reads
+    * that base without an exchange. At every local scale factor the delta
+    * aggregate is far below [[BroadcastNodeLimit]], so the broadcast form
+    * runs; the join form runs only for a larger delta. Oracle: the same full
+    * rebuild as q217; hash equality proves the whole bucketed path end to
+    * end (bucketed write, atomic publish, catalog read-back, merge).
     */
   def symIncrementalParityBucketed(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
@@ -302,56 +291,23 @@ object GraphOps {
       .orderBy("u", "v")
   }
 
-  /** PageRank over an undirected edge list (columns src/dst), in the scaled
-    * formulation (sum of ranks = N): r⁰ = 1, rᵗ⁺¹ = (1−d) + d·Σ rᵗ(u)/deg(u)
-    * over neighbors u. Nodes are every endpoint of the edge relation, so
-    * deg ≥ 1 everywhere — no dangling mass term. Returns
-    * (node, degree, rank) with rank quantized per iteration (see object doc).
-    */
-  def pageRank(edges: DataFrame, iterations: Int, damping: Double = 0.85,
-               broadcastNodes: Option[Boolean] = None): DataFrame = {
-    // materialize the symmetrized edge list ONCE: und is referenced by both
-    // deg and adj, and is itself a union scanning the edge build twice — an
-    // un-checkpointed und recomputes the whole edge derivation ~4×
-    val und = edges.select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.select(col("dst").as("u"), col("src").as("v")))
-      .localCheckpoint(true)
-    // deg is referenced by adj, by EVERY iteration's dangling-safe left
-    // join, and by the final projection — un-checkpointed, each reference
-    // re-runs the groupBy over the full edge list (measured 7× the whole
-    // query at 100×); checkpointed it is a node-sized in-memory relation
-    val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-      .select(col("u").as("node"), col("deg"))
-      .localCheckpoint(true)
-    val bcast = broadcastNodes.getOrElse(deg.count() <= BroadcastNodeLimit)
-    val adjRaw = und.join(maybeBroadcast(deg, bcast), und("u") === deg("node"))
-      .select(col("u"), col("v"), col("deg").as("deg_u"))
-    // broadcast mode pins the DERIVED adjacency once (re-deriving the join
-    // per iteration would rescan und ×5); shuffle mode pins inside
-    // pageRankOn, where the repartition is fused with the materialization
-    val adj = if (bcast) adjRaw.localCheckpoint(true) else adjRaw
-    pageRankOn(adj, deg, iterations, damping, Some(bcast))
-  }
-
-  /** PageRank over an ALREADY-SYMMETRIZED adjacency relation (u, v, deg_u) —
-    * typically the materialized [[symAdjMV]], so the symmetrize + degree
-    * derivation that [[pageRank]] repeats per call is a one-time MV build.
-    * `adjIn` is by-name: in broadcast mode each iteration references it
-    * fresh (for an MV that is a columnar parquet re-scan — the
-    * labelPropagation re-scan discipline, nothing corpus-sized pinned in
-    * the block manager); in shuffle mode it is repartitioned on the join
-    * key ONCE and materialized so every round reuses the partitioning.
+  /** PageRank in the scaled formulation (sum of ranks = N): r⁰ = 1,
+    * rᵗ⁺¹ = (1−d) + d·Σ rᵗ(u)/deg(u) over neighbors u, over an
+    * already-symmetrized adjacency relation (u, v, deg_u) and its node
+    * relation (node, deg), typically the [[symAdjMV]] and [[nodeDegMV]]
+    * pins. Every node is an endpoint of an edge, so deg ≥ 1 everywhere and
+    * there is no dangling mass term. Returns (node, degree, rank) with rank
+    * quantized per iteration (see object doc).
     *
-    * ADAPTIVE round strategy (see BroadcastNodeLimit): node-sized
-    * broadcast below the ceiling; above it, a shuffled equi-join with the
-    * adjacency pre-partitioned on u, so each round exchanges only ranks.
+    * `bcast` (see [[broadcastFits]]): broadcast the node-sized rank
+    * relation into every iteration, re-referencing `adjIn` per iteration
+    * (for an MV, a columnar parquet re-scan); otherwise `adjIn` is
+    * repartitioned on u ONCE and pinned, so each iteration exchanges only
+    * the ranks. `deg` is read every iteration, so callers pass a pin.
     */
-  def pageRankOn(adjIn: => DataFrame, degIn: DataFrame, iterations: Int,
-                 damping: Double = 0.85,
-                 broadcastNodes: Option[Boolean] = None): DataFrame = {
+  def pageRankOn(adjIn: => DataFrame, deg: DataFrame, iterations: Int,
+                 bcast: Boolean, damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val deg = degIn.localCheckpoint(true)
-    val bcast = broadcastNodes.getOrElse(deg.count() <= BroadcastNodeLimit)
     lazy val adjPart = adjIn.repartition(col("u")).localCheckpoint(true)
     def adj = if (bcast) adjIn else adjPart
     var ranks = deg.select(col("node"), lit(1.0).as("rank"))
@@ -372,10 +328,9 @@ object GraphOps {
         .select(col("v"), (col("rank") / col("deg_u")).as("c"))
         .groupBy("v").agg(sum("c").as("inflow"))
       // contrib is node-sized by construction (one row per inflow target);
-      // in broadcast mode ship it to the dangling-safe join instead of
-      // letting the planner SMJ two node-sized relations of unknown
-      // estimated size (r20: the before-plan carried 10 SortMergeJoins —
-      // 2 per iteration — each with its exchanges and sorts)
+      // in broadcast mode ship it to the dangling-safe join, or the planner
+      // sort-merge joins two node-sized relations of unknown estimated size
+      // (two exchanges and two sorts per iteration)
       ranks = deg
         .join(maybeBroadcast(contrib, bcast), deg("node") === contrib("v"), "left")
         .select(col("node"),
@@ -409,16 +364,16 @@ object GraphOps {
       java.nio.file.Paths.get(dir, "lineitem.parquet"),
       "copurchase_edges", refresh)(copurchaseEdges(spark, dir))
 
-  /** MATERIALIZED symmetrized adjacency (u, v, w, deg_u) — round-12: every
-    * iterative operator (PageRank, BFS, Bellman–Ford, LPA, k-core, CF) was
-    * re-deriving the symmetrize union + degree join from the edge MV per
-    * CALL (and the union per ROUND); this persists that shared relation
-    * once, fingerprinted against the same lineitem source as the edge MV,
-    * so the per-round "re-scan the MV" discipline reads the final shape
-    * directly. deg_u rides every row so adjacency consumers (PageRank's
-    * contribution division) need no extra join; w rides for the weighted
-    * operators. At 100 TB this is exactly the adjacency relation a cluster
-    * deployment would keep next to the edge list in object storage.
+  /** MATERIALIZED symmetrized adjacency (u, v, w, deg_u): the relation every
+    * iterative operator (PageRank, BFS, Bellman–Ford, LPA, k-core, CF) reads,
+    * persisted once and fingerprinted against the same lineitem source as
+    * the edge MV, so no call re-derives the symmetrize union and degree join
+    * from the edge MV, and the per-round "re-scan the MV" discipline reads
+    * the final shape directly. deg_u rides every row so adjacency
+    * consumers (PageRank's contribution division) need no extra join; w
+    * rides for the weighted operators. At 100 TB this is exactly the
+    * adjacency relation a cluster deployment would keep next to the edge
+    * list in object storage.
     */
   def symAdjMVPath(spark: SparkSession, dir: String,
                    refresh: Boolean = false): java.nio.file.Path =
@@ -438,16 +393,16 @@ object GraphOps {
     * dst, w) edges → symmetrized (u, v, w) with the u-side neighbor count
     * riding every row. */
   private[graft] def symmetrizeWithDegrees(e: DataFrame): DataFrame = {
-    // r20 (guide §2.4): ONE u-keyed exchange — each node's neighbor list is
-    // collected once and deg_u read off its size, instead of the old
-    // aggregate-then-join form (same exchange, but + a sort-merge join that
-    // SORTED the full sym relation; measured 2.5 → 1.6 s on the sf0.1 base
-    // build, value-identical). The per-node array is adjacency-sized — the
-    // same bound q212's per-doc token sets and q195's k-heaps already
-    // accept; ObjectHashAggregate falls back to sort-based spill under
-    // pressure, and a pathological hub's array is max-degree-sized, never
-    // corpus-sized. sym is unique by (u, v) (edges are unique by
-    // (src, dst)), so deg_u = size(neighbor list) exactly.
+    // ONE u-keyed exchange — each node's neighbor list is collected once and
+    // deg_u read off its size. An aggregate-then-join form pays the same
+    // exchange plus a sort-merge join that SORTS the full sym relation
+    // (2.5 s against 1.6 s on the sf0.1 base build, value-identical). The
+    // per-node array is adjacency-sized — the same bound q212's per-doc
+    // token sets and q195's k-heaps already accept; ObjectHashAggregate
+    // falls back to sort-based spill under pressure, and a pathological
+    // hub's array is max-degree-sized, never corpus-sized. sym is unique by
+    // (u, v) (edges are unique by (src, dst)), so deg_u = size(neighbor
+    // list) exactly.
     val halves = e.select(col("src").as("u"), col("dst").as("v"), col("w"))
       .union(e.select(col("dst").as("u"), col("src").as("v"), col("w")))
     halves.groupBy("u").agg(collect_list(struct(col("v"), col("w"))).as("nb"))
@@ -460,8 +415,8 @@ object GraphOps {
     * per-round "re-scan the MV" discipline is the memory-safe 100× shape
     * (an eager pin of the 239M-row relation OOM'd — the LPA doctrine), but
     * at gate scale the re-scan pays parquet listing + scan setup per round
-    * for a relation that fits memory trivially: q144 measured 3.1 → 4.1 s
-    * in the r12 bench session from exactly this. Below the bound (≈1–2 GB
+    * for a relation that fits memory trivially (q144: 3.1 s pinned against
+    * 4.1 s re-scanned, sf0.1 bench). Below the bound (≈1–2 GB
     * pinned at 50M rows of (u,v,w,deg_u) longs) the projected relation is
     * localCheckpointed once and every round reuses it; above, rounds
     * re-scan the MV. The bound is read off parquet METADATA (row-count
@@ -470,15 +425,11 @@ object GraphOps {
   val PinEdgeLimit: Long = 50000000L
 
   /** JVM-SHARED pinned-MV cache, keyed by (Spark application id, published
-    * MV path) — round-13, VERDICT r12 item 1. Round 12 pinned per gate CALL
-    * (`proj.localCheckpoint(true)` inside `gateSym`), so every timed bench
-    * invocation of every graph query re-scanned the MV and re-wrote its
-    * blocks: 6 graph queries × 3 timed passes = 18 redundant pins per bench
-    * JVM — exactly the cost the same-JVM A/B (which built its pin OUTSIDE
-    * the timed region, `tools/ab_pin_r12.scala`) never measured, and the
-    * whole bench-vs-A/B discrepancy the r12 verdict flagged. Now the FULL
-    * (u,v,w,deg_u) relation is localCheckpointed once per (app, MV) and
-    * every gate projects from the shared pin; a refreshed source publishes
+    * MV path). A pin per gate CALL re-scans the MV and re-writes its blocks
+    * on every invocation of every graph query (6 graph queries × 3 timed
+    * passes = 18 redundant pins per bench JVM). Each projection is
+    * localCheckpointed once per (app, MV) and every gate call reads the
+    * shared pin; a refreshed source publishes
     * a new fingerprint path → new cache entry, and entries for superseded
     * paths of the same MV name are dropped so their blocks become
     * ContextCleaner-collectable. The path key is exact: two corpora (two
@@ -523,9 +474,9 @@ object GraphOps {
         val n = mv.count()
         val pinned = if (n > pinLimit) proj else partCol match {
           case None => proj.localCheckpoint(true)
-          // r20 (guide §2.4): pin HASH-PARTITIONED on the iterative gates'
-          // AGGREGATION key, so every round's groupBy on it plans ZERO
-          // exchange over the edge relation (broadcast joins preserve the
+          // pin HASH-PARTITIONED on the iterative gates' AGGREGATION key,
+          // so every round's groupBy on it plans ZERO exchange over the edge
+          // relation (broadcast joins preserve the
           // streamed side's partitioning). The checkpoint must be built
           // with AQE off for that one job: an AdaptiveSparkPlanExec's
           // outputPartitioning is not final at checkpoint capture, so a
@@ -560,7 +511,7 @@ object GraphOps {
   /** The symmetrized relation projected for an iterative gate — the
     * JVM-shared per-projection pin when the MV is small (see
     * [[PinEdgeLimit]]), a fresh per-round-re-scanned read above it. */
-  private def gateSym(spark: SparkSession, dir: String, cols: String*): DataFrame = {
+  private[graft] def gateSym(spark: SparkSession, dir: String, cols: String*): DataFrame = {
     val path = symAdjMVPath(spark, dir)
     val (proj, n) = cachedPin(spark, path, PinEdgeLimit, cols, GatePinPartCol)
     if (n <= PinEdgeLimit) proj
@@ -568,16 +519,15 @@ object GraphOps {
   }
 
   /** The node-degree MV pinned the same way (node-cardinality — orders of
-    * magnitude under any sane pin bound), with its row count cached so the
-    * gates' adaptive-branch `nNodes` reads cost no job at all. */
-  private def gateDeg(spark: SparkSession, dir: String): (DataFrame, Long) =
+    * magnitude under any sane pin bound), with its row count: the node count
+    * every gate hands [[broadcastFits]], at no job. */
+  private[graft] def gateDeg(spark: SparkSession, dir: String): (DataFrame, Long) =
     cachedPin(spark, nodeDegMVPath(spark, dir), PinEdgeLimit)
 
   /** MATERIALIZED node-degree relation (node, deg) of the co-purchase graph
-    * — the node-sized companion of [[symAdjMV]]: seeds, adaptive-branch
-    * counts (metadata-fast on parquet), label/keep-set initialization, and
-    * PageRank's dangling-safe join all read it without touching the edge
-    * relation.
+    * — the node-sized companion of [[symAdjMV]]: seeds, node counts,
+    * label/keep-set initialization, and PageRank's dangling-safe join all
+    * read it without touching the edge relation.
     */
   def nodeDegMVPath(spark: SparkSession, dir: String,
                     refresh: Boolean = false): java.nio.file.Path =
@@ -599,11 +549,13 @@ object GraphOps {
     * q144/q184/q195/q206/q211.
     */
   def copurchasePageRank(spark: SparkSession, dir: String,
-                         iterations: Int = 5): DataFrame =
-    pageRankOn(gateSym(spark, dir, "u", "v", "deg_u"),
-      gateDeg(spark, dir)._1, iterations)
+                         iterations: Int = 5): DataFrame = {
+    val (deg, nNodes) = gateDeg(spark, dir)
+    pageRankOn(gateSym(spark, dir, "u", "v", "deg_u"), deg, iterations,
+      broadcastFits("q98 pageRank", nNodes))
       .select(col("node").as("partkey"), col("degree"), col("rank"))
       .orderBy(col("rank").desc, col("partkey").asc)
+  }
 
   /** Triangle census with local clustering coefficients — the density
     * signal community detection and spam/botnet analysis read off a graph.
@@ -662,40 +614,25 @@ object GraphOps {
     triangleCensus(copurchaseEdgesMV(spark, dir))
       .withColumnRenamed("node", "partkey")
 
-  /** Bounded-hop BFS distances from a seed set: `hops` rounds of
-    * frontier-join + min-aggregate over the symmetrized edge relation —
-    * the iterative-equi-join shape every distributed BFS/SSSP takes
-    * (Pregel's message round as a join). Unreached nodes are simply absent.
+  /** Bounded-hop BFS distances from a seed set over an ALREADY-SYMMETRIZED
+    * (u, v, …) relation, typically the materialized [[symAdjMV]]: `hops`
+    * rounds of frontier-join + min-aggregate, the iterative-equi-join shape
+    * every distributed BFS/SSSP takes (Pregel's message round as a join).
+    * Unreached nodes are simply absent.
     *
     * Scale shape: each round shuffles at most |reached| × avg-degree rows
-    * keyed by node; the edge relation is checkpointed once and reused, and
-    * the bounded hop count keeps the lineage linear. At 100 TB the frontier
-    * join is the same keyed shuffle as any groupBy — no driver-side
-    * traversal anywhere.
-    */
-  def bfsDistances(edges: DataFrame, seeds: DataFrame, hops: Int,
-                   broadcastFrontier: Option[Boolean] = None): DataFrame = {
-    val symFlat = edges.select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.select(col("dst").as("u"), col("src").as("v")))
-      .localCheckpoint(true) // reused by every round
-    bfsDistancesOn(symFlat, seeds, hops,
-      symFlat.select(col("u")).distinct().count(), broadcastFrontier)
-  }
-
-  /** BFS over an ALREADY-SYMMETRIZED (u, v, …) relation — typically the
-    * materialized [[symAdjMV]]. `nNodes` is the DISTINCT NODE count the
-    * adaptive branch keys on (by-name: never evaluated under a forced
-    * mode) — the broadcast payload per round is the node-sized frontier,
-    * so the ceiling compares node counts, not edge rows (ADVICE r11: the
-    * old edge-row stand-in switched broadcast off on any ≥1M-edge graph
-    * even with 500k nodes). Broadcast mode re-references `symIn` per round
-    * (a columnar MV re-scan, nothing pinned); shuffle mode repartitions on
-    * the join key once and materializes.
+    * keyed by node, and the bounded hop count keeps the lineage linear. At
+    * 100 TB the frontier join is the same keyed shuffle as any groupBy — no
+    * driver-side traversal anywhere.
+    *
+    * `bcast` (see [[broadcastFits]], decided from the node count: the
+    * per-round payload is the node-sized frontier): broadcast the frontier
+    * and re-reference `symIn` per round (a columnar MV re-scan, nothing
+    * pinned); otherwise `symIn` is repartitioned on the join key once and
+    * pinned.
     */
   def bfsDistancesOn(symIn: => DataFrame, seeds: DataFrame, hops: Int,
-                     nNodes: => Long,
-                     broadcastFrontier: Option[Boolean] = None): DataFrame = {
-    val bcast = broadcastFrontier.getOrElse(nNodes <= BroadcastNodeLimit)
+                     bcast: Boolean): DataFrame = {
     lazy val symPart = symIn.repartition(col("u")).localCheckpoint(true)
     def sym = if (bcast) symIn else symPart
     var dist = seeds.select(col("node"), lit(0L).as("dist"))
@@ -704,12 +641,12 @@ object GraphOps {
       // is neither shuffled nor broadcast (the q98 rank-relation pattern;
       // AQE left to itself may try to broadcast the far larger edge side).
       // Shuffled mode exchanges only the frontier against the
-      // pre-partitioned edge relation (see BroadcastNodeLimit).
-      // r20: the frontier-fanout relation is min-reduced to node size
-      // BEFORE the union (two-level aggregation, guide §2.3 — min∘min =
-      // min): under the v-partitioned gate pin the inner aggregate plans
-      // ZERO exchange, so the union's exchange carries two node-sized
-      // relations instead of frontier × degree rows.
+      // pre-partitioned edge relation (see broadcastFits).
+      // The frontier-fanout relation is min-reduced to node size BEFORE the
+      // union (two-level aggregation, min∘min = min): under the
+      // v-partitioned gate pin the inner aggregate plans no exchange, so the
+      // union's exchange carries two node-sized relations instead of
+      // frontier × degree rows.
       val next = maybeBroadcast(dist, bcast).join(sym, col("node") === col("u"))
         .select(col("v").as("node"), (col("dist") + 1L).as("dist"))
         .groupBy("node").agg(min("dist").as("dist"))
@@ -720,9 +657,8 @@ object GraphOps {
       // one per broadcast build. Cheap when the driver is idle, but in a
       // long-lived many-query JVM each redundant job pays scheduler/GC
       // latency and the measured cost quadrupled (full-bench 5.7 s vs
-      // 1.5 s isolated). Checkpointing makes each round's work run ONCE
-      // (guide §5 — cut lineage when an intermediate is multiply
-      // referenced); rows are identical.
+      // 1.5 s isolated). Checkpointing makes each round's work run ONCE;
+      // rows are identical.
       dist = dist.union(next).groupBy("node").agg(min("dist").as("dist"))
         .localCheckpoint(true)
     }
@@ -738,7 +674,8 @@ object GraphOps {
   def bfsGate(spark: SparkSession, dir: String, hops: Int = 4): DataFrame = {
     val (deg, nNodes) = gateDeg(spark, dir)
     val seed = deg.agg(min(col("node")).as("node"))
-    bfsDistancesOn(gateSym(spark, dir, "u", "v"), seed, hops, nNodes)
+    bfsDistancesOn(gateSym(spark, dir, "u", "v"), seed, hops,
+      broadcastFits("q144 bfs", nNodes))
       .groupBy("dist")
       .agg(count(lit(1)).as("n_nodes"),
         min(col("node")).as("min_node"), max(col("node")).as("max_node"))
@@ -746,45 +683,25 @@ object GraphOps {
   }
 
   /** Bounded-round single-source WEIGHTED shortest paths (q184): Bellman–
-    * Ford relaxation as keyed equi-join + min-agg rounds over the
-    * symmetrized weighted edge relation — [[bfsDistances]] lifted from the
-    * boolean to the min-plus (tropical) semiring. After k rounds the
-    * distance is exact for every node whose cheapest path uses <= k edges
-    * — the bounded-round contract the oracle unrolls. Integer edge weights
-    * keep every candidate distance an exact BIGINT, so min-agg ties are
-    * engine-independent.
-    *
-    * Scale shape: identical to BFS — the edge relation is checkpointed
-    * once and each round is one equi-join keyed by node + a min
-    * aggregate; the distances relation never exceeds |V| rows.
-    */
-  def weightedDistances(edges: DataFrame, seeds: DataFrame, rounds: Int,
-                        broadcastFrontier: Option[Boolean] = None): DataFrame = {
-    val symFlat = edges.select(col("src").as("u"), col("dst").as("v"), col("w"))
-      .union(edges.select(col("dst").as("u"), col("src").as("v"), col("w")))
-      .localCheckpoint(true)
-    weightedDistancesOn(symFlat, seeds, rounds,
-      symFlat.select(col("u")).distinct().count(), broadcastFrontier)
-  }
-
-  /** Bellman–Ford over an already-symmetrized weighted (u, v, w, …)
-    * relation — [[bfsDistancesOn]]'s contract lifted to the min-plus
-    * semiring; same adaptive node-count branch and per-round re-scan
-    * discipline.
+    * Ford relaxation as keyed equi-join + min-agg rounds over an
+    * already-symmetrized weighted (u, v, w, …) relation — [[bfsDistancesOn]]
+    * lifted from the boolean to the min-plus (tropical) semiring, with the
+    * same `bcast` branch and per-round re-scan discipline. After k rounds
+    * the distance is exact for every node whose cheapest path uses <= k
+    * edges — the bounded-round contract the oracle unrolls. Integer edge
+    * weights keep every candidate distance an exact BIGINT, so min-agg ties
+    * are engine-independent. The distances relation never exceeds |V| rows.
     */
   def weightedDistancesOn(symIn: => DataFrame, seeds: DataFrame, rounds: Int,
-                          nNodes: => Long,
-                          broadcastFrontier: Option[Boolean] = None): DataFrame = {
-    val bcast = broadcastFrontier.getOrElse(nNodes <= BroadcastNodeLimit)
+                          bcast: Boolean): DataFrame = {
     lazy val symPart = symIn.repartition(col("u")).localCheckpoint(true)
     def sym = if (bcast) symIn else symPart
     var dist = seeds.select(col("node"), lit(0L).as("dist"))
     for (_ <- 1 to rounds) {
-      // adaptive frontier strategy — see bfsDistancesOn / BroadcastNodeLimit;
-      // r20 two-level min before the union, exactly as in bfsDistancesOn,
-      // and the same per-round eager checkpoint: dist is multiply
-      // referenced per round, so the unmaterialized chain re-executes
-      // 2^rounds subtrees (see bfsDistancesOn for the measured cost)
+      // the two-level min before the union and the per-round eager
+      // checkpoint of bfsDistancesOn, for the same reasons: dist is
+      // referenced twice per round, so an unmaterialized chain re-executes
+      // 2^rounds subtrees
       val next = maybeBroadcast(dist, bcast).join(sym, col("node") === col("u"))
         .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
         .groupBy("node").agg(min("dist").as("dist"))
@@ -803,7 +720,7 @@ object GraphOps {
     val (deg, nNodes) = gateDeg(spark, dir)
     val seed = deg.agg(min(col("node")).as("node"))
     weightedDistancesOn(gateSym(spark, dir, "u", "v", "w"),
-      seed, rounds, nNodes)
+      seed, rounds, broadcastFits("q184 weightedPaths", nNodes))
       .select(col("node"), col("dist").cast("long").as("dist"))
       .orderBy("node")
   }
@@ -845,16 +762,15 @@ object GraphOps {
     }
 
   def itemNeighbors(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    // r20: i reads the pin's v column (the sym relation is symmetric, so
-    // (v, u, w) is the same row set as (u, v, w)) — the per-item k-heap
-    // aggregate then reuses the gate pin's v-partitioning; and the
-    // part-sized count relation is broadcast below the node ceiling
-    // instead of SMJ'd twice (before-plan: 8 exchanges → after: the heap
-    // aggregate alone)
+    // i reads the pin's v column (the sym relation is symmetric, so
+    // (v, u, w) is the same row set as (u, v, w)), so the per-item k-heap
+    // aggregate reuses the gate pin's v-partitioning; and the part-sized
+    // count relation is broadcast below the node ceiling instead of
+    // sort-merge joined twice (8 exchanges against the heap aggregate's one)
     val sym = gateSym(spark, dir, "u", "v", "w")
       .select(col("v").as("i"), col("u").as("j"), col("w"))
     val (degPin, nDeg) = cachedPin(spark, partOrderCountMVPath(spark, dir), PinEdgeLimit)
-    val deg = maybeBroadcast(degPin, nDeg <= BroadcastNodeLimit)
+    val deg = maybeBroadcast(degPin, broadcastFits("q195 itemNeighbors", nDeg))
     val scored = sym
       .join(deg.select(col("pk").as("i"), col("n").as("n_i")), "i")
       .join(deg.select(col("pk").as("j"), col("n").as("n_j")), "j")
@@ -913,17 +829,13 @@ FROM ranked WHERE rk <= $k ORDER BY p_partkey, rk"""
     * — all keyed by node id; labels never exceed |V| rows and lineage cuts
     * per round. The argmax is a hash aggregate (max of a (count, −label)
     * struct), not a window.
-    */
-  def labelPropagation(edges: DataFrame, rounds: Int,
-                       broadcastLabels: Option[Boolean] = None,
-                       delta: Boolean = true): DataFrame = {
-    def sym = edges.select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.select(col("dst").as("u"), col("src").as("v")))
-    labelPropagationOn(sym, sym.select(col("u").as("node")).distinct(),
-      rounds, broadcastLabels, delta)
-  }
-
-  /** LPA over an already-symmetrized (u, v, …) relation + node relation.
+    *
+    * Runs over an already-symmetrized (u, v, …) relation, its node relation
+    * and that relation's row count `nNodes`. `bcast` (see [[broadcastFits]])
+    * broadcasts the node-sized label relations into every round; otherwise
+    * the joins stay shuffled equi-joins (the edge side re-scans from the MV
+    * each round by design, so there is no partitioning to carry across
+    * rounds, and the label shuffle is the bounded cost).
     *
     * NO block-storage pin of the edge relation: the callers feed a
     * materialized parquet MV (or a cheap derivation), and re-referencing it
@@ -931,7 +843,7 @@ FROM ranked WHERE rk <= $k ORDER BY p_partkey, rk"""
     * symmetrized rows (measured OOM at 100× with an eager localCheckpoint
     * here). Only node-sized relations checkpoint per round.
     *
-    * DELTA-FRONTIER rounds (round 12, default on): synchronous LPA makes
+    * DELTA-FRONTIER rounds (default on): synchronous LPA makes
     * round r a pure function of round r−1's labels, so if NO neighbor of v
     * changed label between rounds r−2 and r−1, v's neighbor-label multiset
     * is unchanged and its round-r argmax equals its round-(r−1) label —
@@ -953,26 +865,17 @@ FROM ranked WHERE rk <= $k ORDER BY p_partkey, rk"""
     * the affected-set derivation is a pure extra edge-scan; once the
     * frontier collapses, a delta round touches the tiny frontier's
     * neighborhood instead of all edges — the k-core keep-set discipline
-    * applied to LPA's one asymptote (to-fixpoint runs). Round 1 is always
-    * full (labels just initialized). `delta = false` disables frontier
+    * applied to LPA's one asymptote (to-fixpoint runs). The first round is
+    * always full (labels just initialized). `delta = false` disables frontier
     * rounds entirely; both paths are spec-pinned row-identical (they
     * compute the same recursion by the invariance argument above).
     */
-  def labelPropagationOn(symIn: => DataFrame, nodes: DataFrame, rounds: Int,
-                         broadcastLabels: Option[Boolean] = None,
+  def labelPropagationOn(symIn: => DataFrame, nodes: DataFrame, nNodes: Long,
+                         rounds: Int, bcast: Boolean,
                          delta: Boolean = true): DataFrame = {
     def sym = symIn
-    var labels = nodes.select(col("node"))
-      .withColumn("label", col("node"))
-      .localCheckpoint(true)
-    // adaptive round strategy (see BroadcastNodeLimit): label relation is
-    // exactly node-sized and checkpointed, so its count is free; above the
-    // ceiling the join stays a shuffled equi-join (the edge side re-scans
-    // from the MV each round by design, so there is no partitioning to
-    // carry across rounds — the label shuffle is the bounded cost)
-    val nNodes = labels.count()
-    val bcast = broadcastLabels.getOrElse(nNodes <= BroadcastNodeLimit)
-    var changed = labels.select(col("node")) // round-0 frontier: everyone
+    var labels = nodes.select(col("node")).withColumn("label", col("node"))
+    var changed = labels.select(col("node")) // initial frontier: everyone
     var changedCount = nNodes
     var converged = false
     var r = 1
@@ -998,9 +901,9 @@ FROM ranked WHERE rk <= $k ORDER BY p_partkey, rk"""
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
         .select(col("node"), (-col("m.nl")).as("nl"))
       // (c) carry unaffected labels forward; track the new frontier.
-      // newLabs is node-sized — broadcast it below the ceiling (r20: the
-      // planner SMJ'd two node-sized relations of unknown estimate here,
-      // one exchange + sort pair per round)
+      // newLabs is node-sized — broadcast it below the ceiling, or the
+      // planner sort-merge joins two node-sized relations of unknown
+      // estimate (one exchange + sort pair per round)
       val merged = labels.join(maybeBroadcast(newLabs, bcast), Seq("node"), "left")
         .select(col("node"),
           coalesce(col("nl"), col("label")).as("label"),
@@ -1023,13 +926,15 @@ FROM ranked WHERE rk <= $k ORDER BY p_partkey, rk"""
     * checksum). Delta-frontier rounds — identical labels to the full
     * recomputation by labelPropagationOn's invariance argument.
     */
-  def communityGate(spark: SparkSession, dir: String, rounds: Int = 3): DataFrame =
-    labelPropagationOn(gateSym(spark, dir, "u", "v"),
-      gateDeg(spark, dir)._1.select(col("node")), rounds)
+  def communityGate(spark: SparkSession, dir: String, rounds: Int = 3): DataFrame = {
+    val (deg, nNodes) = gateDeg(spark, dir)
+    labelPropagationOn(gateSym(spark, dir, "u", "v"), deg.select(col("node")),
+      nNodes, rounds, broadcastFits("q206 labelPropagation", nNodes))
       .groupBy("label")
       .agg(count(lit(1)).as("size"), min(col("node")).as("min_node"),
         sum(col("node")).as("node_checksum"))
       .orderBy("label")
+  }
 
   /** The q206 oracle: the same synchronous rounds unrolled, argmax stated
     * as a row_number window over (count DESC, label ASC).
@@ -1076,42 +981,32 @@ FROM l$rounds GROUP BY label ORDER BY label"""
     * Scale shape: one round = one degree aggregate + two semi-join filters
     * of the edge relation against the surviving node set — all keyed by
     * node id; lineage cut per round.
-    */
-  def kCore(edges: DataFrame, k: Int, rounds: Int,
-            broadcastKeep: Option[Boolean] = None): DataFrame = {
-    def sym = edges.select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.select(col("dst").as("u"), col("src").as("v")))
-    kCoreOn(sym, sym.select(col("u")).distinct(), k, rounds, broadcastKeep)
-  }
-
-  /** k-core over an already-symmetrized (u, v, …) relation + node relation
-    * (columns beyond u/v are ignored).
     *
-    * NODE-SET peeling (round 11; replaces per-round DISK_ONLY edge
-    * materialization): because keep_i ⊆ keep_{i-1} (a node outside the
-    * previous keep set has zero induced edges, hence degree < k), the
-    * round-i induced edge relation equals sym ∩ (keep_i × keep_i) — only
-    * the LATEST node-sized keep set is needed to re-derive it from the
-    * edge MV, the labelPropagation re-scan discipline. Per-round state is
-    * one node-sized relation (eagerly checkpointed, tiny); the 240M-row
-    * symmetrized relation is never persisted anywhere. Previously each
-    * round wrote the shrinking edge set DISK_ONLY: 119 s warm at 100×,
-    * dominated by those writes.
+    * Runs over an already-symmetrized (u, v, …) relation (columns beyond
+    * u/v are ignored) and its node relation (u). NODE-SET peeling: because
+    * keep_i ⊆ keep_{i-1} (a node outside the previous keep set has zero
+    * induced edges, hence degree < k), the round-i induced edge relation
+    * equals sym ∩ (keep_i × keep_i) — only the LATEST node-sized keep set is
+    * needed to re-derive it from the edge MV, the labelPropagationOn re-scan
+    * discipline. Per-round state is one node-sized relation (eagerly
+    * checkpointed, tiny); the 240M-row symmetrized relation is never
+    * persisted anywhere (writing the shrinking edge set DISK_ONLY each round
+    * took 119 s warm at 100×, dominated by those writes).
+    *
+    * `bcast` (see [[broadcastFits]]): broadcast the keep set so each round's
+    * two semi-joins stream the edge scan with no edge shuffle; otherwise
+    * they are shuffled equi-joins.
     */
   def kCoreOn(symIn: => DataFrame, nodesIn: DataFrame, k: Int, rounds: Int,
-              broadcastKeep: Option[Boolean] = None): DataFrame = {
+              bcast: Boolean): DataFrame = {
     require(k >= 1, "k-core needs k >= 1")
     def sym = symIn.select(col("u"), col("v"))
-    val nodes = nodesIn.select(col("u")).localCheckpoint(true)
-    // keep is node-sized: broadcast below BroadcastNodeLimit so each
-    // round's two semi-joins stream the edge scan with zero edge shuffle;
-    // above it, shuffled equi-joins (the q98 adaptive branch)
-    val bcast = broadcastKeep.getOrElse(nodes.count() <= BroadcastNodeLimit)
-    // r20: the per-round census groups by the edge TARGET v instead of u —
+    val nodes = nodesIn.select(col("u"))
+    // the per-round census groups by the edge TARGET v instead of u —
     // identical counts because the keep-filtered sym relation stays
     // symmetric ((u,v) survives iff both endpoints survive, so (v,u)
-    // survives too) — which lets the aggregate reuse the gate pin's
-    // v-partitioning: zero edge exchange per peeling round (guide §2.4).
+    // survives too) — so the aggregate reuses the gate pin's
+    // v-partitioning: no edge exchange per peeling round.
     def induced(keepSet: DataFrame) = sym
       .join(maybeBroadcast(keepSet, bcast), "u")
       .join(maybeBroadcast(keepSet.withColumnRenamed("u", "v"), bcast), "v")
@@ -1136,9 +1031,11 @@ FROM l$rounds GROUP BY label ORDER BY label"""
     * degree cascades to an empty graph here, which verifies nothing).
     */
   def kCoreGate(spark: SparkSession, dir: String, k: Int = 60,
-                rounds: Int = 4): DataFrame =
-    kCoreOn(gateSym(spark, dir, "u", "v"),
-      gateDeg(spark, dir)._1.select(col("node").as("u")), k, rounds)
+                rounds: Int = 4): DataFrame = {
+    val (deg, nNodes) = gateDeg(spark, dir)
+    kCoreOn(gateSym(spark, dir, "u", "v"), deg.select(col("node").as("u")), k,
+      rounds, broadcastFits("q211 kCore", nNodes))
+  }
 
   /** The q211 oracle: the same peeling rounds unrolled. */
   def kCoreOracleSql(k: Int = 60, rounds: Int = 4): String = {

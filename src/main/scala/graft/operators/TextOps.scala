@@ -559,8 +559,11 @@ object TextOps {
     * shingle) relation, no aggregation over it, no (doc, shingle) joins.
     * Shingle-less reps are filtered out before banding: an empty array has a
     * null signature, and null band keys would put every such rep in one
-    * bucket. The dir-level `nearDupClusters` stays on the memoized exploded
-    * pairs, which a session's repeated calls reuse (measured there).
+    * bucket. The result reads both pins and the components' pin; a caller
+    * that has materialized what it needs from it frees them with
+    * `SqlShim.releaseLocalCheckpoint(result, docs)`. The dir-level
+    * `nearDupClusters` stays on the memoized exploded pairs, which a
+    * session's repeated calls reuse (measured there).
     */
   def nearDupClustersFrom(docs: DataFrame, threshold: Double): DataFrame = {
     require(threshold > 0,
@@ -625,8 +628,11 @@ object TextOps {
           .join(parent, Seq("label"), "left")
           .select(col("id"), nl2.as("label"), (nl2 < col("label")).as("ch")),
         count(when(col("ch"), 1)).as("shrank"))
-      // cut lineage: each round re-reads the previous round, not the chain
+      // cut lineage: each round re-reads the previous round, not the chain,
+      // and frees it once the next round is pinned
+      val previous = labels
       labels = next.localCheckpoint().select(col("id"), col("label"))
+      org.apache.spark.sql.graft.SqlShim.releaseLocalCheckpoint(previous)
       changed = shrank().getLong(0)
     }
     edges.unpersist()

@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.operators.TextOps
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.SqlShim
 import org.apache.spark.sql.functions._
 
 /** End-to-end training-corpus preparation — the composition the individual
@@ -42,7 +43,9 @@ object CorpusPipeline {
     * the gated cache. The other three are observed while a materialization
     * runs that the pipeline needs anyway: the raw count rides on the gated
     * count, the exact-dedup count on the near-dup pass's first read of the
-    * exact cache, and the final count on the split checkpoint.
+    * exact cache, and the final count on the split checkpoint. The split
+    * pin is released before the run returns, so the profile comes back
+    * collected, as a local relation.
     */
   def runFrom(spark: SparkSession, docs: DataFrame, outDir: Option[String] = None,
               minQuality: Double = 0.5, nearThreshold: Double = 0.9): CorpusResult = {
@@ -90,19 +93,26 @@ object CorpusPipeline {
     // files instead of 3, and 42% more bytes.
     val (assigned, nFinal) = Tables.observedCount(TextOps.splitAssign(survivors, "doc_id"))
     val split = assigned.localCheckpoint()
+    // an observation that arrives empty is recomputed over its relation, so
+    // the counts are read before the relations they observe are freed
+    val Seq(rawRows, exactRows, finalRows) = Seq(nRaw, nExact, nFinal).map(_().getLong(0))
     exact.unpersist()
+    SqlShim.releaseLocalCheckpoint(clusters, docs)
 
     // 7. partitioned write: training jobs read split=train only (pruned scan)
-    outDir.foreach(o => Tables.overwrite(split, o, Seq("split")))
+    // 8. profile, collected so the split pin is released before the run
+    // returns: the result's profile is a local relation of its rows
+    val profile = try {
+      outDir.foreach(o => Tables.overwrite(split, o, Seq("split")))
+      val profiled = split.groupBy("split", "lang")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(size(regexp_extract_all(col("text"), lit("[^\\s]+"), lit(0))))
+            .cast("long").as("n_tokens"),
+          graft.functions.Fx.rd(avg(col("quality_score")), 6).as("avg_quality"))
+        .orderBy("split", "lang")
+      spark.createDataFrame(java.util.Arrays.asList(profiled.collect(): _*), profiled.schema)
+    } finally SqlShim.releaseLocalCheckpoint(split)
 
-    // 8. profile
-    val profile = split.groupBy("split", "lang")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(size(regexp_extract_all(col("text"), lit("[^\\s]+"), lit(0))))
-          .cast("long").as("n_tokens"),
-        graft.functions.Fx.rd(avg(col("quality_score")), 6).as("avg_quality"))
-      .orderBy("split", "lang")
-
-    CorpusResult(nRaw().getLong(0), nQuality, nExact().getLong(0), nFinal().getLong(0), profile)
+    CorpusResult(rawRows, nQuality, exactRows, finalRows, profile)
   }
 }

@@ -1330,8 +1330,8 @@ object StreamingOps {
   /** STREAMING INCREMENTAL INDEX MAINTENANCE (q236, round-15 — VERDICT r14
     * item 4): the bucketed standing sym-adjacency MV (q232's layout)
     * maintained by a STREAM of CDC edge batches — each micro-batch derives
-    * its co-purchase delta edges, applies [[graft.operators.GraphOps
-    * .mergeSymDelta]]'s join-form merge against the CURRENT published MV,
+    * its co-purchase delta edges, merges them with [[graft.operators.GraphOps
+    * .mergeSymDelta]] into the CURRENT published MV,
     * and atomically republishes the merged relation in the same bucketed
     * layout (the q155 CDC-apply discipline meets [[graft.sources.Tables
     * .bucketedMv]]). There is NO state store — the MV is the state: restart

@@ -39,15 +39,17 @@ object SqlShim {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
-  /** Frees the blocks that `pinned`, a `localCheckpoint`, holds, once
-    * nothing will read it again: it cannot be recomputed afterwards.
-    * Without this they stay until the context cleaner collects the RDD,
-    * after a garbage collection on the driver. Unlike `RDD.unpersist`, this
-    * logs no warning for the deliberate release.
+  /** Frees the blocks of the `localCheckpoint`s that `pinned` reads, once
+    * nothing will read them again: they cannot be recomputed afterwards.
+    * RDDs that `keep` reads too (a caller's input) are left alone. Without
+    * this the blocks stay until the context cleaner collects the RDD, after
+    * a garbage collection on the driver. Unlike `RDD.unpersist`, this logs
+    * no warning for the deliberate release.
     */
-  def releaseLocalCheckpoint(pinned: DataFrame): Unit =
-    pinned.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
-      case _ =>
-    }
+  def releaseLocalCheckpoint(pinned: DataFrame, keep: DataFrame*): Unit = {
+    def rdds(df: DataFrame) = df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+    val kept = keep.flatMap(rdds).map(_.id).toSet
+    rdds(pinned).filterNot(r => kept(r.id))
+      .foreach(r => r.sparkContext.unpersistRDD(r.id, blocking = false))
+  }
 }

@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions._
 class CorpusPipelineSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private lazy val fixture = {
+  private lazy val fixture = writeFixture()
+
+  private def writeFixture(): String = {
     val d = tempDir("graft_corpus").toString
     val good = "the quick brown fox jumps over the lazy dog and keeps running through the field " * 3
     Seq(
@@ -116,12 +118,15 @@ class CorpusPipelineSpec extends SparkSpecBase {
       TextOps.dedupKeepBest(gated, "quality_score").count(), written)
   }
 
+  /** Four documents, no two of them near duplicates. */
+  private val distinctTexts = Seq(
+    1L -> "the river runs past the old mill and the stone bridge toward the sea",
+    2L -> "a market opens early in the square where farmers sell green apples",
+    3L -> "winter letters arrive by paper at the quiet harbor office every week",
+    4L -> "engines of copper hum in the garden shed beside the north window")
+
   test("the observed stage counts equal each stage's own count") {
-    val distinct = writeDocs(Seq(
-      1L -> "the river runs past the old mill and the stone bridge toward the sea",
-      2L -> "a market opens early in the square where farmers sell green apples",
-      3L -> "winter letters arrive by paper at the quiet harbor office every week",
-      4L -> "engines of copper hum in the garden shed beside the north window"))
+    val distinct = writeDocs(distinctTexts)
     val corpora = Seq("fixture" -> fixture, "generated" -> generated,
       "empty" -> writeDocs(Nil), "no near-dup pair" -> distinct)
     val counts = corpora.map { case (name, dir) =>
@@ -155,11 +160,28 @@ class CorpusPipelineSpec extends SparkSpecBase {
   }
 
   test("a run leaves no relation cached behind") {
-    // a corpus of its own: a relation an earlier run left cached would make
+    // corpora of its own: a relation an earlier run left cached would make
     // this run's cache() calls no-ops and hide the leak
-    val before = TestCacheManager.entries(spark)
-    CorpusPipeline.run(spark, writeGenerated(), None).profile.collect()
-    assert(TestCacheManager.entries(spark) == before)
+    val sc = spark.sparkContext
+    val corpora = Seq("generated" -> writeGenerated(), "fixture" -> writeFixture(),
+      "empty" -> writeDocs(Nil), "no near-dup pair" -> writeDocs(distinctTexts))
+    for ((name, dir) <- corpora) {
+      val (cached, pinned) = (TestCacheManager.entries(spark), sc.getPersistentRDDs.keySet)
+      CorpusPipeline.run(spark, dir, None).profile.collect()
+      assert(TestCacheManager.entries(spark) == cached, name)
+      assert((sc.getPersistentRDDs.keySet -- pinned).isEmpty, name)
+    }
+  }
+
+  test("runFrom frees its own pins, not a pinned input of the caller's") {
+    val sc = spark.sparkContext
+    val pinned = sc.getPersistentRDDs.keySet
+    val docs = Tables.documents(spark, writeDocs(distinctTexts)).localCheckpoint()
+    try {
+      CorpusPipeline.runFrom(spark, docs, None)
+      assert(docs.count() == distinctTexts.size.toLong)
+      assert((sc.getPersistentRDDs.keySet -- pinned).size == 1)
+    } finally org.apache.spark.sql.graft.SqlShim.releaseLocalCheckpoint(docs)
   }
 
   test("the write keeps one data file per split directory") {

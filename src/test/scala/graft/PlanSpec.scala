@@ -181,8 +181,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("q98 pagerank iteration: rank relation broadcasts; adjacency never re-shuffles") {
-    val edges = graft.operators.GraphOps.copurchaseEdges(spark, sf)
-    val df = graft.operators.GraphOps.pageRank(edges, 2)
+    val df = SparkEntry.queries("q98_copurchase_pagerank")(spark, sf)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),

@@ -59,7 +59,7 @@ locally {
   t("q98_symscan_noop") { symPin.write.format("noop").mode("overwrite").save() }
   for (it <- Seq(1, 3, 5))
     t(s"q98_pageRankOn_iter$it") {
-      GraphOps.pageRankOn(symPin, degPin, it).write.format("noop").mode("overwrite").save()
+      GraphOps.pageRankOn(symPin, degPin, it, bcast = true).write.format("noop").mode("overwrite").save()
     }
   // one raw iteration body: join + agg only
   t("q98_one_contrib_agg") {
