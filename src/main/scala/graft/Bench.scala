@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.queries.{Count, QuerySpec, Sink}
 
 /** Benchmark main: one JSON line with per-query and total wall-clock at
   * `SPARK_GRAFT_SF_DIR`.
@@ -99,50 +100,25 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/bench.json")
     val mergedFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_MERGED", "/tmp/bench2_merged.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // default codegen class cache (100 entries) evicts between the warmup
-      // and timed passes of 50+ queries, putting janino recompiles of the
-      // widest stages back into the timed numbers
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Registry.session()
 
-    // optional comma-separated subset for DIAGNOSTIC sessions (e.g. session-
-    // pressure bisects: does a query family time differently in a small
-    // session than inside the full 200+-query surface?). The driver never
-    // sets it; bench2 merge eligibility is unaffected because the merge
-    // already requires identical query SETS between passes.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = only.fold(SparkEntry.queries)(f =>
-      SparkEntry.queries.filter { case (n, _) => f(n) }).toSeq.sortBy(_._1)
-    require(ordered.nonEmpty, "no queries registered in SparkEntry.queries — refusing to emit an empty bench")
+    // optional subset (`SPARK_GRAFT_ONLY`) for diagnostic sessions; bench2
+    // merge eligibility is unaffected because the merge already requires
+    // identical query sets between passes.
+    val only = Registry.only()
+    val ordered = Registry.selected(only).sortBy(_.name)
+    require(ordered.nonEmpty, "no queries registered — refusing to emit an empty bench")
 
-    // SINK-MEASURED queries (round-14, VERDICT r13 item 1): the cleaner
-    // family's result joins a per-doc aggregate back to the unique-keyed
-    // base relation, so a bare count() lets Catalyst eliminate the entire
-    // clean through the left join (q214 timed 0.20 s as a doc census while
-    // the real clean costs 38.8 s at 100× — the r13 measurement lie, proven
-    // in SCALING.md). These queries are timed TO A PARQUET SINK, which
-    // materializes every column; the artifact records the set so the
-    // committed numbers are self-describing.
-    val sinkMeasured: Set[String] = Set(
-      "q214_span_cut", "q220_stream_span_cut", "q222_benchmark_decontam",
-      "q226_chunk_dedup_clean", "q228_novelty_curve", "q230_stream_decontam",
-      "q235_multibench_decontam", "q239_stream_multibench_decontam")
+    // each spec's `measure` picks the timed action (see graft.queries.Sink);
+    // the artifact records the sink-measured set so its numbers are
+    // self-describing
     val sinkDir = java.nio.file.Files.createTempDirectory("graft_bench_sink")
-    def timeAction(name: String,
-                   df: org.apache.spark.sql.DataFrame): Unit =
-      if (sinkMeasured(name))
-        df.write.mode("overwrite").parquet(sinkDir.resolve(name).toString)
-      else { df.count(); () }
+    def timeAction(spec: QuerySpec): Unit = spec.measure match {
+      case Sink => spec.build(spark, sfDir).write.mode("overwrite").parquet(sinkDir.resolve(spec.name).toString)
+      case Count => spec.build(spark, sfDir).count(); ()
+    }
 
     // warmup: one full pass at the TARGET SF so the timed pass measures
     // steady-state throughput — warming at a smaller SF leaves janino
@@ -150,8 +126,8 @@ object Bench {
     // (broadcast vs shuffle) at different input sizes. The warmup runs the
     // SAME action as the timed pass (a count-warmed write plan would leave
     // the write path's codegen cold).
-    ordered.foreach { case (name, fn) =>
-      try timeAction(name, fn(spark, sfDir)) catch { case _: Throwable => () }
+    ordered.foreach { spec =>
+      try timeAction(spec) catch { case _: Throwable => () }
     }
 
     // HOST-SPEED CANARY (round-12, VERDICT r11 item 5): a fixed,
@@ -217,11 +193,11 @@ object Bench {
     // numbers WORSE (44.1 s vs 40.9 s single-JVM on the q50–q99 slice), so
     // per-query collections stay out of the timed loop.)
     def timedPass(): Seq[(String, Double, Option[String])] =
-      ordered.map { case (name, fn) =>
+      ordered.map { spec =>
         val t0 = System.nanoTime()
-        val err = try { timeAction(name, fn(spark, sfDir)); None }
+        val err = try { timeAction(spec); None }
                   catch { case e: Throwable => Some(e.toString.takeWhile(_ != '\n').take(200)) }
-        (name, (System.nanoTime() - t0) / 1e9, err)
+        (spec.name, (System.nanoTime() - t0) / 1e9, err)
       }
     val passes = Seq(timedPass(), timedPass(), timedPass())
     // the sink dir holds one cleaner-family result set per pass — delete it
@@ -281,13 +257,13 @@ object Bench {
       s"\"" + k + "\":\"" + jsonEscape(e) + "\""
     }.mkString("{", ",", "}")
     val total = finalQueries.values.sum
-    // the BENCH_ONLY filter (or its absence) is recorded so a partial
+    // the subset filter (or its absence) is recorded so a partial
     // diagnostic artifact is mechanically distinguishable from a full run
     // (ADVICE r11) — a lingering export can no longer masquerade as the
     // full surface
     val filterField = only.fold("none")(f => f.toSeq.sorted.mkString(","))
-    val sinkField = ordered.map(_._1).filter(sinkMeasured)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val sinkField = ordered.filter(_.measure == Sink)
+      .map("\"" + _.name + "\"").mkString("[", ",", "]")
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","protocol":"$protocol","runs":$totalRuns,"src_sha":"$sha","data_sha":"$dSha","host_canary_sec":$hostCanary,"host_canary_shuffle_sec":$hostCanaryShuffle,"sink_measured":$sinkField,"filter":"$filterField"}"""
     println(json)
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),

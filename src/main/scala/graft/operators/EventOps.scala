@@ -59,10 +59,6 @@ object EventOps {
     * the data even if two touches share a nanosecond. All time arithmetic is
     * on the raw nanosecond longs.
     */
-  def lastTouchAttribution(spark: SparkSession, dir: String,
-                           windowMinutes: Long = 1440L): DataFrame =
-    lastTouchAttributionFrom(Tables.events(spark, dir), windowMinutes)
-
   def lastTouchAttributionFrom(ev: DataFrame, windowMinutes: Long): DataFrame = {
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts_ns"), col("event_id"))
@@ -142,9 +138,6 @@ object EventOps {
     * the carry itself (the level standing at midnight). All arithmetic is
     * int64 on raw nanoseconds — hash-exact cross-engine with no float path.
     */
-  def peakConcurrency(spark: SparkSession, dir: String, gapMinutes: Int = 30): DataFrame =
-    peakConcurrencyFrom(Tables.events(spark, dir), gapMinutes)
-
   def peakConcurrencyFrom(events: DataFrame, gapMinutes: Int): DataFrame = {
     val nsPerDay = 86400000000000L
     val iv = sessionIntervals(events, gapMinutes)

@@ -10,21 +10,18 @@ import org.apache.spark.sql.functions._
 /** Similarity search over the `embeddings` table (north-star extension).
   *
   * Two tiers, per the standard ANN playbook:
-  *  - `bruteKnn`: exact top-k — broadcast the (small) query set against the
+  *  - `bruteKnnFrom`: exact top-k — broadcast the (small) query set against the
   *    full corpus; one scan, no shuffle of the corpus, codegen'd cosine. At
   *    100 TB this is the "small query batch × huge corpus" shape: corpus stays
   *    partition-local, per-partition top-k folds into a global
   *    TakeOrderedAndProject.
-  *  - `lshKnn`: approximate — random-hyperplane signatures bucket the corpus;
+  *  - `lshKnnFrom`: approximate — random-hyperplane signatures bucket the corpus;
   *    queries probe their own bucket plus all Hamming-1 neighbors (multi-probe)
   *    so candidate count ~ corpus/2^bits × (bits+1), independent of corpus².
   */
 object Similarity {
 
   /** Exact top-k cosine neighbors for each query vector (`vec_id < nQueries`). */
-  def bruteKnn(spark: SparkSession, dir: String, nQueries: Int, k: Int): DataFrame =
-    bruteKnnFrom(Tables.embeddings(spark, dir), nQueries, k)
-
   def bruteKnnFrom(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
     val q = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").cast("array<double>").as("qe"))
@@ -76,10 +73,6 @@ object Similarity {
     */
   private def buckets(vec: org.apache.spark.sql.Column, dim: Int) =
     graft.functions.VectorFunctions.lshBuckets(vec, planes(dim), Tables_L, Bits_B)
-
-  /** Approximate top-k over the testdata embeddings (see `lshKnnFrom`). */
-  def lshKnn(spark: SparkSession, dir: String, nQueries: Int, k: Int, dim: Int = 64): DataFrame =
-    lshKnnFrom(Tables.embeddings(spark, dir), nQueries, k, dim)
 
   /** Approximate top-k cosine neighbors via multi-table LSH with Hamming-1
     * multi-probe. The corpus index is n·L rows keyed by (table, bucket); the
@@ -196,10 +189,6 @@ object Similarity {
     * Same multi-table Hamming-1 multi-probe as [[lshKnnIndexed]]; recall vs
     * the float path is floored by AnnRecallSpec at the registered config.
     */
-  def int8Knn(spark: SparkSession, dir: String, nQueries: Int, k: Int,
-              dim: Int = 64, rescoreFactor: Int = 4): DataFrame =
-    int8KnnFrom(Tables.embeddings(spark, dir), nQueries, k, dim, rescoreFactor)
-
   def int8KnnFrom(embeddings: DataFrame, nQueries: Int, k: Int,
                   dim: Int = 64, rescoreFactor: Int = 4): DataFrame =
     int8KnnIndexed(int8QuantizeFrom(embeddings), embeddings, nQueries, k, dim, rescoreFactor)
@@ -534,17 +523,6 @@ object Similarity {
       .orderBy(col("sim").desc, col("vec_a").asc, col("vec_b").asc)
   }
 
-  /** IVF (inverted-file) approximate kNN: a coarse quantizer assigns every
-    * vector to its nearest centroid cell; queries probe only the `nProbe`
-    * nearest cells. Here the quantizer is the per-label centroid set (a
-    * deterministic stand-in for trained k-means centroids — same index
-    * structure and probe mechanics). Corpus side scans once to build the
-    * cell assignment; query side touches |cells probed| / |cells| of the
-    * corpus — the inverted-list contract that makes kNN sublinear at scale.
-    */
-  def ivfKnn(spark: SparkSession, dir: String, nQueries: Int, k: Int, nProbe: Int = 3): DataFrame =
-    ivfKnnFrom(Tables.embeddings(spark, dir), nQueries, k, nProbe)
-
   /** Lloyd's k-means over embeddings, expressed as DataFrame ops: assignment
     * is a broadcast cross join against the (tiny) centroid relation + argmax,
     * the update is one hash aggregation per iteration. The per-iteration cost
@@ -671,7 +649,7 @@ object Similarity {
 
   /** q237/q238 knobs pinned ONCE (ADVICE r15 — the q234 `DriftSplitMod`
     * discipline): the engine defaults and the DuckDB oracle CTEs
-    * (`SparkEntry.KmeansCellsSplitCtes` + the q237/q238 oracle SQL)
+    * (`SimilarityQueries.KmeansCellsSplitCtes` + the q237/q238 oracle SQL)
     * interpolate these same vals, so a knob change cannot silently break
     * parity — both sides move together or the diff shows the tie. */
   val IvfNQueries = 5
@@ -808,8 +786,14 @@ object Similarity {
       k)
   }
 
-  /** Core IVF over any (vec_id, label, embedding) relation; `label` seeds the
-    * coarse centroids.
+  /** IVF (inverted-file) approximate kNN: a coarse quantizer assigns every
+    * vector to its nearest centroid cell; queries probe only the `nProbe`
+    * nearest cells. Here the quantizer is the per-label centroid set (a
+    * deterministic stand-in for trained k-means centroids — same index
+    * structure and probe mechanics). Corpus side scans once to build the
+    * cell assignment; query side touches |cells probed| / |cells| of the
+    * corpus — the inverted-list contract that makes kNN sublinear at scale.
+    * Works over any (vec_id, label, embedding) relation.
     */
   def ivfKnnFrom(embeddings: DataFrame, nQueries: Int, k: Int, nProbe: Int): DataFrame = {
     val emb = embeddings
@@ -1593,7 +1577,7 @@ object Similarity {
     * is identical under ANY batching of the delta (the q240 argument);
     * fully oracled: per-subspace split-trained Lloyd replays, the code
     * assignment, the ADC lookup tables, and the left-associated m-term
-    * score are all portable SQL (`SparkEntry.pqSplitOracleSql`).
+    * score are all portable SQL (`SimilarityQueries.pqOracleSql`).
     *
     * CODEBOOK-DRIFT POLICY (the q234 discipline applied to quantization):
     * fixed books quantize DRIFTED arrivals with growing reconstruction

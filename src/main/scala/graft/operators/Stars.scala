@@ -130,9 +130,6 @@ object Stars {
     * customer is (o_orderdate, o_orderkey) — orderkey breaks date ties
     * deterministically.
     */
-  def statusIntervals(spark: SparkSession, dir: String): DataFrame =
-    statusIntervalsFrom(Tables.orders(spark, dir))
-
   def statusIntervalsFrom(orders: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))

@@ -141,7 +141,7 @@ object TextOps {
       .limit(k)
   }
 
-  // visible to graft (not private): SparkEntry's MinhashPairsCtes oracle
+  // visible to graft (not private): TextQueries' MinhashPairsCtes oracle
   // interpolates the SAME structural knobs, so engine and oracle cannot
   // drift apart silently (the q234/q237 knob-pinning discipline)
   private[graft] val NumPerms = 32
@@ -706,9 +706,6 @@ object TextOps {
     * (shard, shingle) pairs, never corpus²; the cumulative-vocabulary
     * window runs over the nShards-row result relation, not the corpus.
     */
-  def noveltyCurve(spark: SparkSession, dir: String, nShards: Int = 10): DataFrame =
-    noveltyCurveFrom(Tables.documents(spark, dir), nShards)
-
   def noveltyCurveFrom(docs: DataFrame, nShards: Int): DataFrame = {
     require(nShards > 0, s"nShards must be positive, got $nShards")
     val sharded = docs.select(col("doc_id"),
@@ -1371,9 +1368,6 @@ ORDER BY c.shard"""
     * — no pair space; the per-lang totals relation is lang-cardinality and
     * broadcast.
     */
-  def unigramSurprisal(spark: SparkSession, dir: String): DataFrame =
-    unigramSurprisalFrom(Tables.documents(spark, dir))
-
   def unigramSurprisalFrom(docs: DataFrame): DataFrame = {
     val tok = docs
       .select(col("doc_id"), col("lang"), tokens(col("text")).as("toks"))
@@ -1409,9 +1403,6 @@ ORDER BY c.shard"""
     * on doc_id order, so the result is deterministic regardless of where
     * the sampled partition bounds land.
     */
-  def packSequences(spark: SparkSession, dir: String, budget: Long): DataFrame =
-    packSequencesFrom(Tables.documents(spark, dir), budget)
-
   def packSequencesFrom(docs: DataFrame, budget: Long): DataFrame =
     packOffsetsFrom(docs, budget).orderBy("doc_id")
 
@@ -1465,9 +1456,6 @@ ORDER BY c.shard"""
     * any document shorter than `budget`), so no join, no window, no
     * re-shuffle is added on top of the offsets pass.
     */
-  def packedSpans(spark: SparkSession, dir: String, budget: Long): DataFrame =
-    packedSpansFrom(Tables.documents(spark, dir), budget)
-
   def packedSpansFrom(docs: DataFrame, budget: Long): DataFrame = {
     val b = lit(budget)
     packOffsetsFrom(docs, budget)
@@ -1591,9 +1579,6 @@ ORDER BY c.shard"""
     * have identical shingle sets, so members inherit their rep's
     * containment values exactly; intra-cluster pairs are (1, 1, 1)).
     */
-  def containmentPairs(spark: SparkSession, dir: String, k: Int): DataFrame =
-    containmentPairsFrom(Tables.documents(spark, dir), k)
-
   def containmentPairsFrom(docs: DataFrame, k: Int): DataFrame = {
     val base = dedupBaseFrom(docs, bucketed = true)
     val sh = base.repSh
@@ -1653,9 +1638,6 @@ ORDER BY c.shard"""
     * aggregation on (source, digest). At 100 TB the distinct-digest
     * relation is the dedup store a chunk-level storage system maintains.
     */
-  def cdcChunkProfile(spark: SparkSession, dir: String): DataFrame =
-    cdcChunkProfileFrom(Tables.documents(spark, dir))
-
   def cdcChunkProfileFrom(docs: DataFrame): DataFrame = {
     val L = length(col("norm"))
     // boundary positions: 1 plus every i in [2, L-7] whose 8-char window
@@ -1689,9 +1671,6 @@ ORDER BY c.shard"""
     * window runs over the aggregated pair vocabulary (like TF-IDF's), never
     * the corpus pair stream.
     */
-  def bpePairStats(spark: SparkSession, dir: String, k: Int): DataFrame =
-    bpePairStatsFrom(Tables.documents(spark, dir), k)
-
   def bpePairStatsFrom(docs: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("lang").orderBy(col("cnt").desc, col("pair"))
@@ -1733,9 +1712,6 @@ ORDER BY c.shard"""
     * rounds. Languages whose vocabulary runs out of pairs drop out (inner
     * join) — impossible on real text with small k.
     */
-  def bpeTrainMerges(spark: SparkSession, dir: String, k: Int): DataFrame =
-    bpeTrainMergesFrom(Tables.documents(spark, dir), k)
-
   def bpeTrainMergesFrom(docs: DataFrame, k: Int): DataFrame = {
     val wSel = org.apache.spark.sql.expressions.Window
       .partitionBy("lang").orderBy(col("cnt").desc, col("pair"))
@@ -1790,9 +1766,6 @@ ORDER BY c.shard"""
     * ran dry) keeps its shorter chain via the null-guarded fold — mirrored
     * by the oracle's LEFT JOIN per step.
     */
-  def bpeEncode(spark: SparkSession, dir: String, k: Int): DataFrame =
-    bpeEncodeFrom(Tables.documents(spark, dir), k)
-
   def bpeEncodeFrom(docs: DataFrame, k: Int): DataFrame = {
     val mergeTable = bpeTrainMergesFrom(docs, k)
       .groupBy("lang")
@@ -1853,9 +1826,6 @@ ORDER BY c.shard"""
     * map against broadcast cutoffs); the registered exact form is the
     * deterministic contract that variant is validated against.
     */
-  def surprisalBuckets(spark: SparkSession, dir: String): DataFrame =
-    surprisalBucketsFrom(Tables.documents(spark, dir))
-
   def surprisalBucketsFrom(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("lang").orderBy(col("avg_surprisal"), col("doc_id"))
@@ -1887,9 +1857,6 @@ ORDER BY c.shard"""
     * second "global" aggregate runs over #sources rows). No window, no
     * join back to the corpus.
     */
-  def mixtureWeights(spark: SparkSession, dir: String): DataFrame =
-    mixtureWeightsFrom(Tables.documents(spark, dir))
-
   def mixtureWeightsFrom(docs: DataFrame): DataFrame = {
     val per = docs
       .select(col("source"),
@@ -1934,10 +1901,6 @@ ORDER BY c.shard"""
     * carries k rows per partition, not the corpus. The doc-metadata join at
     * the end broadcasts the n selected ids.
     */
-  def dsirResample(spark: SparkSession, dir: String, targetLang: String = "en",
-                   buckets: Int = 256, n: Int = 50): DataFrame =
-    dsirResampleFrom(Tables.documents(spark, dir), targetLang, buckets, n)
-
   def dsirResampleFrom(docs: DataFrame, targetLang: String, buckets: Int,
                        n: Int): DataFrame = {
     val tok = docs
@@ -1985,10 +1948,6 @@ ORDER BY c.shard"""
     * full corpus would serialize through one window partition, while
     * ordering by the hash key is a range-partitioned distributed sort.
     */
-  def epochShufflePlan(spark: SparkSession, dir: String,
-                       budget: Long, epochs: Int): DataFrame =
-    epochShufflePlanFrom(Tables.documents(spark, dir), budget, epochs)
-
   def epochShufflePlanFrom(docs: DataFrame, budget: Long, epochs: Int): DataFrame = {
     require(epochs >= 1, s"epochs must be >= 1, got $epochs")
     val seqs = packedSpansFrom(docs, budget)
@@ -2015,9 +1974,6 @@ ORDER BY c.shard"""
     * the coverage count is one per-doc aggregation. No pair space anywhere:
     * corpus-duplication is read off the df aggregate, never off a self-join.
     */
-  def dupPassageCoverage(spark: SparkSession, dir: String): DataFrame =
-    dupPassageCoverageFrom(Tables.documents(spark, dir))
-
   def dupPassageCoverageFrom(docs: DataFrame): DataFrame = {
     val tok = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
     val base = tok.select(col("doc_id"), size(col("toks")).cast("long").as("n_tokens"))
@@ -2648,10 +2604,6 @@ ORDER BY n.doc_id"""
     * single-partition window, which would serialize 100 TB through one
     * task. Scoring is one codegen'd projection over the corpus.
     */
-  def tokenBudgetSelect(spark: SparkSession, dir: String,
-                        budget: Long): DataFrame =
-    tokenBudgetSelectFrom(Tables.documents(spark, dir), budget)
-
   def tokenBudgetSelectFrom(docs: DataFrame, budget: Long): DataFrame = {
     require(budget > 0, s"token budget must be positive, got $budget")
     val spark = docs.sparkSession
@@ -2811,10 +2763,6 @@ FROM bk ORDER BY doc_id"""
     * per-source window (few sources ⇒ the window serializes the corpus
     * through #sources tasks at 100 TB).
     */
-  def mixtureBudgetSelect(spark: SparkSession, dir: String,
-                          budget: Long): DataFrame =
-    mixtureBudgetSelectFrom(Tables.documents(spark, dir), budget)
-
   def mixtureBudgetSelectFrom(docs: DataFrame, budget: Long): DataFrame = {
     require(budget > 0, s"token budget must be positive, got $budget")
     val spark = docs.sparkSession
@@ -2911,7 +2859,7 @@ FROM c JOIN bud b ON c.source = b.source
 WHERE c.tokens_before < b.source_budget ORDER BY c.doc_id"""
 
   /** CHUNK-LEVEL DEDUP CLEANER (q226) — the storage-dedup discipline
-    * ([[cdcChunkProfile]], q92) applied as CORPUS CLEANING: q92 only
+    * ([[cdcChunkProfileFrom]], q92) applied as CORPUS CLEANING: q92 only
     * CENSUSES duplicated content-defined chunks; this drops, per document,
     * every chunk whose digest occurs in more than `dfLimit` documents and
     * reassembles the survivors in order — cross-document boilerplate and
@@ -2930,10 +2878,6 @@ WHERE c.tokens_before < b.source_budget ORDER BY c.doc_id"""
     * vocabulary); the digest join is a keyed equi-join; reassembly is the
     * q214 per-doc re-collect — one doc_id shuffle, no pair space.
     */
-  def chunkDedupClean(spark: SparkSession, dir: String,
-                      dfLimit: Long = 1L): DataFrame =
-    chunkDedupCleanFrom(Tables.documents(spark, dir), dfLimit)
-
   def chunkDedupCleanFrom(docs: DataFrame, dfLimit: Long): DataFrame = {
     val L = length(col("norm"))
     // identical boundary rule to [[cdcChunkProfileFrom]] (md5 nibble-0 on
@@ -3022,10 +2966,6 @@ FROM k GROUP BY doc_id ORDER BY doc_id"""
     * ≤ |terms| contributions. Ranking sorts the rounded score so the
     * (score, doc_id) tie-break is engine-stable.
     */
-  def bm25TopDocs(spark: SparkSession, dir: String,
-                  terms: Seq[String], k: Int): DataFrame =
-    bm25TopDocsFrom(Tables.documents(spark, dir), terms, k)
-
   def bm25TopDocsFrom(docs: DataFrame, terms: Seq[String], k: Int): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
     // k1 = 1.2, b = 0.75, written as the PRE-FOLDED double literals 2.2 /
@@ -3079,9 +3019,6 @@ FROM k GROUP BY doc_id ORDER BY doc_id"""
     * double — ln is deterministic on-host and a rank flip would need two
     * keys within one ulp of each other.
     */
-  def weightedSample(spark: SparkSession, dir: String, k: Int): DataFrame =
-    weightedSampleFrom(Tables.documents(spark, dir), k)
-
   def weightedSampleFrom(docs: DataFrame, k: Int): DataFrame = {
     val maxU = math.pow(16.0, 15) // 15 hex digits: fits a long exactly
     val u = (conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
@@ -3633,10 +3570,6 @@ FROM r WHERE rk <= $cap ORDER BY domain, rk"""
     * ⌈n/stride⌉ rows per doc) with the slice + hash computed inside the
     * projection; no join, no window, no shuffle beyond the final sort.
     */
-  def ragChunks(spark: SparkSession, dir: String,
-                size: Int, stride: Int): DataFrame =
-    ragChunksFrom(Tables.documents(spark, dir), size, stride)
-
   def ragChunksFrom(docs: DataFrame, chunkSize: Int, stride: Int): DataFrame = {
     require(chunkSize > 0 && stride > 0 && stride <= chunkSize,
       s"need 0 < stride <= size, got size=$chunkSize stride=$stride")
@@ -3680,9 +3613,6 @@ FROM r WHERE rk <= $cap ORDER BY domain, rk"""
     * broadcast; bigrams come from a per-row array transform (no window, no
     * lag shuffle).
     */
-  def bigramSurprisal(spark: SparkSession, dir: String): DataFrame =
-    bigramSurprisalFrom(Tables.documents(spark, dir))
-
   def bigramSurprisalFrom(docs: DataFrame): DataFrame = {
     val base = docs.select(col("doc_id"), col("lang"), tokens(col("text")).as("toks"))
     val bigrams = base
@@ -3727,11 +3657,8 @@ FROM r WHERE rk <= $cap ORDER BY domain, rk"""
     * range-sort, not a single-partition funnel — and at 100 TB the
     * production variant computes per-lang quantile cutoffs on a sample and
     * assigns by broadcast comparison, validated against this exact contract,
-    * the same pattern as [[surprisalBuckets]]).
+    * the same pattern as [[surprisalBucketsFrom]]).
     */
-  def qualityCalibration(spark: SparkSession, dir: String): DataFrame =
-    qualityCalibrationFrom(Tables.documents(spark, dir))
-
   def qualityCalibrationFrom(docs: DataFrame): DataFrame = {
     val scored = docs.select(col("doc_id"), col("lang"),
       rd(qualityScore(col("text")), 6).as("quality_score"))

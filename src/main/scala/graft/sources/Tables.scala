@@ -544,15 +544,20 @@ object Tables {
     *     the gate splits included.
     *   - Lock: one monitor per (name, fp); racing threads build once,
     *     different entries build in parallel.
-    *   - Publish: `write` fills a private temp `.<name>_<fp>.tmp-<uuid>`
-    *     (it may stamp mtimes or add files before the rename; it must leave
-    *     a `_SUCCESS` marker, as Spark's writers do), which
-    *     [[publishMv]] renames into place. Two JVMs racing to publish the
-    *     same entry keep one copy; both built the same deterministic
-    *     relation. The marker is checked after publish, a markerless
-    *     directory at the path is rebuilt, and `refresh` rebuilds anyway.
-    *     After a publish, `published` runs under the lock (catalog and
-    *     listing-cache invalidation), then [[vacuumMvs]] sweeps `name`.
+    *   - Publish: `write` fills a private temp `<name>_<fp>` inside the
+    *     hidden staging directory `.<name>_<fp>.tmp-<uuid>` (it may stamp
+    *     mtimes or add files before the rename; it must leave a `_SUCCESS`
+    *     marker, as Spark's writers do), which [[publishMv]] renames into
+    *     place. The temp's own name is not hidden: Spark ignores a `.`- or
+    *     `_`-prefixed leaf, so a writer that resolves its output as a
+    *     relation (the bucketed MVs' `saveAsTable`) would find no files.
+    *     Two JVMs racing to publish the same entry keep one copy; both
+    *     built the same deterministic relation. The marker is checked
+    *     after publish, a markerless directory at the path is rebuilt, and
+    *     `refresh` rebuilds anyway. The staging directory is deleted
+    *     whether the build succeeds or throws. After a publish,
+    *     `published` runs under the lock (catalog and listing-cache
+    *     invalidation), then [[vacuumMvs]] sweeps `name`.
     *   - Liveness: a build temp is live while its newest file is younger
     *     than [[MvVacuumGraceMs]] (see [[vacuumMvs]]).
     *   - Two sources under one name: the fingerprint covers the absolute
@@ -573,12 +578,15 @@ object Tables {
     val mv = root.resolve(s"${name}_$fp")
     mvLocks.computeIfAbsent(s"${name}_$fp", _ => new Object).synchronized {
       if (refresh || !Files.exists(mv.resolve("_SUCCESS"))) {
-        val tmp = root.resolve(s".${name}_$fp.tmp-${java.util.UUID.randomUUID()}")
-        write(tmp)
-        // re-checked: another JVM may have published since the check above
-        if (Files.exists(mv) && (refresh || !Files.exists(mv.resolve("_SUCCESS"))))
-          deleteRecursively(mv)
-        publishMv(tmp, mv)
+        val staging = root.resolve(s".${name}_$fp.tmp-${java.util.UUID.randomUUID()}")
+        val tmp = staging.resolve(mv.getFileName)
+        try {
+          write(tmp)
+          // re-checked: another JVM may have published since the check above
+          if (Files.exists(mv) && (refresh || !Files.exists(mv.resolve("_SUCCESS"))))
+            deleteRecursively(mv)
+          publishMv(tmp, mv)
+        } finally deleteRecursively(staging)
         require(Files.exists(mv.resolve("_SUCCESS")), s"MV publish failed: $mv")
         published(mv)
         vacuumMvs(name, fp)

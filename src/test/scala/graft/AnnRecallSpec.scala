@@ -140,7 +140,7 @@ class AnnRecallSpec extends SparkSpecBase {
 
   test("q73 registered config at sf0.1: recall@3 ≥ 0.7; exhaustive probe ≡ brute force") {
     val emb = Tables.embeddings(spark, sf01)
-    val brute = knnSet(Similarity.bruteKnn(spark, sf01, 5, 3))
+    val brute = knnSet(Similarity.bruteKnnFrom(Tables.embeddings(spark, sf01), 5, 3))
     val ivf3 = knnSet(SparkEntry.queries("q73_ivf_knn_kmeans")(spark, sf01))
     val recall = brute.intersect(ivf3).size.toDouble / brute.size
     assert(recall >= 0.7, f"registered nProbe=3 recall@3 $recall%.3f < 0.7 (measured 0.733)")
@@ -161,8 +161,8 @@ class AnnRecallSpec extends SparkSpecBase {
     */
   test("q125 int8 ANN at sf0.1: recall vs float LSH ≥ 0.9 (measured 1.0), end-to-end within the LSH envelope; persisted tinyint index ≡ in-session") {
     val emb = Tables.embeddings(spark, sf01)
-    val brute = knnSet(Similarity.bruteKnn(spark, sf01, 5, 3))
-    val float = knnSet(Similarity.lshKnn(spark, sf01, 5, 3))
+    val brute = knnSet(Similarity.bruteKnnFrom(Tables.embeddings(spark, sf01), 5, 3))
+    val float = knnSet(Similarity.lshKnnFrom(Tables.embeddings(spark, sf01), 5, 3))
     val int8 = knnSet(SparkEntry.queries("q125_int8_knn")(spark, sf01))
     val vsFloat = int8.intersect(float).size.toDouble / float.size
     val vsBrute = int8.intersect(brute).size.toDouble / brute.size
@@ -201,7 +201,7 @@ class AnnRecallSpec extends SparkSpecBase {
     * DEDUP_QUALITY.md §int8-IVF.
     */
   test("q240 int8 IVF chain at sf0.1: recall vs the float durable probe ≥ 0.9 (measured 1.0); bucketing envelope shared") {
-    val brute = knnSet(Similarity.bruteKnn(spark, sf01, 5, 3))
+    val brute = knnSet(Similarity.bruteKnnFrom(Tables.embeddings(spark, sf01), 5, 3))
     val float = knnSet(Similarity.ivfDurableRefreshBucketed(spark, sf01))
     val int8 = knnSet(Similarity.int8IvfDurableRefresh(spark, sf01))
     val vsFloat = int8.intersect(float).size.toDouble / float.size

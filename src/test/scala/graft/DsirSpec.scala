@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.TextOps
+import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
 class DsirSpec extends SparkSpecBase {
@@ -54,7 +55,7 @@ class DsirSpec extends SparkSpecBase {
   }
 
   test("n caps the selection on real testdata and metadata joins back intact") {
-    val out = TextOps.dsirResample(spark, "/root/testdata/sf0.001", "en", 256, 10)
+    val out = TextOps.dsirResampleFrom(Tables.documents(spark, "/root/testdata/sf0.001"), "en", 256, 10)
       .collect()
     assert(out.length == 10)
     out.foreach { r =>

@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Operators, streaming and the pipeline runners take every setting as a
-  * call parameter: no code under those packages may switch behaviour on a
+/** Operators, streaming, the pipeline runners and the query builders take
+  * every setting as a call parameter: no code under those packages may switch behaviour on a
   * `graft.*` session conf or a `SPARK_GRAFT_*` environment variable, which no
   * caller can see in a signature and no benchmark would select.
   */
@@ -44,6 +44,14 @@ class NoHiddenKnobSpec extends AnyFunSuite {
     val scanned = dirs("pipeline")
     val files = scanned.flatMap(scalaFiles)
     assert(files.size >= 2, s"source scan found too few files under $scanned")
+    val hits = hiddenKnobs(files)
+    assert(hits.isEmpty, hits.mkString("hidden knobs found:\n", "\n", ""))
+  }
+
+  test("query builders read no graft.* conf and no SPARK_GRAFT_* env var") {
+    val scanned = dirs("queries")
+    val files = scanned.flatMap(scalaFiles)
+    assert(files.size >= 8, s"source scan found too few files under $scanned")
     val hits = hiddenKnobs(files)
     assert(hits.isEmpty, hits.mkString("hidden knobs found:\n", "\n", ""))
   }

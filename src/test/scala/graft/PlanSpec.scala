@@ -134,7 +134,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("q101 bm25: term filter applies at the posting explode; top-k is TakeOrdered, not a global rank window") {
-    val df = graft.operators.TextOps.bm25TopDocs(spark, sf,
+    val df = graft.operators.TextOps.bm25TopDocsFrom(graft.sources.Tables.documents(spark, sf),
       Seq("table", "scan", "merge", "hash"), 20)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString

@@ -1,13 +1,14 @@
 package graft
 
 import graft.operators.Similarity
+import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpecBase {
   import spark.implicits._
 
   test("bruteKnn: k rows per query, ranks 1..k, self excluded, sims descending") {
-    val out = Similarity.bruteKnn(spark, sf, 5, 3)
+    val out = Similarity.bruteKnnFrom(Tables.embeddings(spark, sf), 5, 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(out.length == 15)
     out.groupBy(_._1).foreach { case (q, rows) =>
@@ -153,7 +154,7 @@ class SimilaritySpec extends SparkSpecBase {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     val persisted = rows(Similarity.lshKnnIndexed(
       Similarity.readLshIndex(spark, dir), emb.filter(col("vec_id") < 5), 3))
-    val inSession = rows(Similarity.lshKnn(spark, sf, 5, 3))
+    val inSession = rows(Similarity.lshKnnFrom(Tables.embeddings(spark, sf), 5, 3))
     assert(persisted == inSession,
       s"persisted-index probe diverges: $persisted vs $inSession")
   }

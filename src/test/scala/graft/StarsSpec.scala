@@ -73,7 +73,7 @@ class StarsSpec extends SparkSpecBase {
     assert(out((1L, 3L)) == (("O", "1998-01-12", "1998-01-12", 1L)))
     assert(out((2L, 1L)) == (("P", "1998-02-01", "1998-02-01", 1L)))
     // partition property on the real table: intervals cover every order once
-    val real = Stars.statusIntervals(spark, sf)
+    val real = Stars.statusIntervalsFrom(Tables.orders(spark, sf))
     val total = real.agg(org.apache.spark.sql.functions.sum("n_orders")).as[Long].head()
     assert(total == Tables.orders(spark, sf).count())
   }

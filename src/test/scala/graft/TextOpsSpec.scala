@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.TextOps
+import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
 class TextOpsSpec extends SparkSpecBase {
@@ -515,7 +516,7 @@ class TextOpsSpec extends SparkSpecBase {
   }
 
   test("surprisalBuckets: tertiles partition each language; head is most fluent") {
-    val rows = TextOps.surprisalBuckets(spark, sf)
+    val rows = TextOps.surprisalBucketsFrom(Tables.documents(spark, sf))
       .select("lang", "bucket", "n_docs", "avg_surprisal")
       .as[(String, String, Long, Double)].collect().toSeq
     val perLang = rows.groupBy(_._1)
@@ -533,7 +534,7 @@ class TextOpsSpec extends SparkSpecBase {
   }
 
   test("mixtureWeights: shares and weights are distributions; sqrt-tempering up-samples low-resource sources") {
-    val rows = TextOps.mixtureWeights(spark, sf)
+    val rows = TextOps.mixtureWeightsFrom(Tables.documents(spark, sf))
       .select("source", "n_tokens", "p", "weight", "sample_factor")
       .as[(String, Long, Double, Double, Double)].collect().toSeq
     assert(rows.nonEmpty)
@@ -550,7 +551,7 @@ class TextOpsSpec extends SparkSpecBase {
   }
 
   test("epochShufflePlan: epochs carry the same sequence census in different, reproducible orders") {
-    val plan = TextOps.epochShufflePlan(spark, sf, 512, epochs = 2)
+    val plan = TextOps.epochShufflePlanFrom(Tables.documents(spark, sf), 512, epochs = 2)
       .select("epoch", "seq_id", "shuffle_key", "n_tok")
       .as[(Long, Long, String, Long)].collect().toSeq
     val byEpoch = plan.groupBy(_._1)
@@ -966,7 +967,7 @@ class TextOpsSpec extends SparkSpecBase {
       (0L, 0L, 3L, md5hex("a b c")),
       (1L, 2L, 3L, md5hex("c d e"))))
     // invariants on the real corpus at the registered (32, 24) config
-    val all = TextOps.ragChunks(spark, sf, 32, 24)
+    val all = TextOps.ragChunksFrom(Tables.documents(spark, sf), 32, 24)
       .groupBy("doc_id")
       .agg(max(col("start_tok") + col("n_tok")).as("covered"),
         count(lit(1)).as("n_chunks"), min("n_tok").as("min_tok"))
@@ -998,7 +999,7 @@ class TextOpsSpec extends SparkSpecBase {
     assert(out(2L) == ((1L, r6(d2))), s"got ${out(2L)}, want (1, ${r6(d2)})")
     // fluency ordering on the real corpus: repeated high-probability
     // contexts score lower than average (monotonicity smoke)
-    val real = TextOps.bigramSurprisal(spark, sf)
+    val real = TextOps.bigramSurprisalFrom(Tables.documents(spark, sf))
     assert(real.count() > 0)
   }
 

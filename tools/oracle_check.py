@@ -2,9 +2,13 @@
 """Local replica of the driver's correctness gate: run Verify's parquet dumps
 against the oracle SQL in DuckDB on the same testdata, compare row/schema/values.
 
+A query Verify recorded in failures.json (name -> first line of its
+exception) reports VERIFY_FAILED with that line, and counts as a failure
+even when it has no oracle.
+
 Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
 """
-import sys, json, glob, math
+import sys, json, glob, math, os
 import duckdb
 import pandas as pd
 
@@ -32,8 +36,14 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    failures_path = f"{out_dir}/failures.json"
+    failures = json.load(open(failures_path)) if os.path.exists(failures_path) else {}
     results = {}
-    for name, sql in sorted(oracle.items()):
+    for name in sorted(set(oracle) | set(failures)):
+        if name in failures:
+            results[name] = f"VERIFY_FAILED: {failures[name]}"
+            continue
+        sql = oracle[name]
         try:
             files = glob.glob(f"{out_dir}/{name}/*.parquet")
             if not files:
