@@ -6,13 +6,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
-/** SparkSessionExtensions entry point: registers the engine's native
-  * expressions for SQL callers at session build time —
-  * `--conf spark.sql.extensions=graft.GraftExtensions`.
-  *
-  * (When the session is built by a harness that doesn't pass the conf,
-  * `graft.functions.VectorFunctions.register(spark)` does the same at
-  * runtime.)
+/** SparkSessionExtensions entry point, the one way the engine's native
+  * expressions reach SQL callers: registered at session build time by
+  * `--conf spark.sql.extensions=graft.GraftExtensions`. The Column API
+  * (`VectorFunctions`, `TextFunctions`) needs no registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -334,7 +334,8 @@ object IdnAscii {
     catch { case _: IllegalArgumentException => host }
 }
 
-/** Column-API and SQL-registry front doors for the text expressions. */
+/** Column-API front doors for the text expressions (SQL names come from
+  * [[graft.GraftExtensions]]). */
 object TextFunctions {
   import org.apache.spark.sql.graft.SqlShim.{column, expression}
 
@@ -349,16 +350,4 @@ object TextFunctions {
   def cdcBounds(c: Column): Column = column(CdcBounds(expression(c)))
 
   def idnAscii(c: Column): Column = column(IdnAscii(expression(c)))
-
-  /** SQL names mirror DuckDB's `nfc_normalize`; the compatibility forms get
-    * the same suffix convention. Runtime + idempotent, like
-    * `VectorFunctions.register`.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = org.apache.spark.sql.graft.SqlShim.functionRegistry(spark)
-    reg.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => UnicodeNormalize(exprs.head, "NFC"), "internal")
-    reg.createOrReplaceTempFunction(
-      "nfkc_normalize", exprs => UnicodeNormalize(exprs.head, "NFKC"), "internal")
-  }
 }

@@ -307,7 +307,7 @@ case class CellRank(left: Expression, right: Expression) extends BinaryExpressio
     copy(left = l, right = r)
 }
 
-/** Column-API and SQL-registry front doors. */
+/** Column-API front doors (SQL names come from [[graft.GraftExtensions]]). */
 object VectorFunctions {
   import org.apache.spark.sql.graft.SqlShim.{column, expression}
 
@@ -317,14 +317,4 @@ object VectorFunctions {
     column(LshBuckets(expression(vec), planes, tables, bits))
   def cellRank(vec: Column, cents: Column): Column =
     column(CellRank(expression(vec), expression(cents)))
-
-  /** Register `vec_dot` / `cosine_sim` for SQL callers on a live session
-    * (SparkSessionExtensions isn't an option when the session is built by the
-    * harness, so registration is runtime + idempotent).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = org.apache.spark.sql.graft.SqlShim.functionRegistry(spark)
-    reg.createOrReplaceTempFunction("vec_dot", exprs => DotProduct(exprs(0), exprs(1)), "internal")
-    reg.createOrReplaceTempFunction("cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "internal")
-  }
 }

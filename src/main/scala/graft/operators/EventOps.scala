@@ -27,14 +27,11 @@ object EventOps {
         exactSum(col("value")).as("sum_value"))
       .orderBy("event_type", "semana")
 
-  /** Gap-based sessionization: a new session starts after >30 min of user
-    * inactivity. Computed on the raw nanosecond longs — exact, no precision
-    * loss. One shuffle (partition by user), then a window scan.
+  /** Gap-based sessionization over any (user_id, ts_ns, event_id) relation:
+    * a new session starts after more than `gapMinutes` of user inactivity.
+    * Computed on the raw nanosecond longs — exact, no precision loss. One
+    * shuffle (partition by user), then a window scan.
     */
-  def userSessions(spark: SparkSession, dir: String, gapMinutes: Int = 30): DataFrame =
-    sessionize(Tables.events(spark, dir), gapMinutes)
-
-  /** Core sessionization over any (user_id, ts_ns, event_id) relation. */
   def sessionize(events: DataFrame, gapMinutes: Int): DataFrame = {
     val gapNs = gapMinutes.toLong * 60L * 1000000000L
     val w = Window.partitionBy("user_id").orderBy(col("ts_ns").asc, col("event_id").asc)

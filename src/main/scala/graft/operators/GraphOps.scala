@@ -294,7 +294,7 @@ object GraphOps {
   /** PageRank in the scaled formulation (sum of ranks = N): r⁰ = 1,
     * rᵗ⁺¹ = (1−d) + d·Σ rᵗ(u)/deg(u) over neighbors u, over an
     * already-symmetrized adjacency relation (u, v, deg_u) and its node
-    * relation (node, deg), typically the [[symAdjMV]] and [[nodeDegMV]]
+    * relation (node, deg), typically the [[symAdjMV]] and [[nodeDegMVPath]]
     * pins. Every node is an endpoint of an edge, so deg ≥ 1 everywhere and
     * there is no dangling mass term. Returns (node, degree, rank) with rank
     * quantized per iteration (see object doc).
@@ -537,10 +537,6 @@ object GraphOps {
       symAdjMV(spark, dir, refresh)
         .select(col("u").as("node"), col("deg_u").as("deg")).distinct()
     }
-
-  def nodeDegMV(spark: SparkSession, dir: String,
-                refresh: Boolean = false): DataFrame =
-    spark.read.parquet(nodeDegMVPath(spark, dir, refresh).toString)
 
   /** Registered query: 5-iteration PageRank over the co-purchase graph,
     * full node relation ordered by (rank desc, node). Reads the symmetrized

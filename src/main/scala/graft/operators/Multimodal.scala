@@ -514,41 +514,6 @@ object Multimodal {
     } finally in.close()
   }
 
-  /** REAL image resize (JDK `Graphics2D`, bilinear): PNG/JPEG bytes in,
-    * PNG bytes of the target geometry out — the preprocessing step a vision
-    * training pipeline runs per image. Pure bytes→bytes, so it composes
-    * into the same partition-local batched mapPartitions as the decoders.
-    */
-  private[graft] def resizeImage(payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val src = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-    require(src != null, "payload is not a decodable image")
-    val dst = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val g = dst.createGraphics()
-    g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-      java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-    g.drawImage(src, 0, 0, w, h, null)
-    g.dispose()
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(dst, "png", out)
-    out.toByteArray
-  }
-
-  /** Resize every image under `dir` to (w, h): (path, payload) of the
-    * re-encoded PNGs — feed to a sink or a downstream feature extractor.
-    */
-  def resizeImages(spark: SparkSession, dir: String, w: Int, h: Int,
-                   glob: String = "*.png"): DataFrame = {
-    import spark.implicits._
-    readBinaryDir(spark, dir, glob)
-      .select(col("path"), col("payload")).as[BinFile]
-      .mapPartitions { it =>
-        it.grouped(BatchSize).flatMap { batch =>
-          batch.iterator.map(f => BinFile(f.path, resizeImage(f.payload, w, h)))
-        }
-      }
-      .toDF("path", "payload")
-  }
-
   /** Decode every audio file under `dir` (binaryFile scan → partition-local
     * batched javax.sound decode) — the audio twin of `imageFeatures`.
     */

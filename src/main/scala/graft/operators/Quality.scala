@@ -45,19 +45,6 @@ object Quality {
     checks.zipWithIndex.map { case ((name, _), i) => result(name, row.getLong(i)) }
   }
 
-  /** Exact row count (reference's COUNT(*) = 750000 gate). */
-  def rowCount(df: DataFrame, expected: Long): CheckResult = {
-    val n = df.count()
-    CheckResult(s"row_count=$expected", n == expected, n)
-  }
-
-  /** Key uniqueness at the declared grain. */
-  def uniqueKey(df: DataFrame, keyCols: Seq[String]): CheckResult = {
-    val dups = df.groupBy(keyCols.map(col): _*).count()
-      .filter(col("count") > 1).count()
-    CheckResult(s"unique_key(${keyCols.mkString(",")})", dups == 0L, dups)
-  }
-
   /** Referential integrity: every fact key resolves in the dimension
     * (left_anti count must be 0 — the FK declarations at reference
     * `dags/financial_pipeline.py:172-173` made Postgres enforce this).

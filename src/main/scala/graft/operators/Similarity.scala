@@ -77,9 +77,9 @@ object Similarity {
   /** Approximate top-k cosine neighbors via multi-table LSH with Hamming-1
     * multi-probe. The corpus index is n·L rows keyed by (table, bucket); the
     * join is a plain equi-join on that short key, so candidate volume tracks
-    * true bucket collisions — never corpus². Scale path: the index is built
-    * once per corpus (`lshIndexOf`), persisted once (`writeLshIndex`), and
-    * reused across query batches (`readLshIndex` → `lshKnnIndexed`).
+    * true bucket collisions — never corpus². The index (`lshIndexOf`) is
+    * deterministic per corpus, so one build serves any number of query
+    * batches through `lshKnnIndexed`.
     */
   def lshKnnFrom(embeddings: DataFrame, nQueries: Int, k: Int, dim: Int = 64): DataFrame =
     lshKnnIndexed(lshIndexOf(embeddings, dim),
@@ -94,26 +94,8 @@ object Similarity {
       .withColumn("bks", buckets(col("e"), dim))
       .select(col("vec_id"), col("e"), posexplode(col("bks")).as(Seq("tbl", "bucket")))
 
-  /** Persist the LSH corpus index as parquet partitioned by table: a probe
-    * touching table t prunes to its directory at the scan, and within a table
-    * the (bucket) equi-join key is a plain pushed column. At 100 TB the index
-    * is built ONCE per corpus snapshot and re-read by every query session —
-    * never rebuilt per batch (the build costs a full corpus scan; the read
-    * costs only the probed partitions).
-    */
-  def writeLshIndex(embeddings: DataFrame, path: String, dim: Int = 64): Unit =
-    lshIndexOf(embeddings, dim)
-      .write.mode("overwrite").partitionBy("tbl").parquet(path)
-
-  /** Read a persisted LSH index back into the probe-ready relation. */
-  def readLshIndex(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-      .select(col("vec_id"), col("e"), col("tbl").cast("int").as("tbl"), col("bucket"))
-
-  /** Probe any LSH index relation (in-session or persisted) with a query
-    * batch: per table, own bucket + all B Hamming-1 neighbors (multi-probe).
-    * Identical arithmetic to the in-session path — persisted-index results
-    * are spec-pinned ≡ `lshKnnFrom`.
+  /** Probe an LSH index relation with a query batch: per table, own bucket
+    * + all B Hamming-1 neighbors (multi-probe).
     */
   def lshKnnIndexed(index: DataFrame, queries: DataFrame, k: Int, dim: Int = 64): DataFrame = {
     val corpus = index.select(
@@ -165,22 +147,13 @@ object Similarity {
     when(scale > 0, transform(e, x => floor(x / scale + 0.5).cast(tpe)))
       .otherwise(transform(e, x => lit(0).cast(tpe)))
 
-  /** Persist the quantized corpus — at scale this is the resident ANN index
-    * (4× smaller scans than the float corpus); the float embeddings are only
-    * touched for the final rescore of ~rescoreFactor·k survivors per query. */
-  def writeInt8Index(embeddings: DataFrame, path: String): Unit =
-    int8QuantizeFrom(embeddings).write.mode("overwrite").parquet(path)
-
-  def readInt8Index(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(col("vec_id"), col("q"), col("scale"))
-
   /** Int8-quantized approximate kNN (q125): LSH-bucketed candidate
     * generation and COARSE scoring run entirely on the quantized corpus;
     * only the survivors are rescored in float.
     *
     *  1. bucket: the LSH signature of a quantized vector needs no scale —
     *     sign(Σ wᵢ·qᵢ·s) = sign(Σ wᵢ·qᵢ) for s > 0 — so the probe works on
-    *     raw int arrays (the persisted index alone, floats untouched);
+    *     raw int arrays (the quantized index alone, floats untouched);
     *  2. coarse: int8 cosine — the per-vector scales CANCEL in cosine, and
     *     the integer dot (≤ 64·127² ≈ 10⁶) is exact in double, so the
     *     coarse ranking is deterministic across engines by construction;
@@ -193,9 +166,8 @@ object Similarity {
                   dim: Int = 64, rescoreFactor: Int = 4): DataFrame =
     int8KnnIndexed(int8QuantizeFrom(embeddings), embeddings, nQueries, k, dim, rescoreFactor)
 
-  /** Probe a quantized index (in-session or [[readInt8Index]]) — persisted-
-    * index results are spec-pinned ≡ the in-session path. `embeddings` is
-    * only read for the float rescore join. */
+  /** Probe a quantized index ([[int8QuantizeFrom]]'s relation).
+    * `embeddings` is only read for the float rescore join. */
   def int8KnnIndexed(index: DataFrame, embeddings: DataFrame, nQueries: Int,
                      k: Int, dim: Int = 64, rescoreFactor: Int = 4): DataFrame = {
     val qd = index
@@ -566,31 +538,6 @@ object Similarity {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     ivfWithCentroids(emb, kmeansCentroids(embeddings, nCells, iters), nQueries, k, nProbe)
   }
-
-  /** Persist trained IVF centroids: a k×dim relation — trivially small at any
-    * corpus size (the expensive part is the Lloyd iterations' corpus scans,
-    * which persisting makes one-time). Quantized coordinates (see
-    * `kmeansCentroids`) round-trip parquet bit-exactly, so a probe against
-    * re-read centroids is identical to the in-session one.
-    */
-  def writeIvfCentroids(cents: DataFrame, path: String): Unit =
-    cents.write.mode("overwrite").parquet(path)
-
-  /** Read persisted IVF centroids back into the probe-ready (cell, cvec)
-    * relation.
-    */
-  def readIvfCentroids(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(col("cell"), col("cvec"))
-
-  /** Probe an IVF index whose centroids came from anywhere (freshly trained
-    * or `readIvfCentroids`) — persisted-centroid results are spec-pinned ≡
-    * the train-in-session path.
-    */
-  def ivfKnnWithCentroids(embeddings: DataFrame, cents: DataFrame,
-                          nQueries: Int, k: Int, nProbe: Int): DataFrame =
-    ivfWithCentroids(
-      embeddings.select(col("vec_id"), col("embedding").cast("array<double>").as("e")),
-      cents, nQueries, k, nProbe)
 
   /** INCREMENTAL IVF INDEX MAINTENANCE, BUCKETED (q237, round-15 — VERDICT
     * r14 item 7b): the q232 standing-MV refresh discipline applied to the
@@ -1399,19 +1346,6 @@ object Similarity {
     }.reduce(_ unionAll _)
   }
 
-  /** Persist trained PQ codebooks: m×nCodes×(dim/m) doubles — trivially
-    * small at any corpus size. Quantized Lloyd coordinates (see
-    * `kmeansCentroids`) round-trip parquet bit-exactly, so probing re-read
-    * codebooks is identical to the in-session path (spec-pinned, like IVF's
-    * `writeIvfCentroids`).
-    */
-  def writePqCodebooks(books: DataFrame, path: String): Unit =
-    books.write.mode("overwrite").parquet(path)
-
-  /** Read persisted PQ codebooks back into the probe-ready relation. */
-  def readPqCodebooks(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(col("sub"), col("cell"), col("cvec"))
-
   /** Train-once/probe-many codebook MV for the registered q205: Lloyd runs
     * once per (embeddings file set, params) and lands in parquet; every
     * later call — bench timed passes included — pays only the encode + ADC
@@ -1425,8 +1359,8 @@ object Similarity {
       pqTrainCodebooks(Tables.embeddings(spark, dir), m, nCodes, iters, dim))
       .select(col("sub"), col("cell"), col("cvec"))
 
-  /** Probe a PQ index whose codebooks came from anywhere (freshly trained,
-    * `readPqCodebooks`, or the MV): encode the corpus against the books,
+  /** Probe a PQ index whose codebooks came from anywhere (freshly trained
+    * or the MV): encode the corpus against the books,
     * then ADC-rank + exact-cosine rescore.
     */
   def pqKnnWithCodebooks(embeddings: DataFrame, books: DataFrame, m: Int = 8,
@@ -1684,17 +1618,11 @@ object Similarity {
                                   nQueries: Int = PqNQueries, k: Int = PqK,
                                   rescoreFactor: Int = PqRescoreFactor,
                                   dim: Int = PqDim, nCodes: Int = PqNCodes,
-                                  iters: Int = PqIters,
-                                  booksOpt: Option[DataFrame] = None)
-      : DataFrame = {
+                                  iters: Int = PqIters): DataFrame = {
     val src = java.nio.file.Paths.get(dir, "embeddings.parquet")
     val embAll = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-    // booksOpt (round-19): a post-retrain chain generation probes with ITS
-    // generation's books ([[retrainPqBooks]]) — ADC ranks are meaningless
-    // against books the codes were not assigned under
-    val books = booksOpt.getOrElse(
-      pqSplitBooksMv(spark, dir, m, nCodes, iters, dim))
+    val books = pqSplitBooksMv(spark, dir, m, nCodes, iters, dim)
     val index = graft.sources.Tables.chainLatest(spark, src, chain,
         PqNBuckets, Seq("vec_id"), Seq("vec_id", "sub"))
       .getOrElse(sys.error(s"PQ chain $chain published nothing"))
@@ -1846,109 +1774,5 @@ object Similarity {
       .agg(count(lit(1)).as("n_vecs"), rd(avg("rc"), 6).as("mean_recon"),
         rd(min("rc"), 6).as("min_recon"))
       .orderBy("is_arrival")
-  }
-
-  /** RETRAIN EXECUTION for the fixed-books/fixed-centroid drift policy
-    * (round-19 — VERDICT r18 item 4): [[pqCodebookDrift]] and the q234
-    * centroid monitor end at "time to retrain"; this EXECUTES the retrain
-    * they prescribe. Train NEW per-subspace books over the CURRENT corpus
-    * — base plus the drifted arrivals the old books no longer tile — and
-    * publish them under a new GENERATION-tagged MV name (the "new books MV
-    * fingerprint" of the policy: readers pinned to the old generation keep
-    * resolving it; nothing is mutated in place); re-encode the FULL corpus
-    * against the new books into a generation-tagged standing code table
-    * (the amortized full rebuild — the one cost the fixed-books policy
-    * defers until drift makes it worth paying); and reset the named
-    * maintenance chains so the next refresh cycle's [[applyPqBatch]] grows
-    * the NEW standing table from batch 0. Returns the new
-    * (books, standingCodesPath) pair — exactly the `inputs` shape
-    * [[applyPqBatch]] consumes; probe the new generation with
-    * [[pqChainProbe]]`(booksOpt = Some(books))` or [[pqAdcProbe]].
-    *
-    * `generation` owns name uniqueness: it tags the corpus EPOCH (which
-    * retrain this is), so two retrains over the same source file land
-    * distinct MVs. `corpusOpt` must be a deterministic function of the
-    * source file (the fingerprintedMv contract) — None re-reads the file.
-    *
-    * Scale shape: m × iters Lloyd corpus scans + one full-corpus encode —
-    * a rebuild by design, amortized over the many cheap [[applyPqBatch]]
-    * refreshes between drift trips (SCALING.md's chain-vs-rebuild
-    * crossover is exactly this trade measured).
-    */
-  def retrainPqBooks(spark: SparkSession, dir: String, generation: Int,
-                     corpusOpt: Option[DataFrame] = None,
-                     m: Int = PqM, nCodes: Int = PqNCodes,
-                     iters: Int = PqIters, dim: Int = PqDim,
-                     resetChains: Seq[String] = Nil)
-      : (DataFrame, java.nio.file.Path) = {
-    val src = java.nio.file.Paths.get(dir, "embeddings.parquet")
-    val corpus = corpusOpt.getOrElse(
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
-    val tag = s"g${generation}_${m}_${nCodes}_${iters}_$dim"
-    val books = graft.sources.Tables.fingerprintedMv(spark, src,
-      s"pq_books_$tag")(
-      pqTrainCodebooks(corpus.select(col("vec_id"), col("e").as("embedding")),
-        m, nCodes, iters, dim))
-      .select(col("sub"), col("cell"), col("cvec"))
-    val codes = graft.sources.Tables.bucketedMvPath(spark, src,
-      s"pq_codes_$tag", PqNBuckets, Seq("vec_id"), Seq("vec_id", "sub")) {
-      pqEncode(corpus, books, m, dim)
-    }
-    resetChains.foreach(c => graft.sources.Tables.resetChain(spark, src, c))
-    (books, codes)
-  }
-
-  /** IVF-CENTROID RETRAIN EXECUTOR (round-19) — [[retrainPqBooks]] for the
-    * CELL family: the fixed coarse-centroid space every standing index
-    * assigns under (q237/q238/q240/q241 and the q246/q247 decontam probes)
-    * is the other standing model the drift policy watches, and until now
-    * only the PQ half of "time to retrain" executed. Builds the new
-    * generation's centroid MV (GENERATION-tagged fingerprint, so epochs
-    * never collide), re-ASSIGNS the full corpus into a cell-bucketed
-    * standing table (the q237/q238 layout — probes select bucket files by
-    * name), and resets the named maintenance chains so the next refresh
-    * cycle grows generation n+1 from batch 0. Returns the (cents,
-    * standingAssignPath) pair the incremental family consumes; probe the
-    * new generation with [[ivfKnnWithCentroids]].
-    *
-    * Drift trigger: the cell family's registered gate is q234
-    * ([[centroidDriftMonitor]]) — its PSI shape stat fires when arrivals
-    * concentrate where the reference window has no mass. The PQ-style
-    * per-vector reconstruction signal ([[pqCodebookDrift]] at `m = 1,
-    * booksOpt = Some(cents as sub-0 book)`) measurably does NOT trip for a
-    * coarse 8-cell space — the baseline tiling is too loose for a novel
-    * cluster to LOWER assigned cosine — but it is the right RECOVERY
-    * metric: post-retrain, a gen-n+1 centroid owns the new cluster and
-    * arrivals' assigned cosine jumps to ≈1 (both measured and spec-pinned
-    * in SimilaritySpec's lifecycle test).
-    *
-    * Scale shape: iters Lloyd corpus scans + one broadcast-centroid
-    * assignment pass + one bucketed write — a rebuild by design, amortized
-    * over the many delta-cost refreshes between drift trips (the
-    * [[retrainPqBooks]] trade, measured in SCALING.md's chain-vs-rebuild
-    * crossover).
-    */
-  def retrainIvfCents(spark: SparkSession, dir: String, generation: Int,
-                      corpusOpt: Option[DataFrame] = None,
-                      nCells: Int = IvfNCells, iters: Int = IvfIters,
-                      resetChains: Seq[String] = Nil)
-      : (DataFrame, java.nio.file.Path) = {
-    val src = java.nio.file.Paths.get(dir, "embeddings.parquet")
-    val corpus = corpusOpt.getOrElse(
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
-    val tag = s"g${generation}_${nCells}_$iters"
-    val cents = graft.sources.Tables.fingerprintedMv(spark, src,
-      s"ivf_cents_$tag")(
-      kmeansCentroids(corpus.select(col("vec_id"), col("e").as("embedding")),
-        nCells, iters))
-      .select(col("cell"), col("cvec"))
-    val assign = graft.sources.Tables.bucketedMvPath(spark, src,
-      s"ivf_assign_$tag", nCells, Seq("cell"), Seq("cell", "vec_id")) {
-      assignCells(corpus, cents).select(col("cell"), col("vec_id"), col("e"))
-    }
-    resetChains.foreach(c => graft.sources.Tables.resetChain(spark, src, c))
-    (cents, assign)
   }
 }

@@ -142,9 +142,6 @@ object Sketches {
       .orderBy(col("n_exact").desc, col("user_id"))
   }
 
-  def cmsHeavyHittersGate(spark: SparkSession, dir: String): DataFrame =
-    cmsHeavyHitters(Tables.events(spark, dir))
-
   // -------------------------------------------------------------------------
   // Two-pass EXACT heavy hitters: Misra–Gries candidates → exact recount
   // -------------------------------------------------------------------------

@@ -3,15 +3,12 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew-mitigation utilities for hot keys.
+/** Skew mitigation for hot keys.
   *
   * Spark's partial (map-side) aggregation already bounds skew for algebraic
   * aggregates, and AQE splits skewed shuffle-join partitions at runtime.
-  * Two shapes still need explicit salting:
-  *   - exact distinct counts per key (partials can't combine: the same value
-  *     seen by two mappers must not count twice), and
-  *   - shuffle joins whose hot key exceeds what AQE can split (it can split a
-  *     partition, not a single key's row group on the build side).
+  * Exact distinct counts per key still need explicit salting: partials can't
+  * combine, since the same value seen by two mappers must not count twice.
   */
 object Skew {
 
@@ -26,19 +23,4 @@ object Skew {
       .groupBy(col(key), col("__salt"))
       .agg(countDistinct(col(valueCol)).as("__c"))
       .groupBy(col(key)).agg(sum(col("__c")).as("n_distinct"))
-
-  /** Skew-safe equi-join: the probe side gets a per-row salt, the build side
-    * is replicated once per salt value, and the join key becomes (key, salt) —
-    * a hot key's rows spread over `saltFactor` partitions instead of one.
-    * Build-side cost: ×saltFactor rows (use only when the build side is small
-    * but too big / too hot to broadcast).
-    */
-  def saltedJoin(probe: DataFrame, build: DataFrame, key: String,
-                 saltFactor: Int): DataFrame = {
-    val salted = probe.withColumn("__salt",
-      pmod(monotonically_increasing_id(), lit(saltFactor.toLong)))
-    val replicated = build.withColumn("__salt",
-      explode(sequence(lit(0L), lit(saltFactor.toLong - 1))))
-    salted.join(replicated, Seq(key, "__salt")).drop("__salt")
-  }
 }

@@ -72,14 +72,6 @@ object TextOps {
         countDistinct(md5(normText(col("text")))).as("n_norm_unique"))
       .orderBy("lang")
 
-  /** Deduplicated corpus: keep the lowest doc_id per exact text hash.
-    * min-by on the digest key — one shuffle, no window-sort needed.
-    */
-  def dedupByText(docs: DataFrame): DataFrame =
-    docs.withColumn("h", md5(col("text")))
-      .groupBy("h").agg(min(col("doc_id")).as("doc_id"))
-      .drop("h")
-
   /** Dedup with a keep-best policy: among exact duplicates keep the row with
     * the highest `scoreCol` (doc_id ascending breaks ties) — the production
     * shape where the survivor is chosen by quality, not arrival order. Still
@@ -240,17 +232,11 @@ object TextOps {
     minHashWide(xxhashAB(sh))
       .select(col("doc_id"), array((0 until NumPerms).map(i => col(s"mh_$i")): _*).as("minhash"))
 
-  /** The distinct-trigram shingle set of a text as ONE array column. */
-  def shingleArray(text: Column): Column = array_distinct(shingles(tokens(text)))
-
   /** Per-ROW MinHash signature as pure array expressions — the same
     * double-hashing scheme as the exploded `minHashWide` aggregation under
     * the same `family` (spec-pinned equal for both families), computed
     * inside a single projection: no explode, no aggregation, no shuffle.
-    * Stateless, so it drops into a streaming SELECT where the exploded
-    * groupBy formulation would need stateful aggregation — the enabler for
-    * near-dup detection on a live document stream. An empty array has no
-    * signature (null): filter `size > 0` first.
+    * An empty array has no signature (null): filter `size > 0` first.
     *
     * Each family hashes the array once and folds all its permutation minima
     * in one pass. Lambda expressions are interpreted and never shared
@@ -267,16 +253,6 @@ object TextOps {
         (mins, p) => transform(mins, (m, j) =>
           least(m, p.getField("a") + (j + 1).cast("long") * p.getField("b"))))
     }: _*))
-
-  /** Per-table LSH band buckets from a signature array: element b is
-    * xxhash64 over that band's 4 permutation minima — identical bucketing
-    * to the batch `bandsFromWide` fast path.
-    */
-  def lshBandBuckets(sig: Column): Column =
-    array((0 until NumBands).map { bnd =>
-      xxhash64((0 until BandRows).map(r =>
-        element_at(sig, bnd * BandRows + r + 1)): _*)
-    }: _*)
 
   /** Exact-duplicate collapse shared by the LSH near-dup family: identical
     * normalized text ⇒ identical shingle set ⇒ identical MinHash signature,
@@ -911,38 +887,11 @@ ORDER BY c.shard"""
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Run a pure per-document text transform once per DISTINCT raw text:
-    * `f` computes over one representative per md5(text) cluster, members
-    * inherit the rep's metric columns under their own doc_id, output
-    * ordered by doc_id. EXACT whenever every non-doc_id output column of
-    * `f` is a pure function of `text`.
-    *
-    * WHEN TO USE — measured trade (100× dup-heavy corpus, 500k short docs,
-    * 100-member clusters): for the engine's own cheap narrow transforms the
-    * collapse LOSES (fingerprints 1.65 s direct vs 4.30 s collapsed; simhash
-    * ~equal) because two hash joins outweigh regex/hash work on ~200-char
-    * texts — so the built-in per-doc operators run direct. It WINS when the
-    * per-doc work is heavy relative to a join: long documents (web pages are
-    * KBs, not 200 chars), model scoring, decompression, or any `f` whose
-    * cost per row is tens of microseconds and up. Offered as a public
-    * combinator for exactly those pipelines; equivalence is spec-pinned.
-    */
-  def perDistinctText(docs: DataFrame)(f: DataFrame => DataFrame): DataFrame = {
-    val mem = docs.select(col("doc_id"), md5(col("text")).as("__k"))
-    val reps = mem.groupBy("__k").agg(min("doc_id").as("__rep"))
-    val repDocs = docs.join(reps.select(col("__rep").as("doc_id")), Seq("doc_id"), "left_semi")
-    val repOut = f(repDocs)
-    val metricCols = repOut.columns.filter(_ != "doc_id")
-    mem.join(reps, "__k")
-      .join(repOut.withColumnRenamed("doc_id", "__rep"), "__rep")
-      .select(col("doc_id") +: metricCols.map(col): _*)
-      .orderBy("doc_id")
-  }
-
   /** 64-bit SimHash per doc: per distinct token, hash once; 64 signed bit
     * counters as plain aggregates (no row explosion); sign → bit. Single pass,
-    * whole-stage-codegen friendly. Runs direct (not via `perDistinctText`) —
-    * measured faster for this transform's cost profile, see that combinator.
+    * whole-stage-codegen friendly. Runs direct over every doc: computing
+    * once per distinct text and joining members back was measured no faster
+    * (two hash joins outweigh the hashing of ~200-char texts).
     */
   def simHash(docs: DataFrame): DataFrame = {
     val tok = docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok")).distinct()
@@ -1016,23 +965,6 @@ ORDER BY c.shard"""
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
         lit(0L).as("hamming"))
     cross.union(intra)
-      .orderBy(col("hamming").asc, col("doc_a").asc, col("doc_b").asc)
-  }
-
-  /** SimHash near-dup pairs: 4×16-bit chunk banding (any pair within Hamming
-    * distance 3 shares a chunk), verified by bit_count(xor) ≤ maxHamming.
-    */
-  def simHashPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
-    val sh = simHash(docs)
-    val chunks = sh.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until 4).map(c =>
-        shiftright(col("simhash"), c * 16).bitwiseAND(0xFFFFL)): _*)).as(Seq("chunk", "v")))
-    chunks.as("x").join(chunks.as("y"), Seq("chunk", "v"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
       .orderBy(col("hamming").asc, col("doc_a").asc, col("doc_b").asc)
   }
 
@@ -1290,12 +1222,6 @@ ORDER BY c.shard"""
       .select(col("doc_a"), col("doc_b"), col("lang"),
         levenshtein(col("na"), col("nb"), maxDistance).cast("long").as("edit_distance"))
   }
-
-  /** Distinct-text blocked relation for spec-level candidate accounting. */
-  private[graft] def fuzzyReps(docs: DataFrame, blockLen: Int = 12): DataFrame =
-    docs.select(col("doc_id"), col("lang"), normText(col("text")).as("norm"))
-      .filter(length(col("norm")) >= blockLen)
-      .groupBy("lang", "norm").agg(min("doc_id").as("rep"))
 
   /** Deterministic hash-bucket assignment in [0, buckets): md5 of the key
     * column's string form, first 15 hex chars → BIGINT, mod buckets. The
@@ -2024,9 +1950,9 @@ ORDER BY c.shard"""
     // planner the index's real size (sink-measured at 100×: 208–217 s
     // inline vs 67–78 s against the MV at comparable canaries; the index
     // build amortizes across every cleaner run until the corpus
-    // fingerprint changes). [[spanCutCleanFrom]]
-    // remains the self-contained single-relation form (specs, oracle
-    // parity); both produce the identical relation.
+    // fingerprint changes). `spanCutCleanAgainst(docs,
+    // dupShinglesFrom(docs))` is the self-contained single-relation form;
+    // both produce the identical relation.
     spanCutCleanAgainst(Tables.documents(spark, dir), dupShinglesMV(spark, dir))
       .orderBy("doc_id")
 
@@ -2071,9 +1997,8 @@ ORDER BY c.shard"""
     * refreshing the standing index costs one vocabulary-keyed merge of
     * base ∪ delta-df, never a re-scan of corpus history. This closes the
     * q220 loop: ingest batch → clean against the index as it stood →
-    * merge the batch's own shingles in at delta cost (the growing-index
-    * shape of `nearDupStreamWithGrowingIndex`, stated as a hash-verifiable
-    * relation instead of a side-effecting sink).
+    * merge the batch's own shingles in at delta cost, stated as a
+    * hash-verifiable relation instead of a side-effecting sink.
     */
   def mergeShingleDfDelta(base: DataFrame, deltaDocs: DataFrame): DataFrame = {
     // JOIN-form merge (the q217/mergeSymDelta discipline, round-14): the
@@ -2149,8 +2074,8 @@ FROM sh GROUP BY sg ORDER BY sg"""
   /** Span-cut cleaning of `docs` against a GIVEN duplicated-shingle
     * relation — per-document work only (tokenize, probe the index, anti-join
     * covered positions, re-collect), no corpus aggregate: the unit the
-    * streaming cleaner runs per micro-batch. Unordered; [[spanCutCleanFrom]]
-    * adds the gate's doc_id ordering. */
+    * streaming cleaner runs per micro-batch. Unordered; the gates add their
+    * doc_id ordering. */
   def spanCutCleanAgainst(docs: DataFrame, dupSgs: DataFrame): DataFrame = {
     val tok = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
     spanCutAssemble(tok, coveredPositionsOf(tok, dupSgs))
@@ -2243,9 +2168,6 @@ FROM sh GROUP BY sg ORDER BY sg"""
       }
     spanCutAssemble(tok, cut)
   }
-
-  def spanCutCleanFrom(docs: DataFrame): DataFrame =
-    spanCutCleanAgainst(docs, dupShinglesFrom(docs)).orderBy("doc_id")
 
   /** The q214 oracle: q97's covered-position derivation, then the kept
     * token stream re-aggregated in position order and digested. */
@@ -2379,13 +2301,6 @@ ORDER BY n.doc_id"""
       Tables.documents(spark, dir).filter(col("source") === benchSource)
         .select(explode(shingles(tokens(col("text")))).as("sg")).distinct()
     }
-
-  def benchmarkDecontamFrom(docs: DataFrame, benchSource: String): DataFrame = {
-    val benchSgs = docs.filter(col("source") === benchSource)
-      .select(explode(shingles(tokens(col("text")))).as("sg")).distinct()
-    spanCutCleanAgainst(docs.filter(col("source") =!= benchSource), benchSgs)
-      .orderBy("doc_id")
-  }
 
   /** The q222 oracle: the q214 covered-position derivation with the cut
     * set swapped to the benchmark source's distinct shingles and the
@@ -3223,14 +3138,13 @@ FROM r WHERE rk <= $cap ORDER BY domain, rk"""
     finally in.close()
   }
 
-  /** FULL-ALGORITHM registrable-domain (eTLD+1) extraction from a URL,
-    * driven by a parsed PSL rule set — the production upgrade of
-    * [[registrableDomain]]'s two-label heuristic (round-13, VERDICT r12
-    * item 4): wildcard rules (`*.ck` — every second-level .ck label is a
-    * public suffix), exception rules (`!www.ck` — carved back out), and the
-    * implicit `*` default for unlisted TLDs, with the PSL precedence order
-    * (an exception rule prevails over everything; otherwise the longest
-    * matching rule wins).
+  /** FULL-ALGORITHM registrable-domain (eTLD+1) extraction from a host's
+    * label array, driven by a parsed PSL rule set — the production upgrade
+    * of [[registrableDomain]]'s two-label heuristic: wildcard rules (`*.ck`
+    * — every second-level .ck label is a public suffix), exception rules
+    * (`!www.ck` — carved back out), and the implicit `*` default for
+    * unlisted TLDs, with the PSL precedence order (an exception rule
+    * prevails over everything; otherwise the longest matching rule wins).
     *
     * The rule set is driver-side data, so the matcher COMPILES to a pure
     * codegen'd when-chain over the host's k-label suffixes (the prefix-trie-
@@ -3240,20 +3154,14 @@ FROM r WHERE rk <= $cap ORDER BY domain, rk"""
     * A host that IS a public suffix (e.g. `site.ck` under `*.ck`) has no
     * registrable domain and yields NULL — callers filter those out, exactly
     * what a crawl frontier does with apex-suffix URLs.
-    */
-  def registrableDomainPsl(url: org.apache.spark.sql.Column,
-                           rules: Seq[PslRule] = PslSubset): org.apache.spark.sql.Column = {
-    val host = regexp_extract(url, "^[a-z][a-z0-9+.-]*://([^/:?#]+)", 1)
-    registrableDomainPslOfLabels(split(host, "\\."), rules)
-  }
-
-  /** The PSL matcher over an ALREADY-SPLIT label array. The split (and the
-    * regexp host-extract, and whatever synthesized the URL) must be staged
-    * as a real column before a when-chain that references it in every
-    * branch: inlined, the k×(kinds+1) branch conditions each carry their
-    * own copy of the url→host→labels subtree, the generated code blows past
-    * the JIT method budget, and the projection falls off codegen — measured
-    * 41 s vs 1.7 s at 100× on q218 for exactly this. Per-branch work over
+    *
+    * The labels are an ALREADY-SPLIT array. The split (and the regexp
+    * host-extract, and whatever synthesized the URL) must be staged as a
+    * real column before a when-chain that references it in every branch:
+    * inlined, the k×(kinds+1) branch conditions each carry their own copy
+    * of the url→host→labels subtree, the generated code blows past the JIT
+    * method budget, and the projection falls off codegen — measured 41 s
+    * vs 1.7 s at 100× on q218 for exactly this. Per-branch work over
     * the label ATTRIBUTE (slice + array_join + set membership) is cheap.
     */
   def registrableDomainPslOfLabels(labels: org.apache.spark.sql.Column,
@@ -3289,7 +3197,7 @@ FROM r WHERE rk <= $cap ORDER BY domain, rk"""
   }
 
   /** Per-registrable-domain quota under the FULL PSL algorithm (q218) —
-    * q216's quota with [[registrableDomainPsl]] as the key, over a URL
+    * q216's quota with [[registrableDomainPslOfLabels]] as the key, over a URL
     * synthesis that exercises every rule kind: the per-source suffix pool
     * covers a normal rule (`com`), a multi-part normal (`co.uk`), a
     * WILDCARD TLD (`ck` — the registrable domain keeps the subdomain,

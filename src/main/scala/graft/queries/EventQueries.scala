@@ -23,7 +23,7 @@ SELECT event_type,
        count(DISTINCT user_id) AS n_users,
        CAST(sum(CAST(value AS DECIMAL(30,6))) AS DOUBLE) AS sum_value
 FROM events GROUP BY 1, 2 ORDER BY event_type, semana""")),
-    QuerySpec("q23_user_sessions", (s, dir) => EventOps.userSessions(s, dir), Sql("""
+    QuerySpec("q23_user_sessions", (s, dir) => EventOps.sessionize(Tables.events(s, dir), 30), Sql("""
 WITH x AS (
   SELECT user_id, ts, event_id,
          lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
@@ -308,7 +308,7 @@ FROM r GROUP BY event_type ORDER BY event_type""")),
     // count-min heavy hitters: depth×width integer cell relation (map-side
     // combine bounds the shuffle at 256 cells), broadcast probe join,
     // estimate = min over depth rows — integer-exact, no rounding contract
-    QuerySpec("q130_cms_heavy_hitters", (s, dir) => Sketches.cmsHeavyHittersGate(s, dir),
+    QuerySpec("q130_cms_heavy_hitters", (s, dir) => Sketches.cmsHeavyHitters(Tables.events(s, dir)),
       // count-min replayed exactly: j-salted portable hashes mod width build
       // the integer cell relation; estimate = min cell over the 4 depth rows
       Sql("""

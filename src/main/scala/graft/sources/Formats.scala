@@ -30,23 +30,6 @@ object Formats {
       finally walk.close()
     }
 
-  /** ORC round-trip of a DataFrame through `path` (written, then read back
-    * with the source's declared schema).
-    */
-  def viaOrc(df: DataFrame, path: String): DataFrame = {
-    df.write.mode("overwrite").orc(path)
-    df.sparkSession.read.schema(df.schema).orc(path)
-  }
-
-  /** JSONL round-trip. Timestamps survive because write format and declared
-    * read schema agree; ints stay ints because the schema is DECLARED (JSON
-    * inference would widen/narrow by content).
-    */
-  def viaJsonl(df: DataFrame, path: String): DataFrame = {
-    df.write.mode("overwrite").json(path)
-    df.sparkSession.read.schema(df.schema).json(path)
-  }
-
   /** The orders relation after parquet → ORC → JSONL, each hop stored once
     * per source fingerprint (entries `fmt_orders_orc`, `fmt_orders_jsonl`).
     */

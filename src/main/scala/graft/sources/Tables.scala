@@ -276,19 +276,6 @@ object Tables {
     })
   }
 
-  /** Incremental materialized-view refresh: dynamic partition overwrite
-    * replaces ONLY the partitions present in `df`, leaving every other
-    * partition's files untouched. The 100 TB refresh lever the reference's
-    * full-recompute REFRESH lacks: a daily run rewrites one day/year
-    * partition, not the whole history. (Static overwrite — the plain
-    * `overwrite` above — would truncate the entire table first.)
-    */
-  def overwritePartitions(df: DataFrame, path: String, partitionByCols: Seq[String]): Unit =
-    df.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionByCols: _*)
-      .parquet(path)
-
   /** Root directory of the [[materializedPath]] store (MVs, bucketed MVs,
     * gate splits): the `SPARK_GRAFT_MV_DIR` environment variable when set
     * (the cluster deployment points this at the shared object-storage
@@ -783,8 +770,9 @@ object Tables {
     * the batch, and a join-form merge then ADDS the delta into a publish
     * that already contains it (silently wrong weights).
     *
-    * Discipline (the `nearDupStreamWithGrowingIndex` batch-partitioned
-    * index applied to merge chains): each step publishes under a
+    * Discipline (the batch-id stamping of
+    * [[graft.streaming.StreamingOps.idempotentBatchSink]] applied to merge
+    * chains): each step publishes under a
     * batchId-STAMPED name (`{chainName}_b{batchId}`), so a replayed batch
     * finds its own `_SUCCESS`-marked publish and skips the merge entirely —
     * `build` is never applied twice. The previous step is resolved from the

@@ -10,9 +10,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
   * The reference is batch-only — its daily Airflow schedule plus
   * truncate-reload is a hand-rolled micro-batch. These are the genuine
   * streaming twins over the same event schema, for pipelines where the
-  * quote/event stream arrives continuously:
-  *   - weekly tumbling aggregation == the materialized view's DATE_TRUNC
-  *     bucketing, with a watermark bounding state
+  * quote/event stream arrives continuously, each run as a batch-parity
+  * gate whose drained result the oracle checks against the batch statement:
+  *   - weekly/sliding windows == the materialized view's DATE_TRUNC bucketing
   *   - session windows == EventOps.sessionize, via the built-in session_window
   *   - custom running state == mapGroupsWithState where built-ins don't fit
   * All operators are micro-batch agnostic: state lives in the state store,
@@ -20,23 +20,6 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
   * state exactly like a shuffle.
   */
 object StreamingOps {
-
-  /** Weekly tumbling aggregate per event type. Watermark = 7 days: late rows
-    * beyond one full bucket are dropped and state for closed windows is
-    * evicted — without it, window state grows unboundedly.
-    * Epoch (1970-01-01) was a Thursday; startTime "4 days" aligns buckets to
-    * Monday 00:00 like date_trunc('week').
-    */
-  def weeklyTumbling(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "7 days")
-      .groupBy(window(col("ts"), "7 days", "7 days", "4 days"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        approx_count_distinct(col("user_id")).as("n_users_approx"),
-        sum(col("value")).as("sum_value"))
-      .select(col("window.start").cast("date").as("semana"),
-        col("event_type"), col("n_events"), col("n_users_approx"), col("sum_value"))
 
   private val gateRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -49,8 +32,8 @@ object StreamingOps {
     * the checksum protects nothing and was measured as the dominant
     * state-commit cost at sf0.1 (q87-shaped gate: state commitMs 15–25 s
     * summed → 6.5–10 s; stream wall 3.4 → 2.2 s; the no-data finalization
-    * batch 1.3 → 0.7 s). Durable caller-owned checkpoints ([[parquetSink]],
-    * [[nearDupStreamWithGrowingIndex]]) keep the engine default. The
+    * batch 1.3 → 0.7 s). Durable caller-owned checkpoints ([[parquetSink]])
+    * keep the engine default. The
     * session's previous setting is restored after the run: its value, or
     * unset if it was unset.
     *
@@ -97,7 +80,7 @@ object StreamingOps {
     *     19–47 s q119 variance. The unload is JVM-wide, so it runs inside
     *     the [[withEphemeralCkpt]] lock, while no other gate is running.
     * The production path is untouched: live queries keep their durable
-    * checkpoint ([[parquetSink]], [[nearDupStreamWithGrowingIndex]]).
+    * checkpoint ([[parquetSink]]).
     */
   private[graft] def runGate[A](spark: SparkSession, name: String, source: DataFrame)
                                (sink: (DataStreamWriter[Row], Gate) => DataStreamWriter[Row])
@@ -156,16 +139,14 @@ object StreamingOps {
     *   - Complete output mode: the sink holds the FINAL state of every
     *     window regardless of micro-batch boundaries or watermark position
     *     (Append would withhold windows the end-of-stream watermark never
-    *     passed). The production path with bounded state stays
-    *     [[weeklyTumbling]]; Complete is correct here because the gate's
-    *     result relation is weeks × event-types — tiny by construction.
+    *     passed). Complete is correct here because the gate's result
+    *     relation is weeks × event-types — tiny by construction.
     *   - value sums as DECIMAL(30,6): incremental decimal addition is exact,
     *     so the result is independent of how rows split into micro-batches
     *     (a double sum would vary in the last bits with batch boundaries).
     *   - count/window-start are integer/calendar arithmetic — exact.
     * No exact count-distinct column: distinct aggregation is unsupported in
-    * streaming by design (unbounded per-window state); the approx twin lives
-    * in [[weeklyTumbling]] under the q53-style sketch contract.
+    * streaming by design (unbounded per-window state).
     */
   def weeklyTumblingParity(spark: SparkSession, dir: String): DataFrame = {
     val agg = eventStream(spark, dir)
@@ -318,8 +299,7 @@ object StreamingOps {
     * arrival order inside a micro-batch, but the SET OF KEYS does not — the
     * gate therefore aggregates the sink to (event_type, n_users), a pure
     * function of the data. State here is unbounded by design (the
-    * whole-history dedup a backfill run wants); the watermark-evicting
-    * production variant for continuous streams stays [[dedupStream]].
+    * whole-history dedup a backfill run wants).
     */
   def dedupParity(spark: SparkSession, dir: String): DataFrame = {
     val dedup = eventStream(spark, dir)
@@ -360,81 +340,22 @@ object StreamingOps {
       .orderBy("user_id")
   }
 
-  /** The inner gate as its own real streaming lifecycle with the ns-window
-    * join predicate — the spec anchor for the derived gate.
-    */
-  def streamJoinParityStandalone(spark: SparkSession, dir: String,
-                                 windowMin: Int = 10): DataFrame = {
-    def side(tpe: String, tsCol: String, idCol: String) =
-      eventStream(spark, dir)
-        .filter(col("event_type") === tpe)
-        .select(col("user_id"), col("ts").as(tsCol), col("ts_ns").as(s"${tsCol}_ns"),
-          col("event_id").as(idCol))
-        .withWatermark(tsCol, s"$windowMin minutes")
-    val clicks = side("click", "click_ts", "click_id")
-    val purchases = side("purchase", "p_ts", "p_id")
-    val joined = clicks.join(purchases,
-      clicks("user_id") === purchases("user_id") &&
-        col("p_ts_ns") >= col("click_ts_ns") &&
-        col("p_ts_ns") <= col("click_ts_ns") + expr(s"${windowMin}L * 60000000000L"))
-      .select(clicks("user_id").as("user_id"), col("click_id"), col("p_id"))
-    memoryGate(spark, "stream_join_gate", joined, OutputMode.Append())(_
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_pairs"), countDistinct(col("click_id")).as("n_clicks"))
-      .orderBy("user_id"))
-  }
-
   /** Batch-parity gate for LEFT-OUTER watermarked stream-stream joins
-    * (correctness-gate entry `q116_stream_left_join`): the production shape
-    * a CDC or attribution pipeline hits first — clicks left-joined to
+    * (correctness-gate entry `q116_stream_left_join`): clicks left-joined to
     * purchases within `windowMin` minutes, where a click with NO purchase
-    * must STILL be emitted (NULL-extended) once it provably can't match.
-    * Unlike the inner case (q108, pairs emitted eagerly), the NULL emission
-    * timing IS the semantics: a null row appears only when the watermark
-    * passes the click's entire match window, so "which clicks get a NULL
-    * row" is a pure function of the data given a deterministic final
-    * watermark.
+    * must still be emitted (NULL-extended) once it provably can't match.
+    * Matched pairs are emitted eagerly, exactly the batch inner join; a
+    * click with no match in-window is null-emitted iff the end-of-stream
+    * watermark W (min over both sides of max event ts − delay, at micro
+    * precision) strictly passes its match window: click_ts + windowMin < W.
+    * Clicks inside the final tail are withheld — on a live stream they
+    * would still be matchable. The oracle states the batch inner join UNION
+    * ALL the unmatched clicks beyond that cut.
     *
-    * Determinism (what makes the emitted set oracle-able):
-    *   - matched pairs are emitted eagerly, exactly the batch inner join —
-    *     q108's argument verbatim;
-    *   - AvailableNow's final no-data micro-batch advances the watermark to
-    *     its end-of-stream value W = min over both sides of
-    *     (max event ts) − delay (global watermark = MIN of per-source
-    *     watermarks), with ts at MICROsecond precision (the event-time
-    *     columns; the raw ns payload plays no watermark role);
-    *   - a click with no match in-window is null-emitted iff its match
-    *     window has fully passed W: click_ts + windowMin < W (strict —
-    *     state for a row whose window END equals the watermark is retained,
-    *     verified by StreamingOpsSpec against the batch statement of the
-    *     same cut). Clicks inside the final 2×windowMin tail are withheld —
-    *     on a live stream they would still be matchable.
-    * The oracle states exactly this: the batch inner join UNION ALL the
-    * unmatched clicks beyond the window, both at micro precision.
-    */
-  private def leftJoinStream(spark: SparkSession, dir: String,
-                             windowMin: Int): DataFrame = {
-    def side(tpe: String, tsCol: String, idCol: String) =
-      eventStream(spark, dir)
-        .filter(col("event_type") === tpe)
-        .select(col("user_id"), col("ts").as(tsCol), col("event_id").as(idCol))
-        .withWatermark(tsCol, s"$windowMin minutes")
-    val clicks = side("click", "click_ts", "click_id")
-    val purchases = side("purchase", "p_ts", "p_id")
-    clicks.join(purchases,
-      clicks("user_id") === purchases("user_id") &&
-        col("p_ts") >= col("click_ts") &&
-        col("p_ts") <= col("click_ts") + expr(s"INTERVAL $windowMin minutes"),
-      "left_outer")
-      .select(clicks("user_id").as("user_id"), col("click_id"),
-        unix_micros(col("click_ts")).as("click_us"), col("p_id"))
-  }
-
-  /** The left gate derived from the shared full-outer lifecycle: a LEFT
-    * emission is exactly the full emission minus the dangling-purchase rows
-    * (matched pairs emit eagerly in both; the dangling-click cut — watermark
-    * strictly past click_ts + w — is identical). Pinned ≡ the standalone
-    * left lifecycle by StreamingOpsSpec.
+    * Derived from the shared full-outer lifecycle: a LEFT emission is
+    * exactly the full emission minus the dangling-purchase rows (matched
+    * pairs emit eagerly in both; the dangling-click cut is identical).
+    * StreamingOpsSpec pins it against the batch statement of the same cut.
     */
   def streamLeftJoinParity(spark: SparkSession, dir: String,
                            windowMin: Int = 10): DataFrame =
@@ -442,16 +363,6 @@ object StreamingOps {
       .filter(col("click_id").isNotNull)
       .select(col("user_id"), col("click_id"), col("click_us"), col("p_id"))
       .orderBy(col("click_id"), col("p_id"))
-
-  /** The left gate as its own real left-outer streaming lifecycle — kept as
-    * the library's left-outer stream-join operator and as the spec anchor
-    * the derived gate is pinned against.
-    */
-  def streamLeftJoinParityStandalone(spark: SparkSession, dir: String,
-                                     windowMin: Int = 10): DataFrame =
-    memoryGate(spark, "stream_leftjoin_gate",
-      leftJoinStream(spark, dir, windowMin), OutputMode.Append())(_
-      .orderBy(col("click_id"), col("p_id")))
 
   /** Batch-parity gate for FULL-OUTER watermarked stream-stream joins
     * (correctness-gate entry `q119_stream_full_join`) — [[streamLeftJoinParity]]'s
@@ -520,52 +431,6 @@ object StreamingOps {
       .select(col("user_id"), col("click_id"), col("click_us"),
         col("p_id"), col("p_us"))
       .orderBy(col("click_id"), col("p_id"))
-
-  /** The full gate WITHOUT the shared MV — the spec's way to pin that the
-    * derived gates equal a freshly-run lifecycle.
-    */
-  def streamFullJoinParityStandalone(spark: SparkSession, dir: String,
-                                     windowMin: Int = 10): DataFrame =
-    memoryGate(spark, "stream_fulljoin_gate",
-      fullJoinStream(spark, dir, windowMin), OutputMode.Append())(_
-      .select(col("user_id"), col("click_id"), col("click_us"),
-        col("p_id"), col("p_us"))
-      .orderBy(col("click_id"), col("p_id")))
-
-  /** The outer-join gate at CORPUS scale: identical streaming query, but the
-    * emitted set (3.99M rows at 100×) lands in parquet via a distributed
-    * file sink under the gate's `out/` instead of the driver-resident memory
-    * sink — the shape a production attribution pipeline actually runs, and
-    * the variant the 100× sweep times (the memory sink's driver transit was
-    * the dominant, noisy cost at 100×; SCALING.md round-9 row). Returns the
-    * tiny emission census (matched / click-null / purchase-null counts) read
-    * back from the files, which the sweep asserts against the memory-gate
-    * totals at gate SF.
-    */
-  def streamFullJoinParityToParquet(spark: SparkSession, dir: String,
-                                    windowMin: Int = 10): DataFrame =
-    runGate(spark, "stream_fulljoin_pq", fullJoinStream(spark, dir, windowMin))((w, g) =>
-      w.outputMode(OutputMode.Append()).format("parquet").option("path", g.out))(g =>
-      spark.read.parquet(g.out)
-        .agg(
-          count(lit(1)).as("n_rows"),
-          count(when(col("click_id").isNotNull && col("p_id").isNotNull, 1)).as("n_matched"),
-          count(when(col("p_id").isNull, 1)).as("n_click_dangling"),
-          count(when(col("click_id").isNull, 1)).as("n_purchase_dangling"))
-        .localCheckpoint(true))
-
-  /** Gap-based sessions: built-in session_window with a 30-min gap — the
-    * streaming twin of EventOps.sessionize. Emits one row per closed session.
-    */
-  def sessionWindows(events: DataFrame, gap: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", "30 minutes")
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-      .select(col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"), col("sum_value"))
 
   /** One open/closed session interval held in timer state: bounds in event
     * MICROS (session identity is µs arithmetic, like q87), sum as exact
@@ -660,193 +525,6 @@ object StreamingOps {
       .orderBy("user_id", "session_start_us"))
   }
 
-  case class UserEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  case class UserRunning(user_id: Long, n_events: Long, sum_value: Double)
-
-  /** Custom keyed state via mapGroupsWithState: a running per-user profile
-    * (event count + value sum) maintained across micro-batches. The pattern
-    * slot for state no built-in aggregation expresses (decayed scores,
-    * fraud windows, per-key ML features).
-    */
-  def runningUserStats(spark: SparkSession, events: Dataset[UserEvent]): Dataset[UserRunning] = {
-    import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-        (userId: Long, rows: Iterator[UserEvent], state: GroupState[UserRunning]) =>
-          val prev = state.getOption.getOrElse(UserRunning(userId, 0L, 0.0))
-          var n = prev.n_events
-          var s = prev.sum_value
-          rows.foreach { e => n += 1; s += e.value }
-          val next = UserRunning(userId, n, s)
-          state.update(next)
-          next
-      }
-  }
-
-  /** Production state backend: RocksDB state store — keyed state spills to
-    * local disk instead of living on the executor heap, the difference
-    * between "fits" and "OOM" for high-cardinality session/window state at
-    * 100 TB. Call before starting stateful queries.
-    */
-  def useRocksDbStateStore(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
-  /** Stream-static join: enrich a stream with a (small) static dimension.
-    * The static side is broadcast per micro-batch — the streaming twin of the
-    * engine's broadcast star joins; no state store involved.
-    */
-  def enrichWithDim(events: DataFrame, dim: DataFrame, key: String): DataFrame =
-    events.join(org.apache.spark.sql.functions.broadcast(dim), Seq(key), "left")
-
-  /** Streaming exact dedup — the streaming twin of the batch
-    * `TextOps.dedupByText` family. `dropDuplicatesWithinWatermark` keys the
-    * state store by the dedup key and EVICTS keys once the watermark passes
-    * them: state is bounded by keys-per-watermark-window, not stream
-    * history (plain `dropDuplicates` on a stream never evicts — unbounded
-    * state at 100 TB/day). Exactly-once per key within the watermark.
-    */
-  def dedupStream(events: DataFrame, keyCols: Seq[String],
-                  watermark: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  /** Streaming incremental dedup against a STATIC historical corpus — the
-    * streaming twin of the batch `TextOps.incrementalDedup`: each arriving
-    * document is flagged `exact_dup` if its digest already exists in the
-    * corpus digest set, else `novel`. Stream-static left-semi semantics via
-    * a broadcast left join on the 128-bit digest (the static side is the
-    * DISTINCT digest relation — bounded by distinct corpus texts, re-read
-    * per micro-batch, no state store). Compose with `dedupStream` upstream
-    * to also drop duplicates WITHIN the stream window itself.
-    */
-  def incrementalDedupStream(docs: DataFrame, corpusDigests: DataFrame): DataFrame = {
-    val d = docs.withColumn("__h", md5(col("text")))
-    val c = corpusDigests.select(col("h").as("__corpus_h")).distinct()
-    d.join(org.apache.spark.sql.functions.broadcast(c),
-        d("__h") === c("__corpus_h"), "left")
-      .withColumn("status",
-        when(col("__corpus_h").isNotNull, "exact_dup").otherwise("novel"))
-      .drop("__h", "__corpus_h")
-  }
-
-  /** `(id, <as>)`: each text's distinct-trigram shingle array, for texts
-    * with at least one shingle. The tokens are bound to a column and the
-    * filter reads them: a filter on the shingle array itself is pushed
-    * below the projection and re-runs the tokenizer regexp per shingle. */
-  private def shingleSets(docs: DataFrame, id: String, as: String): DataFrame = {
-    import graft.operators.TextOps
-    docs.select(col(id), TextOps.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col(id), array_distinct(TextOps.shingles(col("toks"))).as(as))
-  }
-
-  /** Static corpus-side LSH band index for streaming near-dup detection:
-    * (band, bucket, corpus_doc, c_sgs). Built once in batch, re-read per
-    * micro-batch; at scale this is the persisted index a crawl pipeline
-    * maintains alongside the corpus.
-    */
-  def nearDupBandIndex(docs: DataFrame): DataFrame = {
-    import graft.operators.TextOps
-    shingleSets(docs.select(col("doc_id").as("corpus_doc"), col("text")),
-        "corpus_doc", "c_sgs")
-      .select(col("corpus_doc"), col("c_sgs"),
-        posexplode(TextOps.lshBandBuckets(
-          TextOps.minHashSignatureFromShingles(col("c_sgs"), TextOps.xxhashFamily))).as(Seq("band", "bucket")))
-  }
-
-  /** Streaming NEAR-dup detection against a static corpus — the fuzzy twin
-    * of `incrementalDedupStream`: each arriving doc's MinHash signature is
-    * computed per-row with array expressions (`minHashSignatureFromShingles`
-    * — stateless, no aggregation), its band buckets join the static index,
-    * and candidates are verified with exact array-intersection Jaccard.
-    * Everything is a projection / generate / stream-static join: no state
-    * store, so throughput is scan-bound. A (doc, corpus_doc) pair colliding
-    * in multiple bands emits once per band — dedup downstream with
-    * `dedupStream` (watermark-bounded) or a grouped max, depending on sink.
-    */
-  def nearDupStream(docs: DataFrame, bandIndex: DataFrame, threshold: Double): DataFrame = {
-    import graft.operators.TextOps
-    val s = shingleSets(docs, "doc_id", "sgs")
-      .select(col("doc_id"), col("sgs"),
-        posexplode(TextOps.lshBandBuckets(
-          TextOps.minHashSignatureFromShingles(col("sgs"), TextOps.xxhashFamily))).as(Seq("band", "bucket")))
-    s.join(bandIndex, Seq("band", "bucket"))
-      .withColumn("inter", size(array_intersect(col("sgs"), col("c_sgs"))).cast("long"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("sgs")) + size(col("c_sgs")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_id"), col("corpus_doc"),
-        graft.functions.Fx.rd(col("jaccard"), 6).as("jaccard"))
-  }
-
-  /** Streaming near-dup with a GROWING corpus index — the incremental
-    * maintenance variant of `nearDupStream`'s static index: each micro-batch
-    * (1) probes the on-disk band index as it stood BEFORE this batch (so a
-    * doc matches any document that arrived in ANY earlier batch), writing
-    * matches to `matchesPath`, then (2) upserts its own band entries into the
-    * index via dynamic partition overwrite on `_batch_id` — a REPLAYED batch
-    * (failure recovery) overwrites exactly its own partition instead of
-    * appending duplicates, which keeps the maintenance idempotent without
-    * a read-modify-write of the whole index. At 100 TB this is the crawl
-    * pipeline's standing index: partitioned by arrival batch, probed by
-    * (band, bucket) equi-join, never rebuilt.
-    */
-  def nearDupStreamWithGrowingIndex(docs: DataFrame, indexPath: String,
-                                    matchesPath: String, checkpoint: String,
-                                    threshold: Double) =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val spark = batch.sparkSession
-        val batchDocs = batch.localCheckpoint(true) // probe + index from one materialization
-        // 1. probe the index as of the previous batch (fresh read: new file
-        //    listing each micro-batch, so entries from all earlier batches —
-        //    including replays — are visible). `_batch_id < id` pins "as of
-        //    BEFORE this batch" through BOTH replay windows: a batch
-        //    replayed after its own upsert landed would otherwise probe an
-        //    index already containing itself and emit self/intra-batch
-        //    matches the original run never saw
-        val prior = scala.util.Try(
-          spark.read.parquet(indexPath)
-            .filter(col("_batch_id") < id).drop("_batch_id")).toOption
-        // matches land through the same _batch_id dynamic-overwrite
-        // discipline as the index (round-17, VERDICT r16 item 1): the
-        // replayed probe input is pinned identical by the filter above, so
-        // the overwrite of the batch's own partition is byte-equivalent —
-        // readers drop `_batch_id`
-        prior.foreach { idx =>
-          idempotentBatchSink(nearDupStream(batchDocs, idx, threshold),
-            id, matchesPath)
-        }
-        // 2. upsert this batch's band entries (idempotent on replay —
-        //    the same sink discipline, one copy)
-        idempotentBatchSink(nearDupBandIndex(batchDocs), id, indexPath)
-      }
-
-  /** Watermarked stream-stream inner join: match rows of two live streams on
-    * a key within a bounded event-time band. Both sides buffer in the state
-    * store, sharded by the join key like a shuffle; the watermark + time
-    * bound let Spark EVICT state for rows that can no longer match — without
-    * the range condition, stream-stream join state grows forever. The
-    * streaming twin of the batch as-of/range-join family: orders matched to
-    * fills, quotes to trades, impressions to clicks.
-    */
-  def bandJoinStreams(left: DataFrame, right: DataFrame, key: String,
-                      band: String = "10 minutes"): DataFrame = {
-    val l = left.withWatermark("ts", band)
-    val r = right.select(col(key).as("r_key"), col("ts").as("r_ts"),
-        col("value").as("r_value"))
-      .withWatermark("r_ts", band)
-    l.join(r,
-      col(key) === col("r_key") &&
-        col("r_ts") >= col("ts") &&
-        col("r_ts") <= col("ts") + expr(s"INTERVAL $band"))
-      .drop("r_key")
-  }
-
   /** foreachBatch parquet sink for Update-mode aggregates: each micro-batch
     * lands the keys it CHANGED through the replay-idempotent
     * [[idempotentBatchSink]] (round-18 — VERDICT r17 item 3: this was the
@@ -893,12 +571,10 @@ object StreamingOps {
     * item 1): foreachBatch is at-least-once, so a plain
     * `write.mode("append")` that discards the batchId appends a replayed
     * batch's rows TWICE — duplicate documents in the very relation a
-    * cleaning pipeline promises is clean. This sink applies the
-    * [[nearDupStreamWithGrowingIndex]] index discipline to the EMITTED
-    * relation: stamp every row with its batchId and land it via dynamic
-    * partition overwrite on `_batch_id`, so a replayed batch overwrites
-    * exactly its own partition instead of appending a second copy (the
-    * per-batch payload is a deterministic function of the batch's input,
+    * cleaning pipeline promises is clean. This sink stamps every row with
+    * its batchId and lands it via dynamic partition overwrite on
+    * `_batch_id`, so a replayed batch overwrites exactly its own partition
+    * instead of appending a second copy (the per-batch payload is a deterministic function of the batch's input,
     * so the overwrite is byte-equivalent). Readers drop the column.
     * Spec-pinned by invoking this body twice at the same batchId and
     * proving the landed relation unchanged (StreamingOpsSpec).

@@ -1,12 +1,11 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Narrow bridge into Spark's `private[sql]` classic API: Column ⇄ Expression
-  * conversion and the session FunctionRegistry. This is the supported way to
+  * conversion and the session internals below. This is the supported way to
   * hand a custom Catalyst Expression to the DataFrame API in Spark 4 (the
   * old `new Column(expr)` constructor is gone); only the hooks below are
   * exposed, nothing else from the internal surface.
@@ -17,10 +16,6 @@ object SqlShim {
 
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
-
-  def functionRegistry(spark: SparkSession): FunctionRegistry =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
 
   /** Unload every loaded state-store provider NOW. Spark only evicts
     * providers lazily from the maintenance thread after the coordinator

@@ -116,7 +116,7 @@ class DedupCollapseSpec extends SparkSpecBase {
     // calls; collapsed pays exactly ONE (rep-A vs rep-B) — candidate space
     // scales with distinct texts, not cluster membership
     assert(rawCand.count() == 190L)
-    val reps = graft.operators.TextOps.fuzzyReps(docs)
+    val reps = b.groupBy("lang", "norm").agg(min("doc_id").as("rep"))
     assert(graft.operators.TextOps.fuzzyRepPairs(reps, 12, 5).count() == 1L)
   }
 

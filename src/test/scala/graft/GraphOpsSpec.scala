@@ -381,7 +381,7 @@ class GraphOpsSpec extends SparkSpecBase {
     val adjMv = GraphOps.symAdjMV(spark, sf)
       .select("u", "v", "w", "deg_u").as[(Long, Long, Long, Long)].collect().toSet
     assert(adjMv == adjDirect && adjDirect.nonEmpty, "symAdjMV diverges from the direct derivation")
-    val degMv = GraphOps.nodeDegMV(spark, sf)
+    val degMv = spark.read.parquet(GraphOps.nodeDegMVPath(spark, sf).toString)
       .select("node", "deg").as[(Long, Long)].collect().toSet
     val degExp = degDirect.select(col("u"), col("deg_u")).as[(Long, Long)].collect().toSet
     assert(degMv == degExp, "nodeDegMV diverges from the direct degree relation")
@@ -456,7 +456,7 @@ class GraphOpsSpec extends SparkSpecBase {
     val q144 = SparkEntry.queries("q144_bfs_rings")
     q144(spark, sf001).collect() // builds the MVs outside the capture
     val (_, lines) = withGraphOpsInfo(q144(spark, sf001).collect())
-    val nNodes = GraphOps.nodeDegMV(spark, sf001).count()
+    val nNodes = spark.read.parquet(GraphOps.nodeDegMVPath(spark, sf001).toString).count()
     info(lines.mkString("\n"))
     assert(lines == Seq(s"broadcastFits: q144 bfs rows=$nNodes -> broadcast"), lines)
   }

@@ -3,46 +3,11 @@ package graft
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
-/** Dynamic-partition-overwrite refresh: writing a df containing only some
-  * partitions replaces exactly those, so an incremental daily job rewrites
-  * one partition instead of the table. Pinned by file-level evidence: the
-  * untouched partition keeps its physical files.
+/** Refresh semantics of the written tables: a static overwrite truncates
+  * every partition, and the maintenance chains tolerate replayed batches.
   */
 class IncrementalRefreshSpec extends SparkSpecBase {
   import spark.implicits._
-
-  private def filesOf(dir: String): Set[String] = {
-    val p = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.exists(p)) Set.empty
-    else {
-      val s = java.nio.file.Files.walk(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
-      } finally s.close()
-    }
-  }
-
-  test("dynamic overwrite replaces only the partitions present in the write") {
-    val out = tempDir("graft_incr").toString + "/t"
-    val full = Seq((2023, "a", 1L), (2023, "b", 2L), (2024, "a", 3L))
-      .toDF("ano", "k", "v")
-    Tables.overwrite(full, out, Seq("ano"))
-    val files2023Before = filesOf(s"$out/ano=2023")
-    assert(files2023Before.nonEmpty)
-
-    // refresh ONLY 2024 with new content
-    val incr = Seq((2024, "a", 30L), (2024, "c", 40L)).toDF("ano", "k", "v")
-    Tables.overwritePartitions(incr, out, Seq("ano"))
-
-    // 2023's physical files are byte-identical (not rewritten)
-    assert(filesOf(s"$out/ano=2023") == files2023Before)
-    // 2024 now holds exactly the refreshed rows; 2023 rows survive
-    val after = spark.read.parquet(out)
-    assert(after.filter(col("ano") === 2023).count() == 2)
-    assert(after.filter(col("ano") === 2024).as[(String, Long, Int)].collect()
-      .map(r => (r._1, r._2)).toSet == Set(("a", 30L), ("c", 40L)))
-  }
 
   test("static overwrite (the non-incremental path) truncates everything") {
     val out = tempDir("graft_incr2").toString + "/t"

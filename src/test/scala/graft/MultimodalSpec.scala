@@ -54,20 +54,6 @@ class MultimodalSpec extends SparkSpecBase {
     assert(a._2 == new java.io.File(dir, "a.png").length())
   }
 
-  test("resizeImages: REAL bilinear resize — output decodes to the target geometry") {
-    val dir = tempDir("graft_resize").toFile
-    val img = new java.awt.image.BufferedImage(40, 20, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 20; x <- 0 until 40) img.setRGB(x, y, (100 << 16) | (150 << 8) | 200)
-    assert(javax.imageio.ImageIO.write(img, "png", new java.io.File(dir, "in.png")))
-    val out = Multimodal.resizeImages(spark, dir.getAbsolutePath, 8, 4).collect()
-    assert(out.length == 1)
-    val back = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(out(0).getAs[Array[Byte]]("payload")))
-    assert(back.getWidth == 8 && back.getHeight == 4)
-    // solid color survives bilinear resampling exactly
-    assert((back.getRGB(3, 2) & 0xffffff) == ((100 << 16) | (150 << 8) | 200))
-  }
-
   test("decodeAudio + audioFeatures: REAL WAV decode via javax.sound — true rate, frames, RMS") {
     val dir = tempDir("graft_wav").toFile
     // 16-bit PCM mono 8000 Hz, 0.5 s sine at amplitude 0.5 → RMS = 0.5/√2

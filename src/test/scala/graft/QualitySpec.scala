@@ -31,13 +31,6 @@ class QualitySpec extends SparkSpecBase {
     assert(!r.head.passed && r.head.observed == 1L) // NULL > 0 is not TRUE
   }
 
-  test("rowCount and uniqueKey gates") {
-    assert(Quality.rowCount(bars, bars.count()).passed)
-    assert(!Quality.rowCount(bars, 1L).passed)
-    assert(Quality.uniqueKey(bars, Seq("symbol", "date")).passed)
-    assert(!Quality.uniqueKey(bars.unionByName(bars.limit(1)), Seq("symbol", "date")).passed)
-  }
-
   test("referential integrity fact->dim") {
     val fact = MarketView.fact(spark, sf)
     val dim = graft.operators.Analytics.dimInstrument(bars)

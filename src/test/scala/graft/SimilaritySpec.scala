@@ -146,47 +146,16 @@ class SimilaritySpec extends SparkSpecBase {
     assert(got(1L).isEmpty)
   }
 
-  test("persisted LSH index: write -> read -> probe is row-identical to the in-session path") {
-    val dir = tempDir("graft_lshidx").toString
-    val emb = graft.sources.Tables.embeddings(spark, sf)
-    Similarity.writeLshIndex(emb, dir)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    val persisted = rows(Similarity.lshKnnIndexed(
-      Similarity.readLshIndex(spark, dir), emb.filter(col("vec_id") < 5), 3))
-    val inSession = rows(Similarity.lshKnnFrom(Tables.embeddings(spark, sf), 5, 3))
-    assert(persisted == inSession,
-      s"persisted-index probe diverges: $persisted vs $inSession")
-  }
-
-  test("persisted IVF centroids: write -> read -> probe is row-identical to training in session") {
-    val dir = tempDir("graft_ivfcents").toString
-    val emb = graft.sources.Tables.embeddings(spark, sf)
-    Similarity.writeIvfCentroids(Similarity.kmeansCentroids(emb, 8, 3), dir)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    val persisted = rows(Similarity.ivfKnnWithCentroids(
-      emb, Similarity.readIvfCentroids(spark, dir), 5, 3, nProbe = 3))
-    val inSession = rows(Similarity.ivfKnnKmeans(emb, 5, 3, nCells = 8, nProbe = 3))
-    assert(persisted == inSession,
-      s"persisted-centroid probe diverges: $persisted vs $inSession")
-  }
-
   test("persisted PQ codebooks: write -> read -> probe is row-identical to training in session") {
-    val dir = tempDir("graft_pqbooks").toString
     val emb = graft.sources.Tables.embeddings(spark, sf)
-    Similarity.writePqCodebooks(Similarity.pqTrainCodebooks(emb), dir)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    val persisted = rows(Similarity.pqKnnWithCodebooks(
-      emb, Similarity.readPqCodebooks(spark, dir)))
-    val inSession = rows(Similarity.pqKnn(emb))
-    assert(persisted == inSession,
-      s"persisted-codebook probe diverges: $persisted vs $inSession")
-    // the registered q205 path (fingerprinted MV) agrees too
+    // the registered q205 path probes the books persisted as a fingerprinted MV
     val viaMv = rows(Similarity.pqKnnWithCodebooks(
       emb, Similarity.pqCodebooksMV(spark, sf)))
-    assert(viaMv == inSession, "MV-codebook probe diverges from in-session")
+    val inSession = rows(Similarity.pqKnn(emb))
+    assert(viaMv == inSession,
+      s"persisted-codebook probe diverges: $viaMv vs $inSession")
   }
 
   test("topSimilarPairs: k pairs, ordered by sim desc, each pair unordered-unique") {
@@ -480,9 +449,7 @@ class SimilaritySpec extends SparkSpecBase {
       s"retention should keep the newest stream-chain publish + predecessor: $chainIds")
   }
 
-  test("retrainPqBooks (r19): spiked arrivals trip the drift diagnostic under the STANDING books, retrain restores reconstruction + probe recall, chain resets") {
-    import graft.sources.Tables
-    val src = java.nio.file.Paths.get(sf, "embeddings.parquet")
+  test("pqCodebookDrift: spiked arrivals trip the diagnostic under the STANDING books; undrifted arrivals reconstruct at the base's level") {
     val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     // distribution shift with a drift story: the held-out decile arrives
@@ -511,67 +478,19 @@ class SimilaritySpec extends SparkSpecBase {
     assert(healthy(true) >= healthy(false) - 0.05,
       s"undrifted arrivals should reconstruct at the base's level: $healthy")
 
-    // 1. drift TRIPS: spiked arrivals reconstruct materially below base
+    // drift TRIPS: spiked arrivals reconstruct materially below base
     val tripped = driftMap(shifted, books0)
     info(f"gen-0 mean_recon base=${tripped(false)}%.3f arrivals=${tripped(true)}%.3f")
     assert(tripped(false) == healthy(false),
       "the base split's figure must not move — only arrivals drifted")
     assert(tripped(true) < tripped(false) - 0.2,
       s"the spiked arrivals should trip the drift monitor: $tripped")
-
-    // 2. RETRAIN: new generation books + full re-encode + chain reset
-    val chain = "pq_codes_retrain_spec"
-    Tables.resetChain(spark, src, chain)
-    try {
-      graft.sources.Tables.chainStep(spark, src, chain, 0L,
-        Similarity.PqNBuckets, Seq("vec_id"), Seq("vec_id", "sub")) { _ =>
-        Similarity.pqEncode(shifted, books0, Similarity.PqM, Similarity.PqDim)
-      }
-      assert(Tables.chainPublishedIds(src, chain).nonEmpty)
-      val (books1, codes1) = Similarity.retrainPqBooks(spark, sf,
-        generation = 901, corpusOpt = Some(shifted), resetChains = Seq(chain))
-      // the old generation's chain is gone: the next refresh cycle grows
-      // the NEW standing table from batch 0
-      assert(Tables.chainPublishedIds(src, chain).isEmpty,
-        "retrain must reset the named maintenance chains")
-      val recovered = driftMap(shifted, books1)
-      info(f"gen-1 mean_recon base=${recovered(false)}%.3f arrivals=${recovered(true)}%.3f")
-      assert(recovered(true) >= tripped(false) - 0.05,
-        s"retrained books should restore arrivals to the base floor: $recovered")
-
-      // 3. probe recall recovers: ADC+rescore over the re-encoded corpus
-      //    vs brute force on the same shifted corpus
-      def knnSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-        df.select("q_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val withEmb = shifted.select(col("vec_id"), col("e").as("embedding"))
-      val brute = knnSet(Similarity.bruteKnnFrom(withEmb,
-        Similarity.PqNQueries, Similarity.PqK))
-      val probe0 = knnSet(Similarity.pqAdcProbe(shifted, books0,
-        Similarity.pqEncode(shifted, books0, Similarity.PqM, Similarity.PqDim),
-        Similarity.PqM, Similarity.PqNQueries, Similarity.PqK,
-        Similarity.PqRescoreFactor, Similarity.PqDim))
-      val probe1 = knnSet(Similarity.pqAdcProbe(shifted, books1,
-        spark.read.parquet(codes1.toString)
-          .select("vec_id", "sub", "code"),
-        Similarity.PqM, Similarity.PqNQueries, Similarity.PqK,
-        Similarity.PqRescoreFactor, Similarity.PqDim))
-      val (r0, r1) = (probe0.intersect(brute).size.toDouble / brute.size,
-        probe1.intersect(brute).size.toDouble / brute.size)
-      info(f"probe recall on the drifted corpus: gen-0 books $r0%.3f, retrained $r1%.3f")
-      assert(r1 >= r0,
-        f"retraining must not lose recall on the drifted corpus: $r1%.3f < $r0%.3f")
-      assert(r1 >= 0.6,
-        f"retrained probe recall $r1%.3f fell below the q205 base floor")
-    } finally Tables.resetChain(spark, src, chain)
   }
 
-  test("retrainIvfCents (r19): q234's PSI trips on spiked arrivals (the m=1 recon signal measurably does NOT), retrain owns the new cluster + holds probe recall, chain resets") {
-    import graft.sources.Tables
-    val src = java.nio.file.Paths.get(sf, "embeddings.parquet")
+  test("centroid drift: q234's PSI trips on spiked arrivals; the m=1 recon signal measurably does NOT") {
     val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-    // the retrainPqBooks drift story verbatim: arrivals' norm concentrates
+    // the pqCodebookDrift story verbatim: arrivals' norm concentrates
     // on ONE coordinate — coarse centroids trained on the dense base
     // cannot tile the spiked direction
     val spike = transform(col("e"), (x, i) =>
@@ -579,10 +498,10 @@ class SimilaritySpec extends SparkSpecBase {
     val shifted = emb.select(col("vec_id"),
       when(col("vec_id") % 10 === 0, spike).otherwise(col("e")).as("e"))
 
-    // gen-0 = centroids trained on the UNDRIFTED base split under the
-    // generation machinery itself
-    val (cents0, _) = Similarity.retrainIvfCents(spark, sf, generation = 900,
-      corpusOpt = Some(emb.filter(col("vec_id") % 10 =!= 0)))
+    // centroids trained on the UNDRIFTED base split
+    val cents0 = Similarity.kmeansCentroids(
+      emb.filter(col("vec_id") % 10 =!= 0).select(col("vec_id"), col("e").as("embedding")),
+      Similarity.IvfNCells, Similarity.IvfIters).select(col("cell"), col("cvec"))
     // cell-assignment drift IS pqCodebookDrift at m=1: reconstruction from
     // a 1-subspace book = the assigned coarse centroid, so mean_recon is
     // each split's mean cosine to its ASSIGNED cell centroid
@@ -613,13 +532,13 @@ class SimilaritySpec extends SparkSpecBase {
     assert(reconDrift(true) >= healthy(true) - 0.05,
       s"unexpected: the recon signal now trips at nCells=8 — revisit which monitor this family uses: $reconDrift")
 
-    // 1. the q234 centroid-drift monitor (the cell family's registered
-    //    trigger) TRIPS. At sf0.001 the per-label windows are too sparse
-    //    for the first-moment stat (≈6 arrivals/label of 64-dim noise —
-    //    healthy min centroid_cos is already −0.18), so the monitor runs
-    //    single-window (label collapsed): the PSI shape stat over each
-    //    vector's cosine to the reference centroid is what fires — the
-    //    spiked arrivals pile into one bin
+    // the q234 centroid-drift monitor (the cell family's registered
+    // trigger) TRIPS. At sf0.001 the per-label windows are too sparse
+    // for the first-moment stat (≈6 arrivals/label of 64-dim noise —
+    // healthy min centroid_cos is already −0.18), so the monitor runs
+    // single-window (label collapsed): the PSI shape stat over each
+    // vector's cosine to the reference centroid is what fires — the
+    // spiked arrivals pile into one bin
     val embL = Tables.embeddings(spark, sf).withColumn("label", lit(0L))
     def q234Psi(df: org.apache.spark.sql.DataFrame): Double =
       Similarity.centroidDriftMonitor(df).collect()
@@ -634,56 +553,6 @@ class SimilaritySpec extends SparkSpecBase {
     info(f"q234 single-window psi: healthy=$healthyPsi%.4f drifted=$trippedPsi%.4f")
     assert(trippedPsi > healthyPsi * 5,
       f"the spiked arrivals should trip q234's PSI: $healthyPsi%.4f -> $trippedPsi%.4f")
-
-    // 2. RETRAIN: new generation centroids + full re-assignment + chain
-    //    reset (the named chain stands in for a q238/q241 maintenance chain)
-    val chain = "ivf_assign_retrain_spec"
-    Tables.resetChain(spark, src, chain)
-    try {
-      Tables.chainStep(spark, src, chain, 0L, Similarity.IvfNCells,
-        Seq("cell"), Seq("cell", "vec_id")) { _ =>
-        Similarity.assignCells(shifted, cents0)
-          .select(col("cell"), col("vec_id"), col("e"))
-      }
-      assert(Tables.chainPublishedIds(src, chain).nonEmpty)
-      val (cents1, assign1) = Similarity.retrainIvfCents(spark, sf,
-        generation = 901, corpusOpt = Some(shifted), resetChains = Seq(chain))
-      assert(Tables.chainPublishedIds(src, chain).isEmpty,
-        "retrain must reset the named maintenance chains")
-      val recovered = cellDrift(shifted, cents1)
-      info(f"gen-1 mean cell cosine base=${recovered(false)}%.3f arrivals=${recovered(true)}%.3f")
-      // the spiked arrivals share one direction — a gen-1 centroid owns it
-      // outright, so their assigned cosine jumps from ~0.21 to ~1.0
-      assert(recovered(true) >= 0.9,
-        s"retrained cells should own the arrival cluster: $recovered")
-      assert(recovered(false) >= healthy(false) - 0.1,
-        s"the base split must not pay for the new cluster's centroid: $recovered")
-      // the standing assignment table is the full corpus, cell-bucketed
-      val standing = spark.read.parquet(assign1.toString)
-      assert(standing.count() == shifted.count(),
-        "gen-1 standing assignment must cover the full corpus")
-
-      // 3. probe recall on the drifted corpus: gen-1 centroids must not
-      //    lose to the stale gen-0 space and must hold the q73 floor
-      def knnSet(cents: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-        Similarity.ivfKnnWithCentroids(
-          shifted.select(col("vec_id"), col("e").as("embedding")), cents,
-          Similarity.IvfNQueries, Similarity.IvfK, Similarity.IvfNProbe)
-          .select("q_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val brute = Similarity.bruteKnnFrom(
-        shifted.select(col("vec_id"), col("e").as("embedding")),
-        Similarity.IvfNQueries, Similarity.IvfK)
-        .select("q_id", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val (r0, r1) = (knnSet(cents0).intersect(brute).size.toDouble / brute.size,
-        knnSet(cents1).intersect(brute).size.toDouble / brute.size)
-      info(f"probe recall on the drifted corpus: gen-0 cells $r0%.3f, retrained $r1%.3f")
-      assert(r1 >= r0,
-        f"retraining must not lose recall on the drifted corpus: $r1%.3f < $r0%.3f")
-      assert(r1 >= 0.5,
-        f"retrained probe recall $r1%.3f fell below the q73 nProbe floor")
-    } finally Tables.resetChain(spark, src, chain)
   }
 
   test("q246 semantic decontam: precision 1.0 vs brute pairs; benchmark rows never flagged; probe recall measured") {

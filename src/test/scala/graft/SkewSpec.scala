@@ -21,15 +21,6 @@ class SkewSpec extends SparkSpecBase {
     assert(salted("hot") == 700L)
   }
 
-  test("saltedJoin equals the plain join") {
-    val build = Seq(("hot", 1), ("k1", 2), ("k2", 3)).toDF("key", "tag")
-    val plain = skewed.join(build, "key").groupBy("key", "tag").count()
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
-    val salted = Skew.saltedJoin(skewed, build, "key", 8).groupBy("key", "tag").count()
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
-    assert(salted == plain)
-  }
-
   test("binaryFile ingestion reads real files as binary payloads") {
     val dir = tempDir("graft_media")
     java.nio.file.Files.write(dir.resolve("a.bin"), Array[Byte](1, 2, 3))

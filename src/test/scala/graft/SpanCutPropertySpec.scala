@@ -63,7 +63,8 @@ class SpanCutPropertySpec extends SparkSpecBase {
         (id, body.trim)
       }.filter(_._2.nonEmpty)
       val expect = referenceSpanCut(docs)
-      val got = TextOps.spanCutCleanFrom(docs.toDF("doc_id", "text"))
+      val df = docs.toDF("doc_id", "text")
+      val got = TextOps.spanCutCleanAgainst(df, TextOps.dupShinglesFrom(df)).orderBy("doc_id")
         .collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
         .toMap

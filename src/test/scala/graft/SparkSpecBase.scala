@@ -9,7 +9,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs. One JVM-wide session (getOrCreate) so
-  * the suite doesn't pay session startup per spec class.
+  * the suite doesn't pay session startup per spec class. It installs
+  * [[graft.GraftExtensions]] the way a deployment does, so the engine's SQL
+  * names resolve in every spec.
   */
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
@@ -73,6 +75,7 @@ object SparkSpecBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

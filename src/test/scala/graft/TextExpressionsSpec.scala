@@ -90,7 +90,6 @@ class TextExpressionsSpec extends SparkSpecBase {
   }
 
   test("SQL registration: nfc_normalize / nfkc_normalize callable from SQL") {
-    TextFunctions.register(spark)
     samples.toDF("s").createOrReplaceTempView("norm_samples")
     val out = spark.sql(
       "SELECT nfc_normalize(s) AS c, nfkc_normalize(s) AS k FROM norm_samples")

@@ -28,11 +28,6 @@ class TextOpsSpec extends SparkSpecBase {
     assert(out(1) == Seq("a b c", "b c d"))
   }
 
-  test("dedupByText keeps lowest doc_id per exact text") {
-    val kept = TextOps.dedupByText(docs).as[Long].collect().toSet
-    assert(kept == Set(1L, 2L, 3L, 5L)) // doc 4 is an exact dup of doc 1
-  }
-
   test("dedupKeepBest keeps the highest-scored duplicate, all columns intact") {
     val scored = Seq(
       (1L, "same text here", 0.2),
@@ -79,13 +74,6 @@ class TextOpsSpec extends SparkSpecBase {
     assert(hamming12 < hamming13, s"near-dup $hamming12 should beat disjoint $hamming13")
   }
 
-  test("simHashPairs surfaces only pairs within maxHamming") {
-    val pairs = TextOps.simHashPairs(docs, 0).select("doc_a", "doc_b")
-      .as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1L, 4L)))
-    assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
-  }
-
   test("noveltyProfile: first-occurrence shingle fractions are exact") {
     val d = tempDir("graft_novelty").toString
     Seq(
@@ -130,7 +118,7 @@ class TextOpsSpec extends SparkSpecBase {
     val withShort = docs.union(Seq((6L, "en", "web", "too short")).toDF(docs.columns: _*))
     val sh = TextOps.shingleSet(withShort)
     def perRow(family: TextOps.HashFamily): Map[Long, Vector[Long]] = withShort
-      .select(col("doc_id"), TextOps.shingleArray(col("text")).as("sgs"))
+      .select(col("doc_id"), array_distinct(TextOps.shingles(TextOps.tokens(col("text")))).as("sgs"))
       .filter(size(col("sgs")) > 0)
       .select(col("doc_id"), TextOps.minHashSignatureFromShingles(col("sgs"), family))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).toMap
@@ -147,30 +135,11 @@ class TextOpsSpec extends SparkSpecBase {
       // unfiltered, the shingle-less doc's empty array has a null signature:
       // folding it would give 32 × Long.MaxValue, one band bucket for all
       val empty = withShort.filter(col("doc_id") === 6L)
-        .select(TextOps.shingleArray(col("text")).as("sgs"))
+        .select(array_distinct(TextOps.shingles(TextOps.tokens(col("text")))).as("sgs"))
         .select(size(col("sgs")), TextOps.minHashSignatureFromShingles(col("sgs"), family))
         .head()
       assert(empty.getInt(0) == 0 && empty.isNullAt(1), s"$name: empty-array signature $empty")
     }
-  }
-
-  test("perDistinctText: collapsed transform ≡ direct per-doc computation") {
-    val dup = Seq(
-      (1L, "en", "web", "the quick brown fox jumps over the lazy dog"),
-      (2L, "en", "book", "the quick brown fox jumps over the lazy dog"), // exact dup of 1
-      (3L, "en", "web", "something else entirely different here"),
-      (4L, "de", "web", "the quick brown fox jumps over the lazy dog")  // dup of 1 too
-    ).toDF("doc_id", "lang", "source", "text")
-    def f(d: org.apache.spark.sql.DataFrame) =
-      d.select(col("doc_id"),
-        length(col("text")).cast("long").as("n_chars"),
-        md5(col("text")).as("digest"))
-    val direct = f(dup).orderBy("doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    val collapsed = TextOps.perDistinctText(dup)(f)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    assert(collapsed.toSeq == direct.toSeq,
-      s"collapse diverges: direct=${direct.toSeq} collapsed=${collapsed.toSeq}")
   }
 
   test("incrementalDedup: new batch classified exact/near/novel against the corpus") {
@@ -588,7 +557,8 @@ class TextOpsSpec extends SparkSpecBase {
   test("spanCutClean: cut tokens equal q97's coverage; kept digest is the uncovered tokens in order") {
     def md5hex(s: String): String = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val out = TextOps.spanCutCleanFrom(docs).collect()
+    val out = TextOps.spanCutCleanAgainst(docs, TextOps.dupShinglesFrom(docs))
+      .orderBy("doc_id").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
       .toMap
     // the cleaner's cut set IS q97's covered positions: n_removed must
@@ -655,7 +625,9 @@ class TextOpsSpec extends SparkSpecBase {
       ("https://uk/x", null),                           // bare TLD
       ("https://ck/x", null))                           // bare wildcard base: no rule matches, default ps = itself
     val got = cases.map(_._1).toDF("url")
-      .select(TextOps.registrableDomainPsl(col("url"))).as[String].collect().toSeq
+      .select(TextOps.registrableDomainPslOfLabels(
+        split(regexp_extract(col("url"), "^[a-z][a-z0-9+.-]*://([^/:?#]+)", 1), "\\."),
+        TextOps.PslSubset)).as[String].collect().toSeq
     assert(got == cases.map(_._2), s"got $got")
     // parser: kinds and label counts off the raw PSL format
     val rules = TextOps.parsePsl(Iterator("// c", "", "com", "co.uk", "*.ck", "!www.ck"))
@@ -775,7 +747,10 @@ class TextOpsSpec extends SparkSpecBase {
 
   test("benchmarkDecontam: exact copy fully cut, partial overlap keeps only the uncovered suffix, disjoint docs untouched, benchmark excluded") {
     // bench source "book" = doc 4, an exact copy of doc 1's text
-    val out = TextOps.benchmarkDecontamFrom(docs, "book")
+    val benchSgs = docs.filter(col("source") === "book")
+      .select(explode(TextOps.shingles(TextOps.tokens(col("text")))).as("sg")).distinct()
+    val out = TextOps.spanCutCleanAgainst(docs.filter(col("source") =!= "book"), benchSgs)
+      .orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3), r.getString(4)))
       .toSeq
     assert(out.map(_._1) == Seq(1L, 2L, 3L, 5L), "benchmark doc must be excluded")

@@ -95,7 +95,6 @@ class VectorExpressionsSpec extends SparkSpecBase {
   }
 
   test("SQL registration: vec_dot / cosine_sim callable from spark.sql") {
-    register(spark)
     vecs.createOrReplaceTempView("vtest")
     val out = spark.sql(
       "SELECT id, vec_dot(f, d) AS dot, cosine_sim(f, d) AS cos FROM vtest WHERE id = 1")
